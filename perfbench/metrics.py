@@ -108,6 +108,105 @@ def _descends(tree, pid: int, anc: int) -> bool:
     return False
 
 
+def _start_tick(pid: int) -> int | None:
+    """Start time of ``pid`` in clock ticks since boot, or None once it
+    has ended (a zombie counts as ended: only reaping is left)."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            raw = fh.read()
+    except OSError:
+        return None
+    f = raw[raw.rindex(")") + 2:].split()
+    # fields after comm: state(0) ... starttime(19)
+    return None if f[0] in ("Z", "X") else int(f[19])
+
+
+def descendants() -> dict[int, int]:
+    """pid → start tick of every live descendant of this process. The
+    start tick tells a process apart from a later one reusing its pid."""
+    me = os.getpid()
+    out = {}
+    for pid in process_tree():
+        tick = _start_tick(pid)
+        if pid != me and tick is not None:
+            out[pid] = tick
+    return out
+
+
+def _alive(procs: dict[int, int]) -> list[int]:
+    return [pid for pid, tick in procs.items() if _start_tick(pid) == tick]
+
+
+def end_processes(procs: dict[int, int], grace_s: float = 15.0) -> list[int]:
+    """Wait up to ``grace_s`` for every process in ``procs`` (from
+    :func:`descendants`) to exit, then SIGTERM what is left, then
+    SIGKILL, and wait until each has ended. Works for processes already
+    re-parented away from this one (a JVM's Python workers once the JVM
+    is gone). Returns the pids that had to be signalled."""
+    import signal
+
+    signalled: list[int] = []
+
+    def wait(limit: float) -> list[int]:
+        deadline = time.monotonic() + limit
+        left = _alive(procs)
+        while left and time.monotonic() < deadline:
+            time.sleep(0.05)
+            left = _alive(procs)
+        return left
+
+    left = wait(grace_s)
+    for sig, limit in ((signal.SIGTERM, 5.0), (signal.SIGKILL, 10.0)):
+        if not left:
+            break
+        for pid in left:
+            try:
+                os.kill(pid, sig)
+            except OSError:
+                pass
+        signalled.extend(p for p in left if p not in signalled)
+        left = wait(limit)
+    return signalled
+
+
+def stop_spark() -> list[int]:
+    """Stop the active SparkContext, then end the JVM that PySpark
+    launched and every process under it, and wait until all have ended.
+    PySpark's JVM exits only when its stdin closes, which otherwise
+    happens when this process exits, so it would outlive the run by its
+    shutdown hooks. Safe to call more than once, and with no Spark."""
+    try:
+        from pyspark import SparkContext
+    except ImportError:
+        return []
+    procs = descendants()
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc.stop()
+        except Exception:  # noqa: BLE001 - the JVM is ended below anyway
+            pass
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+        # no gateway.close(): with a foreachBatch callback server up it
+        # can block for good; the JVM's exit closes the sockets instead
+        proc = getattr(gateway, "proc", None)
+        if proc is not None:
+            if proc.stdin is not None:
+                try:
+                    proc.stdin.close()  # the JVM's signal to exit
+                except OSError:
+                    pass
+            try:
+                proc.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+    return end_processes(procs)
+
+
 def _rss_kb(pid: int) -> int:
     try:
         with open(f"/proc/{pid}/statm") as fh:

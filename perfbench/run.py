@@ -26,6 +26,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -35,9 +36,11 @@ SCALE = 0.01
 HEAP = "1g"
 FIXTURE_REPEATS = 3
 # passes over every query (lake cycles) measured per 20 s of --seconds,
-# about 20 s on a 4-core host: the work is fixed by --seconds, never by
-# how fast this host happens to run
-REPS_PER_20S = {"catalog_queries": 2, "lake_ingest": 2}
+# about 20 s (lake: 30 s) on a 4-core host: the work is fixed by
+# --seconds, never by how fast this host happens to run. Two measured
+# lake cycles spread 13-27% run to run, three 4-8% (median of three
+# per write verb instead of a mean of two)
+REPS_PER_20S = {"catalog_queries": 2, "lake_ingest": 3}
 WORKLOADS = tuple(REPS_PER_20S)
 
 
@@ -160,11 +163,21 @@ def main(argv=None) -> int:
     })
     import tempfile
 
+    from perfbench.metrics import stop_spark
+
     tempfile.tempdir = None  # re-read TMPDIR
+    # a SIGTERM unwinds through the finally below like any other exit
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     os.chdir(run_dir)
     try:
         return _run(args, work, run_dir, cpus)
     finally:
+        # the JVM and its Python workers end, and are waited for, on
+        # every path out of the run; a second SIGTERM may not cut that short
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)
+        stragglers = stop_spark()
+        if stragglers:
+            print(f"perfbench: signalled leftover processes {stragglers}", file=sys.stderr)
         os.chdir(ROOT)
         shutil.rmtree(run_dir, ignore_errors=True)
 
@@ -242,7 +255,7 @@ def _run(args, work: str, run_dir: str, cpus: int) -> int:
     final_errors = wl.final_checks()
     space_amp = wl.space_amp()
     sentinel_after = _median_sentinel()
-    spark.stop()
+    metrics.stop_spark()  # also flushes the event log
     peak_rss_mb = sampler.stop()
 
     attempted = untraced["attempted"] + traced["attempted"]

@@ -7,6 +7,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 
 import pytest
 
@@ -16,18 +17,41 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
 WORKLOADS = [w["name"] for w in SPEC["workloads"]]
 
 
+def _left_in(cwd):
+    """Processes whose working directory is a run directory under ``cwd``
+    (the JVM and its Python workers run there)."""
+    work = os.path.join(cwd, ".perfbench_work") + os.sep
+    left = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            if os.readlink(f"/proc/{pid}/cwd").startswith(work):
+                left.append(int(pid))
+        except OSError:
+            pass
+    return left
+
+
 def _run(cwd, workload, trace):
+    """Run the benchmark command; its output goes to files, not pipes, so
+    that the call returns when the benchmark process exits, not when the
+    last process holding its output does."""
     cmd = SPEC["command"] + [
         "--workload", workload, "--seed", "3", "--seconds", "1", "--trace", str(trace),
     ]
     cmd[0] = sys.executable if cmd[0] == "python3" else cmd[0]
-    return subprocess.run(cmd, cwd=cwd, capture_output=True, text=True, timeout=600)
+    with tempfile.TemporaryFile("w+") as out, tempfile.TemporaryFile("w+") as err:
+        proc = subprocess.run(cmd, cwd=cwd, stdout=out, stderr=err, text=True, timeout=600)
+        out.seek(0)
+        err.seek(0)
+        proc.stdout, proc.stderr = out.read(), err.read()
+    return proc
 
 
 @pytest.mark.parametrize("trace", [0, 1])
 @pytest.mark.parametrize("workload", WORKLOADS)
 def test_every_named_metric_is_printed_with_its_unit(workload, trace):
     proc = _run(ROOT, workload, trace)
+    assert _left_in(ROOT) == [], "the run left processes behind"
     assert proc.returncode == 0, proc.stderr[-2000:]
     lines = proc.stdout.strip().splitlines()
     result = json.loads(lines[-1])
