@@ -12,6 +12,7 @@ import hashlib
 import math
 import os
 import platform
+import signal
 import statistics
 import subprocess
 import threading
@@ -143,8 +144,6 @@ def end_processes(procs: dict[int, int], grace_s: float = 15.0) -> list[int]:
     SIGKILL, and wait until each has ended. Works for processes already
     re-parented away from this one (a JVM's Python workers once the JVM
     is gone). Returns the pids that had to be signalled."""
-    import signal
-
     signalled: list[int] = []
 
     def wait(limit: float) -> list[int]:

@@ -38,8 +38,8 @@ FIXTURE_REPEATS = 3
 # passes over every query (lake cycles) measured per 20 s of --seconds,
 # about 20 s (lake: 30 s) on a 4-core host: the work is fixed by
 # --seconds, never by how fast this host happens to run. Two measured
-# lake cycles spread 13-27% run to run, three 4-8% (median of three
-# per write verb instead of a mean of two)
+# lake cycles spread 13-27% run to run, three 8-11% (a median of three
+# per write verb instead of the mean of two)
 REPS_PER_20S = {"catalog_queries": 2, "lake_ingest": 3}
 WORKLOADS = tuple(REPS_PER_20S)
 
