@@ -72,10 +72,9 @@ Grammar notes (deliberate limits, all loud):
   INSERT clause — two commits, so a crash between them leaves the
   UPDATE applied with the DELETE/INSERT pending (re-run to finish);
   a concurrent commit in the gap conflicts loudly, never misapplies.
-- SELECT resolves table names after FROM / JOIN and in comma-
-  separated FROM lists; string literals are never rewritten. A
-  COLUMN that shares a registered table's name directly after a
-  comma would be rewritten and fail loudly (rename one of them).
+- SELECT: table references resolve as Spark resolves them; time
+  travel, CHANGES and branch reads are spliced at parser spans. A
+  branch reads as ``FROM t VERSION AS OF 'branch'`` (Iceberg's form).
 - String literals containing keywords (``'WHEN MATCHED'``) inside
   DML predicates are not lexed; keep such text out of DML predicates
   (SELECT literals are safe).
@@ -98,11 +97,11 @@ _ID = r"[A-Za-z_][\w]*"
 def _mask_comments(q: str) -> str:
     """Blank SQL comments (``-- …\\n`` and ``/* … */``) with spaces,
     LEAVING string literals intact (a ``--`` inside '...' is data, and
-    an apostrophe inside a comment must not flip the raw-text passes'
-    quote parity — ADVICE r11 / VERDICT r11 #6). Length-preserving so
-    match offsets stay valid; the blanked text is what both the rewrite
-    passes AND Spark ultimately see, which is semantically identical
-    (comments carry no meaning).
+    an apostrophe inside a comment must not flip the raw-text parsers'
+    quote tracking — ADVICE r11 / VERDICT r11 #6). Length-preserving so
+    offsets stay valid; the blanked text is what both the statement
+    parsers here AND Spark ultimately see, which is semantically
+    identical (comments carry no meaning).
 
     Literal tracking mirrors Spark's default lexer (review r12): BOTH
     quote kinds are literals (``"…"`` is a string under the default
@@ -204,6 +203,18 @@ def _split_top(text: str, sep: str) -> list[str]:
         i += 1
     parts.append(text[last:])
     return parts
+
+
+def _arg_value(expr):
+    """A parsed TVF argument as Python: an int or string literal's
+    value, a bare identifier's name; None for anything else."""
+    kind = expr.nodeName()
+    if kind == "UnresolvedAttribute":
+        return expr.name()
+    if kind == "Literal":
+        v = expr.value()
+        return v if v is None or type(v) is int else str(v)
+    return None
 
 
 class LakeSQL:
@@ -312,7 +323,10 @@ class LakeSQL:
         self._persist_catalog()
 
     def unregister(self, name: str) -> None:
-        self.tables.pop(name, None)
+        if self.tables.pop(name, None) is not None:
+            # SELECT bound the name as a temp view; a stale one must not
+            # keep answering for a table that is no longer registered
+            self.spark.catalog.dropTempView(name)
         self.views.discard(name)
         self._persist_catalog()
 
@@ -330,8 +344,7 @@ class LakeSQL:
         # comments are blanked BEFORE dispatch (review r12): a leading
         # "-- header" must not become the statement head-word, and every
         # raw-text statement parser below sees comment-free text (the
-        # masking is idempotent, so _rewrite_select's own defensive call
-        # costs nothing)
+        # blanking is length-preserving, hints pass through)
         q = _mask_comments(text).strip().rstrip(";").strip()
         head = q.split(None, 1)[0].upper() if q else ""
         if head == "MERGE":
@@ -397,249 +410,209 @@ class LakeSQL:
         return self.spark.sql(self._rewrite_select(q))
 
     def _rewrite_select(self, q: str) -> str:
-        """Register every referenced lakehouse table as a temp view —
-        at its CURRENT version, or the version/timestamp a trailing
-        ``VERSION AS OF n`` / ``TIMESTAMP AS OF 'ts'`` names — and
-        return the statement with those references rewritten to the
-        temp-view names, for Spark SQL to run unchanged (Catalyst
-        still prunes and pushes down: the temp view is a plain parquet
-        scan plan; EXPLAIN prepends Spark's own EXPLAIN to the same
-        rewritten text). Table references after FROM / JOIN and in
-        comma-separated FROM lists are resolved; only text OUTSIDE
-        string literals is rewritten (a literal containing
-        'FROM orders' stays intact). Comments are blanked up front
-        (``_mask_comments``) so a CHANGES(...) or table name inside
-        ``--``/``/* */`` is never rewritten and a comment's apostrophe
-        can't flip the literal-parity guard; backtick-quoted references
-        to REGISTERED names are rejected loudly (this dialect resolves
-        bare identifiers only — a silently-unrewritten quoted name
-        would surface as a confusing Spark TABLE_OR_VIEW_NOT_FOUND)."""
-        q = _mask_comments(q)
+        """Bind the statement's lakehouse tables and return the text for
+        Spark SQL to run (EXPLAIN prepends Spark's own EXPLAIN to it).
+        Spark's parser finds the references: the walk covers the plan's
+        children and inner children (subquery expressions, CTE bodies),
+        so hints, backticks, comma lists, CTE shadowing, comments and
+        literals behave exactly as in Spark.
 
-        def _resolve_branch(base: str, branch: str) -> str:
-            """``FROM base@branch`` / ``FROM base BRANCH branch`` —
-            audit-read a WAP stage THROUGH its base table's name: the
-            stage must be registered AND its manifest's own
-            ``cloned_from`` must point at the base, so a typo'd or
-            republished branch fails loud instead of silently reading
-            some other table. (A branch is also readable by its bare
-            registered name; this form adds the base↔branch check.)"""
-            if base in self.views:
-                raise SQLParseError(
-                    f"{base!r} is a materialized view — branches fork "
-                    f"tables; read the branch by its own name"
-                )
-            if branch not in self.tables:
-                raise SQLParseError(
-                    f"no branch {branch!r} registered — CREATE BRANCH "
-                    f"{branch} OF {base} LOCATION '...' first"
-                )
-            import os as _os
+        - A plain reference runs unrewritten: the table's current
+          version is registered as a temp view under its own name
+          (names match case-insensitively, as Spark resolves them).
+        - ``t VERSION AS OF n``, ``t TIMESTAMP AS OF 'ts'``, ``t VERSION
+          AS OF 'branch'`` and ``CHANGES(t, from[, to])`` are spliced,
+          at the spans the parser reports, with a temp view of that
+          version, branch or change feed; an unaliased time-travel read
+          keeps ``t`` as its alias.
 
-            stage = self.tables[branch]
-            # cloned_from is inherited manifest state (r10) so the
-            # CURRENT manifest carries it even after a vacuum dropped
-            # v1; stages cloned before the inheritance fall back to v1.
-            # The fallback read itself can miss (a plain table whose v1
-            # was vacuumed, named as @branch) — that's "not a branch",
-            # not a file error (ADVICE r10)
-            cloned = V._read_manifest(
-                stage, V.current_version(stage)
-            ).get("cloned_from")
-            if cloned is None:
-                try:
-                    cloned = V._read_manifest(stage, 1).get(
-                        "cloned_from"
-                    )
-                except FileNotFoundError:
-                    cloned = None
-            if _os.path.realpath(cloned or "") != _os.path.realpath(
-                self.tables[base]
-            ):
-                raise SQLParseError(
-                    f"{branch!r} is not a branch of {base!r} "
-                    f"(cloned_from={cloned!r})"
-                )
-            view = f"{base}__br_{branch}"
-            V.read_table(self.spark, stage).createOrReplaceTempView(
-                view
-            )
-            return view
-
-        def _resolve(name, ver, ts):
-            path = self.tables[name]
-            if name in self.views:
-                # a materialized view reads through its LOGICAL
-                # projection (avg derived, state internals hidden);
-                # VERSION/TIMESTAMP AS OF time-travels state AND spec
-                # together (the spec is per-manifest state)
-                from .io import matview as MV
-
-                if ts is not None:
-                    epoch = _dt.datetime.fromisoformat(ts).timestamp()
-                    ver = V.version_at(path, epoch)
-                if ver is not None:
-                    view = f"{name}__v{ver}"
-                    MV.read_aggregate_view(
-                        self.spark, path, version=int(ver)
-                    ).createOrReplaceTempView(view)
-                    return view
-                view = f"{name}__cur"
-                MV.read_aggregate_view(
-                    self.spark, path
-                ).createOrReplaceTempView(view)
-                return view
-            if ver is not None:
-                view = f"{name}__v{ver}"
-                df = V.read_table(self.spark, path, version=int(ver))
-            elif ts is not None:
-                epoch = _dt.datetime.fromisoformat(ts).timestamp()
-                view = f"{name}__ts{int(epoch)}"
-                df = V.read_table_as_of(self.spark, path, epoch)
-            else:
-                view = f"{name}__cur"
-                df = V.read_table(self.spark, path)
-            df.createOrReplaceTempView(view)
-            return view
-
-        def _in_literal(m: re.Match) -> bool:
-            """True when a raw-text match STARTS inside a single-quoted
-            literal (quote parity before the match; '' escapes flip
-            twice and cancel). The raw-text passes below match before
-            the literal split because their own arguments are quoted —
-            this guard keeps them from rewriting quoted DATA that
-            merely looks like the construct (review r11)."""
-            return m.string[: m.start()].count("'") % 2 == 1
-
-        # pass 0 (raw text): CHANGES(t, from[, to]) — the change-data
-        #-feed TVF (Delta's table_changes), parsed onto
-        # io/versioned.table_changes. Bounds are version numbers or
-        # quoted timestamps (resolved via version_at, same rule as
-        # TIMESTAMP AS OF); `to` defaults to the current version. Runs
-        # before the literal split because the timestamps are quoted.
-        # CHANGES/TABLE_CHANGES is reserved by this dialect: a
-        # registered-table arg is required, anything else (outside a
-        # string literal) fails loud.
-        ch_pat = re.compile(
-            rf"\b(?:TABLE_)?CHANGES\s*\(\s*(?:'({_ID})'|({_ID}))"
-            rf"\s*,\s*(?:(\d+)|'([^']+)')"
-            rf"(?:\s*,\s*(?:(\d+)|'([^']+)'))?\s*\)",
-            re.I,
-        )
-
-        def ch_sub(m: re.Match) -> str:
-            if _in_literal(m):
-                return m.group(0)
-            qname, bname, v1, ts1, v2, ts2 = m.groups()
-            name = qname or bname
-            if name not in self.tables:
-                raise SQLParseError(
-                    f"CHANGES: {name!r} is not a registered table"
-                )
-            if name in self.views:
-                raise SQLParseError(
-                    "CHANGES reads tables, not materialized views — "
-                    "the feed is file-diff state, which a view's "
-                    "logical projection does not have"
-                )
-            path = self.tables[name]
-            cur = V.current_version(path)
-
-            def _ver(v, ts):
-                if v is not None:
-                    return int(v)
-                epoch = _dt.datetime.fromisoformat(ts).timestamp()
-                return V.version_at(path, epoch)
-
-            lo = _ver(v1, ts1)
-            hi = _ver(v2, ts2) if (v2 is not None or ts2 is not None) \
-                else cur
-            if not 1 <= lo <= hi <= cur:
-                raise SQLParseError(
-                    f"CHANGES({name}, {lo}, {hi}): bounds must satisfy "
-                    f"1 <= from <= to <= current ({cur})"
-                )
-            view = f"{name}__ch_{lo}_{hi}"
-            V.table_changes(
-                self.spark, path, lo, hi
-            ).createOrReplaceTempView(view)
-            return view
-
-        q = ch_pat.sub(ch_sub, q)
-
-        # pass 1 (raw text): TIMESTAMP AS OF — its quoted timestamp IS
-        # a string literal, so it must resolve before the literal split
-        ts_pat = re.compile(
-            rf"(\b(?:FROM|JOIN){_WS}|,\s*)({_ID})"
-            rf"{_WS}TIMESTAMP{_WS}AS{_WS}OF{_WS}'([^']+)'",
-            re.I,
-        )
-
-        def ts_sub(m: re.Match) -> str:
-            if _in_literal(m):
-                return m.group(0)
-            kw, name, ts = m.groups()
-            if name not in self.tables:
-                return m.group(0)
-            return f"{kw}{_resolve(name, None, ts)}"
-
-        q = ts_pat.sub(ts_sub, q)
-
-        # pass 2: FROM/JOIN/comma-list names (+ VERSION AS OF), only
-        # OUTSIDE string literals — split on single-quoted spans and
-        # rewrite the even (non-literal) segments; a registered name
-        # inside a literal is data
-        # the BRANCH word-form excludes clause keywords so a table
-        # aliased `branch` followed by a JOIN/WHERE/... never matches;
-        # the @-form can't collide with any legal SQL token at all
-        pat = re.compile(
-            rf"(\b(?:FROM|JOIN){_WS}|,\s*)({_ID})"
-            rf"(?:{_WS}VERSION{_WS}AS{_WS}OF{_WS}(\d+)"
-            rf"|\s*@\s*({_ID})"
-            rf"|{_WS}BRANCH{_WS}"
-            rf"(?!(?:JOIN|WHERE|GROUP|ORDER|ON|LEFT|RIGHT|FULL|CROSS"
-            rf"|INNER|UNION|LIMIT|HAVING|AS|EXCEPT|INTERSECT|OFFSET"
-            rf"|WINDOW|QUALIFY|NATURAL|SEMI|ANTI|LATERAL|PIVOT"
-            rf"|UNPIVOT|SORT|CLUSTER|DISTRIBUTE)\b)({_ID}))?",
-            re.I,
-        )
-
-        def sub(m: re.Match) -> str:
-            kw, name, ver, br_at, br_kw = m.groups()
-            if name not in self.tables:
-                return m.group(0)  # not ours (subquery alias, etc.)
-            branch = br_at or br_kw
-            if branch is not None:
-                return f"{kw}{_resolve_branch(name, branch)}"
-            return f"{kw}{_resolve(name, ver, None)}"
-
-        segments = re.split(r"('(?:[^']|'')*')", q)
-        # FROM/JOIN positions only, EVERY match checked — a search()
-        # would stop at the first (possibly unregistered) backticked
-        # name (review r12). The comma form is deliberately NOT
-        # guarded (ADVICE r12): a `,\s*` alternative also matches
-        # SELECT-list commas, rejecting a backtick-quoted COLUMN that
-        # shares a registered table's name — the exact escape hatch
-        # backtick quoting exists for. A backticked registered name in
-        # a comma FROM list falls through to Spark's own
-        # TABLE_OR_VIEW_NOT_FOUND (loud, just less specific).
-        bt_pat = re.compile(
-            rf"\b(?:FROM|JOIN){_WS}`({_ID})`", re.I
-        )
-        for i, seg in enumerate(segments):
-            if i % 2:
+        Every view is read before Spark runs the statement, so each
+        table's version is bound at statement start."""
+        plan = self.spark._jsparkSession.sessionState().sqlParser() \
+            .parsePlan(q)
+        names = {n.lower(): n for n in self.tables}
+        current: set[str] = set()
+        splices: list[tuple[int, int, str]] = []  # [start, stop] ← text
+        stack = [(plan, None)]
+        while stack:
+            node, parent = stack.pop()
+            kind = node.nodeName()
+            if kind == "UnresolvedRelation":
+                name = names.get(node.tableName().lower())
+                if name is not None:
+                    current.add(name)
                 continue
-            for bt in bt_pat.finditer(seg):
-                if bt.group(1) in self.tables:
-                    raise SQLParseError(
-                        f"quoted table reference `{bt.group(1)}` is not "
-                        f"resolved by this dialect — registered lakehouse "
-                        f"tables must be referenced by their bare name"
-                    )
-        return "".join(
-            seg if i % 2 else pat.sub(sub, seg)
-            for i, seg in enumerate(segments)
+            if kind == "RelationTimeTravel":
+                name = names.get(node.relation().tableName().lower())
+                if name is not None:
+                    splices += self._time_travel(node, parent, name)
+                continue
+            if kind == "UnresolvedTableValuedFunction" and node.name() \
+                    .mkString(".").upper() in ("CHANGES", "TABLE_CHANGES"):
+                splices.append(self._changes(q, node, names))
+                continue
+            for seq in (node.children(), node.innerChildren()):
+                for i in range(seq.size()):
+                    stack.append((seq.apply(i), node))
+        for name in current:
+            self._snapshot(name).createOrReplaceTempView(name)
+        for start, stop, text in sorted(splices, reverse=True):
+            q = q[:start] + text + q[stop + 1:]
+        return q
+
+    def _snapshot(self, name: str, version: int | None = None) -> DataFrame:
+        """A registered name read at ``version`` (default current); a
+        materialized view reads through its LOGICAL projection (avg
+        derived, state internals hidden), time-travelling state and
+        spec together (the spec is per-manifest state)."""
+        path = self.tables[name]
+        if name in self.views:
+            from .io import matview as MV
+
+            return MV.read_aggregate_view(self.spark, path, version=version)
+        return V.read_table(self.spark, path, version=version)
+
+    def _time_travel(
+        self, node, parent, name: str
+    ) -> list[tuple[int, int, str]]:
+        """Splices for one ``RelationTimeTravel``: its span (the table
+        name through the temporal clause) becomes a temp view of the
+        version, timestamp or branch it names. A digit string is a
+        version, any other string a branch. Without a statement alias
+        the view is aliased back to ``name`` — after a TABLESAMPLE
+        clause when there is one, where the grammar puts aliases."""
+        ts = node.timestamp()
+        if ts.isDefined():
+            lit = ts.get()
+            if lit.nodeName() != "Literal" or \
+                    lit.dataType().typeName() != "string":
+                raise SQLParseError(
+                    f"TIMESTAMP AS OF on {name!r} takes a quoted "
+                    f"timestamp literal"
+                )
+            epoch = _dt.datetime.fromisoformat(str(lit.value())).timestamp()
+            ver = str(V.version_at(self.tables[name], epoch))
+        else:
+            ver = node.version().get()
+        if ver.isdigit():
+            view = f"{name}__v{int(ver)}"
+            self._snapshot(name, int(ver)).createOrReplaceTempView(view)
+        else:
+            view = self._resolve_branch(name, ver)
+        start = node.relation().origin().startIndex().get()
+        stop = node.origin().stopIndex().get()
+        alias = f" AS `{name}`"
+        kind = parent.nodeName()
+        if kind == "SubqueryAlias":
+            return [(start, stop, view)]
+        if kind == "Sample":
+            end = parent.origin().stopIndex().get()
+            return [(start, stop, view), (end + 1, end, alias)]
+        return [(start, stop, view + alias)]
+
+    def _resolve_branch(self, base: str, branch: str) -> str:
+        """``FROM base VERSION AS OF 'branch'`` (Iceberg's branch-read
+        form) — audit-read a WAP stage THROUGH its base table's name:
+        the stage must be registered AND its manifest's own
+        ``cloned_from`` must point at the base, so a typo'd or
+        republished branch fails loud instead of silently reading some
+        other table. (A branch is also readable by its bare registered
+        name; this form adds the base↔branch check.)"""
+        if base in self.views:
+            raise SQLParseError(
+                f"{base!r} is a materialized view — branches fork "
+                f"tables; read the branch by its own name"
+            )
+        if branch not in self.tables:
+            raise SQLParseError(
+                f"no branch {branch!r} registered — CREATE BRANCH "
+                f"{branch} OF {base} LOCATION '...' first"
+            )
+        import os as _os
+
+        stage = self.tables[branch]
+        # cloned_from is inherited manifest state (r10) so the CURRENT
+        # manifest carries it even after a vacuum dropped v1; stages
+        # cloned before the inheritance fall back to v1. The fallback
+        # read itself can miss (a plain table whose v1 was vacuumed,
+        # named as a branch) — that's "not a branch", not a file error
+        # (ADVICE r10)
+        cloned = V._read_manifest(
+            stage, V.current_version(stage)
+        ).get("cloned_from")
+        if cloned is None:
+            try:
+                cloned = V._read_manifest(stage, 1).get("cloned_from")
+            except FileNotFoundError:
+                cloned = None
+        if _os.path.realpath(cloned or "") != _os.path.realpath(
+            self.tables[base]
+        ):
+            raise SQLParseError(
+                f"{branch!r} is not a branch of {base!r} "
+                f"(cloned_from={cloned!r})"
+            )
+        view = f"{base}__br_{branch}"
+        V.read_table(self.spark, stage).createOrReplaceTempView(view)
+        return view
+
+    def _changes(
+        self, q: str, node, names: dict[str, str]
+    ) -> tuple[int, int, str]:
+        """The splice for one ``CHANGES(t, from[, to])`` /
+        ``TABLE_CHANGES`` call — the change-data-feed TVF (Delta's
+        table_changes), onto io/versioned.table_changes. ``t`` is a
+        bare or quoted registered table; bounds are version numbers or
+        quoted timestamps (resolved via version_at, the TIMESTAMP AS OF
+        rule); ``to`` defaults to the current version. The TVF's span
+        includes its alias, so only the call itself — through its
+        closing parenthesis — is replaced."""
+        args = node.functionArgs()
+        argv = [_arg_value(args.apply(i)) for i in range(args.size())]
+        if len(argv) not in (2, 3):
+            raise SQLParseError(
+                f"CHANGES takes (table, from[, to]), got {len(argv)} "
+                f"arguments"
+            )
+        name = names.get(str(argv[0]).lower())
+        if name is None:
+            raise SQLParseError(
+                f"CHANGES: {argv[0]!r} is not a registered table"
+            )
+        if name in self.views:
+            raise SQLParseError(
+                "CHANGES reads tables, not materialized views — "
+                "the feed is file-diff state, which a view's "
+                "logical projection does not have"
+            )
+        path = self.tables[name]
+        cur = V.current_version(path)
+
+        def _ver(b):
+            if type(b) is int:
+                return b
+            if not isinstance(b, str):
+                raise SQLParseError(
+                    f"CHANGES({name}, ...): bounds are versions or "
+                    f"quoted timestamps, got {b!r}"
+                )
+            return V.version_at(
+                path, _dt.datetime.fromisoformat(b).timestamp()
+            )
+
+        lo = _ver(argv[1])
+        hi = _ver(argv[2]) if len(argv) == 3 else cur
+        if not 1 <= lo <= hi <= cur:
+            raise SQLParseError(
+                f"CHANGES({name}, {lo}, {hi}): bounds must satisfy "
+                f"1 <= from <= to <= current ({cur})"
+            )
+        view = f"{name}__ch_{lo}_{hi}"
+        V.table_changes(self.spark, path, lo, hi).createOrReplaceTempView(
+            view
         )
+        last = args.apply(args.size() - 1).origin().stopIndex().get()
+        return node.origin().startIndex().get(), q.index(")", last + 1), view
 
     # -- EXPLAIN -------------------------------------------------------
 

@@ -175,8 +175,6 @@ def near_dup_pairs_bucketed(
     tables: int | None = None,
     dim: int = 64,
     max_bucket: int = 4096,
-    attach: str = "carry",
-    attach_limit_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Approximate cosine near-dup pairs: multi-table hyperplane LSH
     (OR-amplification across ``tables`` independent sketches of
@@ -220,33 +218,15 @@ def near_dup_pairs_bucketed(
     this generator (deterministic hyperplanes → the parity test result
     IS the driver result).
 
-    **Shuffle shape** (``attach`` — guide §8 "decide small, move once",
-    r13): the OR-amplification must co-locate every (table, bucket)
-    group, and each vector belongs to ``tables`` groups, so SOME
-    replication of the vectors is inherent. What is NOT inherent is
-    shipping the replicas through the exchange: with
-    ``attach="broadcast"`` (or ``"auto"``, which picks broadcast under
-    ``attach_limit_bytes`` by Catalyst's size estimate), only narrow
-    (id, table, bucket) rows are exploded and shuffled — vector bytes
-    cross the network ONCE per executor as a broadcast build — and the
-    vectors re-attach AFTER the exchange via a broadcast hash join that
-    preserves the (table, bucket) partitioning (no second exchange; CI
-    plan gate in tests/test_similarity_lsh.py). The amplification
-    exchange shrinks ~30× (vector payload → 20 bytes/row). Both shapes
-    score identical groups, so the emitted pair set is bit-identical
-    (the decision is performance-only).
-
-    ``"carry"`` is the DEFAULT on measurement, not on principle
-    (r13 A/B, 32-core local): in local/VM deployments the exchange is
-    memory-backed, so the narrow shuffle saves ~nothing while the
-    broadcast build + extra stage cost real time — sf0.1 carry 1.65 s
-    vs broadcast 3.31 s, sf1 5.49 vs 7.26 s, and in-bucket gram
-    scoring (inherently O(n²) per bucket) dominates both. Carry is
-    also the only correct shape at the 100 TB target, where the corpus
-    side exceeds the 8 GB broadcast cap. Choose ``"broadcast"`` (or
-    ``"auto"``) on network-bound clusters with a mid-scale corpus,
-    where cutting shuffle bytes ``tables``-fold is the lever the §8
-    pattern exists for."""
+    **Shuffle shape**: the OR-amplification must co-locate every
+    (table, bucket) group, and each vector belongs to ``tables`` groups,
+    so the exploded rows carry their vectors through the one exchange.
+    A narrow (id, table, bucket) shuffle with a broadcast re-attach of
+    the vectors was measured slower at every local scale (r13 A/B,
+    32-core local: sf0.1 1.65 vs 3.31 s, sf1 5.49 vs 7.26 s — the
+    exchange is memory-backed, in-bucket gram scoring dominates) and is
+    illegal past the broadcast cap at the 100 TB target, so it is not
+    offered."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -259,23 +239,8 @@ def near_dup_pairs_bucketed(
         tables = tables if tables is not None else auto_tables
 
     # spread the sketch matmul across cores when the input is a
-    # single-row-group file (one scan task otherwise). The broadcast
-    # side keeps the RAW projection — BroadcastExchange collects to one
-    # place anyway, so parallelize_small's repartition would be a
-    # wasted exchange there.
-    raw = df.select(id_col, vec_col)
-    df = parallelize_small(raw)
-
-    if attach == "auto":
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = attach_limit_bytes + 1  # stats unavailable: play safe
-        attach = "broadcast" if est <= attach_limit_bytes else "carry"
-    if attach not in ("broadcast", "carry"):
-        raise ValueError(f"attach must be auto|broadcast|carry: {attach!r}")
+    # single-row-group file (one scan task otherwise)
+    df = parallelize_small(df.select(id_col, vec_col))
 
     w_t = np.array(hyperplane_weights(planes * tables, dim)).T  # dim × (p·t)
     pow2 = (1 << np.arange(planes)).astype(np.int64)
@@ -289,32 +254,11 @@ def near_dup_pairs_bucketed(
 
     _buckets = pandas_udf(_buckets_fn, "array<long>")
 
-    if attach == "broadcast":
-        # narrow explode: the exchange moves (id, table, bucket) only;
-        # the explicit repartition puts the shuffle BELOW the join, and
-        # the broadcast join's output keeps that hash partitioning so
-        # groupBy().applyInPandas needs no second exchange
-        sk = (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.posexplode(_buckets(F.col(vec_col))).alias(
-                    "table", "bucket"
-                ),
-            )
-            .repartition("table", "bucket")
-            .join(
-                F.broadcast(
-                    raw.select(F.col(id_col).alias("id"), F.col(vec_col))
-                ),
-                "id",
-            )
-        )
-    else:
-        sk = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col),
-            F.posexplode(_buckets(F.col(vec_col))).alias("table", "bucket"),
-        )
+    sk = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col),
+        F.posexplode(_buckets(F.col(vec_col))).alias("table", "bucket"),
+    )
     id_type = df.schema[id_col].dataType.simpleString()
 
     def _score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -170,9 +170,15 @@ def test_select_time_travel(spark, tmp_path):
     # joins resolve each leg independently
     n = lk.sql(
         "SELECT count(*) AS n FROM tt VERSION AS OF 1 "
-        "JOIN tt b ON tt__v1.k = b.k"
+        "JOIN tt b ON tt.k = b.k"
     ).collect()[0]["n"]
     assert n == 10
+    # the grammar puts an alias after TABLESAMPLE: `tt` still names the
+    # time-travelled read there
+    assert lk.sql(
+        "SELECT count(*) AS n FROM tt VERSION AS OF 1 "
+        "TABLESAMPLE (100 PERCENT) WHERE tt.k < 5"
+    ).collect()[0]["n"] == 5
 
 
 def test_select_timestamp_as_of(spark, tmp_path):
@@ -378,7 +384,7 @@ def test_select_comma_join_resolves_both_tables(spark, tmp_path):
     V.create_table(spark.range(3).select(F.col("id").alias("k")), b)
     lk = LakeSQL(spark, {"ta": a, "tb": b})
     n = lk.sql(
-        "SELECT count(*) AS n FROM ta, tb WHERE ta__cur.k = tb__cur.k"
+        "SELECT count(*) AS n FROM ta, tb WHERE ta.k = tb.k"
     ).collect()[0]["n"]
     assert n == 3
 
@@ -1338,7 +1344,7 @@ def test_alter_add_column_sql(spark, tmp_path):
 
 def test_select_branch_of_base(spark, tmp_path):
     """VERDICT r9 gap #2: a WAP branch is SQL-readable THROUGH the
-    base table's name (FROM t@wip / FROM t BRANCH wip), with the
+    base table's name (Iceberg's FROM t VERSION AS OF 'wip'), with the
     base↔branch relationship verified from the stage's own cloned_from
     record."""
     tbl = str(tmp_path / "t")
@@ -1352,29 +1358,35 @@ def test_select_branch_of_base(spark, tmp_path):
     stg = str(tmp_path / "stage")
     lk.sql(f"CREATE BRANCH wip OF tgt LOCATION '{stg}'")
     lk.sql("INSERT INTO wip SELECT k + 100 AS k, v FROM tgt")
-    # both syntaxes resolve to the stage; the base is untouched
-    assert lk.sql("SELECT count(*) AS n FROM tgt@wip") \
+    # the branch read resolves to the stage; the base is untouched
+    assert lk.sql("SELECT count(*) AS n FROM tgt VERSION AS OF 'wip'") \
         .collect()[0]["n"] == 20
-    assert lk.sql("SELECT count(*) AS n FROM tgt BRANCH wip") \
-        .collect()[0]["n"] == 20
+    # `t@b` and `t BRANCH b` are not Spark SQL: Spark's parser rejects
+    # them
+    from pyspark.errors import ParseException
+
+    with pytest.raises(ParseException):
+        lk.sql("SELECT count(*) AS n FROM tgt@wip")
+    with pytest.raises(ParseException):
+        lk.sql("SELECT count(*) AS n FROM tgt BRANCH wip")
     assert lk.sql("SELECT count(*) AS n FROM tgt") \
         .collect()[0]["n"] == 10
     # a branch joins its base in one statement (staged-vs-prod audit)
     diff = lk.sql(
-        "SELECT count(*) AS n FROM tgt@wip b "
+        "SELECT count(*) AS n FROM tgt VERSION AS OF 'wip' b "
         "LEFT JOIN tgt p ON b.k = p.k WHERE p.k IS NULL"
     ).collect()[0]["n"]
     assert diff == 10
     # unknown branch, and a branch of a DIFFERENT base, fail loud
     with pytest.raises(SQLParseError, match="no branch"):
-        lk.sql("SELECT * FROM tgt@nope")
+        lk.sql("SELECT * FROM tgt VERSION AS OF 'nope'")
     other = str(tmp_path / "other")
     V.create_table(
         spark.range(3).select(F.col("id").alias("k")), other
     )
     lk.register("oth", other)
     with pytest.raises(SQLParseError, match="not a branch of"):
-        lk.sql("SELECT * FROM oth@wip")
+        lk.sql("SELECT * FROM oth VERSION AS OF 'wip'")
     # a plain alias named `branch` still parses as an alias
     assert lk.sql(
         "SELECT count(*) AS n FROM tgt branch JOIN tgt b "
@@ -1385,11 +1397,9 @@ def test_select_branch_of_base(spark, tmp_path):
 def test_select_branch_survives_vacuum_and_keyword_aliases(
     spark, tmp_path
 ):
-    """Review r10: cloned_from is inherited manifest state, so
-    t@branch still resolves after vacuum dropped the stage's v1; the
-    BRANCH word-form's keyword guard covers set operators (a table
-    aliased `branch` followed by EXCEPT parses as an alias, not a
-    branch name)."""
+    """Review r10: cloned_from is inherited manifest state, so a branch
+    read still resolves after vacuum dropped the stage's v1; a table
+    aliased `branch` followed by EXCEPT parses as an alias."""
     tbl = str(tmp_path / "t")
     V.create_table(
         spark.range(0, 10).select(
@@ -1407,14 +1417,14 @@ def test_select_branch_survives_vacuum_and_keyword_aliases(
 
     with _pt.raises(FileNotFoundError):
         V._read_manifest(stg, 1)
-    assert lk.sql("SELECT count(*) AS n FROM tgt@wip") \
+    assert lk.sql("SELECT count(*) AS n FROM tgt VERSION AS OF 'wip'") \
         .collect()[0]["n"] == 30
     # alias literally named `branch` before a set operator
     assert lk.sql(
         "SELECT k FROM tgt branch EXCEPT SELECT k + 1000 AS k FROM tgt"
     ).count() == 10
     # ADVICE r10: a PLAIN table (no cloned_from anywhere) whose v1 was
-    # ALSO vacuumed, named as @branch — the cloned_from=None fallback
+    # ALSO vacuumed, named as a branch — the cloned_from=None fallback
     # must fire the 'not a branch of' SQLParseError, not leak the
     # fallback's FileNotFoundError
     plain = str(tmp_path / "plain")
@@ -1427,7 +1437,7 @@ def test_select_branch_survives_vacuum_and_keyword_aliases(
         V._read_manifest(plain, 1)
     lk.register("plain", plain)
     with _pt.raises(SQLParseError, match="not a branch of"):
-        lk.sql("SELECT * FROM tgt@plain")
+        lk.sql("SELECT * FROM tgt VERSION AS OF 'plain'")
 
 
 def test_lsh_portable_oracle_nan_guard():
@@ -1770,15 +1780,13 @@ def test_literal_containing_comment_markers_stays_data(spark, tmp_path):
     assert n == 3
 
 
-def test_backtick_quoted_registered_name_rejected_loudly(spark, tmp_path):
-    """This dialect resolves bare identifiers only: a backtick-quoted
-    REGISTERED table name raises a clear SQLParseError instead of
-    falling through to Spark's TABLE_OR_VIEW_NOT_FOUND."""
+def test_backtick_quoted_registered_name_resolves(spark, tmp_path):
+    """A backtick-quoted registered name resolves as Spark resolves any
+    quoted identifier: it reads the table's rows."""
     tbl = str(tmp_path / "t")
     V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
     lk = LakeSQL(spark, {"tt": tbl})
-    with pytest.raises(SQLParseError, match="bare name"):
-        lk.sql("SELECT count(*) FROM `tt`")
+    assert lk.sql("SELECT count(*) AS n FROM `tt`").collect()[0]["n"] == 3
     # an UNregistered backticked name is not ours — Spark's own error
     # (or resolution, for real catalog tables) applies unchanged
     spark.range(2).createOrReplaceTempView("native_v")
@@ -1827,21 +1835,20 @@ def test_leading_comment_and_script_semicolon_in_comment(spark, tmp_path):
     ).collect()[0]["n"] == 3
 
 
-def test_backtick_guard_checks_every_reference_from_join_only(
+def test_backtick_quoted_references_resolve_in_every_position(
     spark, tmp_path
 ):
-    """review r12 + ADVICE r12: the loud rejection must catch a
-    registered backticked name even when an UNREGISTERED one precedes
-    it — but ONLY in FROM/JOIN position. A backtick-quoted COLUMN whose
-    name collides with a registered table (the `,\\s*` alternative the
-    r12 guard matched) is the escape hatch backtick quoting exists for
-    and must keep working."""
+    """A backticked registered name resolves after an unregistered one,
+    in JOIN and in a comma FROM list alike; a backtick-quoted COLUMN
+    that shares a registered table's name stays a column."""
     tbl = str(tmp_path / "t")
     V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
     lk = LakeSQL(spark, {"tt": tbl})
     spark.range(2).createOrReplaceTempView("native_w")
-    with pytest.raises(SQLParseError, match="bare name"):
-        lk.sql("SELECT * FROM `native_w` JOIN `tt` ON 1=1")
+    assert lk.sql(
+        "SELECT * FROM `native_w` JOIN `tt` ON 1=1"
+    ).count() == 6
+    assert lk.sql("SELECT * FROM native_w, `tt`").count() == 6
     # escape hatch: a COLUMN named like the registered table, backtick-
     # quoted after a SELECT-list comma, resolves as a column
     spark.range(2).select(
@@ -1849,12 +1856,6 @@ def test_backtick_guard_checks_every_reference_from_join_only(
     ).createOrReplaceTempView("native_x")
     got = lk.sql("SELECT a, `tt` FROM native_x").collect()
     assert sorted(r["tt"] for r in got) == [0, 10]
-    # a backticked registered name in a comma FROM list is no longer
-    # guarded: it falls through to Spark's own loud resolution error
-    from pyspark.errors import AnalysisException
-
-    with pytest.raises(AnalysisException):
-        lk.sql("SELECT * FROM native_w, `tt`")
 
 
 def test_query_hints_survive_masking_and_reach_spark(spark, tmp_path):
@@ -1911,3 +1912,170 @@ def test_add_column_not_null_rejected(spark, tmp_path):
     # the plain type still works and normalizes
     V.add_column(spark, tbl, "c2", "decimal(12, 2)")
     assert dict(V.read_table(spark, tbl).dtypes)["c2"] == "decimal(12,2)"
+
+
+# -- table references found by Spark's parser --------------------------
+
+
+def test_cte_shadows_registered_table(spark, tmp_path):
+    """A CTE named like a registered table shadows it, as in Spark: the
+    query counts the CTE's one row, not the table's five."""
+    tbl = str(tmp_path / "t")
+    V.create_table(spark.range(5).select(F.col("id").alias("k")), tbl)
+    lk = LakeSQL(spark, {"tt": tbl})
+    assert lk.sql(
+        "WITH tt AS (SELECT 1 AS k) SELECT count(*) AS n FROM tt"
+    ).collect()[0]["n"] == 1
+
+
+def test_broadcast_hint_reaches_registered_table(spark, tmp_path):
+    """ADVICE r13 (medium): /*+ BROADCAST(tt) */ names the registered
+    table's relation, so the join broadcasts it. Size-based broadcast
+    is off here: only the hint can plan the BroadcastHashJoin."""
+    big, small = str(tmp_path / "big"), str(tmp_path / "small")
+    V.create_table(spark.range(100).select(F.col("id").alias("k")), big)
+    V.create_table(spark.range(10).select(F.col("id").alias("k")), small)
+    lk = LakeSQL(spark, {"tb": big, "tt": small})
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = lk.sql(
+            "SELECT /*+ BROADCAST(tt) */ tb.k FROM tb JOIN tt ON tb.k = tt.k"
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        assert df.count() == 10
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_hint_column_named_like_registered_table_kept(spark, tmp_path):
+    """ADVICE r13 repro: in /*+ REPARTITION(4, tt) */ over an
+    unregistered view, `tt` is that view's COLUMN and stays one."""
+    tbl = str(tmp_path / "t")
+    V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
+    lk = LakeSQL(spark, {"tt": tbl})
+    spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("tt")
+    ).createOrReplaceTempView("native_h")
+    df = lk.sql("SELECT /*+ REPARTITION(4, tt) */ * FROM native_h")
+    assert df.rdd.getNumPartitions() == 4
+    assert "hashpartitioning(tt#" in (
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+    assert df.count() == 20
+
+
+def test_references_in_cte_body_and_in_subquery_resolve(spark, tmp_path):
+    """CTE bodies and subquery expressions are inner children of the
+    parsed plan; references there bind like any other."""
+    src, keys = str(tmp_path / "src"), str(tmp_path / "keys")
+    V.create_table(spark.range(5).select(F.col("id").alias("k")), src)
+    V.create_table(spark.range(2, 4).select(F.col("id").alias("k")), keys)
+    lk = LakeSQL(spark, {"cte_src": src, "in_keys": keys})
+    assert lk.sql(
+        "WITH c AS (SELECT k FROM cte_src WHERE k > 1) "
+        "SELECT count(*) AS n FROM c"
+    ).collect()[0]["n"] == 3
+    assert lk.sql(
+        "SELECT count(*) AS n FROM range(10) "
+        "WHERE id IN (SELECT k FROM in_keys)"
+    ).collect()[0]["n"] == 2
+
+
+def test_drop_table_unbinds_select_view(spark, tmp_path):
+    """SELECT binds a registered name as a temp view of that name; DROP
+    TABLE drops it too, so the name stops resolving instead of reading
+    a stale snapshot."""
+    from pyspark.errors import AnalysisException
+
+    tbl = str(tmp_path / "t")
+    V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
+    lk = LakeSQL(spark, {"unbound_t": tbl})
+    assert lk.sql("SELECT count(*) AS n FROM unbound_t").collect()[0]["n"] == 3
+    lk.sql("DROP TABLE unbound_t")
+    with pytest.raises(AnalysisException):
+        lk.sql("SELECT count(*) AS n FROM unbound_t")
+
+
+@pytest.fixture(scope="module")
+def diff_tables(spark, tmp_path_factory):
+    """The same two small tables as plain DataFrames and as registered
+    lakehouse tables."""
+    root = tmp_path_factory.mktemp("lakesql_diff")
+    frames = {
+        "emp": spark.createDataFrame(
+            [(1, "ana", 1, 120.0), (2, "bo", 1, 180.0), (3, "cy", 2, 90.0),
+             (4, "di", 3, 300.0), (5, "ed", 2, 160.0)],
+            "emp_id int, name string, dept_id int, salary double",
+        ),
+        "dept": spark.createDataFrame(
+            [(1, "eng"), (2, "ops"), (3, "exec"), (4, "empty")],
+            "dept_id int, dname string",
+        ),
+    }
+    paths = {}
+    for name, df in frames.items():
+        paths[name] = str(root / name)
+        V.create_table(df, paths[name])
+    return frames, paths
+
+
+@pytest.mark.parametrize("q", [
+    pytest.param(
+        "SELECT count(*) AS n -- FROM dept\nFROM emp /* JOIN dept */",
+        id="comments",
+    ),
+    pytest.param(
+        "SELECT name, 'FROM emp JOIN dept' AS s FROM emp "
+        "WHERE name <> 'FROM dept'",
+        id="literals",
+    ),
+    pytest.param(
+        "SELECT `e`.name, d.dname FROM `emp` `e` "
+        "JOIN `dept` d ON e.dept_id = d.dept_id",
+        id="backticks",
+    ),
+    pytest.param(
+        "SELECT e.name, d.dname FROM emp e, dept d "
+        "WHERE e.dept_id = d.dept_id",
+        id="comma_join",
+    ),
+    pytest.param(
+        "WITH rich AS (SELECT * FROM emp WHERE salary > 150) "
+        "SELECT dname, count(*) AS n FROM rich JOIN dept USING (dept_id) "
+        "GROUP BY dname",
+        id="cte",
+    ),
+    pytest.param(
+        "WITH dept AS (SELECT 1 AS dept_id, 'x' AS dname) "
+        "SELECT count(*) AS n FROM emp JOIN dept USING (dept_id)",
+        id="cte_shadowing",
+    ),
+    pytest.param(
+        "SELECT name FROM emp WHERE dept_id IN "
+        "(SELECT dept_id FROM dept WHERE dname LIKE 'e%') "
+        "AND salary < (SELECT max(salary) FROM emp)",
+        id="subqueries",
+    ),
+    pytest.param(
+        "SELECT d.dname FROM dept d WHERE NOT EXISTS "
+        "(SELECT 1 FROM emp e WHERE e.dept_id = d.dept_id)",
+        id="exists",
+    ),
+    pytest.param(
+        "SELECT /*+ BROADCAST(dept) */ e.name, d.dname FROM emp e "
+        "JOIN dept d ON e.dept_id = d.dept_id",
+        id="hint",
+    ),
+])
+def test_plain_spark_sql_matches_spark(spark, diff_tables, q):
+    """LakeSQL is a superset of Spark SQL: a plain statement over
+    registered tables returns exactly the rows spark.sql returns over
+    temp views of the same data under the same names."""
+    frames, paths = diff_tables
+    for name, df in frames.items():
+        df.createOrReplaceTempView(name)
+    want = sorted(tuple(r) for r in spark.sql(q).collect())
+    got = sorted(tuple(r) for r in LakeSQL(spark, paths).sql(q).collect())
+    assert want and got == want

@@ -108,82 +108,18 @@ def test_int8_quantization_preserves_topk(spark):
     assert len(set(exact) & set(quant)) >= 9
 
 
-def test_attach_modes_bit_identical_and_narrow_shuffle(spark):
-    """r13 (guide §8): the broadcast-attach shape must emit the exact
-    same (id1, id2, sim) rows as the vector-carrying shape, and its
-    amplification Exchange must move only (id, table, bucket) — the
-    vectors re-attach via BroadcastHashJoin AFTER the exchange with no
-    second Exchange before FlatMapGroupsInPandas."""
-    import re
-
+def test_bucketed_plan_has_no_broadcast_join(spark):
+    """The vectors ride the one (table, bucket) exchange: the bench and
+    portable queries call with default arguments, and their plan must
+    not re-attach vectors through a BroadcastHashJoin (measured slower
+    locally, illegal past the broadcast cap at the 100 TB corpus)."""
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    rows = {}
-    for mode in ("broadcast", "carry"):
-        rows[mode] = sorted(
-            map(
-                tuple,
-                near_dup_pairs_bucketed(
-                    e, threshold=0.4, attach=mode
-                ).collect(),
-            )
-        )
-    assert rows["broadcast"] == rows["carry"] and rows["carry"]
-
-    df = near_dup_pairs_bucketed(e, threshold=0.4, attach="broadcast")
-    p = df._sc._jvm.PythonSQLUtils.explainString(
+    df = near_dup_pairs_bucketed(e, threshold=0.4)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    assert "BroadcastHashJoin" in p
-    # the operator section after FlatMapGroupsInPandas' child Sort must
-    # reach the BHJ without crossing an Exchange (partitioning from the
-    # narrow repartition is preserved through the join)
-    tree = p.split("\n\n")[0]
-    seg = tree[
-        tree.index("FlatMapGroupsInPandas"): tree.index("BroadcastHashJoin")
-    ]
-    assert "Exchange" not in seg
-    # the AMPLIFICATION exchange — hashpartitioning(table, bucket) —
-    # must not carry the vector column (parallelize_small's round-robin
-    # repartition before the sketch legitimately moves each vector ONCE;
-    # the 48x-replicated rows are the ones that must stay narrow)
-    amp = [
-        m
-        for m in re.finditer(
-            r"\(\d+\) Exchange\n(Input \[.*?\]: \[.*?\])\n"
-            r"(Arguments: .*)",
-            p,
-        )
-        if "hashpartitioning(table" in m.group(2)
-    ]
-    assert amp, "no (table, bucket) exchange found in plan"
-    for m in amp:
-        assert "embedding" not in m.group(1), m.group(0)
-
-    # auto mode resolves to broadcast at this (tiny) scale and stays
-    # bit-identical; an explicit tiny limit forces the carry fallback
-    auto_rows = sorted(
-        map(
-            tuple,
-            near_dup_pairs_bucketed(e, threshold=0.4, attach="auto").collect(),
-        )
-    )
-    assert auto_rows == rows["carry"]
-    forced = near_dup_pairs_bucketed(
-        e, threshold=0.4, attach="auto", attach_limit_bytes=1
-    )
-    pf = forced._sc._jvm.PythonSQLUtils.explainString(
-        forced._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" not in pf
-    # the DEFAULT is carry (measured faster at local scales and the
-    # only correct shape at the 100 TB corpus — see the docstring):
-    # the bench/portable queries call with no attach argument, so this
-    # pins their plan shape
-    default = near_dup_pairs_bucketed(e, threshold=0.4)
-    pd_ = default._sc._jvm.PythonSQLUtils.explainString(
-        default._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" not in pd_
+    assert "FlatMapGroupsInPandas" in plan
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_fixed_param_bucketed_pairs_subset_of_exact(spark):

@@ -6,7 +6,8 @@ Python eval nodes).
 
 Usage:
     python tools/r13_measure.py [--sf DIR] [--plans SUFFIX] [--reps N] q1 q2 ...
-    python tools/r13_measure.py --all            # every catalog+component query, plans only
+    python tools/r13_measure.py --all --plans SUFFIX  # every catalog+component
+                                                      # query, plans only
     python tools/r13_measure.py --final ...      # EXECUTE first, capture the
                                                  # AQE-final plan (isFinalPlan=true)
 """
@@ -66,8 +67,14 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/tmp/spark_graft_rechunk_sf0.1")
     ap.add_argument("--plans", default=None, help="suffix: write plans/r13/<q>_<suffix>.txt")
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--all", action="store_true")
+    ap.add_argument(
+        "--reps", type=int, default=None,
+        help="timed runs per query (default 3; 0 with --all)",
+    )
+    ap.add_argument(
+        "--all", action="store_true",
+        help="capture every catalog+component plan; needs --plans",
+    )
     ap.add_argument("--count", action="store_true", help="time .count() like bench.py instead of noop")
     ap.add_argument(
         "--final", action="store_true",
@@ -77,6 +84,10 @@ def main() -> None:
     )
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
+    if args.all and not args.plans:
+        ap.error("--all captures plans: give --plans SUFFIX")
+    if args.reps is None:
+        args.reps = 0 if args.all else 3
 
     names = list(DEFS) if args.all else args.queries
     spark = build_session(app_name="r13_measure")
