@@ -5,10 +5,11 @@ OPTIMIZE / VACUUM, parsed onto ``io/versioned.py``'s DataFrame verbs.
 The reference's analytic surface was SQL (its transform stage is a
 SparkSQL node in a Glue visual job — ETL_glue_pregao_B3.json:150-170);
 a user migrating from it expects to WRITE mutations in SQL too, the way
-Delta/Iceberg users do. Spark's open-source SQL parser has no writable
-table format behind these statements for plain-parquet sessions, so
-this module parses the Delta-style statement shapes itself and executes
-them through the versioned-table layer — every statement lands on
+Delta/Iceberg users do. Spark's open-source SQL parser parses these
+statements but has no writable table format behind them for
+plain-parquet sessions, so this module reads the parse tree (and
+matches the lakehouse-only verbs itself) and executes each statement
+through the versioned-table layer — every statement lands on
 exactly the same code path as the DataFrame API (``merge_table``,
 ``update_table``, ``delete_from``, ``read_table``), so SQL-vs-DataFrame
 parity is structural, not re-implemented (tested in
@@ -58,16 +59,24 @@ SQL-driven pipeline can log/assert on it uniformly.
 
 Grammar notes (deliberate limits, all loud):
 
+- MERGE, UPDATE, DELETE, INSERT and the matview's ``AS SELECT`` body
+  are parsed by Spark's own parser; LakeSQL reads the parse tree and
+  hands conditions and values to ``F.expr`` as the statement's own
+  text, so literals, quoting and parentheses mean what Spark says.
+  Only the verbs Spark cannot parse (OPTIMIZE, VACUUM, RESTORE, CLONE,
+  BRANCH, ALTER, CTAS's CLUSTERED BY, ...) are matched by hand.
 - MERGE's ON clause must be a conjunction of ``t.<col> = s.<col>``
   equalities over SAME-NAMED columns (the ``merge_table`` key
-  contract); alias names are whatever the statement declares.
+  contract); alias names are whatever the statement declares (``AS``
+  optional), else the table's own name.
 - ``WHEN NOT MATCHED THEN INSERT *`` only (the source row inserts
   whole — project the source subquery to shape it).
 - One clause of each kind, like Delta before 2.0. ``WHEN MATCHED``
   may appear twice ONLY as UPDATE-with-AND-condition followed by
   DELETE (the Delta clause-ordering idiom; the UPDATE's condition is
-  required, matching Delta's non-final-clause rule, and both
-  conditions must be source-only). Executed as a conditional update
+  required — Spark's parser enforces Delta's non-final-clause rule —
+  and both conditions must resolve against the source row alone).
+  Executed as a conditional update
   merge then a CAS-chained conditional delete merge carrying the
   INSERT clause — two commits, so a crash between them leaves the
   UPDATE applied with the DELETE/INSERT pending (re-run to finish);
@@ -75,9 +84,8 @@ Grammar notes (deliberate limits, all loud):
 - SELECT: table references resolve as Spark resolves them; time
   travel, CHANGES and branch reads are spliced at parser spans. A
   branch reads as ``FROM t VERSION AS OF 'branch'`` (Iceberg's form).
-- String literals containing keywords (``'WHEN MATCHED'``) inside
-  DML predicates are not lexed; keep such text out of DML predicates
-  (SELECT literals are safe).
+  The versioned views a statement mints are dropped once Spark has
+  analyzed it.
 """
 
 from __future__ import annotations
@@ -85,6 +93,7 @@ from __future__ import annotations
 import datetime as _dt
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,6 +101,28 @@ from .io import versioned as V
 
 _WS = r"\s+"
 _ID = r"[A-Za-z_][\w]*"
+
+
+def _skip_literal(q: str, i: int) -> int:
+    """The index just past the quoted literal opening at ``q[i]``,
+    by Spark's default lexer rules: ``'…'`` and ``"…"`` are strings
+    (``doubleQuotedIdentifiers=false``) with backslash escapes,
+    `` `…` `` is an identifier without them, and a doubled quote
+    escapes itself in all three. An unterminated literal runs to the
+    end of the text."""
+    quote, n = q[i], len(q)
+    i += 1
+    while i < n:
+        c = q[i]
+        if c == "\\" and quote != "`":
+            i += 2  # backslash escape: next char is literal data
+        elif c == quote and i + 1 < n and q[i + 1] == quote:
+            i += 2  # doubled-quote escape: stay inside
+        elif c == quote:
+            return i + 1
+        else:
+            i += 1
+    return n
 
 
 def _mask_comments(q: str) -> str:
@@ -103,42 +134,22 @@ def _mask_comments(q: str) -> str:
     parsers here AND Spark ultimately see, which is semantically
     identical (comments carry no meaning).
 
-    Literal tracking mirrors Spark's default lexer (review r12): BOTH
-    quote kinds are literals (``"…"`` is a string under the default
-    ``doubleQuotedIdentifiers=false``), backslash escapes are honored
-    inside either (``'it\\'s--not a comment'``), doubled quotes escape
-    themselves, and bracketed comments NEST (SPARK-28880:
+    Literals are skipped by ``_skip_literal`` (review r12, ADVICE r12:
+    both quote kinds and backtick identifiers, so ``--``/``/*`` inside
+    any of them stays data), and bracketed comments NEST (SPARK-28880:
     ``/* a /* b */ c */`` is one comment). An unterminated block
     comment blanks to end-of-string, matching how Spark's own lexer
-    treats the tail.
-
-    Two carve-outs (ADVICE r12): backtick-quoted identifiers are a
-    third quoting context (no backslash escapes — `` `` `` doubles),
-    so ``--``/``/*`` inside a legal quoted identifier stays data; and
-    bracketed comments whose body starts with ``+`` are Spark QUERY
-    HINTS (``/*+ BROADCAST(t) */``) — semantically meaningful, so
-    they pass through unmasked (hint bodies are bare identifiers and
-    numbers; a quote inside one is not valid hint syntax)."""
+    treats the tail. Bracketed comments whose body starts with ``+``
+    are Spark QUERY HINTS (``/*+ BROADCAST(t) */``) — semantically
+    meaningful, so they pass through unmasked (hint bodies are bare
+    identifiers and numbers; a quote inside one is not valid hint
+    syntax)."""
     out = list(q)
     i, n = 0, len(q)
-    lit: str | None = None  # the quote char when inside a literal
     while i < n:
         c = q[i]
-        if lit is not None:
-            if c == "\\" and i + 1 < n and lit != "`":
-                i += 2  # backslash escape: next char is literal data
-                continue
-            if c == lit:
-                # doubled-quote escape: consume both, stay inside
-                if i + 1 < n and q[i + 1] == lit:
-                    i += 2
-                    continue
-                lit = None
-            i += 1
-            continue
         if c in ("'", '"', "`"):
-            lit = c
-            i += 1
+            i = _skip_literal(q, i)
             continue
         if c == "-" and i + 1 < n and q[i + 1] == "-":
             j = q.find("\n", i)
@@ -176,33 +187,138 @@ class SQLParseError(ValueError):
 
 
 def _split_top(text: str, sep: str) -> list[str]:
-    """Split on ``sep`` (a regex, case-insensitive, word-bounded) at
-    paren/quote depth 0 — commas inside function calls and ANDs inside
-    parenthesized sub-predicates don't split."""
+    """Split on the character ``sep`` outside parentheses, brackets and
+    quoted literals (the ``_skip_literal`` rules) — commas inside
+    function calls and semicolons inside strings don't split."""
     parts, depth, last, i = [], 0, 0, 0
-    pat = re.compile(sep, re.I)
-    in_str = False
     while i < len(text):
         c = text[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c in "([":
+        if c in ("'", '"', "`"):
+            i = _skip_literal(text, i)
+            continue
+        if c in "([":
             depth += 1
         elif c in ")]":
             depth -= 1
-        elif depth == 0:
-            m = pat.match(text, i)
-            if m:
-                parts.append(text[last:i])
-                i = m.end()
-                last = i
-                continue
+        elif c == sep and depth == 0:
+            parts.append(text[last:i])
+            last = i + 1
         i += 1
     parts.append(text[last:])
     return parts
+
+
+def _seq(s) -> list:
+    """A Scala Seq from the parser as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _span(q: str, node) -> str:
+    """The statement text a parsed node was built from, by its own
+    origin: right for queries, column references and comparisons; any
+    other expression goes through ``_text``."""
+    o = node.origin()
+    return q[o.startIndex().get():o.stopIndex().get() + 1]
+
+
+def _name_parts(expr) -> list[str] | None:
+    """A column reference's name parts (``s.meta.flag`` → ``['s',
+    'meta', 'flag']``, backticks resolved); None for any other
+    expression. Inside a lambda body every reference parses as a
+    lambda variable until analysis."""
+    if expr.nodeName() not in (
+        "UnresolvedAttribute", "UnresolvedNamedLambdaVariable"
+    ):
+        return None
+    return _seq(expr.nameParts())
+
+
+def _equalities(q: str, cond, what: str) -> list[tuple[str, dict]]:
+    """The terms of an ON condition that must be an AND of
+    ``a.col = b.col`` equalities — MERGE keys and matview joins — as
+    (term text, {qualifier lower-cased: column}). Parentheses are
+    gone by parse time; any other term raises, naming it."""
+    terms, stack = [], [cond]
+    while stack:
+        e = stack.pop()
+        if e.nodeName() == "And":
+            stack += [e.right(), e.left()]
+            continue
+        sides = (
+            [_name_parts(e.left()), _name_parts(e.right())]
+            if e.nodeName() == "EqualTo" else []
+        )
+        if len(sides) != 2 or any(p is None or len(p) != 2 for p in sides):
+            raise SQLParseError(
+                f"{what} must be a conjunction of name.col = name.col "
+                f"equalities, got {_text(q, e, {})!r}"
+            )
+        terms.append((_span(q, e), {a.lower(): c for a, c in sides}))
+    return terms
+
+
+def _text(q: str, expr, aliases: dict[str, str]) -> str:
+    """``expr``'s statement text, for ``F.expr``.
+
+    A predicate (LIKE, IN, BETWEEN, IS NULL, ...) carries the origin of
+    its keyword onward, so the text is the union of the subtree's
+    origins, widened left over parentheses that leaves open
+    (``(a + 1) IN (2, 3)``). Shared nodes such as the ``true`` literal
+    keep the origin of whatever statement first built them, so only
+    origins in ``q`` count.
+
+    Each column reference whose first name part is a key of
+    ``aliases`` (lower-cased) is re-qualified by its value —
+    merge_table's ``t.``/``s.`` contract. Only those references' spans
+    change, in one pass, so string literals and a crossed pair (``INTO
+    x AS s USING y AS t``) stay intact."""
+    if expr.nodeName() == "Exists":
+        # EXISTS carries its enclosing clause's origin: rebuild it
+        # around its subquery's own span
+        return f"EXISTS ({_span(q, expr.plan())})"
+    lo, hi, refs, stack = len(q), -1, [], [expr]
+    while stack:
+        e = stack.pop()
+        stack += _seq(e.children())
+        o = e.origin()
+        if not o.sqlText().isDefined() or o.sqlText().get() != q:
+            continue
+        start, stop = o.startIndex().get(), o.stopIndex().get()
+        lo, hi = min(lo, start), max(hi, stop)
+        parts = _name_parts(e)
+        if parts and len(parts) > 1 and parts[0].lower() in aliases:
+            refs.append((start, stop, ".".join(
+                [aliases[parts[0].lower()]]
+                + ["`" + p.replace("`", "``") + "`" for p in parts[1:]]
+            )))
+    if hi < 0:  # a shared literal alone (``SET flag = true``)
+        return expr.sql()
+    depth = lowest = 0
+    i = lo
+    while i <= hi:
+        if q[i] in ("'", '"', "`"):
+            i = _skip_literal(q, i)
+            continue
+        depth += (q[i] == "(") - (q[i] == ")")
+        lowest = min(lowest, depth)
+        i += 1
+    while lowest < 0 and lo > 0:
+        lo -= 1
+        lowest += q[lo] == "("
+    text = q[lo:hi + 1]
+    for start, stop, ref in sorted(refs, reverse=True):
+        text = text[:start - lo] + ref + text[stop - lo + 1:]
+    return text
+
+
+def _merge_side(node, default: str):
+    """(alias, relation or query) of one side of a MERGE: the declared
+    alias, else a table's own name, else ``default``."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.alias(), node.child()
+    if node.nodeName() == "UnresolvedRelation":
+        return node.tableName(), node
+    return default, node
 
 
 def _arg_value(expr):
@@ -391,7 +507,7 @@ class LakeSQL:
         statement."""
         results = [
             self.sql(stmt)
-            for stmt in _split_top(_mask_comments(text), r";")
+            for stmt in _split_top(_mask_comments(text), ";")
             if stmt.strip()
         ]
         if not results:
@@ -406,16 +522,31 @@ class LakeSQL:
 
     # -- SELECT + time travel -----------------------------------------
 
-    def _select(self, q: str) -> DataFrame:
-        return self.spark.sql(self._rewrite_select(q))
+    def _select(self, q: str, prefix: str = "") -> DataFrame:
+        """Run a SELECT (after ``prefix``, e.g. Spark's own ``EXPLAIN``)
+        over the lakehouse tables it references. The versioned, branch
+        and change-feed views the rewrite mints are dropped once Spark
+        has analyzed the statement: the DataFrame holds their plans, so
+        it still runs, and the session catalog keeps no view per
+        statement."""
+        minted: list[str] = []
+        try:
+            return self.spark.sql(prefix + self._rewrite_select(q, minted))
+        finally:
+            for view in minted:
+                self.spark.catalog.dropTempView(view)
 
-    def _rewrite_select(self, q: str) -> str:
+    def _parse(self, q: str):
+        """Spark's parse tree for one statement (no analysis)."""
+        return self.spark._jsparkSession.sessionState().sqlParser() \
+            .parsePlan(q)
+
+    def _rewrite_select(self, q: str, minted: list[str]) -> str:
         """Bind the statement's lakehouse tables and return the text for
-        Spark SQL to run (EXPLAIN prepends Spark's own EXPLAIN to it).
-        Spark's parser finds the references: the walk covers the plan's
-        children and inner children (subquery expressions, CTE bodies),
-        so hints, backticks, comma lists, CTE shadowing, comments and
-        literals behave exactly as in Spark.
+        Spark SQL to run. Spark's parser finds the references: the walk
+        covers the plan's children and inner children (subquery
+        expressions, CTE bodies), so hints, backticks, comma lists, CTE
+        shadowing, comments and literals behave exactly as in Spark.
 
         - A plain reference runs unrewritten: the table's current
           version is registered as a temp view under its own name
@@ -423,13 +554,13 @@ class LakeSQL:
         - ``t VERSION AS OF n``, ``t TIMESTAMP AS OF 'ts'``, ``t VERSION
           AS OF 'branch'`` and ``CHANGES(t, from[, to])`` are spliced,
           at the spans the parser reports, with a temp view of that
-          version, branch or change feed; an unaliased time-travel read
-          keeps ``t`` as its alias.
+          version, branch or change feed (its name is appended to
+          ``minted``); an unaliased time-travel read keeps ``t`` as its
+          alias.
 
         Every view is read before Spark runs the statement, so each
         table's version is bound at statement start."""
-        plan = self.spark._jsparkSession.sessionState().sqlParser() \
-            .parsePlan(q)
+        plan = self._parse(q)
         names = {n.lower(): n for n in self.tables}
         current: set[str] = set()
         splices: list[tuple[int, int, str]] = []  # [start, stop] ← text
@@ -445,15 +576,14 @@ class LakeSQL:
             if kind == "RelationTimeTravel":
                 name = names.get(node.relation().tableName().lower())
                 if name is not None:
-                    splices += self._time_travel(node, parent, name)
+                    splices += self._time_travel(node, parent, name, minted)
                 continue
             if kind == "UnresolvedTableValuedFunction" and node.name() \
                     .mkString(".").upper() in ("CHANGES", "TABLE_CHANGES"):
-                splices.append(self._changes(q, node, names))
+                splices.append(self._changes(q, node, names, minted))
                 continue
-            for seq in (node.children(), node.innerChildren()):
-                for i in range(seq.size()):
-                    stack.append((seq.apply(i), node))
+            for child in _seq(node.children()) + _seq(node.innerChildren()):
+                stack.append((child, node))
         for name in current:
             self._snapshot(name).createOrReplaceTempView(name)
         for start, stop, text in sorted(splices, reverse=True):
@@ -473,7 +603,7 @@ class LakeSQL:
         return V.read_table(self.spark, path, version=version)
 
     def _time_travel(
-        self, node, parent, name: str
+        self, node, parent, name: str, minted: list[str]
     ) -> list[tuple[int, int, str]]:
         """Splices for one ``RelationTimeTravel``: its span (the table
         name through the temporal clause) becomes a temp view of the
@@ -499,6 +629,7 @@ class LakeSQL:
             self._snapshot(name, int(ver)).createOrReplaceTempView(view)
         else:
             view = self._resolve_branch(name, ver)
+        minted.append(view)
         start = node.relation().origin().startIndex().get()
         stop = node.origin().stopIndex().get()
         alias = f" AS `{name}`"
@@ -557,7 +688,7 @@ class LakeSQL:
         return view
 
     def _changes(
-        self, q: str, node, names: dict[str, str]
+        self, q: str, node, names: dict[str, str], minted: list[str]
     ) -> tuple[int, int, str]:
         """The splice for one ``CHANGES(t, from[, to])`` /
         ``TABLE_CHANGES`` call — the change-data-feed TVF (Delta's
@@ -568,7 +699,7 @@ class LakeSQL:
         includes its alias, so only the call itself — through its
         closing parenthesis — is replaced."""
         args = node.functionArgs()
-        argv = [_arg_value(args.apply(i)) for i in range(args.size())]
+        argv = [_arg_value(a) for a in _seq(args)]
         if len(argv) not in (2, 3):
             raise SQLParseError(
                 f"CHANGES takes (table, from[, to]), got {len(argv)} "
@@ -611,6 +742,7 @@ class LakeSQL:
         V.table_changes(self.spark, path, lo, hi).createOrReplaceTempView(
             view
         )
+        minted.append(view)
         last = args.apply(args.size() - 1).origin().stopIndex().get()
         return node.origin().startIndex().get(), q.index(")", last + 1), view
 
@@ -637,9 +769,8 @@ class LakeSQL:
         body = body.strip()
         head = body.split(None, 1)[0].upper() if body else ""
         if head in ("SELECT", "WITH"):
-            return self.spark.sql(
-                f"EXPLAIN {(mode or 'FORMATTED').upper()} "
-                + self._rewrite_select(body)
+            return self._select(
+                body, f"EXPLAIN {(mode or 'FORMATTED').upper()} "
             )
         if head in ("MERGE", "UPDATE", "DELETE"):
             if mode:
@@ -649,296 +780,103 @@ class LakeSQL:
                 )
             if head == "MERGE":
                 return self._explain_merge(body)
-            return self._explain_mutation(head, body)
+            # UPDATE/DELETE: the verbs' discovery scan — which files
+            # hold matched rows (the CoW rewrite / DV sidecar set), how
+            # many rows match — no mutation, no commit
+            name, _, pred = self._mutation(body)
+            plan = V.mutation_probe_plan(self.spark, self._path(name), pred)
+            return self._result({"statement": head, "table": name, **plan})
         raise SQLParseError(
             f"EXPLAIN supports SELECT/WITH, MERGE, UPDATE and DELETE "
             f"statements: {body!r}"
-        )
-
-    def _explain_mutation(self, kind: str, q: str) -> DataFrame:
-        """Dry-run an UPDATE/DELETE's discovery scan: which files hold
-        matched rows (the CoW rewrite / DV sidecar set), how many rows
-        match — no mutation, no commit."""
-        if kind == "UPDATE":
-            m = re.match(
-                rf"UPDATE{_WS}({_ID}){_WS}SET{_WS}.*?"
-                rf"(?:{_WS}WHERE{_WS}(.*))?$",
-                q, re.I | re.S,
-            )
-        else:
-            m = re.match(
-                rf"DELETE{_WS}FROM{_WS}({_ID})(?:{_WS}WHERE{_WS}(.*))?$",
-                q, re.I | re.S,
-            )
-        if not m:
-            raise SQLParseError(f"cannot parse EXPLAIN {kind}: {q!r}")
-        name, where = m.groups()
-        pred = F.expr(where) if where else F.lit(True)
-        plan = V.mutation_probe_plan(self.spark, self._path(name), pred)
-        return self._result(
-            {"statement": kind, "table": name, **plan}
         )
 
     def _explain_merge(self, q: str) -> DataFrame:
         """Dry-run the probe phase of a MERGE statement: no mutation,
         no commit — reports how the stats/bucket/bloom pruning and the
         key semi-probe would confine the rewrite."""
-        tname, talias, src, salias, rest = self._parse_merge_header(q)
-        chunks = _split_top(rest, r"\bWHEN\b")
-        keys = self._merge_keys(chunks[0].strip(), talias, salias)
-        has_by_source = any(
-            re.match(rf"\s*NOT{_WS}MATCHED{_WS}BY{_WS}SOURCE\b", c, re.I)
-            for c in chunks[1:]
+        plan, tname, _, keys, source_df = self._parse_merge(q)
+        probe = V.merge_probe_plan(
+            self.spark, self._path(tname), source_df, keys,
+            has_by_source_clause=plan.notMatchedBySourceActions().size() > 0,
         )
-        plan = V.merge_probe_plan(
-            self.spark, self._path(tname), self._merge_source(src),
-            keys, has_by_source_clause=has_by_source,
-        )
-        return self._result(
-            {"statement": "MERGE", "table": tname, **plan}
-        )
+        return self._result({"statement": "MERGE", "table": tname, **probe})
 
     # -- UPDATE / DELETE ----------------------------------------------
 
+    def _mutation(self, q: str):
+        """Parse an UPDATE or DELETE: (table name, SET assignments —
+        None for DELETE — and the WHERE predicate)."""
+        plan = self._parse(q)
+        rel = plan.table()
+        if rel.nodeName() != "UnresolvedRelation":
+            raise SQLParseError(
+                f"UPDATE and DELETE take a registered table name "
+                f"without an alias: {q!r}"
+            )
+        name = rel.tableName()
+        cond = plan.condition()
+        assigns = None
+        if plan.nodeName() == "UpdateTable":
+            assigns = self._assignments(
+                q, plan.assignments(), {name.lower()}, {}
+            )
+            cond = cond.get() if cond.isDefined() else None
+        # a DELETE without WHERE parses to a bare TRUE, as WHERE TRUE does
+        if cond is None or (
+            cond.nodeName() == "Literal" and cond.value() is True
+        ):
+            return name, assigns, F.lit(True)
+        return name, assigns, F.expr(_text(q, cond, {}))
+
     def _update(self, q: str) -> DataFrame:
-        m = re.match(
-            rf"UPDATE{_WS}({_ID}){_WS}SET{_WS}(.*?)"
-            rf"(?:{_WS}WHERE{_WS}(.*))?$",
-            q, re.I | re.S,
-        )
-        if not m:
-            raise SQLParseError(f"cannot parse UPDATE: {q!r}")
-        name, sets, where = m.groups()
-        assigns = {
-            col: F.expr(expr) for col, expr in self._raw_assignments(sets)
-        }
-        pred = F.expr(where) if where else F.lit(True)
+        name, assigns, pred = self._mutation(q)
         return self._result(
             V.update_table(self.spark, self._path(name), assigns, pred)
         )
 
     def _delete(self, q: str) -> DataFrame:
-        m = re.match(
-            rf"DELETE{_WS}FROM{_WS}({_ID})(?:{_WS}WHERE{_WS}(.*))?$",
-            q, re.I | re.S,
-        )
-        if not m:
-            raise SQLParseError(f"cannot parse DELETE: {q!r}")
-        name, where = m.groups()
-        pred = F.expr(where) if where else F.lit(True)
+        name, _, pred = self._mutation(q)
         return self._result(
             V.delete_from(self.spark, self._path(name), pred)
         )
 
+    @staticmethod
+    def _assignments(
+        q: str, assignments, qualifiers: set[str], aliases: dict[str, str]
+    ) -> dict:
+        """SET ``col = expr`` pairs as {column: Column}. A column may be
+        qualified by one of ``qualifiers`` (lower-cased: the target's
+        name or alias); each value is its ``_text``."""
+        out = {}
+        for a in _seq(assignments):
+            parts = _name_parts(a.key())
+            if parts is None or len(parts) > 2 or (
+                len(parts) == 2 and parts[0].lower() not in qualifiers
+            ):
+                raise SQLParseError(
+                    f"cannot parse assignment {_span(q, a.key())!r}: "
+                    f"SET takes a column of the target table"
+                )
+            out[parts[-1]] = F.expr(_text(q, a.value(), aliases))
+        return out
+
     # -- MERGE ---------------------------------------------------------
 
-    @staticmethod
-    def _parse_merge_header(q: str) -> tuple[str, str, str, str, str]:
-        """Parse ``MERGE INTO t [AS a] USING <name|(subquery)> [AS b]
-        ON`` and return (tname, talias, src, salias, rest-after-ON)."""
-        head = re.match(
-            rf"MERGE{_WS}INTO{_WS}({_ID})(?:{_WS}AS{_WS}({_ID}))?"
-            rf"{_WS}USING\s+",
-            q, re.I | re.S,
-        )
-        if not head:
-            raise SQLParseError(f"cannot parse MERGE header: {q!r}")
-        tname, talias = head.groups()
-        pos = head.end()
-        if q[pos] == "(":  # parenthesized subquery: scan to balance
-            depth, j, in_str = 0, pos, False
-            while j < len(q):
-                c = q[j]
-                if in_str:
-                    in_str = c != "'"
-                elif c == "'":
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if depth != 0:
-                raise SQLParseError("unbalanced parens in USING source")
-            src, pos = q[pos:j + 1], j + 1
-        else:
-            sm = re.match(_ID, q[pos:])
-            if not sm:
-                raise SQLParseError(f"cannot parse USING source in {q!r}")
-            src, pos = sm.group(0), pos + sm.end()
-        tail = re.match(
-            rf"(?:{_WS}AS{_WS}({_ID}))?{_WS}ON{_WS}", q[pos:], re.I | re.S
-        )
-        if not tail:
-            raise SQLParseError(f"cannot parse MERGE ON clause in {q!r}")
-        salias = tail.group(1)
-        talias, salias = talias or "t", salias or "s"
-        rest = q[pos + tail.end():]
-        return tname, talias, src, salias, rest
-
-    def _merge(self, q: str) -> DataFrame:
-        tname, talias, src, salias, rest = self._parse_merge_header(q)
-        chunks = _split_top(rest, r"\bWHEN\b")
-        on_cond = chunks[0].strip()
-        keys = self._merge_keys(on_cond, talias, salias)
-
-        when_matched = None
-        matched_condition = None
-        matched_cond_txt = None
-        matched_second_delete = None  # (condition) for the Delta idiom
-        insert_unmatched = False
-        by_source = None
-        by_source_cond = None
-        for raw in chunks[1:]:
-            cm = re.match(
-                rf"\s*(NOT{_WS}MATCHED{_WS}BY{_WS}SOURCE"
-                rf"|NOT{_WS}MATCHED(?:{_WS}BY{_WS}TARGET)?|MATCHED)"
-                rf"(?:{_WS}AND{_WS}(.*?))?{_WS}THEN{_WS}(.*)$",
-                raw, re.I | re.S,
+    def _parse_merge(self, q: str):
+        """Parse a MERGE once: (plan, target table name, alias map for
+        ``_text``, merge keys, source DataFrame). A side's alias is the
+        one declared (``AS`` optional), else the table's own name, as
+        in Spark; a subquery source runs as its own text."""
+        plan = self._parse(q)
+        talias, target = _merge_side(plan.targetTable(), "t")
+        salias, source = _merge_side(plan.sourceTable(), "s")
+        if talias.lower() == salias.lower():
+            raise SQLParseError(
+                f"MERGE target and source need distinct aliases: {q!r}"
             )
-            if not cm:
-                raise SQLParseError(f"cannot parse WHEN clause: {raw!r}")
-            kind = re.sub(r"\s+", " ", cm.group(1).upper())
-            cond = cm.group(2)
-            action = cm.group(3).strip()
-            cond_col = F.expr(self._alias_norm(cond, talias, salias)) \
-                if cond else None
-            act = self._merge_action(action, talias, salias)
-            if kind == "MATCHED":
-                if when_matched is None:
-                    when_matched = act
-                    matched_condition = cond_col
-                    matched_cond_txt = (
-                        self._alias_norm(cond, talias, salias)
-                        if cond else None
-                    )
-                elif act == "delete" and isinstance(when_matched, dict):
-                    # Delta idiom: UPDATE-with-condition then DELETE.
-                    # Delta requires every non-final clause of a kind to
-                    # carry a condition — an unconditional first UPDATE
-                    # would leave the DELETE dead in Delta but, through
-                    # the two-merge emulation, would instead delete
-                    # every row it just updated. Reject, like Delta.
-                    if matched_condition is None:
-                        raise SQLParseError(
-                            "WHEN MATCHED THEN UPDATE followed by WHEN "
-                            "MATCHED THEN DELETE requires AND <cond> on "
-                            "the UPDATE clause (Delta's non-final-"
-                            "clause rule)"
-                        )
-                    # Executed as two merges, so both conditions must be
-                    # SOURCE-ONLY expressions — a target-referencing
-                    # first condition (t.-qualified OR a bare column
-                    # that resolves against the target) would be
-                    # re-evaluated against the already-updated rows in
-                    # the second merge and could wrongly fire or
-                    # suppress the delete
-                    second_txt = (
-                        self._alias_norm(cond, talias, salias)
-                        if cond else None
-                    )
-                    for label, txt in (
-                        ("first (UPDATE)", matched_cond_txt),
-                        ("second (DELETE)", second_txt),
-                    ):
-                        if txt:
-                            self._require_source_only(label, txt)
-                    matched_second_delete = (cond_col,)
-                else:
-                    raise SQLParseError(
-                        "only UPDATE-with-condition followed by DELETE "
-                        "is supported as a second WHEN MATCHED clause"
-                    )
-            elif kind.startswith("NOT MATCHED BY SOURCE"):
-                if act == "insert":
-                    raise SQLParseError(
-                        "WHEN NOT MATCHED BY SOURCE cannot INSERT"
-                    )
-                if act == "replace":
-                    # there IS no source row to replace from — Delta
-                    # only allows DELETE or an explicit UPDATE SET here
-                    raise SQLParseError(
-                        "WHEN NOT MATCHED BY SOURCE needs DELETE or an "
-                        "explicit UPDATE SET col=expr (UPDATE SET * has "
-                        "no source row to read)"
-                    )
-                by_source = act
-                by_source_cond = cond_col
-            else:  # NOT MATCHED (BY TARGET)
-                if act != "insert":
-                    raise SQLParseError(
-                        "WHEN NOT MATCHED supports only INSERT *"
-                    )
-                if cond_col is not None:
-                    raise SQLParseError(
-                        "conditional NOT-MATCHED INSERT is not supported"
-                    )
-                insert_unmatched = True
-
-        source_df = self._merge_source(src)
-        path = self._path(tname)
-        res = V.merge_table(
-            self.spark, path, source_df, keys,
-            when_matched=when_matched,
-            matched_condition=matched_condition,
-            # in the two-merge idiom the INSERT clause must ride the
-            # SECOND merge: a NOT-MATCHED row inserted by the first
-            # would be a MATCH for the second and its delete clause
-            # could wrongly fire on it — Delta applies matched clauses
-            # only to rows that matched at statement start
-            insert_unmatched=(
-                insert_unmatched and matched_second_delete is None
-            ),
-            when_not_matched_by_source=by_source,
-            not_matched_by_source_condition=by_source_cond,
-        )
-        if matched_second_delete is not None:
-            # the rows the conditional UPDATE skipped: delete those that
-            # fire the second clause's condition (or all remaining
-            # matches when unconditional) — Delta's two-clause order
-            (dcond,) = matched_second_delete
-            first = matched_condition
-            neg = None
-            if first is not None:
-                neg = ~F.coalesce(first, F.lit(False))
-            cond2 = neg if dcond is None else (
-                dcond if neg is None else (neg & dcond)
-            )
-            # the two-merge emulation is TWO commits, not one atomic
-            # statement: chain the CAS so a concurrent commit landing
-            # between them conflicts loudly instead of letting the
-            # delete evaluate against post-statement state. A crash
-            # between the commits leaves the UPDATE applied and the
-            # DELETE/INSERT pending — re-run the statement's remaining
-            # clauses; both history entries are tagged MERGE.
-            res2 = V.merge_table(
-                self.spark, path, source_df, keys,
-                when_matched="delete",
-                matched_condition=cond2,
-                insert_unmatched=insert_unmatched,
-                expect_version=res["version"],
-            )
-            res = {**res, "second_delete": res2}
-        return self._result(res)
-
-    def _merge_keys(
-        self, on_cond: str, talias: str, salias: str
-    ) -> list[str]:
         keys = []
-        for term in _split_top(on_cond, rf"\bAND\b"):
-            tm = re.match(
-                rf"\s*({_ID})\.({_ID})\s*=\s*({_ID})\.({_ID})\s*$",
-                term,
-            )
-            if not tm:
-                raise SQLParseError(
-                    f"ON must be a conjunction of alias.col = alias.col "
-                    f"equalities, got {term!r}"
-                )
-            a1, c1, a2, c2 = tm.groups()
-            pair = {a1.lower(): c1, a2.lower(): c2}
+        for term, pair in _equalities(q, plan.mergeCondition(), "ON"):
             if set(pair) != {talias.lower(), salias.lower()}:
                 raise SQLParseError(
                     f"ON term {term!r} must reference both {talias} "
@@ -950,126 +888,130 @@ class LakeSQL:
                     f"(got {term!r}); alias the source column first"
                 )
             keys.append(pair[talias.lower()])
-        if not keys:
-            raise SQLParseError("MERGE needs at least one ON equality")
-        return keys
+        if source.nodeName() == "UnresolvedRelation":
+            source_df = V.read_table(
+                self.spark, self._path(source.tableName())
+            )
+        else:
+            source_df = self._select(_span(q, source))
+        aliases = {talias.lower(): "t", salias.lower(): "s"}
+        return plan, target.tableName(), aliases, keys, source_df
 
-    def _merge_action(self, action: str, talias: str, salias: str):
-        a = action.strip()
-        if re.fullmatch(r"DELETE", a, re.I):
-            return "delete"
-        if re.fullmatch(r"INSERT\s*\*", a, re.I):
-            return "insert"
-        um = re.match(rf"UPDATE{_WS}SET{_WS}(.*)$", a, re.I | re.S)
-        if um:
-            body = um.group(1).strip()
-            if body == "*":
-                return "replace"
-            return {
-                col: F.expr(self._alias_norm_expr(expr, talias, salias))
-                for col, expr in self._raw_assignments(body)
-            }
-        raise SQLParseError(f"unsupported merge action {action!r}")
+    def _merge(self, q: str) -> DataFrame:
+        plan, tname, aliases, keys, source_df = self._parse_merge(q)
+        target = {a for a, side in aliases.items() if side == "t"}
+
+        def action(a):  # UpdateAction, UpdateStarAction or DeleteAction
+            if a.nodeName() == "UpdateAction":
+                return self._assignments(q, a.assignments(), target, aliases)
+            return "delete" if a.nodeName() == "DeleteAction" else "replace"
+
+        def condition(a) -> str | None:
+            c = a.condition()
+            return _text(q, c.get(), aliases) if c.isDefined() else None
+
+        # Spark's parser already rejects an unconditional non-final
+        # MATCHED clause and BY SOURCE INSERT / UPDATE SET *
+        matched = _seq(plan.matchedActions())
+        if len(matched) > 1 and [a.nodeName() for a in matched] != [
+            "UpdateAction", "DeleteAction"
+        ]:
+            raise SQLParseError(
+                "only UPDATE-with-condition followed by DELETE "
+                "is supported as a second WHEN MATCHED clause"
+            )
+        conds = [condition(a) for a in matched]
+        if len(matched) == 2:
+            # Executed as two merges, so both conditions must be
+            # SOURCE-ONLY expressions — a target-referencing condition
+            # would be re-evaluated against the already-updated rows in
+            # the second merge and could wrongly fire or suppress the
+            # delete
+            labels = ("first (UPDATE)", "second (DELETE)")
+            for label, txt in zip(labels, conds):
+                if txt:
+                    self._require_source_only(label, txt, source_df)
+        by_source = _seq(plan.notMatchedBySourceActions())
+        if len(by_source) > 1:
+            raise SQLParseError(
+                "only one WHEN NOT MATCHED BY SOURCE clause is supported"
+            )
+        not_matched = _seq(plan.notMatchedActions())
+        for a in not_matched:
+            if a.nodeName() != "InsertStarAction":
+                raise SQLParseError("WHEN NOT MATCHED supports only INSERT *")
+            if a.condition().isDefined():
+                raise SQLParseError(
+                    "conditional NOT-MATCHED INSERT is not supported"
+                )
+
+        def expr(txt):
+            return F.expr(txt) if txt else None
+
+        matched_condition = expr(conds[0]) if matched else None
+        path = self._path(tname)
+        res = V.merge_table(
+            self.spark, path, source_df, keys,
+            when_matched=action(matched[0]) if matched else None,
+            matched_condition=matched_condition,
+            # in the two-merge idiom the INSERT clause must ride the
+            # SECOND merge: a NOT-MATCHED row inserted by the first
+            # would be a MATCH for the second and its delete clause
+            # could wrongly fire on it — Delta applies matched clauses
+            # only to rows that matched at statement start
+            insert_unmatched=bool(not_matched) and len(matched) < 2,
+            when_not_matched_by_source=(
+                action(by_source[0]) if by_source else None
+            ),
+            not_matched_by_source_condition=(
+                expr(condition(by_source[0])) if by_source else None
+            ),
+        )
+        if len(matched) == 2:
+            # the rows the conditional UPDATE skipped: delete those that
+            # fire the second clause's condition (or all remaining
+            # matches when unconditional) — Delta's two-clause order
+            cond2 = ~F.coalesce(matched_condition, F.lit(False))
+            if conds[1]:
+                cond2 = cond2 & F.expr(conds[1])
+            # the two-merge emulation is TWO commits, not one atomic
+            # statement: chain the CAS so a concurrent commit landing
+            # between them conflicts loudly instead of letting the
+            # delete evaluate against post-statement state. A crash
+            # between the commits leaves the UPDATE applied and the
+            # DELETE/INSERT pending — re-run the statement's remaining
+            # clauses; both history entries are tagged MERGE.
+            res2 = V.merge_table(
+                self.spark, path, source_df, keys,
+                when_matched="delete",
+                matched_condition=cond2,
+                insert_unmatched=bool(not_matched),
+                expect_version=res["version"],
+            )
+            res = {**res, "second_delete": res2}
+        return self._result(res)
 
     @staticmethod
-    def _raw_assignments(sets: str) -> list[tuple[str, str]]:
-        out = []
-        for part in _split_top(sets, r","):
-            am = re.match(
-                rf"\s*(?:{_ID}\.)?({_ID})\s*=\s*(.*?)\s*$", part, re.S
-            )
-            if not am:
-                raise SQLParseError(f"cannot parse assignment {part!r}")
-            out.append((am.group(1), am.group(2)))
-        return out
-
-    # words that may legally appear unqualified in an idiom condition:
-    # operators/predicates, literals, CASE machinery, and the cast/type
-    # names — anything else unqualified is a column reference
-    _COND_KEYWORDS = frozenset(
-        """and or not in is null like ilike rlike between true false
-        case when then else end as distinct from escape exists cast
-        try_cast date timestamp interval int integer bigint smallint
-        tinyint double float decimal numeric string varchar char
-        boolean binary array map struct day days month months year
-        years hour hours minute minutes second seconds week weeks
-        quarter quarters millisecond milliseconds microsecond
-        microseconds nanosecond nanoseconds
-        current_date current_timestamp current_timezone now""".split()
-    )
-
-    @classmethod
-    def _require_source_only(cls, label: str, txt: str) -> None:
-        """The UPDATE+DELETE idiom's conditions must reference ONLY
-        s.-qualified columns: the idiom executes as two merges, and the
-        second re-evaluates both conditions against already-updated
-        target rows. ``t.`` references are rejected, and so is any BARE
-        identifier outside function names, keywords, and literals — an
-        unqualified column that exists only on the target (e.g.
-        ``WHEN MATCHED AND flag``) would pass a t.-only check yet still
-        read the mutated target in the second merge."""
-        # literals out first (same single-quote split as _select),
-        # then drop the legal s.-qualified references
-        body = "".join(
-            seg
-            for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", txt))
-            if i % 2 == 0
-        )
-        if re.search(r"\bt\.", body):
+    def _require_source_only(label: str, txt: str, source: DataFrame):
+        """The UPDATE+DELETE idiom's conditions must read only the
+        source row: the idiom executes as two merges, and the second
+        re-evaluates both conditions against already-updated target
+        rows. The rule: the condition must resolve against a relation
+        whose only column is the source row as a struct named ``s`` —
+        a ``t.`` reference or a bare column (``WHEN MATCHED AND flag``)
+        does not, whatever functions, keywords or literals surround
+        it."""
+        try:
+            source.select(F.struct("*").alias("s")).select(F.expr(txt))
+        except AnalysisException as exc:
+            if not (exc.getCondition() or "").startswith("UNRESOLVED_COLUMN"):
+                raise
             raise SQLParseError(
                 f"the {label} WHEN MATCHED condition in the "
                 f"UPDATE+DELETE idiom must reference only source (s.) "
-                f"columns, got {txt!r}"
-            )
-        # strip the whole dotted chain: s.meta.flag is one (legal)
-        # source reference, not 's.meta' plus a bare 'flag'
-        body = re.sub(rf"\bs\.{_ID}(?:\.{_ID})*", " ", body)
-        for m in re.finditer(rf"\b({_ID})\b(\s*\()?", body):
-            name, is_call = m.group(1), m.group(2)
-            if is_call or name.lower() in cls._COND_KEYWORDS:
-                continue
-            raise SQLParseError(
-                f"the {label} WHEN MATCHED condition in the "
-                f"UPDATE+DELETE idiom must reference only source (s.) "
-                f"columns; bare identifier {name!r} would resolve "
-                f"against the already-updated target in the second "
-                f"merge — qualify it as s.{name} (or restructure)"
-            )
-
-    @staticmethod
-    def _alias_norm(expr: str | None, talias: str, salias: str) -> str:
-        """merge_table's t/s alias contract: rewrite the statement's
-        declared aliases to the canonical ``t.`` / ``s.`` prefixes in a
-        SINGLE pass — sequential replace would corrupt a swapped or
-        overlapping pair (``USING u AS t`` → its ``t.`` would be
-        rewritten twice, silently reading the wrong side). Only
-        NON-LITERAL segments are rewritten (the same single-quote
-        split as _select pass 2): with target alias ``o``, an
-        assignment like ``SET note = 'see o.admin'`` must keep its
-        string literal intact, not silently become ``'see t.admin'``."""
-        if expr is None:
-            return expr
-        mapping = {talias.lower(): "t", salias.lower(): "s"}
-        pat = re.compile(
-            rf"\b({re.escape(talias)}|{re.escape(salias)})\.", re.I
-        )
-        segments = re.split(r"('(?:[^']|'')*')", expr)
-        return "".join(
-            seg if i % 2
-            else pat.sub(
-                lambda m: mapping[m.group(1).lower()] + ".", seg
-            )
-            for i, seg in enumerate(segments)
-        )
-
-    def _alias_norm_expr(self, expr: str, talias: str, salias: str) -> str:
-        return self._alias_norm(expr, talias, salias)
-
-    def _merge_source(self, src: str) -> DataFrame:
-        s = src.strip()
-        if s.startswith("("):
-            return self._select(s[1:-1].strip())
-        return V.read_table(self.spark, self._path(s))
+                f"columns — the second merge would read it against the "
+                f"already-updated target: {txt!r}"
+            ) from exc
 
     # -- INSERT / CTAS / matview refresh ------------------------------
 
@@ -1078,36 +1020,33 @@ class LakeSQL:
         ``INSERT INTO t [(cols)] VALUES (...), (...)`` — an append
         commit (constraints enforced, schema checked) via
         ``append_table``."""
-        m = re.match(
-            rf"INSERT{_WS}INTO{_WS}({_ID})"
-            rf"(?:\s*\(([^)]*)\))?{_WS}(SELECT|WITH|VALUES)\b(.*)$",
-            q, re.I | re.S,
-        )
-        if not m:
-            raise SQLParseError(f"cannot parse INSERT: {q!r}")
-        name, cols, kind, body = m.groups()
+        plan = self._parse(q)
+        if plan.nodeName() != "InsertIntoStatement" or plan.overwrite() \
+                or plan.partitionSpec().size() \
+                or plan.table().nodeName() != "UnresolvedRelation":
+            raise SQLParseError(
+                f"only INSERT INTO <table> [(cols)] SELECT|VALUES ... is "
+                f"supported: {q!r}"
+            )
+        name = plan.table().tableName()
         path = self._path(name)
         tschema = {
             f.name: f.dataType
             for f in V.read_table(self.spark, path).schema.fields
         }
-        if kind.upper() == "VALUES":
-            df = self.spark.sql(f"SELECT * FROM (VALUES{body})")
-            if cols:
-                df = df.toDF(*[c.strip() for c in cols.split(",")])
-            else:
-                # positional: adopt the table's column names
-                tcols = list(tschema)
-                if len(df.columns) != len(tcols):
-                    raise SQLParseError(
-                        f"VALUES arity {len(df.columns)} != table arity "
-                        f"{len(tcols)}; name the columns explicitly"
-                    )
-                df = df.toDF(*tcols)
-        else:
-            df = self._select(f"{kind}{body}")
-            if cols:
-                df = df.toDF(*[c.strip() for c in cols.split(",")])
+        query = plan.query()
+        df = self._select(_span(q, query))
+        cols = _seq(plan.userSpecifiedCols())
+        if cols:
+            df = df.toDF(*cols)
+        elif query.nodeName() in ("LocalRelation", "UnresolvedInlineTable"):
+            # positional VALUES: adopt the table's column names
+            if len(df.columns) != len(tschema):
+                raise SQLParseError(
+                    f"VALUES arity {len(df.columns)} != table arity "
+                    f"{len(tschema)}; name the columns explicitly"
+                )
+            df = df.toDF(*tschema)
         # SQL INSERT coerces to target types (a bare literal infers
         # int/decimal; the table's schema is the contract)
         df = df.select(*[
@@ -1218,7 +1157,7 @@ class LakeSQL:
         # truncate(N,col), bucket(N,col) — versioned.py create_table
         # validates and canonicalizes them
         cluster_by = (
-            [c.strip() for c in _split_top(clustered, r",")]
+            [c.strip() for c in _split_top(clustered, ",")]
             if clustered
             else None
         )
@@ -1230,74 +1169,85 @@ class LakeSQL:
             {"table": name, "location": path, "version": version}
         )
 
-    def _create_matview(self, name: str, path: str, select: str):
+    def _create_matview(self, name: str, path: str, q: str):
+        """``CREATE MATERIALIZED VIEW``'s ``AS SELECT`` body, read from
+        Spark's parse tree: an ``Aggregate`` whose grouping keys are
+        columns and whose other items are ``fn(col) AS name`` (count(*)
+        parses as count(1)), over the FROM clause's joins."""
         from .io import matview as MV
 
         agg_fns = sorted(MV._SUPPORTED)  # one source of truth
-        sm = re.match(
-            rf"SELECT{_WS}(.*?){_WS}FROM{_WS}(.*?)"
-            rf"{_WS}GROUP{_WS}BY{_WS}(.*)$",
-            select.strip(), re.I | re.S,
-        )
-        if not sm:
+        plan = self._parse(q)
+        if plan.nodeName() != "Aggregate":
             raise SQLParseError(
                 "CREATE MATERIALIZED VIEW needs the shape SELECT "
                 "<keys and aggs> FROM <fact> [JOIN <dim> ON <fact.k = "
                 "dim.k> ...] GROUP BY <keys>: "
-                f"{select!r}"
+                f"{q!r}"
             )
-        sel_list, from_clause, gb = sm.groups()
-        src, dims, avail = self._parse_matview_from(from_clause)
+        src, dims, avail = self._parse_matview_from(q, plan.child())
         qualified_refs: dict[str, set[str]] = {}
 
-        def _unqualify(item: str) -> str:
+        def column(e) -> str | None:
             # SQL users naturally qualify star columns (dim.region,
             # fact.amount); the maintenance layer joins by column NAME,
             # so a table-qualifier over a table in this FROM clause is
-            # just notation — strip it (an UNKNOWN qualifier still
-            # fails loud below). Qualified DIM references additionally
-            # become that dim's projection list, so a dim column that
-            # shares a name with a fact column never enters the join
-            # unless asked for — qualify ALL references to a dim if
-            # you qualify any (a half-qualified dim projects only the
-            # qualified columns and the rest fail loud).
-            qm = re.fullmatch(rf"({_ID})\.({_ID})", item)
-            if qm and qm.group(1).lower() in avail:
-                qualified_refs.setdefault(
-                    qm.group(1).lower(), set()
-                ).add(qm.group(2))
-                return qm.group(2)
-            return item
+            # just notation — strip it (an UNKNOWN qualifier stays and
+            # fails loud in Spark's analyzer). Qualified DIM references
+            # additionally become that dim's projection list, so a dim
+            # column that shares a name with a fact column never enters
+            # the join unless asked for — qualify ALL references to a
+            # dim if you qualify any (a half-qualified dim projects
+            # only the qualified columns and the rest fail loud).
+            parts = _name_parts(e)
+            if parts is None:
+                return None
+            if len(parts) == 2 and parts[0].lower() in avail:
+                qualified_refs.setdefault(parts[0].lower(), set()).add(
+                    parts[1]
+                )
+                return parts[1]
+            return ".".join(parts)
 
-        group_by = [
-            _unqualify(c.strip()) for c in _split_top(gb, r",")
-        ]
+        group_by = []
+        for e in _seq(plan.groupingExpressions()):
+            col = column(e)
+            if col is None:
+                raise SQLParseError(
+                    f"matview GROUP BY takes columns: {_text(q, e, {})!r}"
+                )
+            group_by.append(col)
         gb_lower = {c.lower() for c in group_by}
         aggs: dict[str, tuple[str, str | None]] = {}
-        for item in _split_top(sel_list, r","):
-            item = _unqualify(item.strip())
-            if item.lower() in gb_lower:  # Spark resolution is
-                continue                  # case-insensitive; match it
-            am = re.match(
-                rf"({'|'.join(agg_fns)})\s*\(\s*(\*|(?:{_ID}\.)?{_ID})"
-                rf"\s*\){_WS}AS{_WS}({_ID})$",
-                item, re.I,
+        for item in _seq(plan.aggregateExpressions()):
+            col = column(item)
+            if col is not None and col.lower() in gb_lower:
+                continue  # Spark resolution is case-insensitive
+            fn = item.child() if item.nodeName() == "Alias" else None
+            args = (
+                _seq(fn.arguments())
+                if fn is not None and fn.nodeName() == "UnresolvedFunction"
+                and not fn.isDistinct() and not fn.filter().isDefined()
+                else []
             )
-            if not am:
+            fname = ".".join(_seq(fn.nameParts())).lower() if args else ""
+            # count(*) parses as count(1)
+            star = len(args) == 1 and fname == "count" \
+                and args[0].nodeName() == "Literal"
+            col = column(args[0]) if len(args) == 1 and not star else None
+            if fname not in agg_fns or not (star or col):
                 raise SQLParseError(
                     f"matview select item must be a group key or "
                     f"fn(col) AS name with fn in {agg_fns}: "
-                    f"{item!r}"
+                    f"{_text(q, item, {})!r}"
                 )
-            fn, col, out = am.groups()
+            out = item.name()
             if out in aggs:
                 raise SQLParseError(
                     f"duplicate aggregate alias {out!r} — each output "
                     f"column needs a distinct name"
                 )
-            aggs[out] = (
-                fn.lower(), None if col == "*" else _unqualify(col)
-            )
+            aggs[out] = (fname, col)
         if not aggs:
             raise SQLParseError("matview needs at least one aggregate")
         for d in dims:
@@ -1321,47 +1271,43 @@ class LakeSQL:
              "dims": str(len(dims))}
         )
 
-    def _parse_matview_from(self, from_clause: str):
-        """Parse a matview's FROM clause — ``fact [JOIN dim ON <eq
-        conjunction>]*`` — onto ``create_aggregate_view``'s ``dims``
-        spec. Each ON term must be a same-named ``a.col = b.col``
-        equality (the dim-join key contract — the fold joins by column
-        NAME) where one side is the dim being joined and the other the
-        fact or an earlier-joined dim (snowflake chains resolve left
-        to right, same as the sequential broadcast fold). Each dim is
-        pinned at its current version by create_aggregate_view;
-        ``REFRESH ... EVOLVE`` folds later dim changes."""
-        pieces = _split_top(from_clause, r"\bJOIN\b")
-        fact = pieces[0].strip()
-        if not re.fullmatch(_ID, fact):
+    def _parse_matview_from(self, q: str, rel):
+        """A matview's FROM clause — ``fact [JOIN dim ON <eq
+        conjunction>]*``, parsed as a left-deep tree of inner joins —
+        onto ``create_aggregate_view``'s ``dims`` spec. Each ON term
+        must be a same-named ``a.col = b.col`` equality (the dim-join
+        key contract — the fold joins by column NAME) where one side is
+        the dim being joined and the other the fact or an earlier-joined
+        dim (snowflake chains resolve left to right, same as the
+        sequential broadcast fold). Each dim is pinned at its current
+        version by create_aggregate_view; ``REFRESH ... EVOLVE`` folds
+        later dim changes."""
+        joins = []
+        while rel.nodeName() == "Join":
+            joins.append(rel)
+            rel = rel.left()
+        if rel.nodeName() != "UnresolvedRelation":
             raise SQLParseError(
                 f"matview FROM must start with a registered fact "
-                f"table name, got {fact!r}"
+                f"table name, got a {rel.nodeName()} node"
             )
+        fact = rel.tableName()
         dims: list[dict] = []
         avail = {fact.lower()}
-        for piece in pieces[1:]:
-            jm = re.match(
-                rf"\s*({_ID}){_WS}ON{_WS}(.*)$", piece, re.I | re.S
-            )
-            if not jm:
+        for j in reversed(joins):
+            dim = j.right()
+            if dim.nodeName() != "UnresolvedRelation" \
+                    or j.joinType().toString() != "Inner" \
+                    or not j.condition().isDefined():
                 raise SQLParseError(
-                    f"matview JOIN needs '<dim> ON <cond>': {piece!r}"
+                    f"matview JOIN needs '<dim> ON <cond>' (an inner "
+                    f"join of a registered table): {_span(q, j)!r}"
                 )
-            dname, cond = jm.groups()
+            dname = dim.tableName()
             keys: list[str] = []
-            for term in _split_top(cond, r"\bAND\b"):
-                tm = re.match(
-                    rf"\s*({_ID})\.({_ID})\s*=\s*({_ID})\.({_ID})\s*$",
-                    term,
-                )
-                if not tm:
-                    raise SQLParseError(
-                        f"matview join ON must be a conjunction of "
-                        f"name.col = name.col equalities, got {term!r}"
-                    )
-                a1, c1, a2, c2 = tm.groups()
-                pair = {a1.lower(): c1, a2.lower(): c2}
+            for term, pair in _equalities(
+                q, j.condition().get(), "matview join ON"
+            ):
                 other = set(pair) - {dname.lower()}
                 if dname.lower() not in pair or not other or not (
                     other <= avail
@@ -1371,18 +1317,13 @@ class LakeSQL:
                         f"fact or an earlier-joined dim "
                         f"(available: {sorted(avail)})"
                     )
-                if c1 != c2:
+                if len(set(pair.values())) > 1:
                     raise SQLParseError(
                         f"matview join keys must be same-named on both "
                         f"sides (got {term!r}); the incremental fold "
                         f"joins by column name — alias in a CTAS first"
                     )
                 keys.append(pair[dname.lower()])
-            if not keys:
-                raise SQLParseError(
-                    f"matview JOIN {dname} needs at least one ON "
-                    f"equality"
-                )
             dims.append(
                 {"name": dname.lower(), "path": self._path(dname),
                  "keys": keys}
@@ -1761,7 +1702,7 @@ class LakeSQL:
             spec = (
                 None
                 if none
-                else [c.strip() for c in _split_top(cols, r",")]
+                else [c.strip() for c in _split_top(cols, ",")]
             )
             v = V.alter_clustering(self._path(name), spec)
             return self._result(

@@ -7,6 +7,7 @@ full row sets (the test_merge_clauses shapes, re-expressed as SQL).
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from aws_etl_project2_fiap_spark.io import versioned as V
@@ -322,17 +323,20 @@ def test_ctas_and_refresh_matview(spark, tmp_path):
 def test_unconditional_update_then_delete_rejected(spark, tmp_path):
     """An unconditional first WHEN MATCHED UPDATE followed by DELETE
     would, through the two-merge emulation, delete every row it just
-    updated — Delta rejects the shape (non-final clause needs a
-    condition) and so do we."""
+    updated — Spark's parser rejects the shape (only the last MATCHED
+    clause may omit its condition, as in Delta) before anything runs."""
     tbl = str(tmp_path / "t")
     V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
     lk = LakeSQL(spark, {"tt": tbl})
-    with pytest.raises(SQLParseError, match="non-final"):
+    with pytest.raises(
+        ParseException, match="NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION"
+    ):
         lk.sql(
             "MERGE INTO tt AS t USING tt AS s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET k = s.k "
             "WHEN MATCHED THEN DELETE"
         )
+    assert V.current_version(tbl) == 1
 
 
 def test_swapped_aliases_resolve_correctly(spark, tmp_path):
@@ -390,14 +394,18 @@ def test_select_comma_join_resolves_both_tables(spark, tmp_path):
 
 
 def test_by_source_update_star_rejected(spark, tmp_path):
+    """WHEN NOT MATCHED BY SOURCE has no source row to read: Spark's
+    grammar allows only DELETE or an explicit UPDATE SET there."""
     tbl = str(tmp_path / "t")
     V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
     lk = LakeSQL(spark, {"tt": tbl})
-    with pytest.raises(SQLParseError, match="no source row"):
-        lk.sql(
-            "MERGE INTO tt AS t USING tt AS s ON t.k = s.k "
-            "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *"
-        )
+    for action in ("UPDATE SET *", "INSERT *"):
+        with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
+            lk.sql(
+                "MERGE INTO tt AS t USING tt AS s ON t.k = s.k "
+                f"WHEN NOT MATCHED BY SOURCE THEN {action}"
+            )
+    assert V.current_version(tbl) == 1
 
 
 def test_create_materialized_view_sql(spark, tmp_path):
@@ -502,11 +510,15 @@ def test_alias_norm_preserves_string_literals(spark, tmp_path):
     got = {r["k"]: r["note"] for r in V.read_table(spark, tbl).collect()}
     assert got[0] == "see o.admin"
     assert got[9] == "x"
-    # and the unit surface directly: both aliases, literals untouched
-    out = LakeSQL._alias_norm(
-        "o.v > s.v AND note = 'o.v and s.v stay'", "o", "s"
+    # both aliases in the condition are rewritten, the literal is not
+    lk.sql(
+        "MERGE INTO tgt AS o USING delta AS s ON o.k = s.k "
+        "WHEN MATCHED AND o.k > s.k - 1 AND o.note = 'see o.admin' "
+        "THEN UPDATE SET note = 'o.v and s.v stay'"
     )
-    assert out == "t.v > s.v AND note = 'o.v and s.v stay'"
+    got = {r["k"]: r["note"] for r in V.read_table(spark, tbl).collect()}
+    assert got[0] == "o.v and s.v stay" and got[4] == "o.v and s.v stay"
+    assert got[9] == "x"
 
 
 def test_idiom_rejects_bare_target_column(spark, tmp_path):
@@ -1005,20 +1017,49 @@ def test_describe_matview_logical_schema(spark, tmp_path):
         == names
 
 
-def test_idiom_guard_accepts_all_interval_units():
-    """ADVICE r8: week/quarter/millisecond/microsecond (+ plurals) are
-    legal unqualified tokens in an idiom condition — a source-only
-    condition using them must not be falsely rejected."""
-    for unit in (
-        "week", "weeks", "quarter", "quarters", "millisecond",
-        "milliseconds", "microsecond", "microseconds",
-    ):
-        LakeSQL._require_source_only(
-            "t", f"s.ts > current_timestamp - interval 3 {unit}"
+def test_idiom_guard_accepts_all_interval_units(spark, tmp_path):
+    """ADVICE r8: week/millisecond/microsecond (+ plurals) and
+    current_date are legal in a source-only idiom condition — a real
+    UPDATE+DELETE MERGE using every one of them runs; a bare target
+    column is still rejected (fail-closed). (Spark's interval literal
+    has no quarter unit: ``interval 3 quarter`` is a ParseException.)"""
+    import datetime
+
+    tbl, srcp = str(tmp_path / "t"), str(tmp_path / "src")
+    now = datetime.datetime.now()
+    for path, v, flag in ((tbl, 0.0, True), (srcp, 1.0, False)):
+        V.create_table(
+            spark.createDataFrame(
+                [(k, v, flag, now) for k in range(4)],
+                "k long, v double, flag boolean, ts timestamp",
+            ),
+            path,
         )
-    # bare identifiers still reject (fail-closed is preserved)
-    with pytest.raises(SQLParseError, match="bare identifier"):
-        LakeSQL._require_source_only("t", "flag")
+    lk = LakeSQL(spark, {"tgt": tbl, "delta": srcp})
+    units = " AND ".join(
+        f"s.ts < current_timestamp + interval 3 {unit}"
+        for unit in (
+            "week", "weeks", "millisecond", "milliseconds",
+            "microsecond", "microseconds",
+        )
+    )
+    lk.sql(
+        "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
+        f"WHEN MATCHED AND {units} AND s.ts > current_date - 7 "
+        "AND `s`.`k` >= 0 "
+        "THEN UPDATE SET v = s.v "
+        "WHEN MATCHED AND s.k < 0 THEN DELETE"
+    )
+    got = {r["k"]: r["v"] for r in V.read_table(spark, tbl).collect()}
+    assert got == {0: 1.0, 1: 1.0, 2: 1.0, 3: 1.0}
+    version = V.current_version(tbl)
+    with pytest.raises(SQLParseError, match="source \\(s\\.\\)"):
+        lk.sql(
+            "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
+            "WHEN MATCHED AND flag THEN UPDATE SET v = s.v "
+            "WHEN MATCHED THEN DELETE"
+        )
+    assert V.current_version(tbl) == version
 
 
 def test_lakesql_catalog_persists(spark, tmp_path):
@@ -2079,3 +2120,157 @@ def test_plain_spark_sql_matches_spark(spark, diff_tables, q):
     want = sorted(tuple(r) for r in spark.sql(q).collect())
     got = sorted(tuple(r) for r in LakeSQL(spark, paths).sql(q).collect())
     assert want and got == want
+
+
+# -- DML and matview bodies read from Spark's parse tree ---------------
+
+
+@pytest.fixture(scope="module")
+def dml_tables(spark, tmp_path_factory):
+    """A target (k 0..3), a source matching k 1..3 whose notes hold
+    SQL keywords, and a dim — built once; each case mutates its own
+    zero-copy clone of the target."""
+    d = tmp_path_factory.mktemp("dml")
+    tgt, src, dim = str(d / "tgt"), str(d / "src"), str(d / "dim")
+    V.create_table(
+        spark.createDataFrame(
+            [(k, f"n{k}") for k in range(4)], "k long, note string"
+        ),
+        tgt,
+    )
+    V.create_table(
+        spark.createDataFrame(
+            [(1, "a THEN b"), (2, "other"), (3, "a THEN b")],
+            "k long, note string",
+        ),
+        src,
+    )
+    V.create_table(
+        spark.createDataFrame(
+            [(k, f"g{k % 2}") for k in range(4)], "k long, g string"
+        ),
+        dim,
+    )
+    return tgt, src, dim
+
+
+_BASE = {0: "n0", 1: "n1", 2: "n2", 3: "n3"}
+
+
+@pytest.mark.parametrize("stmt, want", [
+    pytest.param(
+        "MERGE INTO tgt AS t USING src AS s ON t.k = s.k "
+        "WHEN MATCHED AND s.note = 'a THEN b' THEN DELETE",
+        {0: "n0", 2: "n2"}, id="merge-literal-with-THEN",
+    ),
+    pytest.param(
+        "UPDATE tgt SET note = 'p WHERE q' WHERE k = 2",
+        {**_BASE, 2: "p WHERE q"}, id="update-literal-with-WHERE",
+    ),
+    pytest.param(
+        'UPDATE tgt SET note = "a,b" WHERE k = 1',
+        {**_BASE, 1: "a,b"}, id="update-double-quoted-comma",
+    ),
+    pytest.param(
+        "UPDATE tgt SET note = 'it\\'s, ok' WHERE k = 1",
+        {**_BASE, 1: "it's, ok"}, id="update-escaped-quote-comma",
+    ),
+    pytest.param(
+        "MERGE INTO tgt t USING src s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET note = s.note",
+        {0: "n0", 1: "a THEN b", 2: "other", 3: "a THEN b"},
+        id="merge-aliases-without-AS",
+    ),
+    pytest.param(
+        "MERGE INTO tgt AS t USING src AS s ON (t.k = s.k) "
+        "WHEN MATCHED THEN DELETE",
+        {0: "n0"}, id="merge-parenthesized-ON",
+    ),
+    pytest.param(
+        "CREATE MATERIALIZED VIEW mv LOCATION '{loc}' AS "
+        "SELECT g, count(*) AS n FROM tgt JOIN dim ON (tgt.k = dim.k) "
+        "GROUP BY g",
+        {"g0": 2, "g1": 2}, id="matview-parenthesized-join-ON",
+    ),
+    pytest.param(
+        "INSERT INTO tgt (k, note) VALUES (99, 'x WHERE y')",
+        {**_BASE, 99: "x WHERE y"}, id="insert-literal-with-WHERE",
+    ),
+    # a predicate's parse origin starts at its keyword: the text handed
+    # to F.expr must still begin at its (possibly parenthesized) operand
+    pytest.param(
+        "UPDATE tgt SET note = upper(note) WHERE note LIKE '%3'",
+        {**_BASE, 3: "N3"}, id="update-like-predicate",
+    ),
+    pytest.param(
+        "DELETE FROM tgt WHERE (k + 1) IN (2, 3)",
+        {0: "n0", 3: "n3"}, id="delete-parenthesized-in-predicate",
+    ),
+    pytest.param(
+        "UPDATE tgt SET note = 'e' WHERE EXISTS (SELECT 1 WHERE 1 = 1)",
+        {k: "e" for k in _BASE}, id="update-exists-predicate",
+    ),
+    pytest.param(
+        "MERGE INTO tgt AS t USING src AS s ON t.k = s.k "
+        "WHEN MATCHED AND s.note LIKE 'a%' THEN UPDATE SET note = 'hit'",
+        {0: "n0", 1: "hit", 2: "n2", 3: "hit"}, id="merge-like-condition",
+    ),
+    pytest.param(
+        "MERGE INTO tgt o USING src AS b ON o.k = b.k WHEN MATCHED AND "
+        "exists(array(b.k), x -> x = o.k AND b.note LIKE 'a%') "
+        "THEN UPDATE SET note = 'lam'",
+        {0: "n0", 1: "lam", 2: "n2", 3: "lam"}, id="merge-alias-in-lambda",
+    ),
+])
+def test_statements_the_regex_lexers_missplit(
+    spark, dml_tables, tmp_path, stmt, want
+):
+    """Valid Spark SQL that the hand-written statement lexers split
+    inside literals or parentheses, or whose alias they missed, plus
+    the span shapes the parse-tree reading must get right: each runs
+    and leaves exactly the expected rows."""
+    base, src, dim = dml_tables
+    tgt = str(tmp_path / "tgt")
+    V.clone_table(spark, base, tgt)
+    lk = LakeSQL(spark, {"tgt": tgt, "src": src, "dim": dim})
+    lk.sql(stmt.format(loc=tmp_path / "mv"))
+    if "MATERIALIZED VIEW" in stmt:
+        got = {r["g"]: r["n"] for r in lk.sql("SELECT g, n FROM mv").collect()}
+    else:
+        got = {r["k"]: r["note"] for r in V.read_table(spark, tgt).collect()}
+    assert got == want
+
+
+def test_versioned_views_dropped_after_each_statement(spark, tmp_path):
+    """Time-travel, change-feed and branch reads mint temp views; each
+    statement drops its own once Spark has analyzed it, and the
+    DataFrames it returned still run."""
+    tbl = str(tmp_path / "t")
+    V.create_table(spark.range(10).select(F.col("id").alias("k")), tbl)
+    V.append_table(spark.range(10, 20).select(F.col("id").alias("k")), tbl)
+    lk = LakeSQL(spark, {"leak_t": tbl})
+    lk.sql(f"CREATE BRANCH leak_b OF leak_t LOCATION '{tmp_path / 'b'}'")
+    dfs = [
+        lk.sql(q)
+        for _ in range(2)
+        for q in (
+            "SELECT count(*) AS n FROM leak_t VERSION AS OF 1",
+            "SELECT count(*) AS n FROM CHANGES(leak_t, 1, 2)",
+            "SELECT count(*) AS n FROM leak_t VERSION AS OF 'leak_b'",
+        )
+    ]
+    plan = lk.sql("EXPLAIN SELECT * FROM leak_t VERSION AS OF 1").collect()
+    assert "Physical Plan" in plan[0][0]
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("leak_t__")]
+    assert [df.collect()[0]["n"] for df in dfs] == [10, 10, 20] * 2
+
+
+@pytest.mark.parametrize("script, want", [
+    ('SELECT "a;b" AS x', "a;b"),
+    ("SELECT 'it\\'s; fine' AS x", "it's; fine"),
+])
+def test_sql_script_split_follows_spark_literals(spark, script, want):
+    """sql_script's `;` split skips literals by the lexer rules comment
+    masking uses: double quotes and backslash escapes included."""
+    assert LakeSQL(spark).sql_script(script).collect()[0]["x"] == want
