@@ -24,7 +24,8 @@ Two refresh strategies, auto-selected per view:
   deletes): recompute ONLY the groups the CDF touched — the group list
   comes from the CDF, the source scan is semi-join-pruned to those
   groups (manifest stats / cluster layout prune files when the source
-  is clustered by the group key), and vanished groups are merge-deleted.
+  is clustered by the group key), and vanished groups are deleted in
+  the same merge.
 
 Both land on the view (itself a versioned table) through
 ``merge_table``'s bounded-broadcast probe; the view's ``mv`` metadata
@@ -127,25 +128,50 @@ def _state_exprs(aggs: dict) -> list[Column]:
     return exprs
 
 
-def _zero_state_rows(
-    groups: DataFrame, template: DataFrame, keys: list[str]
+def _fold_clauses(state_cols: list[str]) -> dict:
+    """``merge_table`` clauses folding a signed delta into the view
+    state in one merge: a group whose count the delta takes to 0 or
+    below is deleted (its last row left — the count is the truth; sums
+    are exact zeros only for int aggregates), any other matched group
+    adds the delta, and a new group inserts only when its count is
+    above 0. No ``__mv_cnt`` = 0 row is ever written."""
+    cnt = F.coalesce(F.col(f"t.{_CNT}"), F.lit(0)) + F.col(f"s.{_CNT}")
+    add = {
+        c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
+        + F.coalesce(F.col(f"s.{c}"), F.lit(0))
+        for c in state_cols
+    }
+    return {
+        "when_matched": [(cnt <= 0, "delete"), (None, add)],
+        "insert_unmatched": [(F.col(f"s.{_CNT}") > 0, "insert")],
+    }
+
+
+def _recompute(
+    src: DataFrame, touched: DataFrame, keys: list[str], aggs: dict
 ) -> DataFrame:
-    """Keys-only vanished groups → full state rows with ``__mv_cnt``
-    = 0 (all other state columns NULL), typed from ``template``'s
-    schema, so the vanish can ride the SAME CAS'd merge commit that
-    advances the watermark instead of a separate delete commit a
-    crash could skip. Reads hide ``__mv_cnt`` = 0 rows and the delta
-    fold's add-merge coalesces the NULLs to 0, so a zero row a crash
-    leaves behind is algebraically inert until compacted away."""
-    cols: list[Column] = [F.col(k) for k in keys]
-    for fld in template.schema.fields:
-        if fld.name in keys:
-            continue
-        if fld.name == _CNT:
-            cols.append(F.lit(0).cast(fld.dataType).alias(fld.name))
-        else:
-            cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-    return groups.select(*cols)
+    """The touched groups' state recomputed from ``src``: one row per
+    touched group, with NULL state (``__mv_cnt`` NULL) for a group no
+    source row survives in — :func:`_recompute_clauses` deletes those
+    in the same merge. Materialized once: the merge re-reads it (key
+    checks, probe, join) and its lineage is a source scan."""
+    state = (
+        src.join(touched, keys, "left_semi")
+        .groupBy(*keys)
+        .agg(*_state_exprs(aggs))
+    )
+    return touched.join(state, keys, "left").localCheckpoint(eager=True)
+
+
+def _recompute_clauses() -> dict:
+    """``merge_table`` clauses replacing recomputed groups: a vanished
+    group (NULL ``__mv_cnt``) is deleted, any other replaces its state
+    row or, when new, inserts it."""
+    gone = F.col(f"s.{_CNT}").isNull()
+    return {
+        "when_matched": [(gone, "delete"), (None, "replace")],
+        "insert_unmatched": [(~gone, "insert")],
+    }
 
 
 def _delta_exprs(aggs: dict, sign: Column) -> list[Column]:
@@ -402,13 +428,12 @@ def read_aggregate_view(
     version (the spec is per-manifest, like a column mapping), so a
     view whose refresh history is retained replays any past result.
 
-    Filters ``__mv_cnt > 0``: the fold's cleanup merge (deleting
-    groups whose last row left) is a SEPARATE commit after the CAS'd
-    state merge, so a crash between the two leaves a zero-count state
-    row behind. That row is pure bookkeeping — a recompute would not
-    emit the group — so the read hides it, which turns the cleanup
-    merge into pure compaction and makes the crash window invisible to
-    every reader."""
+    Filters ``__mv_cnt > 0``: every fold now deletes a group whose
+    last row left in the same merge that updates the rest, but views
+    written before that (when the cleanup was a separate commit a
+    crash could skip) may still hold zero-count state rows. Such a row
+    is pure bookkeeping — a recompute would not emit the group — so
+    the read hides it."""
     meta = view_meta(dst, version)
     df = V.read_table(spark, dst, version=version).filter(F.col(_CNT) > 0)
     _check_state_schema(df, meta)
@@ -488,19 +513,24 @@ def refresh_aggregate_view(
 
     - all-self-maintainable views take the **delta** path: one
       aggregation of the CDF (signed: insert +, delete −) merged into
-      the view state by addition; brand-new groups insert, groups whose
-      ``__mv_cnt`` hits zero are deleted. The source is not read.
+      the view state by addition in ONE merge; brand-new groups insert,
+      groups whose ``__mv_cnt`` hits zero are deleted. The source is
+      not read.
     - min/max views take the **scoped** path: the CDF contributes only
       its DISTINCT GROUP LIST; those groups are recomputed from the
       source head (semi-join-pruned scan) and merge-replaced; touched
-      groups with no surviving rows are merge-deleted.
+      groups with no surviving rows are deleted in the same merge.
+
+    Each fold is ONE view commit that also advances the watermark, so
+    a crash leaves the view at its prior version and a rerun folds the
+    same range again.
 
     Returns {"strategy", "from_version", "to_version", "view_version",
     "groups_changed"}; a no-op refresh (watermark == head) returns
     early with strategy "noop".
 
     Concurrency: exactly-once under racing refreshers. The watermark
-    lives in the view's own manifest, and the refresh's FIRST
+    lives in the view's own manifest, and the refresh's one
     state-changing commit is a CAS on the view version the watermark
     was read from (``expect_version`` through ``merge_table``) — of two
     refreshers folding the same CDF range, exactly one commits; the
@@ -571,18 +601,17 @@ def refresh_aggregate_view(
             nonzero = nonzero | (F.coalesce(F.col(c), F.lit(0)) != 0)
         delta = delta.filter(nonzero)
         # materialize the delta ONCE: it is re-read several times below
-        # (stats, the merge's key probe, the merge itself, the cleanup
-        # merge), and its lineage is the full CDF scan — without this,
-        # every consumer re-executes that scan. The delta itself is
-        # tiny (one row per changed group), so the checkpoint is cheap
-        # and spills if a giant backfill makes it large.
+        # (stats, the merge's key probe, the merge itself), and its
+        # lineage is the full CDF scan — without this, every consumer
+        # re-executes that scan. The delta itself is tiny (one row per
+        # changed group), so the checkpoint is cheap and spills if a
+        # giant backfill makes it large.
         delta = delta.localCheckpoint(eager=True)
         stats = delta.agg(
             F.count(F.lit(1)).alias("n"),
-            F.min(_CNT).alias("min_cnt"),
             _null_key_expr(keys).alias("null_key"),
         ).collect()[0]
-        n, min_cnt = stats["n"], stats["min_cnt"]
+        n = stats["n"]
         if stats["null_key"]:
             _raise_null_keys(keys, "the CDF delta")
         if n == 0:
@@ -604,18 +633,12 @@ def refresh_aggregate_view(
                 "strategy": "delta", "from_version": frm, "to_version": to,
                 "view_version": ver, "groups_changed": 0,
             }
-        add = {
-            c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-            + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-            for c in state_cols
-        }
         # exactly-once under racing refreshers: CAS the fold on the
         # view version the watermark was read from — the loser's
         # conflict means the OTHER refresher folded this range
         try:
             V.merge_table(
-                spark, dst, delta, keys,
-                when_matched=add,
+                spark, dst, delta, keys, **_fold_clauses(state_cols),
                 extra={"mv": new_meta},
                 expect_version=view_v,
             )
@@ -623,19 +646,6 @@ def refresh_aggregate_view(
             if view_meta(dst)["source_version"] >= to:
                 return _lost_refresh(dst, frm, to)
             raise
-        # groups whose last row left: state row must go (their sums are
-        # exact zeros only for int aggregates — the count is the truth).
-        # Scoped as a MERGE over the delta's own keys — probe-pruned to
-        # the files the delta touched — and skipped outright when no
-        # per-group count decreased: a delete_from here would rescan
-        # the WHOLE view on every refresh, O(groups) per tick forever.
-        if min_cnt is not None and min_cnt < 0:
-            V.merge_table(
-                spark, dst, delta.select(*keys), keys,
-                when_matched="delete",
-                matched_condition=F.col(f"t.{_CNT}") <= 0,
-                insert_unmatched=False,
-            )
         return {
             "strategy": "delta", "from_version": frm, "to_version": to,
             "view_version": V.current_version(dst),
@@ -647,8 +657,8 @@ def refresh_aggregate_view(
     # and bounded by the compacted bytes, but schedule big compactions
     # with that in mind.)
     # materialized once for the same reason as the delta path: the
-    # group list is re-read by the semi-join, the vanish anti-join, and
-    # its own count, and its lineage is the full CDF scan
+    # group list is re-read by its own count, the semi-join and the
+    # left join, and its lineage is the full CDF scan
     touched = cdf.select(*keys).distinct().localCheckpoint(eager=True)
     tstats = touched.agg(
         F.count(F.lit(1)).alias("n"), _null_key_expr(keys).alias("null_key")
@@ -676,34 +686,11 @@ def refresh_aggregate_view(
             "view_version": ver, "groups_changed": 0,
         }
     src = _with_dims(spark, V.read_table(spark, source, version=to), dims)
-    recomputed = (
-        src.join(touched, keys, "left_semi")
-        .groupBy(*keys)
-        .agg(*_state_exprs(aggs))
-        # reused by the merge, the vanish anti-join, and the merge's
-        # probe; lineage is a source scan — materialize once
-        .localCheckpoint(eager=True)
-    )
-    # touched groups with NO surviving source rows: not in `recomputed`
-    # (nothing to aggregate), but their stale state rows remain. Fold
-    # them into the SAME CAS'd merge as __mv_cnt=0 zero-state rows —
-    # a separate delete commit would leave the stale (cnt>0!) rows
-    # VISIBLE if a crash landed between the two commits, and later
-    # refreshes only clean their own delta's keys
-    vanished = touched.join(
-        recomputed.select(*keys), keys, "left_anti"
-    ).localCheckpoint(eager=True)
-    has_vanished = bool(vanished.limit(1).count())
-    merge_src = (
-        recomputed.unionByName(_zero_state_rows(vanished, recomputed, keys))
-        if has_vanished
-        else recomputed
-    )
     # exactly-once under racing refreshers (see the delta path)
     try:
         V.merge_table(
-            spark, dst, merge_src, keys,
-            when_matched="replace",
+            spark, dst, _recompute(src, touched, keys, aggs), keys,
+            **_recompute_clauses(),
             extra={"mv": new_meta},
             expect_version=view_v,
         )
@@ -711,14 +698,6 @@ def refresh_aggregate_view(
         if view_meta(dst)["source_version"] >= to:
             return _lost_refresh(dst, frm, to)
         raise
-    if has_vanished:
-        # pure compaction: the zero rows are already invisible to reads
-        V.merge_table(
-            spark, dst, vanished, keys,
-            when_matched="delete",
-            matched_condition=F.col(f"t.{_CNT}") <= 0,
-            insert_unmatched=False,
-        )
     return {
         "strategy": "scoped", "from_version": frm, "to_version": to,
         "view_version": V.current_version(dst), "groups_changed": int(n),
@@ -756,9 +735,8 @@ def _evolve_scoped_batched(
     probe — two fact scans per evolve call no matter how many dims
     moved, vs 1 + 2k for the per-dim fold this replaces. The single
     CAS'd commit re-pins every moved dim at once: a crash means
-    nothing happened (retry redoes the evolution); vanished groups
-    ride the commit as zero-count rows (reads hide them) and the
-    follow-up delete is pure compaction."""
+    nothing happened (retry redoes the evolution); vanished groups are
+    deleted in the same commit."""
     old_dims = dims
     new_dims = [
         {**d, "version": changed[i][0]} if i in changed else dict(d)
@@ -800,28 +778,10 @@ def _evolve_scoped_batched(
             "view_version": ver,
         }
     src = _with_dims(spark, fact, new_dims)
-    recomputed = (
-        src.join(touched, keys, "left_semi")
-        .groupBy(*keys)
-        .agg(*_state_exprs(aggs))
-        .localCheckpoint(eager=True)
-    )
-    # vanished groups ride the SAME CAS'd merge as __mv_cnt=0 rows
-    # (see the scoped refresh path): a crash can never leave a stale
-    # pre-delete row visible
-    vanished = touched.join(
-        recomputed.select(*keys), keys, "left_anti"
-    ).localCheckpoint(eager=True)
-    has_vanished = bool(vanished.limit(1).count())
-    merge_src = (
-        recomputed.unionByName(_zero_state_rows(vanished, recomputed, keys))
-        if has_vanished
-        else recomputed
-    )
     try:
         committed = V.merge_table(
-            spark, dst, merge_src, keys,
-            when_matched="replace",
+            spark, dst, _recompute(src, touched, keys, aggs), keys,
+            **_recompute_clauses(),
             extra={"mv": new_meta},
             expect_version=view_v,
         )["version"]
@@ -829,22 +789,6 @@ def _evolve_scoped_batched(
         # lost the CAS: nothing of ours committed — restart from a
         # fresh snapshot (the racer's folds become noops there)
         return evolve_dimensions(spark, dst)
-    if has_vanished:
-        # pure compaction of the already-invisible zero rows; losing
-        # this CAS to a racer is safe (nothing visible changes) and
-        # the evolution itself already committed
-        try:
-            committed = V.merge_table(
-                spark, dst, vanished, keys,
-                when_matched="delete",
-                matched_condition=F.col(f"t.{_CNT}") <= 0,
-                insert_unmatched=False,
-                expect_version=committed,
-            )["version"]
-        except V.CommitConflict:
-            # the evolution itself committed; losing the compaction to
-            # a racer leaves only invisible zero rows behind
-            pass
     return {
         "strategy": "scoped", "dims_evolved": len(moved),
         "groups_changed": int(n),
@@ -877,7 +821,7 @@ def evolve_dimensions(spark: SparkSession, dst: str) -> dict:
       recomputed ONCE from the fact at the view's watermark joined to
       ALL dims at their new versions, and merge-replaced in a single
       CAS'd commit covering every moved dim; groups with no surviving
-      rows ride the same commit as zero-count rows (reads hide them).
+      rows are deleted in the same commit.
 
     The fact is read AT THE VIEW'S WATERMARK version — dim evolution
     and fact refresh are orthogonal folds; run
@@ -1003,10 +947,9 @@ def evolve_dimensions(spark: SparkSession, dst: str) -> dict:
         delta = delta.filter(nonzero).localCheckpoint(eager=True)
         stats = delta.agg(
             F.count(F.lit(1)).alias("n"),
-            F.min(_CNT).alias("min_cnt"),
             _null_key_expr(keys).alias("null_key"),
         ).collect()[0]
-        n, min_cnt = stats["n"], stats["min_cnt"]
+        n = stats["n"]
         if stats["null_key"]:
             _raise_null_keys(keys, "the dim-evolution delta")
         # every commit CASes on OUR chain (view_v threads forward): a
@@ -1028,29 +971,12 @@ def evolve_dimensions(spark: SparkSession, dst: str) -> dict:
                 )
                 folded_this = True
             else:
-                add = {
-                    c: F.coalesce(F.col(f"t.{c}"), F.lit(0))
-                    + F.coalesce(F.col(f"s.{c}"), F.lit(0))
-                    for c in state_cols
-                }
                 view_v = V.merge_table(
-                    spark, dst, delta, keys,
-                    when_matched=add,
+                    spark, dst, delta, keys, **_fold_clauses(state_cols),
                     extra={"mv": new_meta},
                     expect_version=view_v,
                 )["version"]
                 folded_this = True
-                if min_cnt is not None and min_cnt < 0:
-                    # pure compaction of already-invisible zero rows —
-                    # still CAS'd: a racer here makes our meta snapshot
-                    # stale for the REMAINING dims, so restart for them
-                    view_v = V.merge_table(
-                        spark, dst, delta.select(*keys), keys,
-                        when_matched="delete",
-                        matched_condition=F.col(f"t.{_CNT}") <= 0,
-                        insert_unmatched=False,
-                        expect_version=view_v,
-                    )["version"]
         except V.CommitConflict:
             rest = evolve_dimensions(spark, dst)
             ours = total_folded + (1 if folded_this else 0)

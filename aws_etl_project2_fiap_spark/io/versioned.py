@@ -43,7 +43,7 @@ import shutil
 import uuid
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .update import apply_update
@@ -2332,117 +2332,141 @@ def mutation_probe_plan(
     }
 
 
+_MERGE_ACTIONS = {
+    "when_matched": ("replace", "delete"),
+    "insert_unmatched": ("insert",),
+    "when_not_matched_by_source": ("delete",),
+}
+
+
+def _merge_clauses(label: str, spec) -> list[tuple[Column | None, object]]:
+    """One WHEN-clause argument of :func:`merge_table` as its ordered
+    ``[(condition | None, action)]`` list: a bare action is one
+    unconditional clause, ``None``/``False`` is none, and
+    ``insert_unmatched=True`` is one ``"insert"``. As in Spark's
+    parser, only the last clause may omit its condition (a clause
+    after it could never fire)."""
+    if spec is None or spec is False:
+        return []
+    if spec is True and label == "insert_unmatched":
+        return [(None, "insert")]
+    clauses = spec if isinstance(spec, list) else [(None, spec)]
+    names = _MERGE_ACTIONS[label]
+    for i, clause in enumerate(clauses):
+        cond, action = (
+            clause if isinstance(clause, tuple) and len(clause) == 2
+            else (None, None)
+        )
+        if not (
+            (cond is None or isinstance(cond, Column))
+            and (isinstance(action, dict)
+                 or (isinstance(action, str) and action in names))
+        ):
+            raise ValueError(
+                f"{label} must be "
+                f"{', '.join(repr(n) for n in names)}, a {{col: Column}} "
+                f"dict, None, or a list of (condition | None, action) "
+                f"clauses, got {spec!r}"
+            )
+        if cond is None and i < len(clauses) - 1:
+            raise ValueError(
+                f"only the last {label} clause may omit its condition"
+            )
+    return clauses
+
+
 def merge_table(
     spark: SparkSession,
     path: str,
     source: DataFrame,
     keys: list[str],
-    when_matched: str | dict | None = "replace",
-    matched_condition: Column | None = None,
-    insert_unmatched: bool = True,
-    when_not_matched_by_source: str | dict | None = None,
-    not_matched_by_source_condition: Column | None = None,
+    when_matched: str | dict | list | None = "replace",
+    insert_unmatched: bool | list = True,
+    when_not_matched_by_source: str | dict | list | None = None,
     extra: dict | None = None,
     schema_evolution: bool = False,
     expect_version: int | None = None,
 ) -> dict:
-    """MERGE INTO a versioned table with file-level copy-on-write and
-    the full Delta-style clause triad.
+    """MERGE INTO a versioned table: file-level copy-on-write, ordered
+    WHEN-clause lists, one pass and one commit.
 
-    ``expect_version``: optimistic-concurrency token for callers whose
-    source dataframe was DERIVED from a specific table version (e.g. a
-    matview refresh folding a CDF range) — if the table has moved past
-    it by merge start, raise :class:`CommitConflict` BEFORE any work,
-    on top of the commit-time CAS that already guards the window
-    between merge start and pointer flip.
+    Each clause argument takes a bare action or an ordered list of
+    ``(condition | None, action)`` clauses. On each row the FIRST
+    clause whose condition holds applies, as in Spark's
+    ``MergeIntoTable`` and Delta; a NULL condition does not fire (SQL
+    three-valued logic), and only the last clause of a list may omit
+    its condition. Conditions and values are Columns over the ``t``
+    (target) and ``s`` (source) aliases.
 
-    ``when_matched``:
+    ``when_matched`` (``WHEN MATCHED [AND cond] THEN``):
 
-    - ``"replace"`` (default): matched target rows replaced by the
-      source row — the io/update.py ``merge_into`` contract;
-    - ``"delete"``: matched target rows are DELETED (``WHEN MATCHED
-      THEN DELETE``). The source may then carry only the key columns;
-    - a dict ``{col: Column}``: conditional column update — each
-      expression may reference both sides via the ``t``/``s`` aliases
-      (``F.col("s.amount") + F.col("t.amount")``); unlisted columns
-      keep their target values;
-    - ``None``: no matched clause — matched target rows keep their
-      values (lets a keys-only source drive pure by-source sweeps).
+    - ``"replace"`` (default): the source row replaces the target row
+      (``UPDATE SET *``);
+    - ``"delete"``: the target row is deleted;
+    - a dict ``{col: Column}``: the listed columns update (expressions
+      may read both sides — ``F.col("s.amount") + F.col("t.amount")``);
+      unlisted columns keep their target values;
+    - ``None``: no matched clause — matched rows keep their values.
 
-    ``matched_condition`` (a Column over the ``t``/``s`` aliases)
-    restricts the matched clause: matched rows where it is false/NULL
-    keep their target values (or survive a delete). ``WHEN MATCHED AND
-    <cond>``. ``insert_unmatched=False`` drops the ``WHEN NOT MATCHED
-    THEN INSERT`` clause.
+    ``insert_unmatched`` (``WHEN NOT MATCHED [AND cond] THEN INSERT``):
+    ``True`` inserts the source row whole (``INSERT *``), ``False``
+    inserts nothing; a list takes ``"insert"`` or a ``{col: Column}``
+    map over the ``s`` alias (``INSERT (cols) VALUES (...)``; unlisted
+    columns are NULL).
 
     ``when_not_matched_by_source`` (``WHEN NOT MATCHED BY SOURCE``):
-    acts on TARGET rows whose key has no source match — ``"delete"``
+    acts on target rows whose key has no source match — ``"delete"``
     or a ``{col: Column}`` update whose expressions see only the ``t``
-    alias (there is no source row; ``s.*`` would read NULL).
-    ``not_matched_by_source_condition`` restricts it the same way.
-    With a full-column source, ``when_matched="replace"`` +
-    ``when_not_matched_by_source="delete"`` is the full-snapshot sync;
-    with a keys-only source and ``when_matched=None`` it is a
+    alias. With ``when_matched="replace"`` it is the full-snapshot
+    sync; with a keys-only source and ``when_matched=None`` it is a
     retain-list sweep (delete everything NOT on the list).
 
-    ``schema_evolution=True`` (Delta autoMerge): the source may carry
+    The source must carry the merge keys. Its columns must equal the
+    target's only when a clause reads whole source rows (``"replace"``
+    or ``"insert"``); column maps may read any source column.
+    ``schema_evolution=True`` (Delta autoMerge) lets the source carry
     NEW columns — they join the table (NULL for rows in untouched/old
-    files, which readers superset-union) — and may OMIT target columns
-    (kept on update, NULL on insert). Under a column mapping, new
-    logical columns mint non-colliding physical names, same rule as
-    ``append_table``.
+    files) — and omit target columns (kept on update, NULL on
+    insert). Under a column mapping, new logical columns mint
+    non-colliding physical names, same rule as ``append_table``.
+
+    ``expect_version``: optimistic-concurrency token for callers whose
+    source was DERIVED from a specific table version (a matview fold):
+    if the table moved past it, raise :class:`CommitConflict` before
+    any work, on top of the commit-time CAS.
 
     Physical plan:
 
-    1. the source's merge-key envelope (one O(keys) driver row)
-       prunes files whose write-time min/max stats cannot intersect it
-       — a range-clustered delivery never even SCANS the files it
-       can't touch; the surviving files take a metadata-augmented
-       semi-probe for actual key matches — a BROADCAST hash probe when
-       the source is delivery-sized, so the target scan is the only
-       big IO (files whose matches all fail ``matched_condition`` are
-       still rewritten byte-identically — the probe sees keys, not the
-       condition); a by-source clause adds the anti-probe: files
-       holding any row that FIRES the clause (condition applied in the
-       probe, so a stats-prunable condition — e.g. a date range —
-       confines the rewrite; an unconditional by-source clause is a
-       full-table-shape rewrite by SQL semantics, same as Delta);
-    2. only those files are re-read and merged (full-outer on keys
-       restricted to their rows); unmatched-in-source inserts ride in
-       the same new batch;
-    3. manifest = (current − touched files) + merged batch; pointer
-       flip is atomic, history retained.
+    1. the source's merge-key envelope prunes files whose write-time
+       min/max stats cannot intersect it, bucket membership and
+       per-file blooms prune scattered keys, and the surviving files
+       take a semi-probe for actual key matches (a BROADCAST probe
+       when the source is delivery-sized; files whose matches fire no
+       clause are still rewritten byte-identically — the probe sees
+       keys, not conditions). A by-source clause adds an anti-probe for
+       files holding a row some by-source clause fires on (conditions
+       applied in the probe, so a stats-prunable condition confines
+       the rewrite; an unconditional by-source clause is a
+       full-table-shape rewrite, as in Delta);
+    2. only those files are re-read and full-outer-joined with the
+       source. One column records which clause fired on each row; the
+       drops, the new values and the counts (``DataFrame.observe`` on
+       the write, so counting runs no job of its own) come from it;
+    3. manifest = (current − touched files) + merged batch; the pointer
+       flip is atomic, so the statement is one commit.
 
-    A delivery whose keys cluster into few files (date-partitioned or
-    z-ordered layouts) costs O(matched files + delivery), never a table
-    rewrite. Unique-key source enforced (a dup key would fan out).
-    Returns {"version", "files_touched", "files_reused", "updated",
-    "deleted", "inserted"} — by-source actions fold into "updated" /
-    "deleted" by kind.
+    A delivery whose keys cluster into few files costs O(matched files
+    + delivery), never a table rewrite. Unique-key source enforced (a
+    dup key would fan out). Returns {"version", "files_touched",
+    "files_reused", "files_probed", "updated", "deleted", "inserted"}
+    — by-source actions fold into "updated" / "deleted" by kind.
     """
-    if not (when_matched in ("replace", "delete", None)
-            or isinstance(when_matched, dict)):
-        raise ValueError(
-            f"when_matched must be 'replace', 'delete', a "
-            f"{{col: Column}} dict, or None, got {when_matched!r}"
-        )
-    if not (when_not_matched_by_source in ("delete", None)
-            or isinstance(when_not_matched_by_source, dict)):
-        raise ValueError(
-            f"when_not_matched_by_source must be 'delete', a "
-            f"{{col: Column}} dict, or None, got "
-            f"{when_not_matched_by_source!r}"
-        )
-    if when_matched is None and matched_condition is not None:
-        raise ValueError("matched_condition requires a matched clause")
-    if (when_not_matched_by_source is None
-            and not_matched_by_source_condition is not None):
-        raise ValueError(
-            "not_matched_by_source_condition requires a "
-            "when_not_matched_by_source clause"
-        )
-    if (when_matched is None and when_not_matched_by_source is None
-            and not insert_unmatched):
+    matched_cl = _merge_clauses("when_matched", when_matched)
+    insert_cl = _merge_clauses("insert_unmatched", insert_unmatched)
+    by_source_cl = _merge_clauses(
+        "when_not_matched_by_source", when_not_matched_by_source
+    )
+    if not (matched_cl or insert_cl or by_source_cl):
         raise ValueError("merge with no clauses would be a no-op")
     base_version = current_version(path)
     if expect_version is not None and base_version != expect_version:
@@ -2456,42 +2480,31 @@ def merge_table(
     mapping = manifest.get("column_mapping")
     added_cols = manifest.get("added_columns")
     target = _apply_mapping(_scan(spark, files), mapping, added_cols)
-    # a keys-only source suffices when no clause reads source values:
-    # matched-delete / no matched clause, no insert (by-source clauses
-    # see only the target side by construction)
-    keys_only_source = (
-        when_matched in ("delete", None)
-        and not insert_unmatched
-        and sorted(source.columns) == sorted(keys)
-    )
+    miss = [k for k in keys if k not in source.columns]
+    if miss:
+        raise ValueError(f"source lacks merge key(s) {miss}")
     new_cols: list[str] = []
     if schema_evolution:
-        # Delta autoMerge semantics: NEW source columns join the table
-        # (NULL for untouched/old rows — reads already superset-union
-        # file schemas); target-only columns persist (kept on update,
-        # NULL on insert). Keys must exist on both sides.
-        miss = [k for k in keys if k not in source.columns]
-        if miss:
-            raise ValueError(f"source lacks merge key(s) {miss}")
         new_cols = [c for c in source.columns if c not in target.columns]
-    elif not keys_only_source and sorted(source.columns) != sorted(
-        target.columns
-    ):
+    elif any(
+        a in ("replace", "insert")
+        for _, a in matched_cl + insert_cl if isinstance(a, str)
+    ) and sorted(source.columns) != sorted(target.columns):
         raise ValueError(
             f"source columns {source.columns} != target {target.columns}"
         )
-    for label, clause in (
-        ("when_matched", when_matched),
-        ("when_not_matched_by_source", when_not_matched_by_source),
+    out_cols = target.columns + new_cols
+    for label, clauses, what, allowed in (
+        ("when_matched", matched_cl, "updates unknown/key",
+         set(out_cols) - set(keys)),
+        ("insert_unmatched", insert_cl, "inserts unknown", set(out_cols)),
+        ("when_not_matched_by_source", by_source_cl, "updates unknown/key",
+         set(out_cols) - set(keys)),
     ):
-        if isinstance(clause, dict):
-            bad = set(clause) - (
-                (set(target.columns) | set(new_cols)) - set(keys)
-            )
+        for _, a in clauses:
+            bad = set(a) - allowed if isinstance(a, dict) else None
             if bad:
-                raise ValueError(
-                    f"{label} updates unknown/key columns {sorted(bad)}"
-                )
+                raise ValueError(f"{label} {what} columns {sorted(bad)}")
     dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
     if dup:
         raise ValueError(
@@ -2511,121 +2524,101 @@ def merge_table(
         source, files, mapping, keys
     )
     probe_src, _ = _probe_keys(source, keys)
+    touched: set[str] = set()
     if probe_entries:
-        matched_rows = _apply_mapping(
-            _scan(spark, probe_entries, keep_meta=True), mapping,
-            added_cols,
-        ).join(probe_src, keys, "semi")
-        touched = [
+        touched = {
             r["__file"]
-            for r in matched_rows.select("__file").distinct().collect()
-        ]
-    else:
-        matched_rows = None
-        touched = []
-    if when_not_matched_by_source is not None:
-        # anti-probe: files holding any target row the by-source clause
-        # FIRES on — the condition filters inside the probe, so a
+            for r in _apply_mapping(
+                _scan(spark, probe_entries, keep_meta=True), mapping,
+                added_cols,
+            ).join(probe_src, keys, "semi").select("__file")
+            .distinct().collect()
+        }
+    if by_source_cl:
+        # anti-probe: files holding any target row a by-source clause
+        # FIRES on — the conditions filter inside the probe, so a
         # selective (stats-prunable) condition confines the rewrite to
         # the files it can actually touch
         anti = _apply_mapping(
             _scan(spark, files, keep_meta=True), mapping, added_cols
         ).alias("t").join(probe_src, keys, "anti")
-        if not_matched_by_source_condition is not None:
-            anti = anti.filter(
-                F.coalesce(not_matched_by_source_condition, F.lit(False))
-            )
-        touched = sorted(
-            set(touched)
-            | {
-                r["__file"]
-                for r in anti.select("__file").distinct().collect()
-            }
-        )
+        if all(c is not None for c, _ in by_source_cl):
+            fires = F.lit(False)
+            for c, _ in by_source_cl:
+                fires = fires | F.coalesce(c, F.lit(False))
+            anti = anti.filter(fires)
+        touched |= {
+            r["__file"] for r in anti.select("__file").distinct().collect()
+        }
 
-    touched_set = set(touched)
-    untouched = [f for f in files if f["path"] not in touched_set]
-    touched_entries = [f for f in files if f["path"] in touched_set]
-    if touched:
+    untouched = [f for f in files if f["path"] not in touched]
+    touched_entries = [f for f in files if f["path"] in touched]
+    if touched_entries:
         scoped = _apply_mapping(
             _scan(spark, touched_entries), mapping, added_cols
         )
     else:
         scoped = target.limit(0)
 
-    t_cols = target.columns
-    tgt = scoped.alias("t")
-    src = source.alias("s")
-    joined = tgt.join(src, keys, "full_outer")
+    t_cols, s_cols = set(target.columns), set(source.columns)
+    joined = scoped.alias("t").join(source.alias("s"), keys, "full_outer")
     s_present = F.col(f"s.{keys[0]}").isNotNull()
     t_present = F.col(f"t.{keys[0]}").isNotNull()
-    matched = s_present & t_present
-    # SQL clause semantics: a NULL condition does not fire the clause
-    cond = (
-        F.lit(True)
-        if matched_condition is None
-        else F.coalesce(matched_condition, F.lit(False))
+    # what "replace" and "insert" write: every source column the table
+    # has; a target-only column keeps its value on update and is NULL
+    # on insert (the target side is absent)
+    whole_row = {
+        c: F.col(f"s.{c}") for c in out_cols if c not in keys and c in s_cols
+    }
+    fired = None  # index of the first clause that fires on the row
+    values: list[dict] = []  # per clause: {column: new value}
+    kinds: dict[str, list[int]] = {}  # count name -> clause indexes
+    for present, clauses, insert in (
+        (s_present & t_present, matched_cl, False),
+        (s_present & ~t_present, insert_cl, True),
+        (t_present & ~s_present, by_source_cl, False),
+    ):
+        for cond, a in clauses:
+            i = len(values)
+            hit = present if cond is None else (
+                present & F.coalesce(cond, F.lit(False))
+            )
+            fired = F.when(hit, i) if fired is None else fired.when(hit, i)
+            if a == "delete":
+                values.append({})
+                kinds.setdefault("deleted", []).append(i)
+                continue
+            if isinstance(a, str):
+                values.append(whole_row)
+            elif insert:
+                values.append({c: a.get(c, F.lit(None)) for c in out_cols})
+            else:
+                values.append(a)
+            kinds.setdefault("inserted" if insert else "updated", []).append(i)
+    clause = F.col("__clause")
+    counts = Observation()
+    joined = joined.withColumn("__clause", fired).observe(
+        counts,
+        *[F.count_if(clause.isin(ix)).alias(k) for k, ix in kinds.items()],
     )
-    act = matched & cond  # rows where the matched clause fires
-    bs_cond = (
-        F.lit(True)
-        if not_matched_by_source_condition is None
-        else F.coalesce(not_matched_by_source_condition, F.lit(False))
-    )
-    # rows where the by-source clause fires (never overlaps `act`)
-    bs_act = (
-        (t_present & ~s_present & bs_cond)
-        if when_not_matched_by_source is not None
-        else F.lit(False)
-    )
-    if not insert_unmatched:
-        joined = joined.filter(t_present)
-
-    def _src(c):
-        # a keys-only / narrower source has no such column to read
-        return (
-            F.col(f"s.{c}") if c in set(source.columns) else F.lit(None)
-        )
-
-    def _tgt(c):
-        # a schema-evolution NEW column has no target side yet
-        return F.col(f"t.{c}") if c in set(t_cols) else F.lit(None)
-
-    drop = F.lit(False)
-    if when_matched == "delete":
-        drop = drop | act
-    if when_not_matched_by_source == "delete":
-        drop = drop | bs_act
-    kept = joined.filter(~drop)
-    out_cols = t_cols + new_cols
-    upd_m = (
-        {
-            c: F.col(f"s.{c}")
-            for c in out_cols
-            if c not in keys and c in set(source.columns)
-        }
-        if when_matched == "replace"
-        else dict(when_matched) if isinstance(when_matched, dict) else None
-    )
-    upd_bs = (
-        dict(when_not_matched_by_source)
-        if isinstance(when_not_matched_by_source, dict)
-        else None
-    )
+    # a target row no clause fires on stays as it is; a source row no
+    # clause fires on is not inserted
+    keep = clause.isNotNull() | t_present
+    if "deleted" in kinds:
+        keep = F.coalesce(~clause.isin(kinds["deleted"]), t_present)
 
     def _merged_col(c):
         if c in keys:
-            return F.coalesce(F.col(f"t.{c}"), _src(c)).alias(c)
-        # the three firing predicates are mutually exclusive, so the
-        # when-chain order is immaterial
-        e = F.when(s_present & ~t_present, _src(c))
-        if upd_m is not None:
-            e = e.when(act, upd_m.get(c, _tgt(c)))
-        if upd_bs is not None:
-            e = e.when(bs_act, upd_bs.get(c, _tgt(c)))
-        return e.otherwise(_tgt(c)).alias(c)
+            e = F.coalesce(F.col(f"t.{c}"), F.col(f"s.{c}"))
+        else:
+            # a schema-evolution NEW column has no target side yet
+            e = F.col(f"t.{c}") if c in t_cols else F.lit(None)
+        for i, new in enumerate(values):
+            if c in new:
+                e = F.when(clause == i, new[c]).otherwise(e)
+        return e.alias(c)
 
-    merged = kept.select(*[_merged_col(c) for c in out_cols])
+    merged = joined.filter(keep).select(*[_merged_col(c) for c in out_cols])
     if new_cols and mapping:
         # evolution under a column mapping: new logical columns join
         # the mapping, minting a fresh physical name on collision with
@@ -2638,29 +2631,6 @@ def merge_table(
                 mapping[c] = _mint_physical(c, mapping, manifest)
         extra = {**(extra or {}), "column_mapping": mapping}
     _enforce_constraints(merged, path)
-    if when_matched is None or matched_rows is None:
-        n_acted = 0
-    elif matched_condition is None:
-        n_acted = matched_rows.count()
-    else:
-        n_acted = joined.filter(act).count()
-    n_bs = (
-        joined.filter(bs_act).count()
-        if when_not_matched_by_source is not None
-        else 0
-    )
-    n_updated = (0 if when_matched in ("delete", None) else n_acted) + (
-        n_bs if isinstance(when_not_matched_by_source, dict) else 0
-    )
-    n_deleted = (n_acted if when_matched == "delete" else 0) + (
-        n_bs if when_not_matched_by_source == "delete" else 0
-    )
-    n_inserted = (
-        source.join(target.select(*keys), keys, "anti").count()
-        if insert_unmatched
-        else 0
-    )
-
     re_index = _indexed_cols(touched_entries)
     version = _commit(
         path,
@@ -2670,14 +2640,15 @@ def merge_table(
         expect_version=base_version,
         operation="MERGE",
     )
+    n = counts.get
     return {
         "version": version,
         "files_touched": len(touched),
         "files_reused": len(untouched),
         "files_probed": len(probe_entries),
-        "updated": n_updated,
-        "deleted": n_deleted,
-        "inserted": n_inserted,
+        "updated": int(n.get("updated", 0)),
+        "deleted": int(n.get("deleted", 0)),
+        "inserted": int(n.get("inserted", 0)),
     }
 
 
@@ -3393,6 +3364,55 @@ def consume_changes(
     return {"from": last, "to": current, "delivered": True, "committed": True}
 
 
+def _reconcile_feed(feed: DataFrame, keys: list[str]) -> DataFrame:
+    """A change feed (``_change_type`` insert/delete rows) reconciled
+    on ``keys`` into one op-tagged change set: the feed's file-diff
+    granularity re-emits every row of a rewritten file as
+    delete+insert, so a key on the insert side is an UPSERT with its
+    final row and a key ONLY on the delete side is a true DELETE (a
+    keys-only row tagged ``"delete"``)."""
+    ups = feed.filter(F.col("_change_type") == "insert").drop(
+        "_commit_version"
+    )
+    dels = (
+        feed.filter(F.col("_change_type") == "delete")
+        .select(*keys)
+        .distinct()
+        .join(ups.select(*keys), keys, "anti")
+        .withColumn("_change_type", F.lit("delete"))
+    )
+    return ups.unionByName(dels, allowMissingColumns=True)
+
+
+def _merge_ops(
+    spark: SparkSession,
+    path: str,
+    changes: DataFrame,
+    keys: list[str],
+    op_col: str,
+    extra: dict | None = None,
+) -> dict:
+    """Apply a key-unique, op-tagged change set in ONE merge: a row
+    whose ``op_col`` is ``"delete"`` deletes its key, any other row
+    (NULL included) upserts its data columns. The clauses are explicit
+    column maps, so ``op_col`` is never written and no clause reads
+    whole rows; columns the change set lacks keep their value on
+    update and are NULL on insert."""
+    is_del = F.col(f"s.{op_col}").eqNullSafe("delete")
+    put = {
+        c: F.col(f"s.{c}") for c in changes.columns if c != op_col
+    }
+    return merge_table(
+        spark, path, changes, keys,
+        when_matched=[
+            (is_del, "delete"),
+            (None, {c: v for c, v in put.items() if c not in keys}),
+        ],
+        insert_unmatched=[(~is_del, put)],
+        extra=extra,
+    )
+
+
 def replicate_table(
     spark: SparkSession,
     src_path: str,
@@ -3413,12 +3433,11 @@ def replicate_table(
       reads added files under the TO manifest's DVs — already the
       final visible state), and a key ONLY on the delete side is a
       true DELETE;
-    - apply as two scoped merges: ``merge_table(when_matched=
-      "replace")`` for upserts, then a keys-only ``when_matched=
-      "delete"`` merge — both file-level CoW, both broadcast-probed,
-      so a delivery-sized change set touches only the replica files
-      holding those keys;
-    - commit the cursor AFTER both merges: at-least-once, and a replay
+    - apply upserts and delete keys as ONE merge (:func:`_merge_ops`)
+      — file-level CoW and broadcast-probed, so a delivery-sized change
+      set touches only the replica files holding those keys, and the
+      whole change set is one replica commit;
+    - commit the cursor AFTER the merge: at-least-once, and a replay
       is idempotent (re-replacing identical rows and re-deleting
       absent keys are both no-ops row-wise).
 
@@ -3458,27 +3477,12 @@ def replicate_table(
             create_table(snap, dst_path)
         n_up = snap.count()
     else:
-        feed = table_changes(spark, src_path, last, current)
-        ups = feed.filter(F.col("_change_type") == "insert").drop(
-            "_change_type", "_commit_version"
+        changes = _reconcile_feed(
+            table_changes(spark, src_path, last, current), keys
         )
-        del_keys = (
-            feed.filter(F.col("_change_type") == "delete")
-            .select(*keys)
-            .distinct()
-            .join(ups.select(*keys), keys, "anti")
-        )
-        if ups.limit(1).collect():
-            r = merge_table(
-                spark, dst_path, ups, keys, when_matched="replace"
-            )
-            n_up = r["updated"] + r["inserted"]
-        if del_keys.limit(1).collect():
-            r = merge_table(
-                spark, dst_path, del_keys, keys,
-                when_matched="delete", insert_unmatched=False,
-            )
-            n_del = r["deleted"]
+        if changes.limit(1).collect():
+            r = _merge_ops(spark, dst_path, changes, keys, "_change_type")
+            n_up, n_del = r["updated"] + r["inserted"], r["deleted"]
     tmp = cursor_path + f".tmp_{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         json.dump({"version": current}, fh)

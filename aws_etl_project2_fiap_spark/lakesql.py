@@ -69,18 +69,17 @@ Grammar notes (deliberate limits, all loud):
   equalities over SAME-NAMED columns (the ``merge_table`` key
   contract); alias names are whatever the statement declares (``AS``
   optional), else the table's own name.
-- ``WHEN NOT MATCHED THEN INSERT *`` only (the source row inserts
-  whole — project the source subquery to shape it).
-- One clause of each kind, like Delta before 2.0. ``WHEN MATCHED``
-  may appear twice ONLY as UPDATE-with-AND-condition followed by
-  DELETE (the Delta clause-ordering idiom; the UPDATE's condition is
-  required — Spark's parser enforces Delta's non-final-clause rule —
-  and both conditions must resolve against the source row alone).
-  Executed as a conditional update
-  merge then a CAS-chained conditional delete merge carrying the
-  INSERT clause — two commits, so a crash between them leaves the
-  UPDATE applied with the DELETE/INSERT pending (re-run to finish);
-  a concurrent commit in the gap conflicts loudly, never misapplies.
+- MERGE's WHEN clauses pass to ``merge_table`` as the ordered lists
+  Spark's parser builds: any number of ``WHEN MATCHED`` (UPDATE SET
+  ... / UPDATE SET * / DELETE), ``WHEN NOT MATCHED`` (INSERT * /
+  INSERT (cols) VALUES (...)) and ``WHEN NOT MATCHED BY SOURCE``
+  (UPDATE SET ... / DELETE) clauses. For each row the first clause
+  whose condition holds applies, as in Delta; conditions may read
+  both sides, and the parser requires every clause but the last of a
+  kind to carry one. The statement is one pass and one commit.
+- Subqueries inside UPDATE/DELETE WHERE, SET values and MERGE WHEN
+  conditions bind the tables they name at statement start, as a
+  SELECT's do.
 - SELECT: table references resolve as Spark resolves them; time
   travel, CHANGES and branch reads are spliced at parser spans. A
   branch reads as ``FROM t VERSION AS OF 'branch'`` (Iceberg's form).
@@ -90,10 +89,10 @@ Grammar notes (deliberate limits, all loud):
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import re
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -529,9 +528,16 @@ class LakeSQL:
         has analyzed the statement: the DataFrame holds their plans, so
         it still runs, and the session catalog keeps no view per
         statement."""
+        with self._minting() as minted:
+            return self.spark.sql(prefix + self._rewrite_select(q, minted))
+
+    @contextlib.contextmanager
+    def _minting(self):
+        """Collect the names of the temp views a statement mints and
+        drop them when it is done."""
         minted: list[str] = []
         try:
-            return self.spark.sql(prefix + self._rewrite_select(q, minted))
+            yield minted
         finally:
             for view in minted:
                 self.spark.catalog.dropTempView(view)
@@ -541,12 +547,27 @@ class LakeSQL:
         return self.spark._jsparkSession.sessionState().sqlParser() \
             .parsePlan(q)
 
-    def _rewrite_select(self, q: str, minted: list[str]) -> str:
+    def _parse_dml(self, q: str, minted: list[str]):
+        """Parse an UPDATE, DELETE or MERGE after binding the tables its
+        subqueries name (in WHERE, SET values and WHEN conditions) at
+        statement start, as :meth:`_rewrite_select` binds a SELECT's.
+        Returns (plan, text): when a time-travel or CHANGES read was
+        spliced, both are those of the spliced text, so parser spans
+        stay valid for ``_text``."""
+        plan = self._parse(q)
+        text = self._rewrite_select(q, minted, _seq(plan.innerChildren()))
+        return (plan, q) if text == q else (self._parse(text), text)
+
+    def _rewrite_select(
+        self, q: str, minted: list[str], roots: list | None = None
+    ) -> str:
         """Bind the statement's lakehouse tables and return the text for
         Spark SQL to run. Spark's parser finds the references: the walk
         covers the plan's children and inner children (subquery
         expressions, CTE bodies), so hints, backticks, comma lists, CTE
         shadowing, comments and literals behave exactly as in Spark.
+        ``roots`` narrows the walk to those subtrees (a DML statement's
+        subqueries) instead of the whole statement.
 
         - A plain reference runs unrewritten: the table's current
           version is registered as a temp view under its own name
@@ -560,11 +581,12 @@ class LakeSQL:
 
         Every view is read before Spark runs the statement, so each
         table's version is bound at statement start."""
-        plan = self._parse(q)
         names = {n.lower(): n for n in self.tables}
         current: set[str] = set()
         splices: list[tuple[int, int, str]] = []  # [start, stop] ← text
-        stack = [(plan, None)]
+        if roots is None:
+            roots = [self._parse(q)]
+        stack = [(root, None) for root in roots]
         while stack:
             node, parent = stack.pop()
             kind = node.nodeName()
@@ -783,8 +805,11 @@ class LakeSQL:
             # UPDATE/DELETE: the verbs' discovery scan — which files
             # hold matched rows (the CoW rewrite / DV sidecar set), how
             # many rows match — no mutation, no commit
-            name, _, pred = self._mutation(body)
-            plan = V.mutation_probe_plan(self.spark, self._path(name), pred)
+            with self._minting() as minted:
+                name, _, pred = self._mutation(body, minted)
+                plan = V.mutation_probe_plan(
+                    self.spark, self._path(name), pred
+                )
             return self._result({"statement": head, "table": name, **plan})
         raise SQLParseError(
             f"EXPLAIN supports SELECT/WITH, MERGE, UPDATE and DELETE "
@@ -795,19 +820,24 @@ class LakeSQL:
         """Dry-run the probe phase of a MERGE statement: no mutation,
         no commit — reports how the stats/bucket/bloom pruning and the
         key semi-probe would confine the rewrite."""
-        plan, tname, _, keys, source_df = self._parse_merge(q)
-        probe = V.merge_probe_plan(
-            self.spark, self._path(tname), source_df, keys,
-            has_by_source_clause=plan.notMatchedBySourceActions().size() > 0,
-        )
+        with self._minting() as minted:
+            plan, _, tname, _, keys, source_df = self._parse_merge(
+                q, minted
+            )
+            probe = V.merge_probe_plan(
+                self.spark, self._path(tname), source_df, keys,
+                has_by_source_clause=(
+                    plan.notMatchedBySourceActions().size() > 0
+                ),
+            )
         return self._result({"statement": "MERGE", "table": tname, **probe})
 
     # -- UPDATE / DELETE ----------------------------------------------
 
-    def _mutation(self, q: str):
+    def _mutation(self, q: str, minted: list[str]):
         """Parse an UPDATE or DELETE: (table name, SET assignments —
         None for DELETE — and the WHERE predicate)."""
-        plan = self._parse(q)
+        plan, q = self._parse_dml(q, minted)
         rel = plan.table()
         if rel.nodeName() != "UnresolvedRelation":
             raise SQLParseError(
@@ -830,16 +860,18 @@ class LakeSQL:
         return name, assigns, F.expr(_text(q, cond, {}))
 
     def _update(self, q: str) -> DataFrame:
-        name, assigns, pred = self._mutation(q)
-        return self._result(
-            V.update_table(self.spark, self._path(name), assigns, pred)
-        )
+        with self._minting() as minted:
+            name, assigns, pred = self._mutation(q, minted)
+            return self._result(
+                V.update_table(self.spark, self._path(name), assigns, pred)
+            )
 
     def _delete(self, q: str) -> DataFrame:
-        name, _, pred = self._mutation(q)
-        return self._result(
-            V.delete_from(self.spark, self._path(name), pred)
-        )
+        with self._minting() as minted:
+            name, _, pred = self._mutation(q, minted)
+            return self._result(
+                V.delete_from(self.spark, self._path(name), pred)
+            )
 
     @staticmethod
     def _assignments(
@@ -863,12 +895,13 @@ class LakeSQL:
 
     # -- MERGE ---------------------------------------------------------
 
-    def _parse_merge(self, q: str):
-        """Parse a MERGE once: (plan, target table name, alias map for
-        ``_text``, merge keys, source DataFrame). A side's alias is the
-        one declared (``AS`` optional), else the table's own name, as
-        in Spark; a subquery source runs as its own text."""
-        plan = self._parse(q)
+    def _parse_merge(self, q: str, minted: list[str]):
+        """Parse a MERGE once: (plan, its text — see ``_parse_dml`` —,
+        target table name, alias map for ``_text``, merge keys, source
+        DataFrame). A side's alias is the one declared (``AS``
+        optional), else the table's own name, as in Spark; a subquery
+        source runs as its own text."""
+        plan, q = self._parse_dml(q, minted)
         talias, target = _merge_side(plan.targetTable(), "t")
         salias, source = _merge_side(plan.sourceTable(), "s")
         if talias.lower() == salias.lower():
@@ -895,123 +928,48 @@ class LakeSQL:
         else:
             source_df = self._select(_span(q, source))
         aliases = {talias.lower(): "t", salias.lower(): "s"}
-        return plan, target.tableName(), aliases, keys, source_df
+        return plan, q, target.tableName(), aliases, keys, source_df
 
     def _merge(self, q: str) -> DataFrame:
-        plan, tname, aliases, keys, source_df = self._parse_merge(q)
-        target = {a for a, side in aliases.items() if side == "t"}
-
-        def action(a):  # UpdateAction, UpdateStarAction or DeleteAction
-            if a.nodeName() == "UpdateAction":
-                return self._assignments(q, a.assignments(), target, aliases)
-            return "delete" if a.nodeName() == "DeleteAction" else "replace"
-
-        def condition(a) -> str | None:
-            c = a.condition()
-            return _text(q, c.get(), aliases) if c.isDefined() else None
-
-        # Spark's parser already rejects an unconditional non-final
-        # MATCHED clause and BY SOURCE INSERT / UPDATE SET *
-        matched = _seq(plan.matchedActions())
-        if len(matched) > 1 and [a.nodeName() for a in matched] != [
-            "UpdateAction", "DeleteAction"
-        ]:
-            raise SQLParseError(
-                "only UPDATE-with-condition followed by DELETE "
-                "is supported as a second WHEN MATCHED clause"
+        """Run a MERGE as one ``merge_table`` call: the parse tree's
+        ordered WHEN-clause lists pass straight through, so the
+        statement is one pass and one commit."""
+        with self._minting() as minted:
+            plan, q, tname, aliases, keys, source_df = self._parse_merge(
+                q, minted
             )
-        conds = [condition(a) for a in matched]
-        if len(matched) == 2:
-            # Executed as two merges, so both conditions must be
-            # SOURCE-ONLY expressions — a target-referencing condition
-            # would be re-evaluated against the already-updated rows in
-            # the second merge and could wrongly fire or suppress the
-            # delete
-            labels = ("first (UPDATE)", "second (DELETE)")
-            for label, txt in zip(labels, conds):
-                if txt:
-                    self._require_source_only(label, txt, source_df)
-        by_source = _seq(plan.notMatchedBySourceActions())
-        if len(by_source) > 1:
-            raise SQLParseError(
-                "only one WHEN NOT MATCHED BY SOURCE clause is supported"
-            )
-        not_matched = _seq(plan.notMatchedActions())
-        for a in not_matched:
-            if a.nodeName() != "InsertStarAction":
-                raise SQLParseError("WHEN NOT MATCHED supports only INSERT *")
-            if a.condition().isDefined():
-                raise SQLParseError(
-                    "conditional NOT-MATCHED INSERT is not supported"
-                )
+            target = {a for a, side in aliases.items() if side == "t"}
 
-        def expr(txt):
-            return F.expr(txt) if txt else None
+            def clauses(actions) -> list:
+                out = []
+                for a in _seq(actions):
+                    kind = a.nodeName()
+                    if kind in ("UpdateAction", "InsertAction"):
+                        action = self._assignments(
+                            q, a.assignments(), target, aliases
+                        )
+                    else:
+                        action = {
+                            "DeleteAction": "delete",
+                            "UpdateStarAction": "replace",
+                            "InsertStarAction": "insert",
+                        }[kind]
+                    c = a.condition()
+                    out.append((
+                        F.expr(_text(q, c.get(), aliases))
+                        if c.isDefined() else None,
+                        action,
+                    ))
+                return out
 
-        matched_condition = expr(conds[0]) if matched else None
-        path = self._path(tname)
-        res = V.merge_table(
-            self.spark, path, source_df, keys,
-            when_matched=action(matched[0]) if matched else None,
-            matched_condition=matched_condition,
-            # in the two-merge idiom the INSERT clause must ride the
-            # SECOND merge: a NOT-MATCHED row inserted by the first
-            # would be a MATCH for the second and its delete clause
-            # could wrongly fire on it — Delta applies matched clauses
-            # only to rows that matched at statement start
-            insert_unmatched=bool(not_matched) and len(matched) < 2,
-            when_not_matched_by_source=(
-                action(by_source[0]) if by_source else None
-            ),
-            not_matched_by_source_condition=(
-                expr(condition(by_source[0])) if by_source else None
-            ),
-        )
-        if len(matched) == 2:
-            # the rows the conditional UPDATE skipped: delete those that
-            # fire the second clause's condition (or all remaining
-            # matches when unconditional) — Delta's two-clause order
-            cond2 = ~F.coalesce(matched_condition, F.lit(False))
-            if conds[1]:
-                cond2 = cond2 & F.expr(conds[1])
-            # the two-merge emulation is TWO commits, not one atomic
-            # statement: chain the CAS so a concurrent commit landing
-            # between them conflicts loudly instead of letting the
-            # delete evaluate against post-statement state. A crash
-            # between the commits leaves the UPDATE applied and the
-            # DELETE/INSERT pending — re-run the statement's remaining
-            # clauses; both history entries are tagged MERGE.
-            res2 = V.merge_table(
-                self.spark, path, source_df, keys,
-                when_matched="delete",
-                matched_condition=cond2,
-                insert_unmatched=bool(not_matched),
-                expect_version=res["version"],
-            )
-            res = {**res, "second_delete": res2}
-        return self._result(res)
-
-    @staticmethod
-    def _require_source_only(label: str, txt: str, source: DataFrame):
-        """The UPDATE+DELETE idiom's conditions must read only the
-        source row: the idiom executes as two merges, and the second
-        re-evaluates both conditions against already-updated target
-        rows. The rule: the condition must resolve against a relation
-        whose only column is the source row as a struct named ``s`` —
-        a ``t.`` reference or a bare column (``WHEN MATCHED AND flag``)
-        does not, whatever functions, keywords or literals surround
-        it."""
-        try:
-            source.select(F.struct("*").alias("s")).select(F.expr(txt))
-        except AnalysisException as exc:
-            if not (exc.getCondition() or "").startswith("UNRESOLVED_COLUMN"):
-                raise
-            raise SQLParseError(
-                f"the {label} WHEN MATCHED condition in the "
-                f"UPDATE+DELETE idiom must reference only source (s.) "
-                f"columns — the second merge would read it against the "
-                f"already-updated target: {txt!r}"
-            ) from exc
+            return self._result(V.merge_table(
+                self.spark, self._path(tname), source_df, keys,
+                when_matched=clauses(plan.matchedActions()),
+                insert_unmatched=clauses(plan.notMatchedActions()),
+                when_not_matched_by_source=clauses(
+                    plan.notMatchedBySourceActions()
+                ),
+            ))
 
     # -- INSERT / CTAS / matview refresh ------------------------------
 

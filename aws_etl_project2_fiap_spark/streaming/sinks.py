@@ -146,19 +146,19 @@ def cdc_apply_sink(
       late-arriving upsert cannot resurrect a newer delete); without
       it the source must be key-unique per batch (the merge enforces
       this — a dup key raises rather than fanning out);
-    - upserts apply as ``merge_table(when_matched="replace")``,
-      deletes as a keys-only ``when_matched="delete"`` merge — both
-      broadcast-probed file-level CoW, so a delivery-sized batch
+    - the batch applies as ONE merge whose clauses read ``op_col``:
+      ``WHEN MATCHED AND op = 'delete' THEN DELETE``, ``WHEN MATCHED
+      THEN UPDATE`` and ``WHEN NOT MATCHED AND op IS DISTINCT FROM
+      'delete' THEN INSERT`` over explicit column maps (``op_col`` is
+      never written; a NULL op upserts)
+      — broadcast-probed file-level CoW, so a delivery-sized batch
       touches only the files holding its keys;
-    - exactly-once: the batch's FINAL commit records its ``batch_id``
-      in the manifest; a replayed batch (foreachBatch is
-      at-least-once) is skipped when its id is committed, and a crash
-      BETWEEN the two merges replays safely because re-replacing
-      identical rows is row-idempotent and the delete merge then
-      completes the batch;
+    - exactly-once: the batch's one commit records its ``batch_id`` in
+      the manifest; a replayed batch (foreachBatch is at-least-once)
+      is skipped when its id is committed;
     - :class:`~..io.versioned.CommitConflict` from a concurrent writer
       retries the whole batch against the new snapshot (nothing was
-      half-applied: each merge is one atomic commit).
+      half-applied: the merge is one atomic commit).
 
     First batch creates the table from its upserts (deletes in the
     seed batch refer to rows that never existed — after keep-latest
@@ -174,11 +174,12 @@ def cdc_apply_sink(
         spark = batch_df.sparkSession
         if order_col is not None:
             batch_df = keep_latest(batch_df, keys, order_col)
-        ups = batch_df.filter(F.col(op_col) != "delete").drop(op_col)
-        dels = batch_df.filter(F.col(op_col) == "delete").select(*keys)
         for _attempt in range(5):
             try:
                 if not os.path.exists(V._pointer(table_path)):
+                    ups = batch_df.filter(
+                        ~F.col(op_col).eqNullSafe("delete")
+                    ).drop(op_col)
                     if ups.isEmpty():
                         return  # delete-only seed batch: nothing exists
                     V.create_table(
@@ -186,20 +187,11 @@ def cdc_apply_sink(
                     )
                     return
                 if batch_id in V.committed_batch_ids(table_path):
-                    return  # replayed batch: already fully committed
-                has_dels = not dels.isEmpty()
-                if not ups.isEmpty():
-                    V.merge_table(
-                        spark, table_path, ups, keys,
-                        when_matched="replace",
-                        extra=None if has_dels else {"batch_id": batch_id},
-                    )
-                if has_dels:
-                    V.merge_table(
-                        spark, table_path, dels, keys,
-                        when_matched="delete", insert_unmatched=False,
-                        extra={"batch_id": batch_id},
-                    )
+                    return  # replayed batch: already committed
+                V._merge_ops(
+                    spark, table_path, batch_df, keys, op_col,
+                    extra={"batch_id": batch_id},
+                )
                 return
             except V.CommitConflict:
                 continue
@@ -243,18 +235,13 @@ def cdf_replica_sink(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        ups = batch_df.filter(
-            F.col("_change_type") == "insert"
-        ).drop("_change_type", "_commit_version")
-        dels = (
-            batch_df.filter(F.col("_change_type") == "delete")
-            .select(*keys)
-            .distinct()
-            .join(ups.select(*keys), keys, "anti")
-        )
+        changes = V._reconcile_feed(batch_df, keys)
         for _attempt in range(5):
             try:
                 if not os.path.exists(V._pointer(table_path)):
+                    ups = batch_df.filter(
+                        F.col("_change_type") == "insert"
+                    ).drop("_change_type", "_commit_version")
                     if ups.isEmpty():
                         return
                     V.create_table(
@@ -263,19 +250,10 @@ def cdf_replica_sink(
                     return
                 if batch_id in V.committed_batch_ids(table_path):
                     return
-                has_dels = not dels.isEmpty()
-                if not ups.isEmpty():
-                    V.merge_table(
-                        spark, table_path, ups, keys,
-                        when_matched="replace",
-                        extra=None if has_dels else {"batch_id": batch_id},
-                    )
-                if has_dels:
-                    V.merge_table(
-                        spark, table_path, dels, keys,
-                        when_matched="delete", insert_unmatched=False,
-                        extra={"batch_id": batch_id},
-                    )
+                V._merge_ops(
+                    spark, table_path, changes, keys, "_change_type",
+                    extra={"batch_id": batch_id},
+                )
                 return
             except V.CommitConflict:
                 continue

@@ -8263,15 +8263,15 @@ def k_table_source_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def k_merge_clauses_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-style MERGE clauses end-to-end
-    (io/versioned.merge_table when_matched / matched_condition): a
-    conditional UPDATE merge (WHEN MATCHED AND t.o_totalprice < 150k
-    THEN SET price = s.price * 2, expressions over both aliases, no
-    insert clause) followed by a keys-only DELETE merge (WHEN MATCHED
-    THEN DELETE — the GDPR delete-list shape). The oracle reproduces
-    the post-merge state with a CASE + NOT filter on the source table,
-    proving both clause semantics and their composition exact — file-
-    level CoW scoping, condition three-valued logic, and the keys-only
-    source path included."""
+    (io/versioned.merge_table with an ordered when_matched list): one
+    merge whose delivery holds corrections (o_orderkey % 97 = 0) and
+    delete-list keys (o_orderkey % 101 = 0) runs WHEN MATCHED AND
+    s.o_orderkey % 101 = 0 THEN DELETE, then WHEN MATCHED AND
+    t.o_totalprice < 150k THEN SET price = s.price * 2 (expressions
+    over both aliases), no insert clause. The oracle reproduces the
+    post-merge state with a CASE + NOT filter on the source table,
+    proving first-clause-wins order, condition three-valued logic and
+    file-level CoW scoping in one commit."""
     from .io import versioned as ver_op
 
     work = _scratch_dir("merge_clauses")
@@ -8279,20 +8279,19 @@ def k_merge_clauses_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     ver_op.create_table(o.repartitionByRange(8, "o_orderkey"), work)
-    delivery = o.filter(F.col("o_orderkey") % 97 == 0)
-    r1 = ver_op.merge_table(
+    delivery = o.filter(
+        (F.col("o_orderkey") % 97 == 0) | (F.col("o_orderkey") % 101 == 0)
+    )
+    res = ver_op.merge_table(
         spark, work, delivery, keys=["o_orderkey"],
-        when_matched={"o_totalprice": F.col("s.o_totalprice") * 2},
-        matched_condition=F.col("t.o_totalprice") < 150000.0,
+        when_matched=[
+            (F.col("s.o_orderkey") % 101 == 0, "delete"),
+            (F.col("t.o_totalprice") < 150000.0,
+             {"o_totalprice": F.col("s.o_totalprice") * 2}),
+        ],
         insert_unmatched=False,
     )
-    assert r1["inserted"] == 0 and r1["deleted"] == 0
-    dels = o.filter(F.col("o_orderkey") % 101 == 0).select("o_orderkey")
-    r2 = ver_op.merge_table(
-        spark, work, dels, keys=["o_orderkey"],
-        when_matched="delete", insert_unmatched=False,
-    )
-    assert r2["updated"] == 0 and r2["inserted"] == 0
+    assert res["inserted"] == 0 and res["deleted"] > 0
     return (
         ver_op.read_table(spark, work)
         .groupBy("o_orderpriority")
@@ -8340,10 +8339,9 @@ def k_merge_sync_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = ver_op.merge_table(
         spark, work, snapshot, keys=["o_orderkey"],
         when_matched="replace",
-        when_not_matched_by_source="delete",
-        not_matched_by_source_condition=(
-            F.col("t.o_orderpriority") == "1-URGENT"
-        ),
+        when_not_matched_by_source=[
+            (F.col("t.o_orderpriority") == "1-URGENT", "delete")
+        ],
     )
     assert res["inserted"] == 0
     return (

@@ -7,7 +7,7 @@ full row sets (the test_merge_clauses shapes, re-expressed as SQL).
 from __future__ import annotations
 
 import pytest
-from pyspark.errors import ParseException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import functions as F
 
 from aws_etl_project2_fiap_spark.io import versioned as V
@@ -61,8 +61,9 @@ def test_merge_conditional_update_parity(spark, tmp_path):
 
     V.merge_table(
         spark, t_df, src, ["k"],
-        when_matched={"v": F.col("s.v") + F.col("t.v")},
-        matched_condition=F.col("s.k") % 2 == 0,
+        when_matched=[
+            (F.col("s.k") % 2 == 0, {"v": F.col("s.v") + F.col("t.v")})
+        ],
         insert_unmatched=False,
     )
     lk = LakeSQL(spark, {"tgt": t_sql, "delta": srcp})
@@ -81,11 +82,9 @@ def test_merge_delete_and_by_source_parity(spark, tmp_path):
 
     V.merge_table(
         spark, t_df, src, ["k"],
-        when_matched="delete",
-        matched_condition=F.col("s.k") % 3 == 0,
+        when_matched=[(F.col("s.k") % 3 == 0, "delete")],
         insert_unmatched=False,
-        when_not_matched_by_source="delete",
-        not_matched_by_source_condition=F.col("t.k") < 10,
+        when_not_matched_by_source=[(F.col("t.k") < 10, "delete")],
     )
     lk = LakeSQL(spark, {"tgt": t_sql, "delta": srcp})
     lk.sql(
@@ -104,12 +103,15 @@ def test_merge_update_then_delete_idiom(spark, tmp_path):
     srcp = str(tmp_path / "src")
     V.create_table(src, srcp)
     lk = LakeSQL(spark, {"tgt": t_sql, "delta": srcp})
+    v0 = V.current_version(t_sql)
     lk.sql(
         "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
         "WHEN MATCHED AND s.k % 2 = 0 THEN UPDATE SET v = s.v "
         "WHEN MATCHED THEN DELETE "
         "WHEN NOT MATCHED THEN INSERT *"
     )
+    # one statement, one merge, one history entry
+    assert V.current_version(t_sql) == v0 + 1
     got = {r["k"]: (r["v"], r["tag"]) for r in
            V.read_table(spark, t_sql).collect()}
     # unmatched targets (k<50) survive untouched
@@ -118,9 +120,8 @@ def test_merge_update_then_delete_idiom(spark, tmp_path):
     assert got[50] == (500.0, "old")
     # matched odd keys deleted
     assert 51 not in got and 99 not in got
-    # unmatched source rows inserted — INCLUDING odd keys (regression:
-    # an insert riding the first merge would be re-matched by the
-    # second merge's delete clause and wrongly removed)
+    # unmatched source rows inserted — INCLUDING odd keys: matched
+    # clauses apply only to rows that matched at statement start
     assert got[120] == (1200.0, "new")
     assert got[121] == (1210.0, "new")
     assert len([k for k in got if k >= 100]) == 50
@@ -235,13 +236,15 @@ def test_parse_errors_are_loud(spark, tmp_path):
                "THEN DELETE")
     with pytest.raises(SQLParseError):
         lk.sql("UPDATE nope SET k = 1")
-    with pytest.raises(SQLParseError):
-        # t.-referencing condition in the UPDATE+DELETE idiom
-        lk.sql(
-            "MERGE INTO tt AS t USING tt AS s ON t.k = s.k "
-            "WHEN MATCHED AND t.k > 1 THEN UPDATE SET k = s.k "
-            "WHEN MATCHED THEN DELETE"
-        )
+    # a t.-referencing condition in the UPDATE+DELETE idiom runs, with
+    # Delta's result: the first clause whose condition holds applies
+    lk.sql(
+        "MERGE INTO tt AS t USING tt AS s ON t.k = s.k "
+        "WHEN MATCHED AND t.k > 1 THEN UPDATE SET * "
+        "WHEN MATCHED THEN DELETE"
+    )
+    assert [r["k"] for r in V.read_table(spark, tbl).collect()] == [2]
+    assert V.current_version(tbl) == 2
 
 
 def test_cli_lakesql_verb(spark, tmp_path, capsys):
@@ -322,9 +325,9 @@ def test_ctas_and_refresh_matview(spark, tmp_path):
 
 def test_unconditional_update_then_delete_rejected(spark, tmp_path):
     """An unconditional first WHEN MATCHED UPDATE followed by DELETE
-    would, through the two-merge emulation, delete every row it just
-    updated — Spark's parser rejects the shape (only the last MATCHED
-    clause may omit its condition, as in Delta) before anything runs."""
+    leaves the DELETE unreachable — Spark's parser rejects the shape
+    (only the last MATCHED clause may omit its condition, as in Delta)
+    before anything runs."""
     tbl = str(tmp_path / "t")
     V.create_table(spark.range(3).select(F.col("id").alias("k")), tbl)
     lk = LakeSQL(spark, {"tt": tbl})
@@ -521,36 +524,113 @@ def test_alias_norm_preserves_string_literals(spark, tmp_path):
     assert got[9] == "x"
 
 
-def test_idiom_rejects_bare_target_column(spark, tmp_path):
-    """ADVICE r7: an unqualified column in either UPDATE+DELETE idiom
-    condition resolves against the already-updated target in the
-    second merge — reject it, not just explicit t. references."""
+def test_merge_clause_conditions_read_the_target(spark, tmp_path):
+    """Clause conditions may read the target row: the statement is one
+    merge, so no clause re-reads a row an earlier clause updated, and
+    the first clause whose condition holds applies (Delta). A bare
+    column both sides carry is ambiguous, as in Spark, and commits
+    nothing."""
     t_sql, src = _fixture(spark, tmp_path, "t_sql")
     srcp = str(tmp_path / "src")
     V.create_table(src, srcp)
     lk = LakeSQL(spark, {"tgt": t_sql, "delta": srcp})
-    for cond in ("tag = 'old'", "s.k > 2 AND tag = 'old'", "t.k > 2"):
-        with pytest.raises(SQLParseError, match="source \\(s\\.\\)"):
-            lk.sql(
-                "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
-                f"WHEN MATCHED AND {cond} THEN UPDATE SET v = s.v "
-                "WHEN MATCHED AND s.k % 2 = 1 THEN DELETE"
-            )
-    # and the DELETE-side condition is checked too
-    with pytest.raises(SQLParseError, match="source \\(s\\.\\)"):
-        lk.sql(
-            "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
-            "WHEN MATCHED AND s.k > 2 THEN UPDATE SET v = s.v "
-            "WHEN MATCHED AND tag = 'old' THEN DELETE"
-        )
-    # source-only conditions with functions/casts/keywords still pass
     lk.sql(
         "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
-        "WHEN MATCHED AND abs(s.v) > 2 AND cast(s.k AS int) "
-        "BETWEEN 1 AND 1000 AND s.tag IS NOT NULL "
-        "THEN UPDATE SET v = s.v "
-        "WHEN MATCHED AND s.k % 2 = 1 THEN DELETE"
+        "WHEN MATCHED AND t.v >= 70 AND s.k % 2 = 0 "
+        "THEN UPDATE SET v = s.v + t.v "
+        "WHEN MATCHED AND t.tag = 'old' AND s.k % 3 = 0 THEN DELETE "
+        "WHEN MATCHED AND t.k < 60 THEN UPDATE SET tag = 'low' "
+        "WHEN NOT MATCHED AND s.k % 5 = 0 THEN INSERT *"
     )
+    model = {k: (k * 1.0, "old") for k in range(100)}
+    for k in range(50, 150):
+        if k not in model:
+            if k % 5 == 0:
+                model[k] = (k * 10.0, "new")
+        elif model[k][0] >= 70 and k % 2 == 0:
+            model[k] = (k * 10.0 + model[k][0], "old")
+        elif k % 3 == 0:
+            del model[k]
+        elif k < 60:
+            model[k] = (model[k][0], "low")
+    got = {r["k"]: (r["v"], r["tag"]) for r in
+           V.read_table(spark, t_sql).collect()}
+    assert got == model
+    assert V.current_version(t_sql) == 2
+    with pytest.raises(AnalysisException, match="AMBIGUOUS"):
+        lk.sql(
+            "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
+            "WHEN MATCHED AND tag = 'old' THEN DELETE"
+        )
+    assert V.current_version(t_sql) == 2
+
+
+def test_merge_from_wider_source_with_column_maps(spark, tmp_path):
+    """The source-column check applies only when a clause reads whole
+    source rows: UPDATE SET v = s.v from a source (k, v, ts) into a
+    target (k, v, flag) runs, as in Delta; UPDATE SET * still needs
+    matching columns."""
+    import datetime
+
+    tbl, srcp = str(tmp_path / "t"), str(tmp_path / "src")
+    V.create_table(
+        spark.createDataFrame(
+            [(k, 0.0, True) for k in range(4)],
+            "k long, v double, flag boolean",
+        ),
+        tbl,
+    )
+    V.create_table(
+        spark.createDataFrame(
+            [(k, 1.0 * k, datetime.datetime(2024, 1, 1)) for k in (2, 3, 9)],
+            "k long, v double, ts timestamp",
+        ),
+        srcp,
+    )
+    lk = LakeSQL(spark, {"tgt": tbl, "delta": srcp})
+    lk.sql(
+        "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v + 1)"
+    )
+    got = {r["k"]: (r["v"], r["flag"]) for r in
+           V.read_table(spark, tbl).collect()}
+    assert got == {0: (0.0, True), 1: (0.0, True), 2: (2.0, True),
+                   3: (3.0, True), 9: (10.0, None)}
+    with pytest.raises(ValueError, match="source columns"):
+        lk.sql(
+            "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET *"
+        )
+
+
+def test_dml_subqueries_bind_tables_at_statement_start(spark, tmp_path):
+    """A subquery inside DELETE/UPDATE WHERE or a MERGE condition reads
+    its table's version at statement start, not a view some earlier
+    SELECT bound — and a table no SELECT has bound yet resolves."""
+    tbl, oth, fresh = (str(tmp_path / n) for n in ("t", "o", "f"))
+    V.create_table(spark.range(10).select(F.col("id").alias("k")), tbl)
+    V.create_table(spark.range(1).select(F.col("id").alias("k")), oth)
+    V.create_table(spark.range(8, 10).select(F.col("id").alias("k")), fresh)
+    lk = LakeSQL(spark, {"tt": tbl, "oth": oth})
+    assert lk.sql("SELECT count(*) AS n FROM oth").first()["n"] == 1
+    V.append_table(spark.range(1, 5).select(F.col("id").alias("k")), oth)
+    lk.sql("DELETE FROM tt WHERE k IN (SELECT k FROM oth)")
+    assert sorted(r["k"] for r in V.read_table(spark, tbl).collect()) \
+        == [5, 6, 7, 8, 9]
+    # a time-travel read inside the subquery is spliced, its view dropped
+    lk.sql("DELETE FROM tt WHERE k IN (SELECT k + 5 FROM oth VERSION AS OF 1)")
+    assert not [
+        t.name for t in spark.catalog.listTables() if "__v" in t.name
+    ]
+    lk.register("fresh", fresh)
+    lk.sql(
+        "MERGE INTO tt AS t USING oth AS s ON t.k = s.k "
+        "WHEN NOT MATCHED BY SOURCE AND t.k IN (SELECT k FROM fresh) "
+        "THEN DELETE"
+    )
+    assert sorted(r["k"] for r in V.read_table(spark, tbl).collect()) \
+        == [6, 7]
 
 
 def test_alter_rename_and_drop_column_sql(spark, tmp_path):
@@ -1019,10 +1099,11 @@ def test_describe_matview_logical_schema(spark, tmp_path):
 
 def test_idiom_guard_accepts_all_interval_units(spark, tmp_path):
     """ADVICE r8: week/millisecond/microsecond (+ plurals) and
-    current_date are legal in a source-only idiom condition — a real
-    UPDATE+DELETE MERGE using every one of them runs; a bare target
-    column is still rejected (fail-closed). (Spark's interval literal
-    has no quarter unit: ``interval 3 quarter`` is a ParseException.)"""
+    current_date are legal in an idiom condition — a real UPDATE+DELETE
+    MERGE using every one of them runs; so does a condition reading
+    the target, with Delta's first-clause-wins result, in one commit.
+    (Spark's interval literal has no quarter unit: ``interval 3
+    quarter`` is a ParseException.)"""
     import datetime
 
     tbl, srcp = str(tmp_path / "t"), str(tmp_path / "src")
@@ -1053,13 +1134,14 @@ def test_idiom_guard_accepts_all_interval_units(spark, tmp_path):
     got = {r["k"]: r["v"] for r in V.read_table(spark, tbl).collect()}
     assert got == {0: 1.0, 1: 1.0, 2: 1.0, 3: 1.0}
     version = V.current_version(tbl)
-    with pytest.raises(SQLParseError, match="source \\(s\\.\\)"):
-        lk.sql(
-            "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
-            "WHEN MATCHED AND flag THEN UPDATE SET v = s.v "
-            "WHEN MATCHED THEN DELETE"
-        )
-    assert V.current_version(tbl) == version
+    lk.sql(
+        "MERGE INTO tgt AS t USING delta AS s ON t.k = s.k "
+        "WHEN MATCHED AND t.flag AND s.k < 2 THEN UPDATE SET v = s.v + 1 "
+        "WHEN MATCHED THEN DELETE"
+    )
+    got = {r["k"]: r["v"] for r in V.read_table(spark, tbl).collect()}
+    assert got == {0: 2.0, 1: 2.0}
+    assert V.current_version(tbl) == version + 1
 
 
 def test_lakesql_catalog_persists(spark, tmp_path):

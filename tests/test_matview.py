@@ -334,9 +334,9 @@ def test_delta_refresh_zero_group_cleanup_is_scoped(
     spark, tmp_path, monkeypatch
 ):
     """The delta path must never fall back to a whole-view scan for
-    emptied groups: cleanup goes through the probe-pruned MERGE (and
-    only when some group's row count decreased) — a delete_from here
-    would rescan O(groups) on every refresh forever."""
+    emptied groups: their delete is a clause of the fold's own
+    probe-pruned MERGE — a delete_from here would rescan O(groups) on
+    every refresh forever. Either way the refresh is one commit."""
     src = _src(spark, tmp_path)
     dst = str(tmp_path / "view")
     MV.create_aggregate_view(spark, src, dst, ["k"], SUM_AGGS)
@@ -345,21 +345,22 @@ def test_delta_refresh_zero_group_cleanup_is_scoped(
         raise AssertionError("delta refresh must not call delete_from")
 
     monkeypatch.setattr(MV.V, "delete_from", banned)
-    # pure append: no count decreases → no cleanup merge at all
+    # pure append: no count decreases
     V.append_table(
         spark.createDataFrame([(1, 2.0, 2)], "k long, x double, n long"),
         src,
     )
     v_before = V.current_version(dst)
     MV.refresh_aggregate_view(spark, dst)
-    # exactly one view commit (the add-merge) — no cleanup commit
+    # exactly one view commit (the fold merge)
     assert V.current_version(dst) == v_before + 1
     monkeypatch.undo()
-    # emptying delete: cleanup runs, but through MERGE, not delete_from
+    # emptying delete: the group goes in the same MERGE, not delete_from
     V.delete_from(spark, src, F.col("k") == 3, mode="cow")
     monkeypatch.setattr(MV.V, "delete_from", banned)
     MV.refresh_aggregate_view(spark, dst)
     monkeypatch.undo()
+    assert V.current_version(dst) == v_before + 2
     got = _got(spark, dst)
     assert (3,) not in got
     _assert_equal(got, _expect(spark, src, SUM_SQL()))
@@ -1036,48 +1037,52 @@ def test_refresh_evolve_dims_dim_only_move_not_noop(spark, tmp_path):
 
 def _crash_on_call(monkeypatch, n):
     """Monkeypatch V.merge_table to raise on its n-th call — simulates
-    a hard crash between the CAS'd state merge and the follow-up
-    cleanup/compaction merge."""
+    a hard crash inside a fold's merge, before its commit."""
     real = V.merge_table
     calls = {"n": 0}
 
     def boom(*a, **kw):
         calls["n"] += 1
         if calls["n"] == n:
-            raise RuntimeError("injected crash before cleanup merge")
+            raise RuntimeError("injected crash inside the fold merge")
         return real(*a, **kw)
 
     monkeypatch.setattr(V, "merge_table", boom)
     return real
 
 
+def _cnts(spark, dst, key="k"):
+    return {
+        r[key]: r["__mv_cnt"]
+        for r in V.read_table(spark, dst).select(key, "__mv_cnt").collect()
+    }
+
+
 def test_delta_crash_before_cleanup_hides_ghost_group(
     spark, tmp_path, monkeypatch
 ):
-    """VERDICT r7: the delta fold's add-merge (which advances the
-    watermark) and the zero-count cleanup are two commits. A crash
-    between them leaves a __mv_cnt=0 state row — the read must hide
-    it (recompute would not emit the group), and the group coming
-    back later must fold onto the zero row exactly."""
+    """The delta fold adds the delta and deletes the group whose last
+    row left in ONE merge, one commit. A crash on that merge leaves
+    the view at its prior version (watermark unmoved, group still
+    there); the rerun folds the range in one commit that writes no
+    __mv_cnt = 0 row, and the group coming back later inserts anew."""
     src = _src(spark, tmp_path)
     dst = str(tmp_path / "view")
     MV.create_aggregate_view(spark, src, dst, ["k"], SUM_AGGS)
     V.delete_from(spark, src, F.col("k") == 3, mode="dv")
-    real = _crash_on_call(monkeypatch, 2)
+    before, watermark = V.current_version(dst), MV.view_meta(dst)
+    real = _crash_on_call(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected crash"):
         MV.refresh_aggregate_view(spark, dst)
     monkeypatch.setattr(V, "merge_table", real)
-    # the crash window is real: the zero-count state row exists ...
-    raw = {
-        r["k"]: r["__mv_cnt"]
-        for r in V.read_table(spark, dst).select("k", "__mv_cnt").collect()
-    }
-    assert raw[3] == 0
-    # ... but the logical read equals a recompute (no ghost row)
+    assert V.current_version(dst) == before
+    assert MV.view_meta(dst) == watermark
+    assert _cnts(spark, dst)[3] > 0
+    assert MV.refresh_aggregate_view(spark, dst)["strategy"] == "delta"
+    assert V.current_version(dst) == before + 1
+    cnts = _cnts(spark, dst)
+    assert 3 not in cnts and min(cnts.values()) > 0
     _assert_equal(_got(spark, dst), _expect(spark, src, SUM_SQL()))
-    # the watermark advanced with the add-merge: no refold
-    assert MV.refresh_aggregate_view(spark, dst)["strategy"] == "noop"
-    # group 3 reappears: the fold coalesces the zero row correctly
     V.append_table(
         spark.range(1000, 1010).select(
             F.lit(3).cast("long").alias("k"),
@@ -1093,32 +1098,36 @@ def test_delta_crash_before_cleanup_hides_ghost_group(
 def test_scoped_crash_before_compaction_leaves_no_stale_row(
     spark, tmp_path, monkeypatch
 ):
-    """Scoped fold, same crash: before round 8 the vanish was a
-    SEPARATE delete commit, so this crash left the group's stale
-    pre-delete row (cnt>0!) visible forever. The vanish now rides the
-    CAS'd replace-merge as a __mv_cnt=0 row; the second merge is pure
-    compaction and losing it must be invisible."""
+    """Scoped fold, same crash: the recomputed groups and the vanished
+    group's delete are ONE merge. The crash leaves the view at its
+    prior version; the rerun commits once and leaves no row at all for
+    the vanished group."""
     src = _src(spark, tmp_path)
     dst = str(tmp_path / "view")
     MV.create_aggregate_view(spark, src, dst, ["k"], MM_AGGS)
     V.delete_from(spark, src, F.col("k") == 3, mode="cow")
-    real = _crash_on_call(monkeypatch, 2)
+    before, watermark = V.current_version(dst), MV.view_meta(dst)
+    real = _crash_on_call(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected crash"):
         MV.refresh_aggregate_view(spark, dst)
     monkeypatch.setattr(V, "merge_table", real)
-    raw = {r["k"]: r for r in V.read_table(spark, dst).collect()}
-    assert raw[3]["__mv_cnt"] == 0 and raw[3]["mx"] is None
+    assert V.current_version(dst) == before
+    assert MV.view_meta(dst) == watermark
+    assert MV.refresh_aggregate_view(spark, dst)["strategy"] == "scoped"
+    assert V.current_version(dst) == before + 1
+    cnts = _cnts(spark, dst)
+    assert 3 not in cnts and min(cnts.values()) > 0
     _assert_equal(_got(spark, dst), _expect(spark, src, MM_SQL()))
     assert MV.refresh_aggregate_view(spark, dst)["strategy"] == "noop"
-    _assert_equal(_got(spark, dst), _expect(spark, src, MM_SQL()))
 
 
 def test_evolve_crash_before_cleanup_hides_ghost_group(
     spark, tmp_path, monkeypatch
 ):
     """Dim-evolution fold, same crash shape: deleting every dim key of
-    one region empties its group; the cleanup merge is lost to the
-    crash and the zero row must stay invisible."""
+    one region empties its group. The crash leaves the view and its
+    dim pin at the prior version; the rerun folds in one commit and
+    deletes the group."""
     fact, dim = _star(spark, tmp_path)
     view = str(tmp_path / "view")
     MV.create_aggregate_view(
@@ -1128,18 +1137,52 @@ def test_evolve_crash_before_cleanup_hides_ghost_group(
     )
     # region R3 loses ALL its dim keys -> inner-join drops its rows
     V.delete_from(spark, dim, F.col("region") == "R3", mode="cow")
-    real = _crash_on_call(monkeypatch, 2)
+    before, pinned = V.current_version(view), MV.view_meta(view)
+    real = _crash_on_call(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected crash"):
         MV.evolve_dimensions(spark, view)
     monkeypatch.setattr(V, "merge_table", real)
-    raw = {
-        r["region"]: r["__mv_cnt"]
-        for r in V.read_table(spark, view).collect()
-    }
-    assert raw["R3"] == 0
+    assert V.current_version(view) == before
+    assert MV.view_meta(view) == pinned
+    assert MV.evolve_dimensions(spark, view)["dims_evolved"] == 1
+    assert V.current_version(view) == before + 1
+    cnts = _cnts(spark, view, "region")
+    assert "R3" not in cnts and min(cnts.values()) > 0
     _star_assert(spark, fact, dim, view)
-    # the dim pin advanced with the add-merge: evolve is now a noop
     assert MV.evolve_dimensions(spark, view)["strategy"] == "noop"
+
+
+def test_read_hides_zero_count_rows_of_older_views(spark, tmp_path):
+    """Views written while the emptied-group cleanup was a separate
+    commit can hold __mv_cnt = 0 state rows. The read keeps hiding
+    them, and a later fold onto such a row is exact."""
+    src = _src(spark, tmp_path)
+    dst = str(tmp_path / "view")
+    MV.create_aggregate_view(spark, src, dst, ["k"], SUM_AGGS)
+    V.delete_from(spark, src, F.col("k") == 3, mode="dv")
+    MV.refresh_aggregate_view(spark, dst)
+    state = V.read_table(spark, dst)
+    zero = {"k": 3, "__mv_cnt": 0}
+    V.append_table(
+        spark.createDataFrame(
+            [tuple(zero.get(f.name) for f in state.schema.fields)],
+            state.schema,
+        ),
+        dst,
+    )
+    assert _cnts(spark, dst)[3] == 0
+    _assert_equal(_got(spark, dst), _expect(spark, src, SUM_SQL()))
+    V.append_table(
+        spark.range(1000, 1010).select(
+            F.lit(3).cast("long").alias("k"),
+            (F.col("id") * 1.5).alias("x"),
+            F.col("id").alias("n"),
+        ),
+        src,
+    )
+    MV.refresh_aggregate_view(spark, dst)
+    assert _cnts(spark, dst)[3] == 10
+    _assert_equal(_got(spark, dst), _expect(spark, src, SUM_SQL()))
 
 
 def test_evolve_two_dims_is_one_physical_fact_scan(

@@ -1,11 +1,12 @@
 """Delta-style MERGE clauses on versioned tables
-(io/versioned.merge_table when_matched / matched_condition /
-insert_unmatched).
+(io/versioned.merge_table when_matched / insert_unmatched /
+when_not_matched_by_source, each a bare action or an ordered
+(condition, action) list).
 
 Claims: each clause shape produces exactly the SQL MERGE result on the
 visible rows, file-level CoW scoping still holds (untouched files are
 referenced), counts report the rows the clause actually acted on, and
-a NULL matched_condition does not fire the clause (SQL three-valued
+a NULL clause condition does not fire the clause (SQL three-valued
 semantics).
 """
 
@@ -76,8 +77,9 @@ def test_conditional_update_dict(spark, table):
     )
     res = V.merge_table(
         spark, table, src, keys=["id"],
-        when_matched={"v": F.col("s.v") + F.col("t.v")},
-        matched_condition=F.col("s.v") > F.col("t.v"),
+        when_matched=[
+            (F.col("s.v") > F.col("t.v"), {"v": F.col("s.v") + F.col("t.v")})
+        ],
     )
     assert res["updated"] == 1 and res["inserted"] == 1
     got = _rows(spark, table)
@@ -98,8 +100,7 @@ def test_null_condition_does_not_fire(spark, tmp_path):
     # t.v IS NULL for id=2 -> condition NULL -> clause must not fire
     res = V.merge_table(
         spark, path, src, keys=["id"],
-        when_matched="delete",
-        matched_condition=F.col("t.v") > 5.0,
+        when_matched=[(F.col("t.v") > 5.0, "delete")],
         insert_unmatched=False,
     )
     assert res["deleted"] == 1
@@ -114,8 +115,7 @@ def test_replace_with_condition_and_no_insert(spark, table):
     )
     res = V.merge_table(
         spark, table, src, keys=["id"],
-        when_matched="replace",
-        matched_condition=F.col("t.id") == 20,
+        when_matched=[(F.col("t.id") == 20, "replace")],
         insert_unmatched=False,
     )
     assert res["updated"] == 1 and res["inserted"] == 0
@@ -202,8 +202,9 @@ def test_not_matched_by_source_update_with_condition(spark, table):
     res = V.merge_table(
         spark, table, src, keys=["id"],
         when_matched="replace",
-        when_not_matched_by_source={"v": -F.col("t.v")},
-        not_matched_by_source_condition=F.col("t.g") == 1,
+        when_not_matched_by_source=[
+            (F.col("t.g") == 1, {"v": -F.col("t.v")})
+        ],
     )
     # 300 rows, id 0 matched-replaced; g==1 is ids 1,4,7,... (100 rows,
     # minus id 0 which matched — id 0 has g 0, so none excluded)
@@ -223,10 +224,17 @@ def test_by_source_counts_fold_and_args_validated(spark, table):
             spark, table, src, keys=["id"],
             when_not_matched_by_source="replace",
         )
-    with pytest.raises(ValueError, match="requires a"):
+    with pytest.raises(ValueError, match="when_not_matched_by_source"):
         V.merge_table(
             spark, table, src, keys=["id"],
-            not_matched_by_source_condition=F.lit(True),
+            when_not_matched_by_source=[(F.lit(True), "replace")],
+        )
+    with pytest.raises(ValueError, match="only the last"):
+        V.merge_table(
+            spark, table, src, keys=["id"],
+            when_not_matched_by_source=[
+                (None, "delete"), (F.lit(True), {"v": F.lit(0.0)})
+            ],
         )
     with pytest.raises(ValueError, match="no-op"):
         V.merge_table(
@@ -252,8 +260,7 @@ def test_by_source_file_scoping_with_selective_condition(spark, tmp_path):
     res = V.merge_table(
         spark, path, src, keys=["id"],
         when_matched=None, insert_unmatched=False,
-        when_not_matched_by_source="delete",
-        not_matched_by_source_condition=F.col("t.id") >= 390,
+        when_not_matched_by_source=[(F.col("t.id") >= 390, "delete")],
     )
     assert res["deleted"] == 8  # 390..397
     # only the last range file is touched; the other 3 are referenced

@@ -79,8 +79,12 @@ def test_update_dv_delete_merge_and_rollback_flow(spark, rig):
     assert _same(spark, src, dst)
     # rollback: resurrected rows arrive as inserts (un-deletes)
     V.rollback(src, 2)  # version with the CoW update, before the DV
+    before = V.current_version(dst)
     res = V.replicate_table(spark, src, dst, ["id"], cur)
     assert _same(spark, src, dst)
+    # upserts and the delete of 900 land as ONE replica commit
+    assert res["deleted"] == 1 and res["upserted"] > 0
+    assert V.current_version(dst) == before + 1
     got = {r["id"]: r["v"] for r in V.read_table(spark, dst).collect()}
     assert got[55] == 55.0 and got[0] == 100.0 and 900 not in got
 

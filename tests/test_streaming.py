@@ -824,8 +824,8 @@ def _drop_cdc(spark, path, rows):
 
 def test_cdc_apply_sink_upserts_and_deletes(spark, tmp_path):
     """Op-coded change stream applies to a versioned table: upserts
-    replace/insert, deletes remove, each batch is atomic commits with
-    the final one carrying the batch id."""
+    replace/insert, deletes remove, and each batch is ONE merge commit
+    carrying the batch id."""
     from aws_etl_project2_fiap_spark.io import versioned as V
     from aws_etl_project2_fiap_spark.streaming.sinks import cdc_apply_sink
 
@@ -847,13 +847,15 @@ def test_cdc_apply_sink_upserts_and_deletes(spark, tmp_path):
     _drop_cdc(spark, landing, [
         (1, 11.0, 2, "u"), (2, None, 2, "delete"), (4, 40.0, 2, "c"),
     ])
+    before = V.current_version(table)
     cdc_apply_sink(
         file_source(spark, landing, CDC_SCHEMA), table, ["id"], ckpt,
         order_col="seq",
     ).awaitTermination()
     got = {r["id"]: r["v"] for r in V.read_table(spark, table).collect()}
     assert got == {1: 11.0, 3: 30.0, 4: 40.0}
-    assert len(V.committed_batch_ids(table)) == 2  # final commits only
+    assert V.current_version(table) == before + 1  # one commit per batch
+    assert len(V.committed_batch_ids(table)) == 2
 
 
 def test_cdc_apply_sink_replay_guard(spark, tmp_path):

@@ -111,8 +111,9 @@ def test_versioned_ops_match_model(spark, tmp_path_factory, ops):
             df = spark.createDataFrame(rows, "id long, g long, v double")
             res = V.merge_table(
                 spark, path, df, keys=["id"],
-                when_matched={"v": F.col("t.v") + 1000},
-                matched_condition=F.col("t.g") == arg,
+                when_matched=[
+                    (F.col("t.g") == arg, {"v": F.col("t.v") + 1000})
+                ],
             )
             ver = res["version"]
             fired = [i for i in hit if model[i][0] == arg]
@@ -130,8 +131,7 @@ def test_versioned_ops_match_model(spark, tmp_path_factory, ops):
             res = V.merge_table(
                 spark, path, df, keys=["id"],
                 when_matched=None, insert_unmatched=False,
-                when_not_matched_by_source="delete",
-                not_matched_by_source_condition=F.col("t.g") == arg,
+                when_not_matched_by_source=[(F.col("t.g") == arg, "delete")],
             )
             ver = res["version"]
             swept = [
