@@ -2415,7 +2415,9 @@ def merge_table(
     columns are NULL).
 
     ``when_not_matched_by_source`` (``WHEN NOT MATCHED BY SOURCE``):
-    acts on target rows whose key has no source match — ``"delete"``
+    acts on target rows whose key has no source match (a NULL key
+    included: it matches nothing; a target row no clause fires on is
+    kept as it is) — ``"delete"``
     or a ``{col: Column}`` update whose expressions see only the ``t``
     alias. With ``when_matched="replace"`` it is the full-snapshot
     sync; with a keys-only source and ``when_matched=None`` it is a
@@ -2511,9 +2513,9 @@ def merge_table(
             f"merge source has duplicate merge keys, e.g. "
             f"{ {k: dup[0][k] for k in keys} } — dedup (keep_latest) first"
         )
-    # NULL merge keys never equi-join: such a source row would silently
-    # "insert" as all-NULL target-side values (s_present is derived from
-    # the joined key columns). Reject up front, same as the dup check.
+    # NULL merge keys never equi-join: such a source row could never
+    # match, so every rerun would insert it again. Reject up front, same
+    # as the dup check.
     if _source_has_null_keys(source, keys):
         raise ValueError(
             f"merge source has NULL in merge key(s) {keys} — NULL keys "
@@ -2561,9 +2563,13 @@ def merge_table(
         scoped = target.limit(0)
 
     t_cols, s_cols = set(target.columns), set(source.columns)
-    joined = scoped.alias("t").join(source.alias("s"), keys, "full_outer")
-    s_present = F.col(f"s.{keys[0]}").isNotNull()
-    t_present = F.col(f"t.{keys[0]}").isNotNull()
+    # which side a joined row has comes from marker columns, not key
+    # nullness: a target row with a NULL key is still a target row
+    joined = scoped.withColumn("__t", F.lit(True)).alias("t").join(
+        source.withColumn("__s", F.lit(True)).alias("s"), keys, "full_outer"
+    )
+    s_present = F.col("__s").isNotNull()
+    t_present = F.col("__t").isNotNull()
     # what "replace" and "insert" write: every source column the table
     # has; a target-only column keeps its value on update and is NULL
     # on insert (the target side is absent)

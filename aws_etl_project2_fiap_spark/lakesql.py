@@ -74,9 +74,11 @@ Grammar notes (deliberate limits, all loud):
   ... / UPDATE SET * / DELETE), ``WHEN NOT MATCHED`` (INSERT * /
   INSERT (cols) VALUES (...)) and ``WHEN NOT MATCHED BY SOURCE``
   (UPDATE SET ... / DELETE) clauses. For each row the first clause
-  whose condition holds applies, as in Delta; conditions may read
-  both sides, and the parser requires every clause but the last of a
-  kind to carry one. The statement is one pass and one commit.
+  whose condition holds applies, as in Delta; MATCHED conditions may
+  read both sides, a NOT MATCHED clause may not read the target nor a
+  BY SOURCE clause the source (rejected, as Spark does), and the
+  parser requires every clause but the last of a kind to carry a
+  condition. The statement is one pass and one commit.
 - Subqueries inside UPDATE/DELETE WHERE, SET values and MERGE WHEN
   conditions bind the tables they name at statement start, as a
   SELECT's do.
@@ -308,6 +310,28 @@ def _text(q: str, expr, aliases: dict[str, str]) -> str:
     for start, stop, ref in sorted(refs, reverse=True):
         text = text[:start - lo] + ref + text[stop - lo + 1:]
     return text
+
+
+def _reject_side_refs(
+    q: str, action, aliases: dict[str, str], side: str, what: str
+) -> None:
+    """Raise if a WHEN clause reads the side its rows do not have (the
+    target in NOT MATCHED, the source in NOT MATCHED BY SOURCE): that
+    side is all NULL there, so the condition would never hold and the
+    value would be NULL. Spark and Delta reject it at analysis."""
+    stack = [c.get() for c in [action.condition()] if c.isDefined()]
+    if action.nodeName() in ("UpdateAction", "InsertAction"):
+        stack += [a.value() for a in _seq(action.assignments())]
+    while stack:
+        e = stack.pop()
+        stack += _seq(e.children())
+        parts = _name_parts(e)
+        if parts and len(parts) > 1 and aliases.get(parts[0].lower()) == side:
+            raise SQLParseError(
+                f"a WHEN {what} clause cannot reference "
+                f"{'the target' if side == 't' else 'the source'} "
+                f"({_span(q, e)!r}): its rows have no such side"
+            )
 
 
 def _merge_side(node, default: str):
@@ -940,10 +964,12 @@ class LakeSQL:
             )
             target = {a for a, side in aliases.items() if side == "t"}
 
-            def clauses(actions) -> list:
+            def clauses(actions, what: str = "", absent: str = "") -> list:
                 out = []
                 for a in _seq(actions):
                     kind = a.nodeName()
+                    if absent:
+                        _reject_side_refs(q, a, aliases, absent, what)
                     if kind in ("UpdateAction", "InsertAction"):
                         action = self._assignments(
                             q, a.assignments(), target, aliases
@@ -965,9 +991,12 @@ class LakeSQL:
             return self._result(V.merge_table(
                 self.spark, self._path(tname), source_df, keys,
                 when_matched=clauses(plan.matchedActions()),
-                insert_unmatched=clauses(plan.notMatchedActions()),
+                insert_unmatched=clauses(
+                    plan.notMatchedActions(), "NOT MATCHED", "t"
+                ),
                 when_not_matched_by_source=clauses(
-                    plan.notMatchedBySourceActions()
+                    plan.notMatchedBySourceActions(),
+                    "NOT MATCHED BY SOURCE", "s",
                 ),
             ))
 

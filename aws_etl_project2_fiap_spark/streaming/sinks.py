@@ -144,13 +144,14 @@ def cdc_apply_sink(
     - ``order_col`` (an event/sequence data column) picks the winner
       when a batch holds several ops per key (keep-latest, so a
       late-arriving upsert cannot resurrect a newer delete); without
-      it the source must be key-unique per batch (the merge enforces
-      this — a dup key raises rather than fanning out);
+      it the source must be key-unique per batch: two ops on one key
+      (an upsert and a delete included) fail the query with the
+      merge's duplicate-key error rather than picking one;
     - the batch applies as ONE merge whose clauses read ``op_col``:
       ``WHEN MATCHED AND op = 'delete' THEN DELETE``, ``WHEN MATCHED
       THEN UPDATE`` and ``WHEN NOT MATCHED AND op IS DISTINCT FROM
       'delete' THEN INSERT`` over explicit column maps (``op_col`` is
-      never written; a NULL op upserts)
+      never written; a row whose op is NULL is dropped)
       — broadcast-probed file-level CoW, so a delivery-sized batch
       touches only the files holding its keys;
     - exactly-once: the batch's one commit records its ``batch_id`` in
@@ -169,16 +170,17 @@ def cdc_apply_sink(
     from ..operators.dedup import keep_latest
 
     def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if order_col is not None:
             batch_df = keep_latest(batch_df, keys, order_col)
+        batch_df = batch_df.filter(F.col(op_col).isNotNull())
+        if batch_df.isEmpty():
+            return
         for _attempt in range(5):
             try:
                 if not os.path.exists(V._pointer(table_path)):
                     ups = batch_df.filter(
-                        ~F.col(op_col).eqNullSafe("delete")
+                        F.col(op_col) != "delete"
                     ).drop(op_col)
                     if ups.isEmpty():
                         return  # delete-only seed batch: nothing exists
@@ -239,9 +241,9 @@ def cdf_replica_sink(
         for _attempt in range(5):
             try:
                 if not os.path.exists(V._pointer(table_path)):
-                    ups = batch_df.filter(
-                        F.col("_change_type") == "insert"
-                    ).drop("_change_type", "_commit_version")
+                    ups = changes.filter(
+                        F.col("_change_type") != "delete"
+                    ).drop("_change_type")
                     if ups.isEmpty():
                         return
                     V.create_table(

@@ -245,6 +245,40 @@ def test_parse_errors_are_loud(spark, tmp_path):
     )
     assert [r["k"] for r in V.read_table(spark, tbl).collect()] == [2]
     assert V.current_version(tbl) == 2
+    # a NOT MATCHED clause has no target row and a BY SOURCE clause no
+    # source row: reading that side is rejected, as Spark and Delta do
+    for clause in (
+        "WHEN NOT MATCHED AND t.k > 1 THEN INSERT *",
+        "WHEN NOT MATCHED THEN INSERT (k) VALUES (t.k)",
+        "WHEN NOT MATCHED BY SOURCE AND s.k > 1 THEN DELETE",
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET k = s.k",
+    ):
+        with pytest.raises(SQLParseError, match="cannot reference"):
+            lk.sql(
+                "MERGE INTO tt AS t USING tt AS s ON t.k = s.k " + clause
+            )
+    assert V.current_version(tbl) == 2
+
+
+def test_merge_keeps_null_key_target_rows(spark, tmp_path):
+    """A target row with a NULL merge key in the same file as a matched
+    key survives a MERGE that rewrites that file."""
+    tbl = str(tmp_path / "t")
+    V.create_table(
+        spark.createDataFrame(
+            [(None, 0.0), (1, 1.0), (2, 2.0)], "k long, v double"
+        ).coalesce(1),
+        tbl,
+    )
+    lk = LakeSQL(spark, {"tt": tbl})
+    lk.sql(
+        "MERGE INTO tt AS t "
+        "USING (SELECT 1L AS k, 10.0D AS v UNION ALL SELECT 3L, 30.0D) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = {r["k"]: r["v"] for r in V.read_table(spark, tbl).collect()}
+    assert got == {None: 0.0, 1: 10.0, 2: 2.0, 3: 30.0}
 
 
 def test_cli_lakesql_verb(spark, tmp_path, capsys):

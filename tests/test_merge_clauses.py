@@ -108,6 +108,33 @@ def test_null_condition_does_not_fire(spark, tmp_path):
     assert got == {2}
 
 
+def test_null_key_target_row_survives_a_rewrite(spark, tmp_path):
+    """A target row whose merge key is NULL shares a file with a
+    matched key: the rewrite keeps it as it is (no clause fires on
+    it), and only a BY SOURCE clause acts on it, as Delta does — a
+    NULL key matches no source row."""
+    path = str(tmp_path / "nk")
+    V.create_table(
+        spark.createDataFrame(
+            [(None, 0.0), (1, 1.0), (2, 2.0)], "id long, v double"
+        ).coalesce(1),
+        path,
+    )
+    src = spark.createDataFrame([(1, 10.0), (3, 30.0)], "id long, v double")
+    res = V.merge_table(spark, path, src, keys=["id"], when_matched="replace")
+    assert res["files_touched"] == 1
+    assert (res["updated"], res["inserted"], res["deleted"]) == (1, 1, 0)
+    got = {r["id"]: r["v"] for r in V.read_table(spark, path).collect()}
+    assert got == {None: 0.0, 1: 10.0, 2: 2.0, 3: 30.0}
+    res = V.merge_table(
+        spark, path, src, keys=["id"], when_matched="replace",
+        when_not_matched_by_source="delete",
+    )
+    assert res["deleted"] == 2
+    got = {r["id"]: r["v"] for r in V.read_table(spark, path).collect()}
+    assert got == {1: 10.0, 3: 30.0}
+
+
 def test_replace_with_condition_and_no_insert(spark, table):
     src = spark.createDataFrame(
         [(20, 9, -1.0), (21, 9, -1.0), (7777, 9, -1.0)],

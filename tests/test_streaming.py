@@ -883,7 +883,8 @@ def test_cdc_apply_sink_replay_guard(spark, tmp_path):
 
 def test_cdc_apply_sink_order_col_picks_winner(spark, tmp_path):
     """Several ops per key in one batch: keep-latest by order_col —
-    a later delete beats an earlier upsert and vice versa."""
+    a later delete beats an earlier upsert and vice versa; a NULL op is
+    dropped; without order_col two ops on one key fail loudly."""
     from aws_etl_project2_fiap_spark.io import versioned as V
     from aws_etl_project2_fiap_spark.streaming.sinks import cdc_apply_sink
 
@@ -905,6 +906,29 @@ def test_cdc_apply_sink_order_col_picks_winner(spark, tmp_path):
         file_source(spark, landing, CDC_SCHEMA), table, ["id"],
         str(tmp_path / "c1"), order_col="seq",
     ).awaitTermination()
+    got = {r["id"]: r["v"] for r in V.read_table(spark, table).collect()}
+    assert got == {2: 22.0}
+
+    # a row whose op is NULL is neither an upsert nor a delete: dropped,
+    # and a batch of nothing else commits nothing
+    before = V.current_version(table)
+    _drop_cdc(spark, landing, [(2, 99.0, 4, None), (3, 30.0, 4, None)])
+    cdc_apply_sink(
+        file_source(spark, landing, CDC_SCHEMA), table, ["id"],
+        str(tmp_path / "c1"), order_col="seq",
+    ).awaitTermination()
+    assert V.current_version(table) == before
+
+    # without order_col a batch must be key-unique: an upsert and a
+    # delete of one key fail the query loudly and commit nothing
+    _drop_cdc(spark, landing, [(2, 23.0, 5, "u"), (2, None, 5, "delete")])
+    q = cdc_apply_sink(
+        file_source(spark, landing, CDC_SCHEMA), table, ["id"],
+        str(tmp_path / "c1"),
+    )
+    with pytest.raises(Exception, match="duplicate merge keys"):
+        q.awaitTermination()
+    assert V.current_version(table) == before
     got = {r["id"]: r["v"] for r in V.read_table(spark, table).collect()}
     assert got == {2: 22.0}
 
