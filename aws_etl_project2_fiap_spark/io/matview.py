@@ -367,49 +367,18 @@ def view_meta(dst: str, version: int | None = None) -> dict:
     return m
 
 
-def _check_state_schema(df: DataFrame, meta: dict) -> None:
+def _check_state_schema(
+    dst: str, meta: dict, version: int | None = None
+) -> None:
     """Pre-round-7 view state lacks the per-sum ``__mvnn`` counter;
     reading or folding it would fail with an opaque unresolved-column
-    / schema-conflict error — point at the migration verb instead."""
+    / schema-conflict error — point at the migration verb instead.
+    The view's columns come from its manifest (no Spark job)."""
+    cols = set(V.table_schema(dst, version).fieldNames())
     missing = [
         f"{out}__mvnn"
         for out, (fn, _c) in meta["aggs"].items()
-        if fn == "sum" and f"{out}__mvnn" not in df.columns
-    ]
-    if missing:
-        raise ValueError(
-            f"view state predates the sum non-null counter (missing "
-            f"{missing}); run full_refresh_aggregate_view once to "
-            f"regenerate the state, then refresh incrementally as usual"
-        )
-
-
-def _check_state_schema_manifest(dst: str, meta: dict) -> None:
-    """Zero-IO twin of :func:`_check_state_schema` for the refresh hot
-    path: the view's column set is recovered from the manifest's
-    per-file stats keys + null_cols (``__mvnn`` is a LONG counter, so
-    it always carries stats) instead of constructing a DataFrame,
-    whose mergeSchema inference costs a Spark job per refresh."""
-    sums = [
-        out for out, (fn, _c) in meta["aggs"].items() if fn == "sum"
-    ]
-    if not sums:
-        return
-    m = V._read_manifest(dst, V.current_version(dst))
-    if not m["files"]:
-        return  # empty state: nothing recorded to check against
-    mapping = m.get("column_mapping")
-    phys = set()
-    for f in m["files"]:
-        phys.update((f.get("stats") or {}).keys())
-        phys.update(f.get("null_cols") or ())
-    if mapping:
-        inv = {p: logical for logical, p in mapping.items()}
-        cols = {inv.get(p, p) for p in phys}
-    else:
-        cols = phys
-    missing = [
-        f"{out}__mvnn" for out in sums if f"{out}__mvnn" not in cols
+        if fn == "sum" and f"{out}__mvnn" not in cols
     ]
     if missing:
         raise ValueError(
@@ -435,8 +404,8 @@ def read_aggregate_view(
     is pure bookkeeping — a recompute would not emit the group — so
     the read hides it."""
     meta = view_meta(dst, version)
+    _check_state_schema(dst, meta, version)
     df = V.read_table(spark, dst, version=version).filter(F.col(_CNT) > 0)
-    _check_state_schema(df, meta)
     cols: list[Column] = [F.col(c) for c in meta["group_by"]]
     for out, (fn, _col) in meta["aggs"].items():
         if fn == "avg":
@@ -576,7 +545,7 @@ def refresh_aggregate_view(
             # whole call as a no-op
             out["strategy"] = ev["strategy"]
         return out
-    _check_state_schema_manifest(dst, meta)
+    _check_state_schema(dst, meta, view_v)
     frm = meta["source_version"]
     to = V.current_version(source)
     if to == frm:

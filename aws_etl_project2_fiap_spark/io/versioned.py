@@ -20,8 +20,16 @@ the open table formats (a log of immutable data files + a pointer):
 Layout under the table root::
 
     _data/b_<uuid>/part-*.parquet   immutable batch directories
-    _manifests/v<N>.json            {"version": N, "files": [...]}
+    _manifests/v<N>.json            {"version": N, "files": [...],
+                                     "schema": StructType JSON, ...}
     _CURRENT                        text file holding "N"
+
+Each manifest records its version's PHYSICAL schema (every column a
+live file may hold or an ADD COLUMN declared, first-appearance order,
+nullable as the Parquet reader returns it), so every read passes it to
+``spark.read.schema(...)`` and no reader infers a schema from data
+files — the Delta log's ``metaData`` action on this log. Columns a
+file lacks read as NULL.
 
 Commit protocol: data files first, then the manifest, then an atomic
 ``os.replace`` of ``_CURRENT`` — a crash at any point leaves the
@@ -45,6 +53,7 @@ from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .update import apply_update
 
@@ -98,37 +107,24 @@ def _pointer(path: str) -> str:
 # ---------------------------------------------------------------------
 
 
-def _apply_mapping(
-    df: DataFrame, mapping: dict | None, added: dict | None = None
-) -> DataFrame:
+def _apply_mapping(df: DataFrame, mapping: dict | None) -> DataFrame:
     """Physical → logical projection (keeps ``__file``/``__pos`` meta
     columns when present). Identity when the table has no mapping.
-
-    ``added`` is the manifest's ``added_columns`` state
-    ({physical: type}) — columns DECLARED by a metadata-only ``ALTER
-    TABLE ADD COLUMN`` that no data file contains yet: they project as
-    typed NULLs. The moment any file carries the physical column
-    (a post-ADD append, a CoW rewrite) the scan resolves it and the
-    NULL projection is skipped — mergeSchema NULL-fills the older
-    files, so the two mechanisms agree."""
+    ``df`` is read under the manifest's schema, so every physical name
+    the mapping holds resolves — a column ADD COLUMN declared but no
+    file carries yet reads as typed NULLs."""
     if not mapping:
         return df
-    have = set(df.columns)
-    cols = [
-        F.lit(None).cast(added[phys]).alias(log)
-        if phys not in have and added and phys in added
-        else F.col(phys).alias(log)
-        for log, phys in mapping.items()
-    ]
     meta = [F.col(c) for c in ("__file", "__pos") if c in df.columns]
-    return df.select(*cols, *meta)
+    return df.select(
+        *[F.col(phys).alias(log) for log, phys in mapping.items()], *meta
+    )
 
 
 def _to_physical(df: DataFrame, mapping: dict | None) -> DataFrame:
     """Logical → physical rename before a write, so data files keep the
-    frozen physical schema. Columns of ``df`` not in the mapping (a
-    schema-evolution append adding a new column) pass through under
-    their own name — the caller must extend the mapping identically."""
+    frozen physical schema. Columns of ``df`` not in the mapping pass
+    through under their own name."""
     if not mapping:
         return df
     return df.select(
@@ -145,37 +141,64 @@ def _phys_col(mapping: dict | None, col: str) -> str:
     return mapping[col] if mapping and col in mapping else col
 
 
-def _superset_columns(files: list) -> list[str]:
-    """Logical = physical column names before any mapping exists: the
-    union of every file's parquet schema, first-appearance order.
-    O(files) footer reads, no data IO (the mergeSchema contract)."""
-    import pyarrow.parquet as pq
-
-    seen: dict[str, None] = {}
-    for f in files:
-        for name in pq.read_schema(f["path"]).names:
-            seen.setdefault(name, None)
-    return list(seen)
-
-
-def _mint_physical(c: str, mapping: dict, manifest: dict) -> str:
-    """Physical name for a NEW logical column joining an existing
-    mapping (schema-evolution append/merge). Collisions are checked
-    against every physical name that can exist in current data files:
-    live mapping values PLUS the manifest's ``retired_physical`` ledger
-    — names freed by ``drop_column`` whose BYTES persist in old files
-    until rewrites age them out. Checking only live values (the old
-    rule) silently resurrected a dropped column's data when a new
-    column re-used its name. Legacy manifests (mapping but no ledger —
-    pre-ledger drops) fall back to the exact O(files) footer union,
-    paid only on the rare evolution commit."""
-    taken = set(mapping.values())
-    retired = manifest.get("retired_physical")
-    if retired is None:
-        taken |= set(_superset_columns(manifest["files"]))
-    else:
-        taken |= set(retired)
+def _mint_physical(c: str, taken: set) -> str:
+    """Physical name for a NEW logical column joining a mapping. Every
+    name in the manifest's schema is taken: live mapping values AND
+    names ``drop_column`` retired, whose bytes persist in old files
+    until rewrites age them out — reusing one would resurrect the
+    dropped column's data in the new one."""
     return c if c not in taken else f"{c}_p{uuid.uuid4().hex[:6]}"
+
+
+def _nullable(v):
+    """A ``StructType.jsonValue()`` tree with every level nullable."""
+    if isinstance(v, list):
+        return [_nullable(x) for x in v]
+    if not isinstance(v, dict):
+        return v
+    out = {k: x if k == "metadata" else _nullable(x) for k, x in v.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
+
+
+def _schema_json(schema: StructType) -> str:
+    """The manifest form of a batch schema: nullable at every level,
+    the types the Parquet reader returns for the written files."""
+    return StructType.fromJson(_nullable(schema.jsonValue())).json()
+
+
+def _schema(m: dict, path: str) -> StructType:
+    """The version's physical schema, from its manifest."""
+    if "schema" not in m:
+        raise ValueError(
+            f"v{m.get('version')} of {path} records no schema: the "
+            f"manifest predates schema-carrying manifests; re-create the "
+            f"table from a read of that version"
+        )
+    return StructType.fromJson(json.loads(m["schema"]))
+
+
+def _logical(m: dict, path: str) -> StructType:
+    """The version's logical schema: its physical schema under its
+    column mapping (mapping order), or the physical schema itself."""
+    schema = _schema(m, path)
+    mapping = m.get("column_mapping")
+    if not mapping:
+        return schema
+    by = {f.name: f for f in schema.fields}
+    return StructType([
+        StructField(log, by[phys].dataType, True, by[phys].metadata)
+        for log, phys in mapping.items()
+    ])
+
+
+def table_schema(path: str, version: int | None = None) -> StructType:
+    """The version's logical schema (default: current), from its
+    manifest alone — no Spark job."""
+    v = current_version(path) if version is None else version
+    return _logical(_read_manifest(path, v), path)
 
 
 def current_version(path: str) -> int:
@@ -768,15 +791,19 @@ def _dv_filter(df: DataFrame, dv_map: dict[str, str]) -> DataFrame:
 
 
 def _scan(
-    spark: SparkSession, entries: list, keep_meta: bool = False
+    spark: SparkSession,
+    entries: list,
+    schema: StructType,
+    keep_meta: bool = False,
 ) -> DataFrame:
     """The one snapshot scan every read AND mutation path goes through:
-    mergeSchema parquet read of the entries' files with their deletion
-    vectors applied (merge-on-read). With no DVs this is a plain scan —
-    zero overhead. With DVs, the DV-carrying leg routes through
-    :func:`_dv_filter`, which loads each file's sidecar inside its own
-    scan task — driver-side work is O(DV files), never O(deleted rows),
-    and nothing is broadcast but the {file → dv_path} map.
+    parquet read of the entries' files under ``schema`` (the manifest's
+    physical schema — no inference job; a column a file lacks reads as
+    NULL) with their deletion vectors applied (merge-on-read). With no
+    entries it is an empty frame of ``schema``. With no DVs this is a
+    plain scan — zero overhead. With DVs, the DV-carrying leg routes
+    through :func:`_dv_anti_join` or :func:`_dv_filter`; driver-side
+    work is O(DV files) past the anti-join cap, never O(deleted rows).
 
     ``keep_meta=True`` retains ``__file`` (manifest-normalized path) and
     ``__pos`` (row index) for the copy-on-write discovery scans — which
@@ -789,8 +816,16 @@ def _scan(
     files adds the metadata projection + per-file sidecar filter to 3
     files' rows and nothing else. The same split applies under
     ``keep_meta`` (both legs project the meta columns; only the DV leg
-    takes the Arrow pass)."""
-    reader = spark.read.option("mergeSchema", "true")
+    takes the DV filter)."""
+    if not entries:
+        out = spark.createDataFrame([], schema)
+        if keep_meta:
+            out = out.withColumns({
+                "__file": F.lit(None).cast("string"),
+                "__pos": F.lit(None).cast("long"),
+            })
+        return out
+    reader = spark.read.schema(schema)
     dvd = [f for f in entries if f.get("dv")]
     if not dvd and not keep_meta:
         return reader.parquet(*_paths(entries))
@@ -817,15 +852,11 @@ def _scan(
         out = _apply_dvs(_with_meta(dvd)) if dvd else None
         if clean:
             cdf = _with_meta(clean)
-            out = cdf if out is None else cdf.unionByName(
-                out, allowMissingColumns=True
-            )
+            out = cdf if out is None else cdf.unionByName(out)
         return out
     out = _apply_dvs(_with_meta(dvd)).drop("__file", "__pos")
     if clean:
-        out = reader.parquet(*_paths(clean)).unionByName(
-            out, allowMissingColumns=True
-        )
+        out = reader.parquet(*_paths(clean)).unionByName(out)
     return out
 
 
@@ -984,15 +1015,15 @@ def _apply_spec_layout(df: DataFrame, spec_cols: list[str], n: int):
 
 
 def _batch_bucket_sets(
-    spark: SparkSession, batch: str, bucket_specs: list[tuple[str, int, str]]
+    df: DataFrame, paths: list[str], bucket_specs: list[tuple[str, int, str]]
 ) -> dict[str, dict[str, list[int]]]:
-    """Per-file bucket membership for the batch just written: one scan
-    of the NEW files only (never the table), reading only the bucket
-    source columns. bucket() is not monotonic, so min/max stats can't
-    prune it — membership lists can, exactly (a bucket-clustered file
-    holds ~1 bucket). collect is O(new files × buckets/file): bounded
-    by the batch, not the table."""
-    raw = spark.read.parquet(batch)
+    """Per-file bucket membership for the batch just written from
+    ``df``: one scan of the NEW files only (never the table), reading
+    only the bucket source columns. bucket() is not monotonic, so
+    min/max stats can't prune it — membership lists can, exactly (a
+    bucket-clustered file holds ~1 bucket). collect is O(new files ×
+    buckets/file): bounded by the batch, not the table."""
+    raw = _scan(df.sparkSession, [{"path": p} for p in paths], df.schema)
     sel = [_norm_file_path().alias("__f")]
     aggs = []
     for j, (_, w, src) in enumerate(bucket_specs):
@@ -1002,7 +1033,7 @@ def _batch_bucket_sets(
     # record each bucket source column's dtype next to the membership:
     # the driver-side probe hash is only sound when the probe value's
     # rendering matches this dtype's cast-to-string (see _bucket_of)
-    batch_dtypes = dict(raw.dtypes)
+    batch_dtypes = dict(df.dtypes)
     dtypes = {
         key: batch_dtypes.get(src)
         for key, _, src in bucket_specs
@@ -1046,6 +1077,11 @@ def _write_batch(
         df = _apply_spec_layout(df, list(cluster_by), int(n))
     batch = os.path.join(path, "_data", f"b_{uuid.uuid4().hex[:12]}")
     df.write.mode("error").parquet(batch)
+    paths = sorted(
+        os.path.join(batch, f)
+        for f in os.listdir(batch)
+        if f.endswith(".parquet")
+    )
     bucket_specs = [
         (_format_spec_col(kind, w, src), w, src)
         for s in (cluster_by or [])
@@ -1053,16 +1089,10 @@ def _write_batch(
         if kind == "bucket"
     ]
     buckets_by_file = (
-        _batch_bucket_sets(df.sparkSession, batch, bucket_specs)
-        if bucket_specs
-        else {}
+        _batch_bucket_sets(df, paths, bucket_specs) if bucket_specs else {}
     )
     entries = []
-    for p in sorted(
-        os.path.join(batch, f)
-        for f in os.listdir(batch)
-        if f.endswith(".parquet")
-    ):
+    for p in paths:
         entry = {"path": p, "stats": _file_stats(p),
                  "null_cols": _null_cols(p)}
         if spec_id is not None:
@@ -1097,6 +1127,14 @@ def _commit(
     batch_id for replay detection); ``operation`` tags the commit with
     the mutation that produced it (DESCRIBE HISTORY surface).
 
+    Table STATE keys — ``schema`` (the physical schema, as
+    ``StructType.json()``), ``column_mapping``, ``cluster_spec``,
+    ``mv`` and the clone identity — are inherited from the previous
+    manifest unless ``extra`` sets them; a value of None clears one.
+    Creates and overwrites set ``schema`` from their batch, writers
+    that may add columns set it through :func:`_grow`, ADD COLUMN
+    appends a field, and rollback/clone/publish carry their source's.
+
     ``expect_version`` is the optimistic-concurrency token: the version
     this writer's snapshot was read from. If another commit moved the
     pointer since, raise :class:`CommitConflict` instead of silently
@@ -1123,11 +1161,6 @@ def _commit(
             f"table {path} moved to v{version - 1} while this writer "
             f"worked from v{expect_version}; re-read and retry"
         )
-    # column mapping and the retired-physical-name ledger are table
-    # STATE, not per-commit payload: every commit inherits the previous
-    # manifest's values unless the caller sets them explicitly
-    # (rename/drop pass the new mapping; drop appends to the ledger;
-    # rollback passes the target version's; None clears)
     extra = dict(extra or {})
     prev_manifest = (
         _read_manifest(path, version - 1) if version > 1 else {}
@@ -1139,8 +1172,8 @@ def _commit(
     # means a stage stays identifiable from its CURRENT manifest even
     # after vacuum drops v1 (branch reads resolve against current)
     for state_key in (
-        "column_mapping", "retired_physical", "cluster_spec", "mv",
-        "added_columns", "cloned_from", "clone_version",
+        "schema", "column_mapping", "cluster_spec", "mv",
+        "cloned_from", "clone_version",
     ):
         if state_key not in extra:
             prev = prev_manifest.get(state_key)
@@ -1300,13 +1333,13 @@ def create_table(
     if constraints:
         _enforce_constraints(df, path, dict(constraints))
         _save_constraints(path, dict(constraints))
+    extra = {**(extra or {}), "schema": _schema_json(df.schema)}
     spec_id = None
     if cluster_by:
         cluster_by = [
             _format_spec_col(*_parse_spec_col(c)) for c in cluster_by
         ]
-        extra = {**(extra or {}),
-                 "cluster_spec": {"spec_id": 1, "cols": list(cluster_by)}}
+        extra["cluster_spec"] = {"spec_id": 1, "cols": list(cluster_by)}
         spec_id = 1
     return _commit(
         path,
@@ -1319,31 +1352,36 @@ def create_table(
 class SchemaConflict(ValueError):
     """An incoming batch's column types contradict the table's — the
     write was rejected BEFORE any file landed. Without this gate a
-    type-flipped append succeeds and then poisons every later read
-    (Spark's mergeSchema fails with CANNOT_MERGE_SCHEMAS at scan time,
-    long after the bad writer is gone). Delta enforces the same rule at
-    write time."""
+    type-flipped write succeeds and then poisons every later read (the
+    manifest schema could hold only one of the two types). Delta
+    enforces the same rule at write time."""
 
 
-def _check_append_schema(df: DataFrame, path: str) -> None:
-    """Reject type conflicts between ``df`` and the table's CURRENT
-    logical schema. New columns and omitted columns pass (the documented
-    §1.4 drift contract: additive evolution, NULL-filled reads) — only a
-    same-named column with a DIFFERENT type is a conflict.
+def _grow(m: dict, path: str, fields: list) -> dict:
+    """The one schema gate of every write that adds columns or rows to
+    an existing table (append, partition overwrite, UPDATE, MERGE, ADD
+    COLUMN): the incoming logical ``fields`` checked against version
+    ``m``'s schema from the manifest alone — no Spark job, before any
+    file lands.
 
-    The reference schema comes from ``read_table`` (one distributed
-    footer-merge metadata job, no data read) so column mapping, merge
-    evolution, and historical drift are all resolved exactly the way
-    the read path will resolve them."""
-    table_types = {
-        f.name: f.dataType.simpleString()
-        for f in read_table(df.sparkSession, path).schema.fields
+    - a same-named column with a DIFFERENT type raises
+      :class:`SchemaConflict`;
+    - an omitted column passes (it reads as NULL for the new rows);
+    - a NEW column is appended to the schema — under a column mapping
+      with a physical name no live or dropped column holds
+      (:func:`_mint_physical`).
+
+    Returns the ``schema`` / ``column_mapping`` state the commit must
+    set (empty when the schema is unchanged)."""
+    schema = _schema(m, path)
+    mapping = m.get("column_mapping")
+    have = {
+        f.name: f.dataType.simpleString() for f in _logical(m, path).fields
     }
     conflicts = {
-        f.name: (table_types[f.name], f.dataType.simpleString())
-        for f in df.schema.fields
-        if f.name in table_types
-        and table_types[f.name] != f.dataType.simpleString()
+        f.name: (have[f.name], f.dataType.simpleString())
+        for f in fields
+        if f.name in have and have[f.name] != f.dataType.simpleString()
     }
     if conflicts:
         detail = ", ".join(
@@ -1351,10 +1389,34 @@ def _check_append_schema(df: DataFrame, path: str) -> None:
             for c, (a, b) in sorted(conflicts.items())
         )
         raise SchemaConflict(
-            f"append to {path} rejected — column type conflicts would "
+            f"write to {path} rejected — column type conflicts would "
             f"poison every subsequent read: {detail}. Cast the batch to "
             f"the table's types (or rename the column) and retry."
         )
+    new = [f for f in fields if f.name not in have]
+    if not new:
+        return {}
+    state = {}
+    if mapping:
+        mapping = dict(mapping)
+        taken = set(schema.fieldNames())
+        for f in new:
+            mapping[f.name] = _mint_physical(f.name, taken)
+            taken.add(mapping[f.name])
+        state["column_mapping"] = mapping
+    state["schema"] = _schema_json(StructType(schema.fields + [
+        StructField(_phys_col(mapping, f.name), f.dataType, True, f.metadata)
+        for f in new
+    ]))
+    return state
+
+
+def _evolve(df: DataFrame, m: dict, path: str) -> tuple[DataFrame, dict]:
+    """:func:`_grow` for a batch: returns ``df`` under physical names
+    and the state its commit must set."""
+    state = _grow(m, path, df.schema.fields)
+    mapping = state.get("column_mapping", m.get("column_mapping"))
+    return _to_physical(df, mapping), state
 
 
 def append_table(
@@ -1373,21 +1435,21 @@ def append_table(
     update). On :class:`CommitConflict`, re-read and retry — the batch
     files already written are reusable garbage at worst.
 
-    Schema contract: new/omitted columns are fine (additive drift);
-    a type-conflicting column raises :class:`SchemaConflict` before
-    anything is written.
+    Schema contract (:func:`_grow`): new/omitted columns are fine
+    (additive drift); a type-conflicting column raises
+    :class:`SchemaConflict` before anything is written.
 
     Layout: with no explicit ``cluster_by`` the batch is laid out under
     the table's current cluster spec (when the batch carries every spec
     column) and its files are tagged with the spec id — partition
     evolution's steady state: every NEW file lands in the CURRENT
     layout while old files stay readable under theirs."""
-    _enforce_constraints(df, path)
-    _check_append_schema(df, path)
     base_version = current_version(path)
     manifest = _read_manifest(path, base_version)
+    phys, state = _evolve(df, manifest, path)
+    _enforce_constraints(df, path)
     files = manifest["files"]
-    mapping = manifest.get("column_mapping")
+    mapping = state.get("column_mapping", manifest.get("column_mapping"))
     spec = manifest.get("cluster_spec")
     spec_id = None
     if spec and spec.get("cols"):
@@ -1406,26 +1468,15 @@ def append_table(
         elif list(cluster_by) == list(spec["cols"]):
             spec_id = spec["spec_id"]
     if mapping:
-        # schema evolution under a mapping: new logical columns join the
-        # mapping with a FRESH physical name when their name collides
-        # with any physical name still present in old files — live OR
-        # retired (else a dropped column's bytes would leak into the
-        # new logical column); see _mint_physical
-        mapping = dict(mapping)
-        for c in df.columns:
-            if c not in mapping:
-                mapping[c] = _mint_physical(c, mapping, manifest)
-        extra = {**(extra or {}), "column_mapping": mapping}
-        df = _to_physical(df, mapping)
         bloom_cols = [mapping.get(c, c) for c in (bloom_cols or [])] or None
         cluster_by = [
             _phys_spec_col(mapping, c) for c in (cluster_by or [])
         ] or None
     return _commit(
         path,
-        files + _write_batch(df, path, bloom_cols, cluster_by, num_files,
+        files + _write_batch(phys, path, bloom_cols, cluster_by, num_files,
                              spec_id=spec_id),
-        extra,
+        {**(extra or {}), **state},
         expect_version=base_version,
         operation="APPEND",
     )
@@ -1462,12 +1513,12 @@ def overwrite_partitions(
     Same optimistic-concurrency token as every other mutation. Returns
     {"version", "partitions", "files_dropped", "files_rewritten",
     "files_reused"}."""
-    _enforce_constraints(df, path)
-    _check_append_schema(df, path)
     base_version = current_version(path)
     manifest = _read_manifest(path, base_version)
+    phys, state = _evolve(df, manifest, path)
+    _enforce_constraints(df, path)
     files = manifest["files"]
-    mapping = manifest.get("column_mapping")
+    mapping = state.get("column_mapping", manifest.get("column_mapping"))
     values = [r[0] for r in df.select(part_col).distinct().collect()]
     phys_part = _phys_col(mapping, part_col)
     if any(v is None for v in values):
@@ -1499,14 +1550,14 @@ def overwrite_partitions(
         # bare ~isin would drop them under three-valued logic
         # physical-level rewrite: straddle files are filtered on the
         # PHYSICAL partition column and re-written unchanged otherwise
-        kept = _scan(spark, straddle).filter(
+        kept = _scan(spark, straddle, _schema(manifest, path)).filter(
             F.col(phys_part).isNull() | ~F.col(phys_part).isin(values)
         )
         re_index = _indexed_cols(straddle)
         new_entries += _write_batch(kept, path, re_index or None)
     spec = manifest.get("cluster_spec")
     new_entries += _write_batch(
-        _to_physical(df, mapping), path,
+        phys, path,
         [_phys_col(mapping, c) for c in (bloom_cols or [])] or None,
         cluster_by=[phys_part],
         num_files=max(len(values), 1),
@@ -1519,8 +1570,8 @@ def overwrite_partitions(
         ),
     )
     version = _commit(
-        path, untouched + new_entries, expect_version=base_version,
-        operation="OVERWRITE_PARTITIONS",
+        path, untouched + new_entries, extra=state,
+        expect_version=base_version, operation="OVERWRITE_PARTITIONS",
     )
     return {
         "version": version,
@@ -1586,28 +1637,17 @@ def overwrite_table(df: DataFrame, path: str) -> int:
     writers can't both mint the same version number (the second manifest
     write would clobber the first's JSON).
 
-    Under a column mapping the mapping is REBUILT from ``df``'s columns
-    (identity — the new version references only the new files, so no
-    old physical byte can leak in) and the retired ledger resets: the
-    old rule inherited the stale mapping unreconciled, which made a new
-    column invisible to every reader and an omitted mapped column an
-    UNRESOLVED_COLUMN error on every subsequent read. Time travel still
-    reads each old version under its own manifest's mapping."""
+    The new version's schema is ``df``'s (the new version references
+    only the new files, so no old column — live, dropped or declared
+    — survives), and under a column mapping the mapping is REBUILT as
+    identity over ``df``'s columns. Time travel still reads each old
+    version under its own manifest's schema and mapping."""
     _enforce_constraints(df, path)
     base_version = current_version(path)
     manifest = _read_manifest(path, base_version)
-    mapping = manifest.get("column_mapping")
-    extra = None
-    if mapping:
-        mapping = {c: c for c in df.columns}
-        # declared-only (ADD COLUMN) entries clear with the rebuild:
-        # overwrite's schema is df's schema — a column df carries has
-        # real bytes now; one it doesn't is gone like any other
-        extra = {
-            "column_mapping": mapping,
-            "retired_physical": [],
-            "added_columns": None,
-        }
+    extra = {"schema": _schema_json(df.schema)}
+    if manifest.get("column_mapping"):
+        extra["column_mapping"] = {c: c for c in df.columns}
     # the cluster spec survives an overwrite (it describes the table's
     # intended layout, not any one version's files) — the new data is
     # laid out under it when it carries every spec column
@@ -1619,8 +1659,7 @@ def overwrite_table(df: DataFrame, path: str) -> int:
         cluster_by, spec_id = list(spec["cols"]), spec["spec_id"]
     return _commit(
         path,
-        _write_batch(_to_physical(df, mapping), path,
-                     cluster_by=cluster_by, spec_id=spec_id),
+        _write_batch(df, path, cluster_by=cluster_by, spec_id=spec_id),
         extra=extra,
         expect_version=base_version,
         operation="OVERWRITE",
@@ -1649,59 +1688,32 @@ def read_table(
     m = _read_manifest(path, v)
     files = m["files"]
     mapping = m.get("column_mapping")  # stats/blooms key PHYSICAL names
-    added = m.get("added_columns")  # declared-only cols → typed NULLs
     if eq is not None:
         # Bloom-index point-read: drop every file whose per-file bloom
         # provably lacks the value (no false negatives; the exact
         # filter below removes bloom false positives). Range stats
         # can't do this on a high-cardinality unclustered key.
+        # Bucket-clustered layouts: membership pruning drops ~ (N-1)/N
+        # of the files.
         col, value = eq
-        all_files = files
         files, _ = prunable_eq(files, _phys_col(mapping, col), value)
-        # bucket-clustered layouts: membership pruning drops ~ (N-1)/N
-        # of the files before blooms are even consulted
         files, _ = prunable_bucket(files, _phys_col(mapping, col), value)
-        if not files:
-            # every file's bloom rules the key out: the SQL answer is
-            # simply an empty result (schema preserved via a 0-row read
-            # of one pruned file) — probing absent keys is the ordinary
-            # case for existence checks, not an error
-            empty = _apply_mapping(
-                spark.read.option("mergeSchema", "true")
-                .parquet(all_files[0]["path"])
-                .limit(0),
-                mapping,
-                added,
-            )
-            return empty.filter(F.col(col) == F.lit(value))
-        out = _apply_mapping(_scan(spark, files), mapping, added)
-        out = out.filter(F.col(col) == F.lit(value))
-        if between is not None:
-            preds = [between] if isinstance(between, tuple) else list(between)
-            for bcol, lo, hi in preds:
-                out = out.filter(F.col(bcol).between(lo, hi))
-        return out
-    if between is not None:
-        # one (col, lo, hi) or a list of them — conjunctive pruning:
-        # every predicate independently drops non-overlapping files
-        preds = [between] if isinstance(between, tuple) else list(between)
-        for col, lo, hi in preds:
-            files, _ = prunable(files, _phys_col(mapping, col), lo, hi)
-        if not files:
-            raise ValueError(
-                f"predicate {preds} skips every file of version {v}; "
-                f"read without `between` for an empty-result scan"
-            )
-        out = _apply_mapping(_scan(spark, files), mapping, added)
-        for col, lo, hi in preds:
-            out = out.filter(F.col(col).between(lo, hi))
-        return out
-    if not files:
-        raise ValueError(f"version {v} of {path} lists no files")
-    # mergeSchema: appended batches may carry evolved (superset) schemas
-    # — §1.4's drift contract applies to versioned tables too; _scan
-    # additionally applies any deletion vectors (merge-on-read)
-    return _apply_mapping(_scan(spark, files), mapping, added)
+    # one (col, lo, hi) or a list of them — conjunctive pruning: every
+    # predicate independently drops non-overlapping files
+    preds = (
+        [] if between is None
+        else [between] if isinstance(between, tuple) else list(between)
+    )
+    for col, lo, hi in preds:
+        files, _ = prunable(files, _phys_col(mapping, col), lo, hi)
+    # a version (or a predicate) with no files left reads as 0 rows
+    # with the version's columns; _scan also applies deletion vectors
+    out = _apply_mapping(_scan(spark, files, _schema(m, path)), mapping)
+    if eq is not None:
+        out = out.filter(F.col(eq[0]) == F.lit(eq[1]))
+    for col, lo, hi in preds:
+        out = out.filter(F.col(col).between(lo, hi))
+    return out
 
 
 def update_table(
@@ -1731,15 +1743,13 @@ def update_table(
     manifest = _read_manifest(path, base_version)
     files = manifest["files"]
     mapping = manifest.get("column_mapping")
-    added_cols = manifest.get("added_columns")
+    schema = _schema(manifest, path)
     # ONE discovery scan yields both the touched-file set and the match
     # count: per-file partial counts collapse to file-cardinality rows.
     # _scan applies deletion vectors and pre-normalizes the file path,
     # so already-deleted rows can neither match nor be resurrected.
     # The mapping projection makes the predicate's LOGICAL names work.
-    df = _apply_mapping(
-        _scan(spark, files, keep_meta=True), mapping, added_cols
-    )
+    df = _apply_mapping(_scan(spark, files, schema, keep_meta=True), mapping)
     per_file = df.filter(where).groupBy("__file").count().collect()
     touched = [r["__file"] for r in per_file]
     n_matched = sum(r["count"] for r in per_file)
@@ -1754,19 +1764,20 @@ def update_table(
     untouched = [f for f in files if f["path"] not in touched_set]
     touched_entries = [f for f in files if f["path"] in touched_set]
     rewritten = apply_update(
-        _apply_mapping(_scan(spark, touched_entries), mapping, added_cols),
+        _apply_mapping(_scan(spark, touched_entries, schema), mapping),
         set_cols,
         where,
     )
-    # the UPDATE may write constraint-breaking values; check the
-    # rewritten (touched-files-only) slice before anything commits
+    # a SET that changes a column's type is a SchemaConflict; the
+    # UPDATE may also write constraint-breaking values — both checked
+    # on the rewritten (touched-files-only) slice before anything lands
+    phys, state = _evolve(rewritten, manifest, path)
     _enforce_constraints(rewritten, path)
     re_index = _indexed_cols(touched_entries)
-    new_files = untouched + _write_batch(
-        _to_physical(rewritten, mapping), path, re_index or None
-    )
+    new_files = untouched + _write_batch(phys, path, re_index or None)
     version = _commit(
-        path, new_files, expect_version=base_version, operation="UPDATE"
+        path, new_files, extra=state, expect_version=base_version,
+        operation="UPDATE",
     )
     return {
         "version": version,
@@ -1779,20 +1790,19 @@ def update_table(
 def rollback(path: str, version: int) -> int:
     """Re-commit an old version's file list as the new current version
     (history stays linear; nothing is deleted). The target version's
-    column mapping AND retired-physical ledger are restored with it
-    (None clears a later rename; restoring the ledger matters when
-    rolling back past an OVERWRITE that reset it — the old files'
-    dropped bytes return with the old file list)."""
+    schema and column mapping are restored with it (None clears a
+    later rename; the schema matters when rolling back past an
+    OVERWRITE — the old files' dropped columns return with the old
+    file list, so their names stay taken)."""
     base_version = current_version(path)
     m = _read_manifest(path, version)
     return _commit(
         path,
         m["files"],
         extra={
+            "schema": m.get("schema"),
             "column_mapping": m.get("column_mapping"),
-            "retired_physical": m.get("retired_physical"),
             "cluster_spec": m.get("cluster_spec"),
-            "added_columns": m.get("added_columns"),
             # a rolled-back materialized view must also carry the OLD
             # source-version watermark, or its next refresh would skip
             # the CDF range it just un-applied
@@ -1848,9 +1858,7 @@ def alter_clustering(path: str, cluster_by: list[str] | None) -> int:
     cols = [
         _format_spec_col(*_parse_spec_col(c)) for c in (cluster_by or [])
     ]
-    logical = set(
-        m.get("column_mapping") or _superset_columns(m["files"])
-    )
+    logical = set(_logical(m, path).fieldNames())
     missing = [c for c in cols if _spec_source_col(c) not in logical]
     if missing:
         raise ValueError(
@@ -1882,7 +1890,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     base_version = current_version(path)
     m = _read_manifest(path, base_version)
     mapping = m.get("column_mapping") or {
-        c: c for c in _superset_columns(m["files"])
+        c: c for c in _schema(m, path).fieldNames()
     }
     if old not in mapping:
         raise ValueError(f"no column {old!r} in {sorted(mapping)}")
@@ -1897,13 +1905,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     new_mapping = {
         (new if k == old else k): v for k, v in mapping.items()
     }
-    # bootstrap the retired ledger with the mapping (empty set of
-    # retirees) so future evolution collision checks are O(1)
-    # manifest lookups, never footer scans
-    extra = {
-        "column_mapping": new_mapping,
-        "retired_physical": m.get("retired_physical", []),
-    }
+    extra = {"column_mapping": new_mapping}
     # the cluster spec names LOGICAL columns: a rename relabels the
     # spec in place (same spec_id — the physical layout is unchanged,
     # exactly Iceberg renaming a partition source column)
@@ -1933,11 +1935,14 @@ def drop_column(path: str, col: str) -> int:
     the mapping (readers stop seeing it); the physical bytes remain in
     existing files until natural rewrites (compaction, CoW mutations)
     age them out — exactly Delta's drop-with-column-mapping shape.
-    Earlier versions still show the column (time travel)."""
+    The physical name STAYS in the manifest's schema, so no later
+    column can take it and resurrect the dropped bytes (the GDPR
+    failure mode); a full OVERWRITE frees it. Earlier versions still
+    show the column (time travel)."""
     base_version = current_version(path)
     m = _read_manifest(path, base_version)
     mapping = m.get("column_mapping") or {
-        c: c for c in _superset_columns(m["files"])
+        c: c for c in _schema(m, path).fieldNames()
     }
     if col not in mapping:
         raise ValueError(f"no column {col!r} in {sorted(mapping)}")
@@ -1949,25 +1954,9 @@ def drop_column(path: str, col: str) -> int:
                 f"constraint {cname!r} ({expr}) references {col!r}; "
                 f"drop it before dropping the column"
             )
-    new_mapping = {k: v for k, v in mapping.items() if k != col}
-    # the dropped column's PHYSICAL name joins the retired ledger: its
-    # bytes persist in existing files, so no future logical column may
-    # reuse the name (it would resurrect the dropped data — the GDPR
-    # failure mode). Rewrites don't purge the ledger (old versions stay
-    # time-travel readable); a full OVERWRITE resets it.
-    retired = sorted(
-        set(m.get("retired_physical", [])) | {mapping[col]}
-    )
-    extra = {"column_mapping": new_mapping, "retired_physical": retired}
-    # a dropped column leaves the declared-only ledger too: its NULL
-    # projection must not outlive the logical column (the physical
-    # name still joins retired_physical above — post-ADD appends may
-    # have written real bytes under it)
-    added = m.get("added_columns")
-    if added and mapping[col] in added:
-        extra["added_columns"] = {
-            k: v for k, v in added.items() if k != mapping[col]
-        }
+    extra = {
+        "column_mapping": {k: v for k, v in mapping.items() if k != col}
+    }
     # dropping a clustering column EVOLVES the spec (col removed, spec
     # id bumped): future writes stop laying out on a column readers can
     # no longer see. Iceberg makes you drop the partition field first;
@@ -1997,15 +1986,14 @@ def add_column(
 ) -> int:
     """ALTER TABLE ... ADD COLUMN — METADATA-ONLY, completing the
     column-ops triad with :func:`rename_column` / :func:`drop_column`:
-    commits the same file list with the column declared in the mapping
-    and recorded in the manifest's ``added_columns`` ledger
-    ({physical: type}); zero data IO at any table size. Reads project
-    the column as typed NULLs until data exists (``_apply_mapping``);
-    the first append/rewrite carrying it writes real bytes under the
-    minted physical name and the projection steps aside. Subsequent
-    appends are type-checked against the DECLARED type by the existing
-    ``_check_append_schema`` (it reads the post-ADD logical schema).
-    Earlier versions don't show the column (time travel — the ledger
+    commits the same file list with the column appended to the
+    manifest's schema (under a column mapping, with a freshly minted
+    physical name); zero data IO at any table size. Reads serve the
+    column as typed NULLs until data exists — no file carries it, and
+    the Parquet reader NULL-fills a schema column a file lacks; the
+    first append/rewrite carrying it writes real bytes. Later writes
+    are type-checked against the DECLARED type (:func:`_grow`).
+    Earlier versions don't show the column (time travel — the schema
     is per-manifest state, like the mapping). ``dtype`` is any Spark
     DDL type string (``bigint``, ``decimal(12,2)``,
     ``array<double>``); it is parsed/normalized via Spark's DDL type
@@ -2022,8 +2010,6 @@ def add_column(
         # bare DDL schema lists ("a int, b string") structurally
         # instead of via the r11 startswith("struct") special case,
         # and struct<...> columns come through as that field's type
-        from pyspark.sql.types import StructType
-
         parsed = StructType.fromDDL(f"__c {dtype}")
         if not isinstance(parsed, StructType) or len(parsed.fields) != 1:
             raise ValueError("a DDL schema list, not a single datatype")
@@ -2037,33 +2023,20 @@ def add_column(
                 "NOT NULL is not supported for added columns (they "
                 "read as typed NULLs until data is written)"
             )
-        normalized = parsed.fields[0].dataType.simpleString()
+        col_type = parsed.fields[0].dataType
     except Exception as exc:
         raise ValueError(
             f"cannot parse column type {dtype!r}: {exc}"
         ) from None
+    normalized = col_type.simpleString()
     base_version = current_version(path)
     m = _read_manifest(path, base_version)
-    mapping = m.get("column_mapping") or {
-        c: c for c in _superset_columns(m["files"])
-    }
-    if col in mapping:
+    if col in _logical(m, path).fieldNames():
         raise ValueError(f"column {col!r} already exists")
-    # the physical name must dodge live AND retired names — reusing a
-    # dropped column's physical name would resurrect its bytes from
-    # old files the moment this declared column is first read
-    phys = _mint_physical(col, mapping, m)
-    extra = {
-        "column_mapping": {**mapping, col: phys},
-        "retired_physical": m.get("retired_physical", []),
-        "added_columns": {
-            **(m.get("added_columns") or {}), phys: normalized
-        },
-    }
     return _commit(
         path,
         m["files"],
-        extra=extra,
+        extra=_grow(m, path, [StructField(col, col_type)]),
         expect_version=base_version,
         operation=f"ADD_COLUMN({col} {normalized})",
     )
@@ -2271,7 +2244,6 @@ def merge_probe_plan(
     manifest = _read_manifest(path, base_version)
     files = manifest["files"]
     mapping = manifest.get("column_mapping")
-    added_cols = manifest.get("added_columns")
     probe_entries, counts = _prune_probe_entries(
         source, files, mapping, keys
     )
@@ -2279,8 +2251,11 @@ def merge_probe_plan(
     if probe_entries:
         touched = (
             _apply_mapping(
-                _scan(spark, probe_entries, keep_meta=True), mapping,
-                added_cols,
+                _scan(
+                    spark, probe_entries, _schema(manifest, path),
+                    keep_meta=True,
+                ),
+                mapping,
             )
             .join(probe_src, keys, "semi")
             .select("__file")
@@ -2319,8 +2294,8 @@ def mutation_probe_plan(
     files = manifest["files"]
     mapping = manifest.get("column_mapping")
     df = _apply_mapping(
-        _scan(spark, files, keep_meta=True), mapping,
-        manifest.get("added_columns"),
+        _scan(spark, files, _schema(manifest, path), keep_meta=True),
+        mapping,
     )
     per_file = df.filter(where).groupBy("__file").count().collect()
     return {
@@ -2430,7 +2405,9 @@ def merge_table(
     NEW columns — they join the table (NULL for rows in untouched/old
     files) — and omit target columns (kept on update, NULL on
     insert). Under a column mapping, new logical columns mint
-    non-colliding physical names, same rule as ``append_table``.
+    non-colliding physical names, same rule as ``append_table``. A
+    clause whose values change a column's type raises
+    :class:`SchemaConflict` before any file lands.
 
     ``expect_version``: optimistic-concurrency token for callers whose
     source was DERIVED from a specific table version (a matview fold):
@@ -2480,22 +2457,22 @@ def merge_table(
     manifest = _read_manifest(path, base_version)
     files = manifest["files"]
     mapping = manifest.get("column_mapping")
-    added_cols = manifest.get("added_columns")
-    target = _apply_mapping(_scan(spark, files), mapping, added_cols)
+    schema = _schema(manifest, path)
+    t_names = _logical(manifest, path).fieldNames()
     miss = [k for k in keys if k not in source.columns]
     if miss:
         raise ValueError(f"source lacks merge key(s) {miss}")
     new_cols: list[str] = []
     if schema_evolution:
-        new_cols = [c for c in source.columns if c not in target.columns]
+        new_cols = [c for c in source.columns if c not in t_names]
     elif any(
         a in ("replace", "insert")
         for _, a in matched_cl + insert_cl if isinstance(a, str)
-    ) and sorted(source.columns) != sorted(target.columns):
+    ) and sorted(source.columns) != sorted(t_names):
         raise ValueError(
-            f"source columns {source.columns} != target {target.columns}"
+            f"source columns {source.columns} != target {t_names}"
         )
-    out_cols = target.columns + new_cols
+    out_cols = t_names + new_cols
     for label, clauses, what, allowed in (
         ("when_matched", matched_cl, "updates unknown/key",
          set(out_cols) - set(keys)),
@@ -2531,8 +2508,7 @@ def merge_table(
         touched = {
             r["__file"]
             for r in _apply_mapping(
-                _scan(spark, probe_entries, keep_meta=True), mapping,
-                added_cols,
+                _scan(spark, probe_entries, schema, keep_meta=True), mapping
             ).join(probe_src, keys, "semi").select("__file")
             .distinct().collect()
         }
@@ -2542,7 +2518,7 @@ def merge_table(
         # selective (stats-prunable) condition confines the rewrite to
         # the files it can actually touch
         anti = _apply_mapping(
-            _scan(spark, files, keep_meta=True), mapping, added_cols
+            _scan(spark, files, schema, keep_meta=True), mapping
         ).alias("t").join(probe_src, keys, "anti")
         if all(c is not None for c, _ in by_source_cl):
             fires = F.lit(False)
@@ -2555,14 +2531,9 @@ def merge_table(
 
     untouched = [f for f in files if f["path"] not in touched]
     touched_entries = [f for f in files if f["path"] in touched]
-    if touched_entries:
-        scoped = _apply_mapping(
-            _scan(spark, touched_entries), mapping, added_cols
-        )
-    else:
-        scoped = target.limit(0)
+    scoped = _apply_mapping(_scan(spark, touched_entries, schema), mapping)
 
-    t_cols, s_cols = set(target.columns), set(source.columns)
+    t_cols, s_cols = set(t_names), set(source.columns)
     # which side a joined row has comes from marker columns, not key
     # nullness: a target row with a NULL key is still a target row
     joined = scoped.withColumn("__t", F.lit(True)).alias("t").join(
@@ -2625,24 +2596,15 @@ def merge_table(
         return e.alias(c)
 
     merged = joined.filter(keep).select(*[_merged_col(c) for c in out_cols])
-    if new_cols and mapping:
-        # evolution under a column mapping: new logical columns join
-        # the mapping, minting a fresh physical name on collision with
-        # any live-or-retired physical name (same rule as append_table
-        # — old files' bytes must not leak into the new logical
-        # column); see _mint_physical
-        mapping = dict(mapping)
-        for c in new_cols:
-            if c not in mapping:
-                mapping[c] = _mint_physical(c, mapping, manifest)
-        extra = {**(extra or {}), "column_mapping": mapping}
+    # a clause that changes a column's type is a SchemaConflict; an
+    # evolution column joins the schema (and the mapping)
+    phys, state = _evolve(merged, manifest, path)
     _enforce_constraints(merged, path)
     re_index = _indexed_cols(touched_entries)
     version = _commit(
         path,
-        untouched
-        + _write_batch(_to_physical(merged, mapping), path, re_index or None),
-        extra=extra,
+        untouched + _write_batch(phys, path, re_index or None),
+        extra={**(extra or {}), **state},
         expect_version=base_version,
         operation="MERGE",
     )
@@ -2691,7 +2653,10 @@ def compact_table(
     from .parquet import zorder_value
 
     base_version = current_version(path)
-    files = _read_manifest(path, base_version)["files"]
+    manifest = _read_manifest(path, base_version)
+    files = manifest["files"]
+    mapping = manifest.get("column_mapping")
+    schema = _schema(manifest, path)
     if small_only_bytes is not None:
         small = [f for f in files if os.path.getsize(f["path"]) < small_only_bytes]
         big = [f for f in files if os.path.getsize(f["path"]) >= small_only_bytes]
@@ -2702,9 +2667,7 @@ def compact_table(
         n = max(1, -(-total // max(small_only_bytes, 1)))
         # _scan applies any deletion vectors, so compacting small files
         # also purges their DVs (the rewritten batch carries none)
-        merged = _scan(spark, small)
-        manifest = _read_manifest(path, base_version)
-        mapping = manifest.get("column_mapping")
+        merged = _scan(spark, small, schema)
         # incremental compaction migrates the merged dribble to the
         # CURRENT cluster spec when it can (the extra shuffle is over
         # small bytes only); files missing a spec column stay as-is
@@ -2738,12 +2701,10 @@ def compact_table(
     # PHYSICAL-level rewrite (mapping untouched, logical view identical):
     # scanning without the mapping projection keeps the frozen physical
     # schema in the rewritten files, same as reorg
-    manifest = _read_manifest(path, base_version)
-    mapping = manifest.get("column_mapping")
-    df = _scan(spark, manifest["files"])
+    df = _scan(spark, files, schema)
     zorder_by = [_phys_col(mapping, c) for c in (zorder_by or [])] or None
     bloom_cols = [_phys_col(mapping, c) for c in (bloom_cols or [])] or None
-    n = target_files or max(1, len(df.inputFiles()) // 4)
+    n = target_files or max(1, len(files) // 4)
     spec = manifest.get("cluster_spec")
     spec_phys = [
         _phys_spec_col(mapping, c) for c in (spec or {}).get("cols", [])
@@ -2834,7 +2795,8 @@ def reorg_table(
     run on a schedule forever while merge-on-read deletes accumulate.
     Returns {"version", "files_purged", "files_reused"}."""
     base_version = current_version(path)
-    files = _read_manifest(path, base_version)["files"]
+    manifest = _read_manifest(path, base_version)
+    files = manifest["files"]
     live = None
     targets = []
     for f in files:
@@ -2852,7 +2814,7 @@ def reorg_table(
                 "files_reused": len(files)}
     target_paths = {f["path"] for f in targets}
     untouched = [f for f in files if f["path"] not in target_paths]
-    rewritten = _scan(spark, targets)
+    rewritten = _scan(spark, targets, _schema(manifest, path))
     re_index = _indexed_cols(targets)
     version = _commit(
         path, untouched + _write_batch(rewritten, path, re_index or None),
@@ -2909,10 +2871,8 @@ def delete_from(
     manifest = _read_manifest(path, base_version)
     files = manifest["files"]
     mapping = manifest.get("column_mapping")
-    added_cols = manifest.get("added_columns")
-    df = _apply_mapping(
-        _scan(spark, files, keep_meta=True), mapping, added_cols
-    )
+    schema = _schema(manifest, path)
+    df = _apply_mapping(_scan(spark, files, schema, keep_meta=True), mapping)
     dv_rows = None  # executor-written sidecar records (O(files) each)
     if mode == "dv":
         # ONE distributed pass: the discovery scan's matched positions
@@ -2980,8 +2940,8 @@ def delete_from(
             dv_rows = _write_dvs_distributed(
                 spark,
                 _apply_mapping(
-                    _scan(spark, dv_targets, keep_meta=True), mapping,
-                    added_cols,
+                    _scan(spark, dv_targets, schema, keep_meta=True),
+                    mapping,
                 )
                 .filter(where)
                 .select("__file", "__pos"),
@@ -3008,7 +2968,7 @@ def delete_from(
         # drop the NULL rows — coalesce to FALSE so they survive the
         # rewrite, mirror of apply_update's when(where).otherwise(keep).
         kept_rows = _apply_mapping(
-            _scan(spark, rw_targets), mapping, added_cols
+            _scan(spark, rw_targets, schema), mapping
         ).filter(~F.coalesce(where, F.lit(False)))
         re_index = _indexed_cols(rw_targets)
         batch = _write_batch(
@@ -3094,30 +3054,28 @@ def table_changes(
     lo = _read_manifest(path, from_version)["files"]
     hi_manifest = _read_manifest(path, to_version)
     hi = hi_manifest["files"]
-    # all legs project under the TO version's mapping: physical names
-    # never change, so the rows of removed (FROM-side) files alias
-    # identically — a consumer always sees the feed in the destination
-    # version's logical schema
+    # all legs read under the TO version's schema and mapping: physical
+    # names never change, so the rows of removed (FROM-side) files
+    # alias identically — a consumer always sees the feed in the
+    # destination version's logical schema
     mapping = hi_manifest.get("column_mapping")
-    added_cols = hi_manifest.get("added_columns")
+    schema = _schema(hi_manifest, path)
+
+    def leg(entries, change_type, keep_meta=False):
+        return _apply_mapping(
+            _scan(spark, entries, schema, keep_meta), mapping
+        ).withColumn("_change_type", F.lit(change_type))
+
     lo_by_path = {f["path"]: f for f in lo}
     hi_by_path = {f["path"]: f for f in hi}
     added = [f for p, f in sorted(hi_by_path.items()) if p not in lo_by_path]
     removed = [f for p, f in sorted(lo_by_path.items()) if p not in hi_by_path]
-    parts = []
-    if added:
-        # an added file read under the TO manifest's DVs: rows deleted
-        # again before to_version were never visible in this range
-        parts.append(
-            _apply_mapping(_scan(spark, added), mapping, added_cols)
-            .withColumn("_change_type", F.lit("insert"))
-        )
+    # an added file read under the TO manifest's DVs: rows deleted
+    # again before to_version were never visible in this range; a
+    # removed file's rows as the FROM version saw them (its DVs)
+    parts = [leg(added, "insert")] if added else []
     if removed:
-        # a removed file's rows as the FROM version saw them (its DVs)
-        parts.append(
-            _apply_mapping(_scan(spark, removed), mapping, added_cols)
-            .withColumn("_change_type", F.lit("delete"))
-        )
+        parts.append(leg(removed, "delete"))
     # DV-only deltas for files present in BOTH versions:
     # - positions newly covered by the TO version's deletion vector →
     #   `delete` rows (a merge-on-read DELETE adds/removes no files and
@@ -3158,28 +3116,20 @@ def table_changes(
                 ],
                 ignore_index=True,
             )
-            entries = [lo_by_path[p] for p, _ in batch]
-            rows = _apply_mapping(
-                spark.read.option("mergeSchema", "true")
-                .parquet(*_paths(entries))
-                .withColumn("__file", _norm_file_path())
-                .withColumn("__pos", F.col("_metadata.row_index"))
+            # the files' raw rows (no DV applied): the positions
+            # themselves are the change
+            parts.append(
+                leg([{"path": p} for p, _ in batch], change_type, True)
                 .join(
                     F.broadcast(spark.createDataFrame(pairs_pdf)),
                     ["__file", "__pos"],
                     "semi",
                 )
-                .drop("__file", "__pos"),
-                mapping,
-                added_cols,
-            ).withColumn("_change_type", F.lit(change_type))
-            parts.append(rows)
-    if not parts:
-        empty = read_table(spark, path, version=to_version).limit(0)
-        return empty.withColumn("_change_type", F.lit(""))
-    out = parts[0]
+                .drop("__file", "__pos")
+            )
+    out = parts[0] if parts else leg([], "")
     for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
+        out = out.unionByName(p)
     return out
 
 
@@ -3210,7 +3160,7 @@ def table_history(path: str) -> list[dict]:
         for k, v in m.items():
             if k not in (
                 "version", "files", "operation", "column_mapping",
-                "delta", "n_files",
+                "schema", "delta", "n_files",
             ):
                 rec[k] = v
         out.append(rec)
@@ -3295,13 +3245,9 @@ def clone_table(
         extra={
             "cloned_from": src,
             "clone_version": v,
+            "schema": m.get("schema"),
             "column_mapping": m.get("column_mapping"),
-            "retired_physical": m.get("retired_physical"),
             "cluster_spec": m.get("cluster_spec"),
-            # declared-only ADD COLUMN state must travel with the
-            # mapping it belongs to — a mapping naming a physical
-            # column no file carries is unreadable without it
-            "added_columns": m.get("added_columns"),
         },
         operation="CLONE",
     )

@@ -53,6 +53,7 @@ import shutil
 import uuid
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from . import versioned as V
 
@@ -147,6 +148,46 @@ def _touched_since(base_by_path: dict, side_by_path: dict) -> set[str]:
     return removed | dv_mod
 
 
+def _dirs_under(entries: list, prefix: str) -> set[str]:
+    """The ``_data`` children under ``prefix`` that manifest entries
+    reference through ANY of their paths: batch dirs via ``path`` and
+    blooms, DV sidecar dirs via ``dv.path`` (a DV-only stage's dirs are
+    referenced solely there)."""
+    out: set[str] = set()
+
+    def walk(v):
+        if isinstance(v, str) and v.startswith(prefix):
+            out.add(v[len(prefix):].split(os.sep, 1)[0])
+        elif isinstance(v, dict):
+            for x in v.values():
+                walk(x)
+        elif isinstance(v, list):
+            for x in v:
+                walk(x)
+
+    walk(entries)
+    return out
+
+
+def _union_schema(table: str, cur_m: dict, stage: str, sm: dict) -> str:
+    """The schema a publish onto a MOVED table commits: the table's
+    current schema plus every column only the stage has (both sides
+    share one column mapping here, so physical names line up). A name
+    the two sides typed differently is a :class:`CommitConflict`."""
+    fields = list(V._schema(cur_m, table).fields)
+    types = {f.name: f.dataType.simpleString() for f in fields}
+    for f in V._schema(sm, stage).fields:
+        if f.name not in types:
+            fields.append(f)
+        elif types[f.name] != f.dataType.simpleString():
+            raise V.CommitConflict(
+                f"publish conflicts on column {f.name!r}: the table has "
+                f"{types[f.name]}, the stage {f.dataType.simpleString()}"
+                f" — re-stage"
+            )
+    return StructType(fields).json()
+
+
 def _recover_interrupted_publish(
     table: str, stage: str, keep_stage: bool
 ) -> dict | None:
@@ -193,24 +234,10 @@ def _recover_interrupted_publish(
         # reverting, check whether the CURRENT manifest references any
         # of the intent's moved dirs — a referenced dir means the
         # publish committed (and was later vacuumed past); moving it
-        # back would corrupt the live table. Walk EVERY string in each
-        # entry (the same recursive walk as publish's staged_dirs):
-        # a DV-only stage's moved dirs are dv_* sidecar dirs referenced
-        # solely via f["dv"]["path"], never f["path"]
-        referenced: set[str] = set()
-
-        def walk(v):
-            if isinstance(v, str) and v.startswith(dst_prefix):
-                referenced.add(v[len(dst_prefix):].split(os.sep, 1)[0])
-            elif isinstance(v, dict):
-                for x in v.values():
-                    walk(x)
-            elif isinstance(v, list):
-                for x in v:
-                    walk(x)
-
-        for f in V._read_manifest(table, cur)["files"]:
-            walk(f)
+        # back would corrupt the live table
+        referenced = _dirs_under(
+            V._read_manifest(table, cur)["files"], dst_prefix
+        )
         if any(d in referenced for d in intent["dirs"]):
             committed_v = cur
     if committed_v is None:
@@ -269,6 +296,10 @@ def publish_stage(
       structural divergence (column mapping, cluster spec, partition
       spec changed by either side) conflict loudly.
 
+    Both replay modes publish the union of the table's and the stage's
+    schemas: a column either side appended is kept, and a column the
+    two sides typed differently is a ``CommitConflict``.
+
     Returns {"version", "published_entries", "moved_dirs", "mode"}."""
     if mode not in ("fail", "append", "merge"):
         raise ValueError(
@@ -294,15 +325,12 @@ def publish_stage(
     if cur == base:
         published = sm["files"]
         extra = {
-            # table-state evolved IN the stage (schema evolution under a
-            # mapping, re-clustering, a declared-only ADD COLUMN)
-            # publishes with the files — a mapping naming a physical
-            # column no file carries is unreadable without its
-            # added_columns entry
+            # table state evolved IN the stage (schema evolution, a
+            # rename, re-clustering, an ADD COLUMN) publishes with the
+            # files
+            "schema": sm.get("schema"),
             "column_mapping": sm.get("column_mapping"),
-            "retired_physical": sm.get("retired_physical"),
             "cluster_spec": sm.get("cluster_spec"),
-            "added_columns": sm.get("added_columns"),
         }
     elif mode == "fail":
         raise V.CommitConflict(
@@ -310,10 +338,7 @@ def publish_stage(
             f"re-stage from the new version or publish mode='append' "
             f"(add-only stage) / mode='merge' (disjoint file sets)"
         )
-    elif mode == "merge":
-        # three-way reconcile over (base, stage, current): apply the
-        # stage's per-file mutations onto the table's CURRENT file
-        # list, conflicting only where both sides mutated the same file
+    else:
         try:
             base_m = V._read_manifest(table, base)
         except FileNotFoundError as exc:
@@ -322,27 +347,32 @@ def publish_stage(
             # conflict loudly rather than guess (and never resurrect
             # what the vacuum deleted)
             raise V.CommitConflict(
-                f"merge publish needs {table}'s base manifest v{base} "
+                f"{mode} publish needs {table}'s base manifest v{base} "
                 f"but it was vacuumed; re-stage from the current version"
             ) from exc
         cur_m = V._read_manifest(table, cur)
+        base_by_path = {f["path"]: f for f in base_m["files"]}
+        stage_by_path = {f["path"]: f for f in sm["files"]}
+        stage_touched = _touched_since(base_by_path, stage_by_path)
+        # the schemas union: a column either side appended is no conflict
+        extra = {"schema": _union_schema(table, cur_m, stage, sm)}
+        added = [f for f in sm["files"] if f["path"] not in base_by_path]
+    if cur != base and mode == "merge":
+        # three-way reconcile over (base, stage, current): apply the
+        # stage's per-file mutations onto the table's CURRENT file
+        # list, conflicting only where both sides mutated the same file.
         # cluster_spec carries partition-spec evolution / hidden
-        # partitioning state (versioned.py:1711 alter_clustering)
-        for key in (
-            "column_mapping", "retired_physical", "cluster_spec",
-            "added_columns",
-        ):
+        # partitioning state (alter_clustering)
+        for key in ("column_mapping", "cluster_spec"):
             b = base_m.get(key)
             if sm.get(key) != b or cur_m.get(key) != b:
                 raise V.CommitConflict(
                     f"merge publish requires {key} unchanged on both "
                     f"sides since v{base}; it diverged — re-stage"
                 )
-        base_by_path = {f["path"]: f for f in base_m["files"]}
-        stage_by_path = {f["path"]: f for f in sm["files"]}
-        cur_by_path = {f["path"]: f for f in cur_m["files"]}
-        stage_touched = _touched_since(base_by_path, stage_by_path)
-        table_touched = _touched_since(base_by_path, cur_by_path)
+        table_touched = _touched_since(
+            base_by_path, {f["path"]: f for f in cur_m["files"]}
+        )
         overlap = stage_touched & table_touched
         if overlap:
             raise V.CommitConflict(
@@ -350,75 +380,35 @@ def publish_stage(
                 f"mutated by BOTH the stage and the table since "
                 f"v{base} (e.g. {sorted(overlap)[0]}); re-stage"
             )
-        stage_removed = {
-            p for p in base_by_path if p not in stage_by_path
-        }
         published = []
         for f in cur_m["files"]:
             p = f["path"]
-            if p in stage_removed:
+            if p in stage_touched and p not in stage_by_path:
                 continue  # table left it untouched; stage delete wins
-            if p in stage_touched:
-                published.append(stage_by_path[p])  # stage's DV state
-            else:
-                published.append(f)
-        published += [
-            f for f in sm["files"] if f["path"] not in base_by_path
-        ]
-        extra = None
-    else:
+            # a stage-touched file the stage kept carries its DV state
+            published.append(stage_by_path[p] if p in stage_touched else f)
+        published += added
+    elif cur != base:
         # append mode: legal only if the stage is ADD-ONLY over its
         # base — every base file still referenced, byte-identical DV
         # state — so replaying the additions onto the newer table is
         # exactly an append
-        base_m = V._read_manifest(table, base)
-        base_by_path = {f["path"]: f for f in base_m["files"]}
-        stage_by_path = {f["path"]: f for f in sm["files"]}
-        missing = [p for p in base_by_path if p not in stage_by_path]
-        modified = [
-            p
-            for p, f in base_by_path.items()
-            if p in stage_by_path
-            and (f.get("dv") or {}) != (stage_by_path[p].get("dv") or {})
-        ]
-        if missing or modified:
+        if stage_touched:
             raise V.CommitConflict(
-                f"stage is not add-only over v{base} (removed="
-                f"{len(missing)}, dv-modified={len(modified)}): "
-                f"append publish would lose those mutations"
+                f"stage is not add-only over v{base} ({len(stage_touched)}"
+                f" base file(s) removed or DV-modified): append publish "
+                f"would lose those mutations"
             )
         if sm.get("column_mapping") != base_m.get("column_mapping"):
             raise V.CommitConflict(
                 "stage evolved the column mapping; append publish onto "
                 "a moved base cannot reconcile schema state — re-stage"
             )
-        published = V._read_manifest(table, cur)["files"] + [
-            f for f in sm["files"] if f["path"] not in base_by_path
-        ]
-        extra = None
+        published = cur_m["files"] + added
 
-    # dirs the stage created: every _data child referenced by entries
-    # being published (batch dirs AND dv sidecar dirs live one level
-    # under _data)
-    def staged_dirs(entries) -> set[str]:
-        out = set()
-
-        def walk(v):
-            if isinstance(v, str) and v.startswith(src_prefix):
-                rel = v[len(src_prefix):]
-                out.add(rel.split(os.sep, 1)[0])
-            elif isinstance(v, dict):
-                for x in v.values():
-                    walk(x)
-            elif isinstance(v, list):
-                for x in v:
-                    walk(x)
-
-        for e in entries:
-            walk(e)
-        return out
-
-    dirs = staged_dirs(published)
+    # dirs the stage created: every _data child the published entries
+    # reference under the stage
+    dirs = _dirs_under(published, src_prefix)
     # intent marker BEFORE the first move: a hard crash anywhere in the
     # move loop / commit leaves a record of exactly which dirs were in
     # flight, so the next publish attempt recovers instead of colliding
@@ -435,7 +425,7 @@ def publish_stage(
             },
             fh,
         )
-    extra = {**(extra or {}), "publish_id": publish_id}
+    extra["publish_id"] = publish_id
     moved: list[tuple[str, str]] = []
     try:
         for d in sorted(dirs):

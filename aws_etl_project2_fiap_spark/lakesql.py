@@ -1017,10 +1017,7 @@ class LakeSQL:
             )
         name = plan.table().tableName()
         path = self._path(name)
-        tschema = {
-            f.name: f.dataType
-            for f in V.read_table(self.spark, path).schema.fields
-        }
+        tschema = {f.name: f.dataType for f in V.table_schema(path).fields}
         query = plan.query()
         df = self._select(_span(q, query))
         cols = _seq(plan.userSpecifiedCols())
@@ -1411,7 +1408,6 @@ class LakeSQL:
                     rows,
                     "col_name string, data_type string, cluster string",
                 )
-            df = V.read_table(self.spark, path)
             spec = (V.table_cluster_spec(path) or {}).get("cols") or []
             cons = V.table_constraints(path)
             rows = [
@@ -1430,7 +1426,7 @@ class LakeSQL:
                         "",
                     ),
                 }
-                for f in df.schema.fields
+                for f in V.table_schema(path).fields
             ] + [
                 {
                     "col_name": f"constraint:{cname}",
@@ -1609,10 +1605,9 @@ class LakeSQL:
                 f"GROUP BY {', '.join(meta['group_by'])}"
             )
         else:
-            df = V.read_table(self.spark, path)
             cols = ", ".join(
                 f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields
+                for f in V.table_schema(path).fields
             )
             spec = (V.table_cluster_spec(path) or {}).get("cols") or []
             clustered = (

@@ -33,8 +33,9 @@ python worker processes that do NOT have this package on their path
 (the round driver loads the repo by file path). cloudpickle only
 serializes a class BY VALUE when it is not importable by qualname —
 so the class is defined inside :func:`build_versioned_table_source`,
-and every method touches ONLY stdlib + pyarrow + numpy (the manifest
-format is read inline with json/os). Importing anything from this
+and every method touches ONLY stdlib + pyarrow + numpy +
+``pyspark.sql.types`` (the manifest format is read inline with
+json/os). Importing anything from this
 package inside a method would silently re-introduce the
 ModuleNotFoundError-on-worker failure class (empirically verified).
 """
@@ -109,8 +110,8 @@ def build_versioned_table_source():
         """One file's live rows as tuples (DV positions removed) —
         pyarrow read; runs on EXECUTORS. Honors the table's schema-
         evolution contract: a pre-evolution file simply lacks the newer
-        columns, whose cells fill with NULL (the same superset-schema
-        read io/versioned's mergeSchema path performs)."""
+        columns, whose cells fill with NULL (as io/versioned's reads
+        under the manifest schema do)."""
         import numpy as np
         import pyarrow.parquet as pq
 
@@ -202,120 +203,29 @@ def build_versioned_table_source():
                 })
         return parts
 
-    _footer_fields_cache: dict = {}
-
-    def _footer_fields(path: str, v: int) -> dict:
-        """ONE footer pass per (path, version): {physical name → first
-        pa.field carrying it}, insertion-ordered. Shared by
-        _table_columns and _physical_columns so a schema()+reader()
-        call pair costs a single O(files) pass, not two (ADVICE r10).
-        Caching is safe because a committed version's file list and
-        file schemas are immutable (every mutation commits a NEW
-        version); the key carries the manifest file's mtime so a
-        table DELETED and RE-CREATED at the same path (a new v{v}.json
-        out of band of the commit protocol) misses instead of serving
-        the old table's schema (review r11); bounded so long-lived
-        drivers don't accrete."""
-        import os
-        import pyarrow.parquet as pq
-
-        mpath = os.path.join(path, "_manifests", f"v{v}.json")
-        try:
-            stamp = os.stat(mpath).st_mtime_ns
-        except OSError:
-            stamp = -1  # let _manifest raise its own loud error below
-        key = (path, v, stamp)
-        hit = _footer_fields_cache.get(key)
-        if hit is None:
-            fields: dict = {}
-            for entry in _manifest(path, v)["files"]:
-                for field in pq.read_schema(entry["path"]):
-                    fields.setdefault(field.name, field)
-            if len(_footer_fields_cache) >= 64:
-                _footer_fields_cache.clear()
-            _footer_fields_cache[key] = hit = fields
-        return hit
-
-    def _table_columns(path: str, version=None):
-        """SUPERSET schema across a version's files (the mergeSchema
-        contract): field order = first appearance, type = first file
-        carrying the field. One footer read per file — O(files)
-        driver-side, no data read. ``version`` defaults to current;
-        a time-travel batch read MUST pass the requested version, or
-        columns added after it would leak into the schema (NULL-filled)
-        and diverge from read_table(version=v)."""
-        import pyarrow as pa
+    def _columns(path: str, version=None) -> list:
+        """The version's columns as (logical name, physical schema
+        field JSON) pairs, from its manifest's ``schema`` under its
+        column mapping — the schema io/versioned's reads use, so a
+        column ADD COLUMN declared is served as NULL, as read_table
+        serves it. ``version`` defaults to current; a time-travel
+        batch read MUST pass the requested version, or columns added
+        after it would leak into the schema."""
+        import json
 
         v = _current_version(path) if version is None else int(version)
         m = _manifest(path, v)
-        fields = _footer_fields(path, v)
+        if "schema" not in m:
+            raise ValueError(
+                f"versioned_table source: v{v} of {path} records no "
+                f"schema (a manifest from before schemas were recorded)"
+            )
+        fields = json.loads(m["schema"])["fields"]
         mapping = m.get("column_mapping")
-        if mapping:
-            # column mapping: files hold frozen PHYSICAL names; the
-            # source exposes the version's LOGICAL names (renames/drops
-            # are metadata-only — io/versioned.py rename_column).
-            # Declared-only columns (metadata ADD COLUMN, no data file
-            # carries them yet) are SKIPPED — the Arrow reader has no
-            # bytes to serve and its DDL surface can't express every
-            # declared type (decimal); batch read_table serves them as
-            # typed NULLs. They appear here the moment real bytes land.
-            return [
-                pa.field(log, fields[phys].type)
-                for log, phys in mapping.items()
-                if phys in fields
-            ]
-        return list(fields.values())
-
-    def _physical_columns(path: str, version=None) -> list:
-        """Physical column names to READ, aligned 1:1 with
-        _table_columns' logical field order — including its
-        declared-only-column skip (a mapping entry whose physical name
-        exists in no file must not enter the positional zip against
-        the schema). Reuses _table_columns' footer pass via
-        _footer_fields — zero extra footer reads."""
-        v = _current_version(path) if version is None else int(version)
-        m = _manifest(path, v)
-        mapping = m.get("column_mapping")
-        if mapping:
-            present = _footer_fields(path, v).keys()
-            return [p for p in mapping.values() if p in present]
-        return [f.name for f in _table_columns(path, v)]
-
-    def _arrow_to_ddl(schema) -> str:
-        import pyarrow as pa
-
-        out = []
-        for field in schema:
-            t = field.type
-            if pa.types.is_int64(t) or pa.types.is_uint32(t):
-                s = "long"
-            elif (
-                pa.types.is_int32(t)
-                or pa.types.is_int16(t)
-                or pa.types.is_int8(t)
-            ):
-                s = "int"
-            elif pa.types.is_float64(t):
-                s = "double"
-            elif pa.types.is_float32(t):
-                s = "float"
-            elif pa.types.is_string(t) or pa.types.is_large_string(t):
-                s = "string"
-            elif pa.types.is_boolean(t):
-                s = "boolean"
-            elif pa.types.is_date(t):
-                s = "date"
-            elif pa.types.is_timestamp(t):
-                s = "timestamp"
-            elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
-                s = "binary"
-            else:
-                raise ValueError(
-                    f"versioned_table source: unsupported column type "
-                    f"{t} ({field.name}) — project it away first"
-                )
-            out.append(f"`{field.name}` {s}")
-        return ", ".join(out)
+        if not mapping:
+            return [(f["name"], f) for f in fields]
+        by = {f["name"]: f for f in fields}
+        return [(log, by[phys]) for log, phys in mapping.items()]
 
     class _BatchReader(DataSourceReader):
         """Time-travel batch read through the source: the file list is
@@ -405,17 +315,31 @@ def build_versioned_table_source():
             v = self.options.get("version")
             return int(v) if v else None
 
-        def schema(self) -> str:
-            ddl = _arrow_to_ddl(
-                _table_columns(self.options["path"], self._batch_version())
-            )
+        def schema(self):
+            # pyspark.sql.types is importable on workers (this package
+            # is not)
+            from pyspark.sql.types import StructType
+
+            schema = StructType.fromJson({"type": "struct", "fields": [
+                {**f, "name": log}
+                for log, f in _columns(
+                    self.options["path"], self._batch_version()
+                )
+            ]})
             if self.options.get("feed", "").lower() == "cdc":
                 # the change feed rides two metadata columns: the rows
                 # INSERTED and DELETED in each version range, reconciled
                 # downstream on a key (delete+insert churn of a
                 # rewritten file cancels for keyed consumers)
-                ddl += ", `_change_type` string, `_commit_version` long"
-            return ddl
+                schema = schema.add("_change_type", "string").add(
+                    "_commit_version", "long"
+                )
+            return schema
+
+        def _physical(self, version=None) -> list:
+            return [
+                f["name"] for _, f in _columns(self.options["path"], version)
+            ]
 
         def reader(self, schema) -> DataSourceReader:
             if self.options.get("feed", "").lower() == "cdc":
@@ -424,20 +348,14 @@ def build_versioned_table_source():
                     "feed use io.versioned.table_changes"
                 )
             # readers receive PHYSICAL names (what the files store);
-            # the DDL above already exposes the logical names in the
-            # same order, so tuples line up
+            # the schema above exposes the logical names in the same
+            # order, so tuples line up
             return _BatchReader(
-                self.options,
-                _physical_columns(
-                    self.options["path"], self._batch_version()
-                ),
+                self.options, self._physical(self._batch_version())
             )
 
         def streamReader(self, schema) -> DataSourceStreamReader:
-            return _StreamReader(
-                self.options,
-                _physical_columns(self.options["path"]),
-            )
+            return _StreamReader(self.options, self._physical())
 
     return VersionedTableDataSource
 

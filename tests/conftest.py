@@ -35,6 +35,27 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns ``(result, number of Spark jobs fn started)``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

@@ -260,6 +260,38 @@ def test_parse_errors_are_loud(spark, tmp_path):
     assert V.current_version(tbl) == 2
 
 
+def test_type_changing_merge_rejected_before_write(spark, tmp_path):
+    """MERGE ... UPDATE SET v = s.v / 2 on an int column computes a
+    double: SchemaConflict before any file lands, the version is
+    unchanged and the table still reads."""
+    tbl, srcp = str(tmp_path / "t"), str(tmp_path / "s")
+    rows = spark.range(0, 10).select(
+        F.col("id").alias("k"), F.col("id").cast("int").alias("v")
+    )
+    V.create_table(rows, tbl)
+    V.create_table(rows.filter(F.col("k") < 3), srcp)
+    lk = LakeSQL(spark, {"t": tbl, "s": srcp})
+    with pytest.raises(V.SchemaConflict, match="v: table=int"):
+        lk.sql(
+            "MERGE INTO t USING s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v / 2"
+        )
+    assert V.current_version(tbl) == 1
+    assert lk.sql("SELECT sum(v) AS n FROM t").collect()[0]["n"] == 45
+
+
+def test_select_builds_without_a_job(spark, tmp_path, count_jobs):
+    """Building a LakeSQL SELECT reads each table's schema from its
+    manifest: no Spark job before an action."""
+    tbl, _ = _fixture(spark, tmp_path, "t")
+    lk = LakeSQL(spark, {"t": tbl})
+    df, jobs = count_jobs(
+        lambda: lk.sql("SELECT tag, count(*) AS n FROM t GROUP BY tag")
+    )
+    assert jobs == 0
+    assert [tuple(r) for r in df.collect()] == [("old", 100)]
+
+
 def test_merge_keeps_null_key_target_rows(spark, tmp_path):
     """A target row with a NULL merge key in the same file as a matched
     key survives a MERGE that rewrites that file."""

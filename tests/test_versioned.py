@@ -157,9 +157,12 @@ def test_data_skipping_conservative_without_stats(spark, table):
     assert kept == files and not skipped
 
 
-def test_data_skipping_all_pruned_raises(spark, table):
-    with pytest.raises(ValueError):
-        V.read_table(spark, table, between=("g", 99, 100))
+def test_data_skipping_all_pruned_reads_empty(spark, table):
+    """A predicate whose stats prune every file reads 0 rows with the
+    table's columns (the manifest schema builds the empty frame)."""
+    got = V.read_table(spark, table, between=("g", 99, 100))
+    assert got.columns == ["id", "g", "v"]
+    assert got.count() == 0
 
 
 def test_merge_file_level_copy_on_write(spark, table):
@@ -638,6 +641,23 @@ def test_bloom_point_read_prunes_files(spark, tmp_path):
     assert set(missing.columns) == {"id", "g", "v"}
 
 
+def test_all_pruned_point_read_builds_without_a_job(
+    spark, tmp_path, count_jobs
+):
+    """Every file's bloom rules the key out: the empty result is built
+    from the manifest schema, with no Spark job."""
+    path = str(tmp_path / "t")
+    V.create_table(
+        spark.range(0, 30).select(F.col("id"), F.lit("x").alias("s")),
+        path, bloom_cols=["id"],
+    )
+    missing, jobs = count_jobs(
+        lambda: V.read_table(spark, path, eq=("id", 10_000))
+    )
+    assert jobs == 0
+    assert missing.columns == ["id", "s"] and missing.count() == 0
+
+
 def test_bloom_exactness_against_full_scan(spark, tmp_path):
     """Pruned point-reads must equal the unpruned filter for every key
     (no false negatives; false positives removed by the exact filter)."""
@@ -868,3 +888,72 @@ def test_type_conflicting_append_rejected_before_write(spark, tmp_path):
     got = V.read_table(spark, path)
     assert got.count() == 7
     assert set(got.columns) == {"id", "s", "extra_col"}
+
+
+def test_reads_build_without_a_job(spark, table, count_jobs):
+    """The manifest records each version's schema, so building a read
+    — current, time travel, an all-pruned predicate, a change feed with
+    file and deletion-vector legs — runs no Spark job, and neither does
+    the append schema check. An inferring parquet read is the control:
+    it runs one."""
+    V.append_table(
+        spark.range(300, 303).select(
+            F.col("id"), (F.col("id") % 3).alias("g"),
+            (F.col("id") * 2.0).alias("v"),
+        ),
+        table,
+    )
+    V.delete_from(spark, table, F.col("id") == 4, mode="dv")
+    builds = {
+        "current": lambda: V.read_table(spark, table),
+        "version": lambda: V.read_table(spark, table, version=1),
+        "all-pruned between": lambda: V.read_table(
+            spark, table, between=("g", 99, 100)
+        ),
+        "table_changes": lambda: V.table_changes(spark, table, 1, 3),
+    }
+    for what, build in builds.items():
+        df, jobs = count_jobs(build)
+        assert jobs == 0, what
+    assert df.filter(F.col("_change_type") == "delete").count() == 1
+    bad = spark.range(1).select(F.col("id").cast("string").alias("id"))
+
+    def rejected():
+        with pytest.raises(V.SchemaConflict):
+            V.append_table(bad, table)
+
+    assert count_jobs(rejected)[1] == 0
+    first = V._read_manifest(table, 1)["files"][0]["path"]
+    assert count_jobs(lambda: spark.read.parquet(first))[1] >= 1
+
+
+def test_manifest_without_schema_fails_loud(spark, table):
+    """A manifest that records no schema (written before manifests
+    carried one) is a loud error naming the table and version — no
+    inference fallback."""
+    import json
+
+    mpath = os.path.join(V._manifest_dir(table), "v1.json")
+    with open(mpath) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(mpath, "w") as fh:
+        json.dump(m, fh)
+    with pytest.raises(ValueError, match="v1 of .* records no schema"):
+        V.read_table(spark, table)
+
+
+def test_type_changing_update_and_merge_rejected_before_write(spark, table):
+    """An UPDATE or MERGE whose new values change a column's type (g is
+    bigint; g / 2 is double) raises SchemaConflict before any file
+    lands: the version is unchanged and the table still reads."""
+    src = spark.createDataFrame([(2, 7, -1.0)], "id long, g long, v double")
+    with pytest.raises(V.SchemaConflict, match="g: table=bigint"):
+        V.update_table(spark, table, {"g": F.col("g") / 2}, F.col("id") < 5)
+    with pytest.raises(V.SchemaConflict, match="g: table=bigint"):
+        V.merge_table(
+            spark, table, src, ["id"],
+            when_matched={"g": F.col("s.g") + F.lit(0.5)},
+        )
+    assert V.current_version(table) == 1
+    assert V.read_table(spark, table).count() == 300

@@ -356,6 +356,7 @@ def test_dv_read_driver_load_is_bounded(spark, table, monkeypatch):
         for r in V._scan(
             spark,
             V._read_manifest(table, V.current_version(table))["files"],
+            V.table_schema(table),
             keep_meta=True,
         ).select("id").collect()
     ) == expect
@@ -376,6 +377,7 @@ def test_dv_read_mixed_clean_and_dv_files(spark, table):
     meta = V._scan(
         spark,
         V._read_manifest(table, V.current_version(table))["files"],
+        V.table_schema(table),
         keep_meta=True,
     )
     assert sorted(r["id"] for r in meta.select("id").collect()) == expect

@@ -7,7 +7,7 @@ The claims under test:
   IO) and every read path shows the new logical schema;
 - physical names are FROZEN: rewrites (UPDATE/DELETE/MERGE/compact)
   keep writing the original physical schema, so old and new files stay
-  mergeSchema-compatible forever;
+  readable under the one schema the manifest records;
 - time travel reads each version under ITS OWN mapping; rollback
   restores the target version's mapping;
 - stats/bloom pruning, partition overwrite, the change feed, and the
@@ -19,6 +19,8 @@ The claims under test:
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 import pyarrow.parquet as pq
@@ -26,6 +28,11 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from aws_etl_project2_fiap_spark.io import versioned as V
+
+
+def _schema_names(m: dict) -> list[str]:
+    """Physical column names of a manifest's recorded schema."""
+    return [f["name"] for f in json.loads(m["schema"])["fields"]]
 
 
 @pytest.fixture()
@@ -232,6 +239,28 @@ def test_overwrite_partitions_on_renamed_column(spark, tmp_path):
     assert got.filter(F.col("dt") != "1").count() == 60
 
 
+def test_overwrite_partitions_new_column_under_mapping(spark, table):
+    """A partition overwrite carrying a NEW column under a column
+    mapping extends the mapping and the schema, as an append does: the
+    column is visible, not written into files under a name no reader
+    maps."""
+    V.rename_column(table, "v", "price")
+    V.overwrite_partitions(
+        spark,
+        spark.range(0, 3).select(
+            F.col("id"), F.lit(0).cast("long").alias("g"),
+            F.lit(1.0).alias("price"), F.lit("t").alias("tag"),
+        ),
+        table, "g",
+    )
+    got = V.read_table(spark, table)
+    assert got.columns == ["id", "g", "price", "tag"]
+    assert got.filter(F.col("tag") == "t").count() == 3
+    assert got.filter(F.col("g") == 0).count() == 3
+    assert got.count() == 203
+    assert V.table_mapping(table)["tag"] == "tag"
+
+
 def test_table_source_reads_logical_names(spark, table):
     from aws_etl_project2_fiap_spark.streaming.table_source import (
         VersionedTableDataSource,
@@ -276,10 +305,10 @@ def test_dropped_column_name_not_resurrected_on_append(spark, table):
     ).collect()}
     assert got[1000] == 77
     assert got[0] is None, "old row resurrected dropped bytes"
-    # drop committed the retired ledger; append inherited it
-    assert "g" in V._read_manifest(table, V.current_version(table)).get(
-        "retired_physical", []
-    )
+    # the dropped physical g stays in the schema, out of the mapping
+    m = V._read_manifest(table, V.current_version(table))
+    assert "g" in _schema_names(m)
+    assert "g" not in m["column_mapping"].values()
 
 
 def test_dropped_column_name_not_resurrected_on_merge_evolution(
@@ -328,17 +357,21 @@ def test_overwrite_rebuilds_mapping(spark, table):
 
 
 def test_rollback_past_overwrite_restores_retired_ledger(spark, table):
-    """OVERWRITE resets the retired ledger (no old file survives), but
-    a rollback PAST the overwrite brings the old files — and their
-    dropped bytes — back: the target version's ledger must return with
-    them, or a post-rollback append could resurrect dropped data."""
-    V.drop_column(table, "g")  # v2: ledger = [g]
+    """OVERWRITE frees retired names (no old file survives), but a
+    rollback PAST the overwrite brings the old files — and their
+    dropped bytes — back: the target version's schema, which still
+    holds the dropped name, must return with them, or a post-rollback
+    append could resurrect dropped data."""
+    V.drop_column(table, "g")  # v2: g retired (in schema, not mapped)
     V.overwrite_table(
         spark.createDataFrame([(1, 1.0)], "id long, v double"), table
-    )  # v3: ledger reset
-    assert V._read_manifest(table, 3).get("retired_physical") == []
-    V.rollback(table, 2)  # v4: v2's files (old bytes) + v2's ledger
-    assert V._read_manifest(table, 4).get("retired_physical") == ["g"]
+    )  # v3: the overwrite's schema is its batch's
+    assert _schema_names(V._read_manifest(table, 3)) == ["id", "v"]
+    V.rollback(table, 2)  # v4: v2's files (old bytes) + v2's schema
+    m4 = V._read_manifest(table, 4)
+    assert m4["schema"] == V._read_manifest(table, 2)["schema"]
+    assert "g" in _schema_names(m4)
+    assert "g" not in m4["column_mapping"].values()
     V.append_table(
         spark.createDataFrame(
             [(1000, 1.0, 77)], "id long, v double, g long"
@@ -459,8 +492,8 @@ def test_add_column_drop_and_no_resurrection(spark, table):
     )
     V.drop_column(table, "c")
     m = V._read_manifest(table, V.current_version(table))
-    assert "c" in m["retired_physical"]
-    assert "c" not in (m.get("added_columns") or {})
+    assert "c" in _schema_names(m)
+    assert "c" not in m["column_mapping"].values()
     V.add_column(spark, table, "c", "bigint")
     # all NULL: the old 99s must not leak into the reborn column
     assert V.read_table(spark, table).filter(
@@ -478,7 +511,7 @@ def test_add_column_rollback_and_overwrite(spark, table):
         table,
     )
     m = V._read_manifest(table, V.current_version(table))
-    assert m.get("added_columns") is None
+    assert _schema_names(m) == ["id", "v"]
     assert sorted(V.read_table(spark, table).columns) == ["id", "v"]
 
 
@@ -499,10 +532,9 @@ def test_add_column_change_feed(spark, table):
 
 
 def test_add_column_state_travels_with_clone_and_wap(spark, table, tmp_path):
-    """Review r10: added_columns must travel wherever the mapping
-    travels — a clone (CREATE BRANCH) of a table with a declared-only
-    column, and a WAP fast-forward publish of a stage that declared
-    one, were both unreadable (UNRESOLVED_COLUMN) without it."""
+    """Review r10: a declared-only column must travel wherever the
+    schema travels — a clone (CREATE BRANCH) of a table with one, and a
+    WAP fast-forward publish of a stage that declared one."""
     from aws_etl_project2_fiap_spark.io import wap as W
 
     V.add_column(spark, table, "score", "decimal(10,2)")
@@ -521,24 +553,28 @@ def test_add_column_state_travels_with_clone_and_wap(spark, table, tmp_path):
     assert got.filter(F.col("note").isNull()).count() == 300
 
 
-def test_add_column_table_source_skips_declared_only(spark, table):
-    """Review r10: the versioned_table DataSource's physical/logical
-    column lists must stay positionally aligned when a declared-only
-    column exists — it is skipped on BOTH sides (the Arrow reader has
-    no bytes to serve), and appears once real data lands."""
+def test_add_column_table_source_serves_declared_as_null(spark, table):
+    """The versioned_table DataSource serves a declared-only column as
+    NULL, as read_table does, with its physical/logical column lists
+    positionally aligned (every other column keeps its values); real
+    values show once data lands."""
     from aws_etl_project2_fiap_spark.streaming.table_source import (
         build_versioned_table_source,
     )
 
     spark.dataSource.register(build_versioned_table_source())
+    V.rename_column(table, "v", "price")
     V.add_column(spark, table, "q", "double")
     df = spark.read.format("versioned_table").option("path", table).load()
-    assert "q" not in df.columns
-    assert df.count() == 300
+    assert df.columns == ["id", "g", "price", "q"]
+    assert df.schema == V.read_table(spark, table).schema
+    assert sorted(
+        tuple(r) for r in df.collect()
+    ) == [(i, i % 3, i * 2.0, None) for i in range(300)]
     V.append_table(
         spark.range(300, 302).select(
             F.col("id"), (F.col("id") % 3).alias("g"),
-            (F.col("id") * 2.0).alias("v"), F.lit(0.5).alias("q"),
+            (F.col("id") * 2.0).alias("price"), F.lit(0.5).alias("q"),
         ),
         table,
     )

@@ -411,6 +411,41 @@ def test_merge_publish_conflicts_on_same_file(spark, tmp_path):
     assert before == after
 
 
+def test_publish_onto_moved_table_unions_schemas(spark, tmp_path):
+    """A column either side appended while the stage was open is kept
+    by an append or merge publish (no conflict); a column both sides
+    appended with different types is a CommitConflict."""
+    tbl = _table(spark, tmp_path)
+    for mode in ("append", "merge"):
+        stg = str(tmp_path / f"s_{mode}")
+        W.begin_stage(spark, tbl, stg)
+        V.append_table(
+            spark.range(1000, 1002).select(
+                "id", F.lit(1.0).alias("x"), F.lit(mode).alias(f"s_{mode}")
+            ),
+            stg,
+        )
+        V.append_table(
+            spark.range(2000, 2002).select(
+                "id", F.lit(2.0).alias("x"), F.lit(7).alias(f"t_{mode}")
+            ),
+            tbl,
+        )
+        W.publish_stage(spark, tbl, stg, mode=mode)
+        got = V.read_table(spark, tbl)
+        assert {f"s_{mode}", f"t_{mode}"} <= set(got.columns)
+        assert got.filter(F.col(f"s_{mode}") == mode).count() == 2
+        assert got.filter(F.col(f"t_{mode}") == 7).count() == 2
+    stg = str(tmp_path / "s_clash")
+    W.begin_stage(spark, tbl, stg)
+    V.append_table(spark.range(1).select("id", F.lit("a").alias("c")), stg)
+    V.append_table(spark.range(1).select("id", F.lit(1).alias("c")), tbl)
+    before = V.current_version(tbl)
+    with pytest.raises(V.CommitConflict, match="column 'c'"):
+        W.publish_stage(spark, tbl, stg, mode="merge")
+    assert V.current_version(tbl) == before
+
+
 def test_merge_publish_conflicts_on_structural_divergence(spark, tmp_path):
     """Either side evolving cluster/mapping state since the base makes
     a file-level reconcile unsound — must conflict, never guess."""
