@@ -99,7 +99,9 @@ def _pointer(path: str) -> str:
 # file list — zero data IO on a 100 TB table. Readers project
 # physical → logical after the scan; writers (append/update/merge/
 # overwrite rewrites) translate logical → physical before writing, so
-# every data file keeps the physical schema forever. No mapping key
+# every data file keeps the physical schema forever (an OVERWRITE too:
+# a column its base maps keeps its physical name, so the change feed
+# lines removed rows up with new ones). No mapping key
 # (the common case) means identity — zero overhead on any path.
 # Time travel reads each version under ITS OWN mapping (v1 before a
 # rename shows the old name), because the mapping lives in the
@@ -1639,15 +1641,25 @@ def overwrite_table(df: DataFrame, path: str) -> int:
 
     The new version's schema is ``df``'s (the new version references
     only the new files, so no old column — live, dropped or declared
-    — survives), and under a column mapping the mapping is REBUILT as
-    identity over ``df``'s columns. Time travel still reads each old
-    version under its own manifest's schema and mapping."""
+    — survives). Under a column mapping the mapping is rebuilt over
+    ``df``'s columns: a column the base version maps keeps its
+    physical name (physical names never change, so the change feed
+    across the overwrite lines old rows up with new ones), and a new
+    column gets a name no column of the base schema holds. Time travel
+    still reads each old version under its own schema and mapping."""
     _enforce_constraints(df, path)
     base_version = current_version(path)
     manifest = _read_manifest(path, base_version)
-    extra = {"schema": _schema_json(df.schema)}
-    if manifest.get("column_mapping"):
-        extra["column_mapping"] = {c: c for c in df.columns}
+    mapping = manifest.get("column_mapping")
+    extra = {}
+    if mapping:
+        taken = set(_schema(manifest, path).fieldNames())
+        mapping = {
+            c: mapping.get(c) or _mint_physical(c, taken) for c in df.columns
+        }
+        extra["column_mapping"] = mapping
+    phys = _to_physical(df, mapping)
+    extra["schema"] = _schema_json(phys.schema)
     # the cluster spec survives an overwrite (it describes the table's
     # intended layout, not any one version's files) — the new data is
     # laid out under it when it carries every spec column
@@ -1656,10 +1668,11 @@ def overwrite_table(df: DataFrame, path: str) -> int:
     if spec and spec.get("cols") and all(
         _spec_source_col(c) in df.columns for c in spec["cols"]
     ):
-        cluster_by, spec_id = list(spec["cols"]), spec["spec_id"]
+        cluster_by = [_phys_spec_col(mapping, c) for c in spec["cols"]]
+        spec_id = spec["spec_id"]
     return _commit(
         path,
-        _write_batch(df, path, cluster_by=cluster_by, spec_id=spec_id),
+        _write_batch(phys, path, cluster_by=cluster_by, spec_id=spec_id),
         extra=extra,
         expect_version=base_version,
         operation="OVERWRITE",
@@ -3048,16 +3061,17 @@ def table_changes(
       that reconciles on a key)
 
     Cost ∝ changed files only — untouched files are in both manifests
-    and never read. Output: the table columns + ``_change_type`` +
-    ``_commit_version`` columns (the version whose manifest first/last
-    carries the file)."""
-    lo = _read_manifest(path, from_version)["files"]
+    and never read. Output: the TO version's columns +
+    ``_change_type``. A range over which a column's type changed (an
+    OVERWRITE may retype) raises ``ValueError`` when files were
+    removed: their rows have no faithful form in the TO schema."""
+    lo_manifest = _read_manifest(path, from_version)
+    lo = lo_manifest["files"]
     hi_manifest = _read_manifest(path, to_version)
     hi = hi_manifest["files"]
-    # all legs read under the TO version's schema and mapping: physical
-    # names never change, so the rows of removed (FROM-side) files
-    # alias identically — a consumer always sees the feed in the
-    # destination version's logical schema
+    # every leg comes out in the TO version's logical schema; physical
+    # names never change (an overwrite keeps the ones its base maps),
+    # so a removed file's column lines up by its physical name
     mapping = hi_manifest.get("column_mapping")
     schema = _schema(hi_manifest, path)
 
@@ -3065,6 +3079,36 @@ def table_changes(
         return _apply_mapping(
             _scan(spark, entries, schema, keep_meta), mapping
         ).withColumn("_change_type", F.lit(change_type))
+
+    def removed_leg(entries):
+        # a removed file is read as the FROM version saw it (its schema:
+        # an overwrite may have retyped or replaced its columns), then
+        # projected onto the TO schema — a column FROM lacks is NULL
+        lo_schema = _schema(lo_manifest, path)
+        old = {f.name: f.dataType for f in lo_schema.fields}
+        live = set(mapping.values()) if mapping else set(schema.names)
+        retyped = sorted(
+            f"{f.name}: v{from_version}={old[f.name].simpleString()} "
+            f"v{to_version}={f.dataType.simpleString()}"
+            for f in schema.fields
+            if f.name in live and f.name in old and old[f.name] != f.dataType
+        )
+        if retyped:
+            raise ValueError(
+                f"change feed of {path} from v{from_version} to "
+                f"v{to_version} spans a column type change "
+                f"({', '.join(retyped)}): the removed rows cannot be "
+                f"shown in the v{to_version} schema; read each version "
+                f"instead"
+            )
+        df = _scan(spark, entries, lo_schema).select(*[
+            F.col(f.name) if f.name in old
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ])
+        return _apply_mapping(df, mapping).withColumn(
+            "_change_type", F.lit("delete")
+        )
 
     lo_by_path = {f["path"]: f for f in lo}
     hi_by_path = {f["path"]: f for f in hi}
@@ -3075,7 +3119,7 @@ def table_changes(
     # removed file's rows as the FROM version saw them (its DVs)
     parts = [leg(added, "insert")] if added else []
     if removed:
-        parts.append(leg(removed, "delete"))
+        parts.append(removed_leg(removed))
     # DV-only deltas for files present in BOTH versions:
     # - positions newly covered by the TO version's deletion vector →
     #   `delete` rows (a merge-on-read DELETE adds/removes no files and

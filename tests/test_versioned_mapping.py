@@ -356,6 +356,59 @@ def test_overwrite_rebuilds_mapping(spark, table):
     assert old.count() == 300
 
 
+def test_change_feed_across_rename_then_overwrite(spark, table, tmp_path):
+    """An overwrite keeps the physical names its base maps and mints
+    fresh ones for new columns, so the change feed over rename →
+    overwrite shows every replaced row with its values — and a sum
+    view folding that feed subtracts them instead of doubling."""
+    from aws_etl_project2_fiap_spark.io import matview as MV
+
+    V.rename_column(table, "v", "price")  # v2: price → physical v
+    dst = str(tmp_path / "mv")
+    MV.create_aggregate_view(
+        spark, table, dst, ["g"], {"total": ("sum", "price")}
+    )
+    # 'v' is new here, but its name is price's physical one
+    V.overwrite_table(
+        spark.createDataFrame(
+            [(1, 1, 5.0, 9.0), (2, 2, 7.0, 9.0)],
+            "id long, g long, price double, v double",
+        ),
+        table,
+    )  # v3
+    m3 = V._read_manifest(table, 3)["column_mapping"]
+    assert m3["price"] == "v" and m3["v"] not in ("v", "price")
+    ch = V.table_changes(spark, table, 2, 3)
+    dels = ch.filter(F.col("_change_type") == "delete")
+    assert dels.count() == 300
+    assert dels.filter(F.col("price").isNull()).count() == 0
+    assert dels.filter(F.col("v").isNotNull()).count() == 0
+    assert ch.filter(F.col("_change_type") == "insert").count() == 2
+    MV.refresh_aggregate_view(spark, dst)
+    got = {
+        r["g"]: r["total"]
+        for r in MV.read_aggregate_view(spark, dst).collect()
+    }
+    assert got == {1: 5.0, 2: 7.0}
+
+
+def test_change_feed_across_retyping_overwrite_raises(spark, table):
+    """An overwrite may retype a column; the rows it removed have no
+    faithful form in the new type, so the feed across it fails loudly
+    (at build time, before any read) while each version still reads."""
+    V.overwrite_table(
+        spark.createDataFrame([(1, 1, 5)], "id long, g long, v int"), table
+    )  # v2: v double → int
+    with pytest.raises(ValueError, match="type change.*v: v1=double v2=int"):
+        V.table_changes(spark, table, 1, 2)
+    assert V.read_table(spark, table, version=1).count() == 300
+    assert V.read_table(spark, table).collect()[0]["v"] == 5
+    V.append_table(
+        spark.createDataFrame([(2, 2, 6)], "id long, g long, v int"), table
+    )  # v3: a range with no removed file is unaffected
+    assert V.table_changes(spark, table, 2, 3).count() == 1
+
+
 def test_rollback_past_overwrite_restores_retired_ledger(spark, table):
     """OVERWRITE frees retired names (no old file survives), but a
     rollback PAST the overwrite brings the old files — and their

@@ -723,11 +723,12 @@ def test_abandon_refuses_pending_publish_intent(spark, tmp_path):
 def test_merge_publish_after_vacuum_of_base_conflicts_loudly(
     spark, tmp_path
 ):
-    """Vacuum-safety for the branch-merge path: if a vacuum on the
-    PRODUCTION table dropped the stage's base manifest between
-    begin_stage and publish_stage(mode='merge'), the three-way diff is
-    underivable — the publish must raise CommitConflict (never guess,
-    never resurrect vacuumed files), and the table must be untouched."""
+    """Vacuum-safety for the publish paths that read the stage's base
+    (mode='merge' and mode='append'): if a vacuum on the PRODUCTION
+    table dropped the stage's base manifest between begin_stage and
+    publish_stage, the diff against the base is underivable — the
+    publish must raise CommitConflict (never guess, never resurrect
+    vacuumed files), and the table must be untouched."""
     tbl = _table(spark, tmp_path)
     stg = str(tmp_path / "s")
     W.begin_stage(spark, tbl, stg)
@@ -743,9 +744,12 @@ def test_merge_publish_after_vacuum_of_base_conflicts_loudly(
     V.delete_from(spark, tbl, F.col("id") < 5, mode="cow")
     V.vacuum(tbl, keep_last=1)
     before = V.read_table(spark, tbl).count()
-    with pytest.raises(V.CommitConflict, match="vacuumed"):
-        W.publish_stage(spark, tbl, stg, mode="merge")
-    assert V.read_table(spark, tbl).count() == before
+    head = V.current_version(tbl)
+    for mode in ("append", "merge"):
+        with pytest.raises(V.CommitConflict, match="vacuumed"):
+            W.publish_stage(spark, tbl, stg, mode=mode)
+        assert V.current_version(tbl) == head
+        assert V.read_table(spark, tbl).count() == before
 
 
 def test_merge_publish_with_surviving_base_never_resurrects(
