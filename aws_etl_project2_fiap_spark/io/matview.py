@@ -41,6 +41,8 @@ hidden ``__mv_cnt`` row-count detects groups whose last row left.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,6 +54,10 @@ _SUPPORTED = {"sum", "count", "avg", "min", "max"}
 # hidden row-count: present in every view so refresh can tell "group
 # now empty → delete its row" from "group untouched"
 _CNT = "__mv_cnt"
+
+# merge_table's target and source aliases: a view column of either name
+# makes every refresh merge's column references ambiguous
+_MERGE_ALIASES = {"t", "s"}
 
 
 class StaleDimensions(RuntimeError):
@@ -73,6 +79,14 @@ def _check_spec(group_by: list[str], aggs: dict) -> None:
             ("__mvsum", "__mvcnt", "__mvnn")
         ):
             raise ValueError(f"agg output name {out!r} is reserved")
+    aliased = sorted(
+        c for c in [*group_by, *aggs] if c.lower() in _MERGE_ALIASES
+    )
+    if aliased:
+        raise ValueError(
+            f"view column(s) {aliased} collide with the refresh merge's "
+            f"target/source aliases {sorted(_MERGE_ALIASES)}; rename them"
+        )
 
 
 def _guard_reserved_cols(cols: list[str], what: str) -> None:
@@ -153,14 +167,13 @@ def _recompute(
     """The touched groups' state recomputed from ``src``: one row per
     touched group, with NULL state (``__mv_cnt`` NULL) for a group no
     source row survives in — :func:`_recompute_clauses` deletes those
-    in the same merge. Materialized once: the merge re-reads it (key
-    checks, probe, join) and its lineage is a source scan."""
+    in the same merge."""
     state = (
         src.join(touched, keys, "left_semi")
         .groupBy(*keys)
         .agg(*_state_exprs(aggs))
     )
-    return touched.join(state, keys, "left").localCheckpoint(eager=True)
+    return touched.join(state, keys, "left")
 
 
 def _recompute_clauses() -> dict:
@@ -209,9 +222,26 @@ def _delta_exprs(aggs: dict, sign: Column) -> list[Column]:
     return exprs
 
 
+def _signed_delta(rows: DataFrame, keys: list[str], aggs: dict,
+                  sign: Column) -> DataFrame:
+    """The signed delta of ``rows`` (``sign`` +1 adds a row, −1 takes
+    it away) per group, as view state columns. All-zero deltas drop
+    (an UPDATE's unchanged rows cancel exactly: delete −x + insert +x):
+    no reason to probe the view for groups whose net change is
+    nothing. NULL-safe: a delta whose every term is NULL contributes
+    nothing either."""
+    delta = rows.groupBy(*keys).agg(*_delta_exprs(aggs, sign))
+    nonzero = F.lit(False)
+    for c in delta.columns:
+        if c not in keys:
+            nonzero = nonzero | (F.coalesce(F.col(c), F.lit(0)) != 0)
+    return delta.filter(nonzero)
+
+
 def _null_key_expr(keys: list[str]) -> Column:
-    """TRUE where any group key is NULL (aggregated via F.max to ride
-    an existing stats collect — no extra Spark job per refresh)."""
+    """TRUE where any group key is NULL (aggregated via F.max so
+    :func:`_fold` reads it in the same collect as its row count — no
+    extra Spark job per fold)."""
     cond = None
     for c in keys:
         cond = F.col(c).isNull() if cond is None else cond | F.col(c).isNull()
@@ -227,17 +257,6 @@ def _raise_null_keys(keys: list[str], what: str) -> None:
     )
 
 
-def _guard_null_keys(df: DataFrame, keys: list[str], what: str) -> None:
-    """The refresh MERGE probes join on SQL equality, where NULL
-    matches nothing — a NULL-keyed group could never be updated, only
-    duplicated (delta path) or silently dropped (scoped path). Create
-    rejects NULL keys up front; the refresh paths mirror it (folded
-    into their stats collects) in case the source gained NULL-keyed
-    rows later."""
-    if df.agg(_null_key_expr(keys).alias("x")).collect()[0]["x"]:
-        _raise_null_keys(keys, what)
-
-
 def _lost_refresh(dst: str, frm: int, to: int) -> dict:
     """Another refresher claimed this CDF range first (its commit CAS
     beat ours): nothing was folded twice — report a no-op."""
@@ -245,6 +264,62 @@ def _lost_refresh(dst: str, frm: int, to: int) -> dict:
         "strategy": "noop", "from_version": frm, "to_version": to,
         "view_version": V.current_version(dst), "groups_changed": 0,
     }
+
+
+def _fold(
+    spark: SparkSession,
+    dst: str,
+    view_v: int,
+    new_meta: dict,
+    keys: list[str],
+    rows: DataFrame,
+    what: str,
+    operation: str,
+    recompute: Callable[[DataFrame], DataFrame] | None = None,
+) -> tuple[int, int]:
+    """Commit one fold into the view ``dst`` as one commit CAS'd on
+    ``view_v`` (the version its watermark was read from) that records
+    ``new_meta``: every refresh and dimension evolution goes through
+    here. ``rows`` is a signed delta (:func:`_signed_delta`) folded by
+    addition, or — with ``recompute`` (touched groups → their state,
+    :func:`_recompute`) — the touched-group list, whose groups are
+    recomputed and replaced.
+
+    ``rows`` is materialized once (the count, the merge's key profile,
+    probe and join all re-read it, and its lineage is a change-feed
+    scan), counted, and checked for NULL group keys (``what`` names it
+    in the error: the MERGE probes join on SQL equality, where a
+    NULL-keyed group could never be updated). An empty fold still
+    advances the watermark in a metadata-only commit titled
+    ``operation`` — and builds no recompute, so it reads no source
+    rows. Returns ``(view_version, groups_changed)``; a lost CAS raises
+    :class:`~versioned.CommitConflict` for the caller to resolve."""
+    rows = rows.localCheckpoint(eager=True)
+    stats = rows.agg(
+        F.count(F.lit(1)).alias("n"), _null_key_expr(keys).alias("null_key")
+    ).collect()[0]
+    if stats["null_key"]:
+        _raise_null_keys(keys, what)
+    n = int(stats["n"])
+    if n == 0:
+        return V._commit(
+            dst,
+            V._read_manifest(dst, view_v)["files"],
+            extra={"mv": new_meta},
+            expect_version=view_v,
+            operation=operation,
+        ), 0
+    if recompute is None:
+        clauses = _fold_clauses([c for c in rows.columns if c not in keys])
+    else:
+        # materialized for the same reason as ``rows``; its lineage is
+        # a source scan
+        rows = recompute(rows).localCheckpoint(eager=True)
+        clauses = _recompute_clauses()
+    return V.merge_table(
+        spark, dst, rows, keys, **clauses,
+        extra={"mv": new_meta}, expect_version=view_v,
+    )["version"], n
 
 
 def _with_dims(spark: SparkSession, df: DataFrame, dims: list) -> DataFrame:
@@ -332,8 +407,10 @@ def create_aggregate_view(
     # NULL group keys: the refresh MERGE probes join on SQL equality
     # (NULL matches nothing — the Delta MERGE caveat), so a NULL-keyed
     # group could never be updated, only duplicated. Reject up front
-    # rather than drift silently later.
-    _guard_null_keys(state, group_by, "the view's initial state")
+    # rather than drift silently later; every fold checks again, in
+    # case the source gained NULL-keyed rows since.
+    if state.agg(_null_key_expr(group_by).alias("x")).collect()[0]["x"]:
+        _raise_null_keys(group_by, "the view's initial state")
     meta = {
         "source": source,
         "source_version": src_version,
@@ -553,123 +630,43 @@ def refresh_aggregate_view(
             "strategy": "noop", "from_version": frm, "to_version": to,
             "view_version": V.current_version(dst), "groups_changed": 0,
         }
-    new_meta = {**meta, "source_version": to}
     cdf = _with_dims(spark, V.table_changes(spark, source, frm, to), dims)
     if all(fn in _SELF_MAINTAINABLE for fn, _ in aggs.values()):
-        sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
-            F.lit(-1)
+        strategy, recompute, what = "delta", None, "the CDF delta"
+        rows = _signed_delta(
+            cdf, keys, aggs,
+            F.when(F.col("_change_type") == "insert", F.lit(1))
+            .otherwise(F.lit(-1)),
         )
-        delta = cdf.groupBy(*keys).agg(*_delta_exprs(aggs, sign))
-        # drop all-zero deltas (an UPDATE's unchanged rows cancel
-        # exactly: delete −x + insert +x): no reason to probe the view
-        # for groups whose net change is nothing. NULL-safe: a delta
-        # whose every term is NULL contributes nothing either.
-        state_cols = [c for c in delta.columns if c not in keys]
-        nonzero = F.lit(False)
-        for c in state_cols:
-            nonzero = nonzero | (F.coalesce(F.col(c), F.lit(0)) != 0)
-        delta = delta.filter(nonzero)
-        # materialize the delta ONCE: it is re-read several times below
-        # (stats, the merge's key probe, the merge itself), and its
-        # lineage is the full CDF scan — without this, every consumer
-        # re-executes that scan. The delta itself is tiny (one row per
-        # changed group), so the checkpoint is cheap and spills if a
-        # giant backfill makes it large.
-        delta = delta.localCheckpoint(eager=True)
-        stats = delta.agg(
-            F.count(F.lit(1)).alias("n"),
-            _null_key_expr(keys).alias("null_key"),
-        ).collect()[0]
-        n = stats["n"]
-        if stats["null_key"]:
-            _raise_null_keys(keys, "the CDF delta")
-        if n == 0:
-            # still advance the watermark (metadata-only commit) so the
-            # next refresh doesn't re-derive this CDF range
-            try:
-                ver = V._commit(
-                    dst,
-                    V._read_manifest(dst, view_v)["files"],
-                    extra={"mv": new_meta},
-                    expect_version=view_v,
-                    operation=f"REFRESH_MV(v{frm}->v{to})",
-                )
-            except V.CommitConflict:
-                if view_meta(dst)["source_version"] >= to:
-                    return _lost_refresh(dst, frm, to)
-                raise
-            return {
-                "strategy": "delta", "from_version": frm, "to_version": to,
-                "view_version": ver, "groups_changed": 0,
-            }
-        # exactly-once under racing refreshers: CAS the fold on the
-        # view version the watermark was read from — the loser's
-        # conflict means the OTHER refresher folded this range
-        try:
-            V.merge_table(
-                spark, dst, delta, keys, **_fold_clauses(state_cols),
-                extra={"mv": new_meta},
-                expect_version=view_v,
+    else:
+        # scoped: recompute only the touched groups from the source
+        # head. (A source OPTIMIZE re-emits its rewritten files' rows in
+        # the CDF, so compaction triggers recompute of those files'
+        # groups — correct and bounded by the compacted bytes, but
+        # schedule big compactions with that in mind.)
+        strategy, what = "scoped", "the CDF's touched-group list"
+        rows = cdf.select(*keys).distinct()
+
+        def recompute(touched: DataFrame) -> DataFrame:
+            src = V.read_table(spark, source, version=to)
+            return _recompute(
+                _with_dims(spark, src, dims), touched, keys, aggs
             )
-        except V.CommitConflict:
-            if view_meta(dst)["source_version"] >= to:
-                return _lost_refresh(dst, frm, to)
-            raise
-        return {
-            "strategy": "delta", "from_version": frm, "to_version": to,
-            "view_version": V.current_version(dst),
-            "groups_changed": int(n),
-        }
-    # scoped: recompute only the touched groups from the source head.
-    # (A source OPTIMIZE re-emits its rewritten files' rows in the CDF,
-    # so compaction triggers recompute of those files' groups — correct
-    # and bounded by the compacted bytes, but schedule big compactions
-    # with that in mind.)
-    # materialized once for the same reason as the delta path: the
-    # group list is re-read by its own count, the semi-join and the
-    # left join, and its lineage is the full CDF scan
-    touched = cdf.select(*keys).distinct().localCheckpoint(eager=True)
-    tstats = touched.agg(
-        F.count(F.lit(1)).alias("n"), _null_key_expr(keys).alias("null_key")
-    ).collect()[0]
-    n = tstats["n"]
-    if tstats["null_key"]:
-        _raise_null_keys(keys, "the CDF's touched-group list")
-    if n == 0:
-        # metadata-only source commit (rename/cluster-spec/...): advance
-        # the watermark so the next refresh skips this range
-        try:
-            ver = V._commit(
-                dst,
-                V._read_manifest(dst, view_v)["files"],
-                extra={"mv": new_meta},
-                expect_version=view_v,
-                operation=f"REFRESH_MV(v{frm}->v{to})",
-            )
-        except V.CommitConflict:
-            if view_meta(dst)["source_version"] >= to:
-                return _lost_refresh(dst, frm, to)
-            raise
-        return {
-            "strategy": "scoped", "from_version": frm, "to_version": to,
-            "view_version": ver, "groups_changed": 0,
-        }
-    src = _with_dims(spark, V.read_table(spark, source, version=to), dims)
-    # exactly-once under racing refreshers (see the delta path)
+    # exactly-once under racing refreshers: the fold CASes on the view
+    # version the watermark was read from — the loser's conflict means
+    # the OTHER refresher folded this range
     try:
-        V.merge_table(
-            spark, dst, _recompute(src, touched, keys, aggs), keys,
-            **_recompute_clauses(),
-            extra={"mv": new_meta},
-            expect_version=view_v,
+        ver, n = _fold(
+            spark, dst, view_v, {**meta, "source_version": to}, keys,
+            rows, what, f"REFRESH_MV(v{frm}->v{to})", recompute,
         )
     except V.CommitConflict:
         if view_meta(dst)["source_version"] >= to:
             return _lost_refresh(dst, frm, to)
         raise
     return {
-        "strategy": "scoped", "from_version": frm, "to_version": to,
-        "view_version": V.current_version(dst), "groups_changed": int(n),
+        "strategy": strategy, "from_version": frm, "to_version": to,
+        "view_version": ver, "groups_changed": n,
     }
 
 
@@ -719,49 +716,22 @@ def _evolve_scoped_batched(
         for dd in (old_dims, new_dims):
             lg = _with_dims(spark, affected, dd).select(*keys)
             touched = lg if touched is None else touched.unionByName(lg)
-    touched = touched.distinct().localCheckpoint(eager=True)
-    tstats = touched.agg(
-        F.count(F.lit(1)).alias("n"),
-        _null_key_expr(keys).alias("null_key"),
-    ).collect()[0]
-    n = tstats["n"]
-    if tstats["null_key"]:
-        _raise_null_keys(keys, "the dim-evolution touched-group list")
-    new_meta = {**meta, "dims": new_dims}
-    if n == 0:
-        try:
-            ver = V._commit(
-                dst,
-                V._read_manifest(dst, view_v)["files"],
-                extra={"mv": new_meta},
-                expect_version=view_v,
-                operation=f"EVOLVE_MV_DIMS({len(moved)})",
-            )
-        except V.CommitConflict:
-            # lost the CAS: restart from a fresh snapshot (noop if the
-            # racer folded everything) — nothing of ours committed
-            return evolve_dimensions(spark, dst)
-        return {
-            "strategy": "scoped", "dims_evolved": len(moved),
-            "groups_changed": 0,
-            "view_version": ver,
-        }
-    src = _with_dims(spark, fact, new_dims)
     try:
-        committed = V.merge_table(
-            spark, dst, _recompute(src, touched, keys, aggs), keys,
-            **_recompute_clauses(),
-            extra={"mv": new_meta},
-            expect_version=view_v,
-        )["version"]
+        ver, n = _fold(
+            spark, dst, view_v, {**meta, "dims": new_dims}, keys,
+            touched.distinct(), "the dim-evolution touched-group list",
+            f"EVOLVE_MV_DIMS({len(moved)})",
+            lambda t: _recompute(
+                _with_dims(spark, fact, new_dims), t, keys, aggs
+            ),
+        )
     except V.CommitConflict:
         # lost the CAS: nothing of ours committed — restart from a
-        # fresh snapshot (the racer's folds become noops there)
+        # fresh snapshot (noop if the racer folded everything)
         return evolve_dimensions(spark, dst)
     return {
         "strategy": "scoped", "dims_evolved": len(moved),
-        "groups_changed": int(n),
-        "view_version": committed,
+        "groups_changed": n, "view_version": ver,
     }
 
 
@@ -906,21 +876,6 @@ def evolve_dimensions(spark: SparkSession, dst: str) -> dict:
             ],
         }
         signed = leg(d["version"], -1).unionByName(leg(cur_v, 1))
-        delta = signed.groupBy(*keys).agg(
-            *_delta_exprs(aggs, F.col("__mv_sign"))
-        )
-        state_cols = [c for c in delta.columns if c not in keys]
-        nonzero = F.lit(False)
-        for c in state_cols:
-            nonzero = nonzero | (F.coalesce(F.col(c), F.lit(0)) != 0)
-        delta = delta.filter(nonzero).localCheckpoint(eager=True)
-        stats = delta.agg(
-            F.count(F.lit(1)).alias("n"),
-            _null_key_expr(keys).alias("null_key"),
-        ).collect()[0]
-        n = stats["n"]
-        if stats["null_key"]:
-            _raise_null_keys(keys, "the dim-evolution delta")
         # every commit CASes on OUR chain (view_v threads forward): a
         # foreign commit between our commits can never be folded over
         # with legs derived from the stale snapshot — losing the CAS
@@ -928,42 +883,28 @@ def evolve_dimensions(spark: SparkSession, dst: str) -> dict:
         # racer already folded become noops there; our own committed
         # per-dim folds are durable), the same lost-race convergence
         # refresh_aggregate_view has
-        folded_this = False
         try:
-            if n == 0:
-                view_v = V._commit(
-                    dst,
-                    V._read_manifest(dst, view_v)["files"],
-                    extra={"mv": new_meta},
-                    expect_version=view_v,
-                    operation=f"EVOLVE_MV_DIM({d['path']}@v{cur_v})",
-                )
-                folded_this = True
-            else:
-                view_v = V.merge_table(
-                    spark, dst, delta, keys, **_fold_clauses(state_cols),
-                    extra={"mv": new_meta},
-                    expect_version=view_v,
-                )["version"]
-                folded_this = True
+            view_v, n = _fold(
+                spark, dst, view_v, new_meta, keys,
+                _signed_delta(signed, keys, aggs, F.col("__mv_sign")),
+                "the dim-evolution delta",
+                f"EVOLVE_MV_DIM({d['path']}@v{cur_v})",
+            )
         except V.CommitConflict:
             rest = evolve_dimensions(spark, dst)
-            ours = total_folded + (1 if folded_this else 0)
             return {
                 # "noop" only if WE folded nothing and the restart had
                 # nothing left (the racer did it all)
                 "strategy": (
                     rest["strategy"]
-                    if rest["strategy"] != "noop" or ours == 0
+                    if rest["strategy"] != "noop" or total_folded == 0
                     else "delta"
                 ),
-                "dims_evolved": ours + rest["dims_evolved"],
-                "groups_changed": total_groups
-                + (int(n) if folded_this else 0)
-                + rest["groups_changed"],
+                "dims_evolved": total_folded + rest["dims_evolved"],
+                "groups_changed": total_groups + rest["groups_changed"],
                 "view_version": rest["view_version"],
             }
-        total_groups += int(n)
+        total_groups += n
         total_folded += 1
         dims[i] = {**d, "version": cur_v}
         meta = new_meta

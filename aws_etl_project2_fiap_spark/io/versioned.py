@@ -372,14 +372,15 @@ def _null_cols(fpath: str) -> list[str]:
 
 _BLOOM_HASHES = 7
 # merge-probe bloom pruning collects the source's distinct key values
-# to the driver; past this bound the collect is skipped entirely (the
-# probe scan absorbs the cost) — deliveries, not tables, fit under it
+# to the driver; when the source has more distinct keys than this the
+# collect is skipped entirely (the probe scan absorbs the cost) —
+# deliveries, not tables, fit under it
 _MERGE_BLOOM_PROBE_CAP = 100_000
 # merge's semi/anti key probes hint F.broadcast only while the source
-# is provably delivery-sized (a bounded limit+count, never a full
-# count) — past the cap the hint is dropped and AQE picks the join, so
-# a table-sized merge source (e.g. a replica re-sync) can never force
-# a table-sized broadcast the optimizer would refuse
+# is delivery-sized (its row count, from the same aggregate that finds
+# duplicate keys) — past the cap the hint is dropped and AQE picks the
+# join, so a table-sized merge source (e.g. a replica re-sync) can
+# never force a table-sized broadcast the optimizer would refuse
 _MERGE_BROADCAST_CAP = 2_000_000
 # two independent 16-byte hash keys for pandas' vectorized SipHash —
 # the double-hashing scheme h1 + i*h2 derives all k probe positions
@@ -2123,25 +2124,73 @@ def vacuum(
     return removed
 
 
+def _source_profile(source: DataFrame, keys: list[str]) -> dict:
+    """Everything a MERGE checks about its source, from ONE aggregate
+    over the per-key counts (the source's lineage runs once):
+    ``rows``, ``distinct_keys``, ``dup`` (one duplicated key as a
+    ``{key: value}`` dict, or None — two NULL-key rows group together
+    and count as a duplicate), ``null_key`` (any key column NULL) and
+    ``envelope`` (each key's ``(min, max)``, NULL keys ignored; both
+    None for an empty source). Shared by :func:`merge_table` and
+    :func:`merge_probe_plan`."""
+    null_key = F.lit(False)
+    for k in keys:
+        null_key = null_key | F.col(k).isNull()
+    row = (
+        source.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(
+            F.sum("__n").alias("__rows"),
+            F.count(F.lit(1)).alias("__distinct"),
+            F.max("__n").alias("__max_n"),
+            F.max_by(F.struct(*keys), "__n").alias("__dup"),
+            F.max(null_key).alias("__null_key"),
+            *[
+                c
+                for i, k in enumerate(keys)
+                for c in (
+                    F.min(k).alias(f"__lo{i}"), F.max(k).alias(f"__hi{i}")
+                )
+            ],
+        )
+        .collect()[0]
+    )
+    return {
+        "rows": int(row["__rows"] or 0),
+        "distinct_keys": int(row["__distinct"]),
+        "dup": (
+            dict(zip(keys, row["__dup"])) if (row["__max_n"] or 0) > 1
+            else None
+        ),
+        "null_key": bool(row["__null_key"]),
+        "envelope": [
+            (row[f"__lo{i}"], row[f"__hi{i}"]) for i in range(len(keys))
+        ],
+    }
+
+
 def _probe_keys(
-    source: DataFrame, keys: list[str]
+    source: DataFrame, keys: list[str], rows: int
 ) -> tuple[DataFrame, bool]:
     """The merge probes' build side: the source's key columns, hinted
-    ``F.broadcast`` only when a BOUNDED row probe (limit cap+1, count —
-    never a full count/scan of an unbounded source) proves the source
-    is delivery-sized. Past :data:`_MERGE_BROADCAST_CAP` the hint is
+    ``F.broadcast`` only while the source's profiled row count proves
+    it delivery-sized. Past :data:`_MERGE_BROADCAST_CAP` the hint is
     dropped and AQE sizes the join itself, so a table-sized merge
     source (``replicate_table`` re-syncs, bulk backfills) can never
     force a broadcast the optimizer would refuse. Returns
     ``(probe_df, hinted)`` so EXPLAIN can report the strategy."""
     probe = source.select(*keys)
-    if probe.limit(_MERGE_BROADCAST_CAP + 1).count() <= _MERGE_BROADCAST_CAP:
+    if rows <= _MERGE_BROADCAST_CAP:
         return F.broadcast(probe), True
     return probe, False
 
 
 def _prune_probe_entries(
-    source: DataFrame, files: list, mapping: dict | None, keys: list[str]
+    source: DataFrame,
+    files: list,
+    mapping: dict | None,
+    keys: list[str],
+    profile: dict,
 ) -> tuple[list, dict]:
     """The merge probe's FILE pruning, shared by :func:`merge_table`
     and :func:`merge_probe_plan` (EXPLAIN MERGE): returns the
@@ -2149,40 +2198,35 @@ def _prune_probe_entries(
 
     Stage 1 — stats envelope (the Delta MERGE scan-pruning idea): a
     file whose write-time [min, max] for ANY merge key cannot
-    intersect the source's key envelope can hold no match — compute
-    the envelope in one O(keys)-wide driver row and drop those files
-    BEFORE the probe scan. A delivery keyed into a narrow range of a
-    range-partitioned/z-ordered table probes (and rewrites) only the
-    files it can touch; the envelope is useless for scattered keys and
-    the probe then degrades gracefully to the full scan.
+    intersect the source's key envelope can hold no match — the
+    envelope comes from the :func:`_source_profile` aggregate, and
+    those files drop BEFORE the probe scan. A delivery keyed into a
+    narrow range of a range-partitioned/z-ordered table probes (and
+    rewrites) only the files it can touch; the envelope is useless for
+    scattered keys and the probe then degrades gracefully to the full
+    scan.
 
     Stage 2 — bloom-index + bucket-membership pruning catch what the
     envelope can't: SCATTERED keys. For each key column that is
     bloom-indexed or bucket-clustered (hidden partitioning), collect
-    the source's distinct values (bounded — past the cap the collect
-    is skipped, the probe scan absorbs it), then drop every file whose
-    bucket set misses ALL of the values' buckets (free — manifest-only)
-    and every file whose bloom rules out ALL of them."""
-    env = source.select(
-        *[
-            c
-            for i, k in enumerate(keys)
-            for c in (
-                F.min(k).alias(f"__lo{i}"),
-                F.max(k).alias(f"__hi{i}"),
-            )
-        ]
-    ).collect()[0]
+    the source's distinct values — only while the profile's distinct
+    key count is within :data:`_MERGE_BLOOM_PROBE_CAP` (a key tuple
+    has at least as many distinct values as any one key, so the
+    collect stays bounded; past the cap the probe scan absorbs it) —
+    then drop every file whose bucket set misses ALL of the values'
+    buckets (free — manifest-only) and every file whose bloom rules
+    out ALL of them."""
     probe_entries = files
-    for i, k in enumerate(keys):
-        lo, hi = env[f"__lo{i}"], env[f"__hi{i}"]
+    for k, (lo, hi) in zip(keys, profile["envelope"]):
         if lo is None:
             continue  # empty source: nothing prunes, probe finds 0
         probe_entries = prunable(
             probe_entries, _phys_col(mapping, k), lo, hi
         )[0]
     after_stats = len(probe_entries)
-    for k in keys:
+    # not delivery-sized: skip the value collects, stay cheap
+    bounded = profile["distinct_keys"] <= _MERGE_BLOOM_PROBE_CAP
+    for k in keys if bounded else []:
         pcol = _phys_col(mapping, k)
         has_bloom = any(
             f.get("blooms", {}).get(pcol) for f in probe_entries
@@ -2195,13 +2239,7 @@ def _prune_probe_entries(
         )
         if not (has_bloom or has_bucket):
             continue
-        rows = (
-            source.select(k).distinct()
-            .limit(_MERGE_BLOOM_PROBE_CAP + 1).collect()
-        )
-        if len(rows) > _MERGE_BLOOM_PROBE_CAP:
-            continue  # not delivery-sized on this key: skip, stay cheap
-        vals = [r[0] for r in rows]
+        vals = [r[0] for r in source.select(k).distinct().collect()]
         if has_bucket:
             probe_entries = prunable_bucket_any(
                 probe_entries, pcol, vals
@@ -2213,18 +2251,6 @@ def _prune_probe_entries(
         "files_after_stats": after_stats,
         "files_after_index": len(probe_entries),
     }
-
-
-def _source_has_null_keys(source: DataFrame, keys: list[str]) -> bool:
-    """One bounded probe: does any source row carry a NULL merge key?
-    Shared by merge_table's up-front reject and merge_probe_plan's
-    dry-run report."""
-    null_pred = None
-    for k in keys:
-        null_pred = F.col(k).isNull() if null_pred is None else (
-            null_pred | F.col(k).isNull()
-        )
-    return bool(source.filter(null_pred).limit(1).collect())
 
 
 def merge_probe_plan(
@@ -2239,8 +2265,9 @@ def merge_probe_plan(
     stats envelope, bucket membership, per-file blooms, then the
     (broadcast when delivery-sized) key semi-probe — WITHOUT mutating
     anything, and reports how far each stage narrowed the rewrite.
-    The null-merge-key guard merge_table enforces runs here too and
-    is REPORTED (``source_null_keys``) rather than raised, so EXPLAIN
+    The null-merge-key guard merge_table enforces reads the same one
+    source aggregate (:func:`_source_profile`) here, and is REPORTED
+    (``source_null_keys``) rather than raised, so EXPLAIN
     can show the full plan while flagging that the real MERGE would
     reject this source. Duplicate-key and WHEN-clause validation
     remain execution-time only (they need the clause dict, which
@@ -2257,10 +2284,11 @@ def merge_probe_plan(
     manifest = _read_manifest(path, base_version)
     files = manifest["files"]
     mapping = manifest.get("column_mapping")
+    profile = _source_profile(source, keys)
     probe_entries, counts = _prune_probe_entries(
-        source, files, mapping, keys
+        source, files, mapping, keys, profile
     )
-    probe_src, is_broadcast = _probe_keys(source, keys)
+    probe_src, is_broadcast = _probe_keys(source, keys, profile["rows"])
     if probe_entries:
         touched = (
             _apply_mapping(
@@ -2286,7 +2314,7 @@ def merge_probe_plan(
             "broadcast-semi" if is_broadcast else "shuffle-semi"
         ),
         "by_source_anti_probe": bool(has_by_source_clause),
-        "source_null_keys": _source_has_null_keys(source, keys),
+        "source_null_keys": profile["null_key"],
     }
 
 
@@ -2429,7 +2457,10 @@ def merge_table(
 
     Physical plan:
 
-    1. the source's merge-key envelope prunes files whose write-time
+    1. one aggregate over the source's per-key counts
+       (:func:`_source_profile`) finds its row count, a duplicate or
+       NULL key (either rejects the source before any probe), and the
+       merge-key envelope; the envelope prunes files whose write-time
        min/max stats cannot intersect it, bucket membership and
        per-file blooms prune scattered keys, and the surviving files
        take a semi-probe for actual key matches (a BROADCAST probe
@@ -2497,25 +2528,25 @@ def merge_table(
             bad = set(a) - allowed if isinstance(a, dict) else None
             if bad:
                 raise ValueError(f"{label} {what} columns {sorted(bad)}")
-    dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
-    if dup:
+    profile = _source_profile(source, keys)
+    if profile["dup"]:
         raise ValueError(
             f"merge source has duplicate merge keys, e.g. "
-            f"{ {k: dup[0][k] for k in keys} } — dedup (keep_latest) first"
+            f"{profile['dup']} — dedup (keep_latest) first"
         )
     # NULL merge keys never equi-join: such a source row could never
     # match, so every rerun would insert it again. Reject up front, same
     # as the dup check.
-    if _source_has_null_keys(source, keys):
+    if profile["null_key"]:
         raise ValueError(
             f"merge source has NULL in merge key(s) {keys} — NULL keys "
             f"never match; filter or fill them before merging"
         )
 
     probe_entries, _prune_counts = _prune_probe_entries(
-        source, files, mapping, keys
+        source, files, mapping, keys, profile
     )
-    probe_src, _ = _probe_keys(source, keys)
+    probe_src, _ = _probe_keys(source, keys, profile["rows"])
     touched: set[str] = set()
     if probe_entries:
         touched = {

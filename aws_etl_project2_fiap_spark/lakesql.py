@@ -97,6 +97,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .io import versioned as V
 
@@ -873,7 +874,8 @@ class LakeSQL:
         assigns = None
         if plan.nodeName() == "UpdateTable":
             assigns = self._assignments(
-                q, plan.assignments(), {name.lower()}, {}
+                q, plan.assignments(), {name.lower()}, {},
+                V.table_schema(self._path(name)),
             )
             cond = cond.get() if cond.isDefined() else None
         # a DELETE without WHERE parses to a bare TRUE, as WHERE TRUE does
@@ -899,11 +901,16 @@ class LakeSQL:
 
     @staticmethod
     def _assignments(
-        q: str, assignments, qualifiers: set[str], aliases: dict[str, str]
+        q: str, assignments, qualifiers: set[str], aliases: dict[str, str],
+        tschema: StructType,
     ) -> dict:
         """SET ``col = expr`` pairs as {column: Column}. A column may be
         qualified by one of ``qualifiers`` (lower-cased: the target's
-        name or alias); each value is its ``_text``."""
+        name or alias); each value is its ``_text``, cast to the
+        column's type in ``tschema`` (the target's schema) as SQL store
+        assignment and INSERT do. A column the table lacks stays uncast
+        for the write to reject."""
+        types = {f.name: f.dataType for f in tschema.fields}
         out = {}
         for a in _seq(assignments):
             parts = _name_parts(a.key())
@@ -914,7 +921,8 @@ class LakeSQL:
                     f"cannot parse assignment {_span(q, a.key())!r}: "
                     f"SET takes a column of the target table"
                 )
-            out[parts[-1]] = F.expr(_text(q, a.value(), aliases))
+            col, value = parts[-1], F.expr(_text(q, a.value(), aliases))
+            out[col] = value.cast(types[col]) if col in types else value
         return out
 
     # -- MERGE ---------------------------------------------------------
@@ -963,6 +971,7 @@ class LakeSQL:
                 q, minted
             )
             target = {a for a, side in aliases.items() if side == "t"}
+            tschema = V.table_schema(self._path(tname))
 
             def clauses(actions, what: str = "", absent: str = "") -> list:
                 out = []
@@ -972,7 +981,7 @@ class LakeSQL:
                         _reject_side_refs(q, a, aliases, absent, what)
                     if kind in ("UpdateAction", "InsertAction"):
                         action = self._assignments(
-                            q, a.assignments(), target, aliases
+                            q, a.assignments(), target, aliases, tschema
                         )
                     else:
                         action = {

@@ -260,24 +260,38 @@ def test_parse_errors_are_loud(spark, tmp_path):
     assert V.current_version(tbl) == 2
 
 
-def test_type_changing_merge_rejected_before_write(spark, tmp_path):
-    """MERGE ... UPDATE SET v = s.v / 2 on an int column computes a
-    double: SchemaConflict before any file lands, the version is
-    unchanged and the table still reads."""
+def test_set_values_cast_to_column_type(spark, tmp_path):
+    """UPDATE SET, MERGE UPDATE SET and MERGE INSERT (cols) VALUES
+    cast each value to its column's type, as INSERT and SQL store
+    assignment do: ``v = s.v / 2`` on an int column writes
+    ``CAST(s.v / 2 AS INT)`` in one new version, and the column stays
+    int."""
     tbl, srcp = str(tmp_path / "t"), str(tmp_path / "s")
     rows = spark.range(0, 10).select(
         F.col("id").alias("k"), F.col("id").cast("int").alias("v")
     )
     V.create_table(rows, tbl)
-    V.create_table(rows.filter(F.col("k") < 3), srcp)
+    V.create_table(
+        rows.filter(F.col("k") < 3).union(
+            spark.createDataFrame([(21, 21)], "k long, v int")
+        ),
+        srcp,
+    )
     lk = LakeSQL(spark, {"t": tbl, "s": srcp})
-    with pytest.raises(V.SchemaConflict, match="v: table=int"):
-        lk.sql(
-            "MERGE INTO t USING s ON t.k = s.k "
-            "WHEN MATCHED THEN UPDATE SET v = s.v / 2"
-        )
-    assert V.current_version(tbl) == 1
-    assert lk.sql("SELECT sum(v) AS n FROM t").collect()[0]["n"] == 45
+    lk.sql(
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v / 2 "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v / 4)"
+    )
+    assert V.current_version(tbl) == 2
+    lk.sql("UPDATE t SET v = v / 2 WHERE k = 9")
+    assert V.current_version(tbl) == 3
+    assert {
+        f.name: f.dataType.simpleString() for f in V.table_schema(tbl).fields
+    } == {"k": "bigint", "v": "int"}
+    got = {r["k"]: r["v"] for r in lk.sql("SELECT k, v FROM t").collect()}
+    assert got == {0: 0, 1: 0, 2: 1, **{k: k for k in range(3, 9)},
+                   9: 4, 21: 5}
 
 
 def test_select_builds_without_a_job(spark, tmp_path, count_jobs):
@@ -531,10 +545,10 @@ def test_matview_select_resolves_logical_columns(spark, tmp_path):
     view = str(tmp_path / "mv")
     lk.sql(
         f"CREATE MATERIALIZED VIEW mv LOCATION '{view}' AS "
-        "SELECT g, avg(v) AS a, sum(v) AS s FROM src GROUP BY g"
+        "SELECT g, avg(v) AS a, sum(v) AS sv FROM src GROUP BY g"
     )
-    rows = {r["g"]: (r["a"], r["s"])
-            for r in lk.sql("SELECT g, a, s FROM mv").collect()}
+    rows = {r["g"]: (r["a"], r["sv"])
+            for r in lk.sql("SELECT g, a, sv FROM mv").collect()}
     assert rows[1][0] == 3.0 and float(rows[1][1]) == 6.0
     assert rows[2] == (None, None)  # all-NULL group: SQL NULLs, not 0
     cols = lk.sql("SELECT * FROM mv").columns
@@ -1149,13 +1163,13 @@ def test_describe_matview_logical_schema(spark, tmp_path):
     lk = LakeSQL(spark, {"fact": fact})
     lk.sql(
         f"CREATE MATERIALIZED VIEW v LOCATION '{view}' AS "
-        "SELECT fk, avg(amount) AS a, sum(amount) AS s "
+        "SELECT fk, avg(amount) AS a, sum(amount) AS sv "
         "FROM fact GROUP BY fk"
     )
     rows = lk.sql("DESCRIBE v").collect()
     names = [r["col_name"] for r in rows]
     assert not any(n.startswith("__mv") for n in names)
-    assert names[:3] == ["fk", "a", "s"]
+    assert names[:3] == ["fk", "a", "sv"]
     marker = [r for r in rows if "materialized view" in r["col_name"]]
     assert marker and marker[0]["cluster"] == fact
     # DESCRIBE TABLE spells the same thing

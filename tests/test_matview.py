@@ -234,6 +234,41 @@ def test_bad_specs_raise(spark, tmp_path):
         MV.create_aggregate_view(spark, src, dst, [], {"s": ("sum", "x")})
 
 
+@pytest.mark.parametrize("keys, aggs", [
+    (["k"], {"s": ("sum", "x")}),
+    (["k"], {"T": ("count", None)}),
+    (["s"], {"sx": ("sum", "x")}),
+])
+def test_merge_alias_names_rejected_at_create(spark, tmp_path, keys, aggs):
+    """A group key or output named like the refresh merge's ``s``/``t``
+    aliases (any case) would make every non-empty refresh fail with an
+    ambiguous or unresolvable reference: create rejects it."""
+    src = _src(spark, tmp_path)
+    with pytest.raises(ValueError, match=r"aliases \['s', 't'\]"):
+        MV.create_aggregate_view(spark, src, str(tmp_path / "v"), keys, aggs)
+
+
+def test_delta_refresh_job_count_pinned(spark, tmp_path, count_jobs):
+    """A delta refresh after one append runs 15 Spark jobs (19 before
+    the fold and the merge's source checks each became one)."""
+    src = _src(spark, tmp_path)
+    dst = str(tmp_path / "view")
+    MV.create_aggregate_view(
+        spark, src, dst, ["k"], {"sx": ("sum", "x"), "cnt": ("count", None)}
+    )
+    V.append_table(
+        spark.range(0, 20).select(
+            (F.col("id") % 3).alias("k"),
+            (F.col("id") * 1.0).alias("x"),
+            F.col("id").alias("n"),
+        ),
+        src,
+    )
+    r, jobs = count_jobs(lambda: MV.refresh_aggregate_view(spark, dst))
+    assert (r["strategy"], r["groups_changed"]) == ("delta", 3)
+    assert jobs == 15
+
+
 @pytest.mark.slow  # randomized replay: full depth in the slow lane (r13)
 @settings(
     max_examples=6, deadline=None,

@@ -474,16 +474,18 @@ def test_prunable_eq_any_agrees_with_single_probe(spark, tmp_path):
 
 def test_probe_keys_hints_broadcast_only_under_cap(spark, monkeypatch):
     """merge's semi/anti probe build side carries F.broadcast only
-    while a bounded row probe proves the source delivery-sized; past
-    _MERGE_BROADCAST_CAP the hint is dropped and AQE sizes the join —
-    a table-sized merge source can never force a table-sized
+    while the source profile's row count proves it delivery-sized;
+    past _MERGE_BROADCAST_CAP the hint is dropped and AQE sizes the
+    join — a table-sized merge source can never force a table-sized
     broadcast."""
     src = spark.range(0, 50).select(F.col("id"))
-    probe, hinted = V._probe_keys(src, ["id"])
+    rows = V._source_profile(src, ["id"])["rows"]
+    assert rows == 50
+    probe, hinted = V._probe_keys(src, ["id"], rows)
     plan = probe._jdf.queryExecution().analyzed().toString()
     assert hinted and "broadcast" in plan.lower(), plan
     monkeypatch.setattr(V, "_MERGE_BROADCAST_CAP", 10)
-    probe_capped, hinted_capped = V._probe_keys(src, ["id"])
+    probe_capped, hinted_capped = V._probe_keys(src, ["id"], rows)
     plan_capped = probe_capped._jdf.queryExecution().analyzed().toString()
     assert not hinted_capped
     assert "broadcast" not in plan_capped.lower(), plan_capped
@@ -507,3 +509,106 @@ def test_merge_past_broadcast_cap_same_result(spark, table, monkeypatch):
     got = _rows(spark, table)
     assert set(got) == {i for i in range(300) if i % 2 == 0}
     assert got[10] == (1, 10.5)
+
+
+def test_duplicate_key_rejected_before_null_key(spark, table):
+    """A source holding both a duplicated key and a NULL key raises
+    the duplicate error: the one profile aggregate keeps the check
+    order, and names the duplicated key."""
+    src = spark.createDataFrame(
+        [(5, 0, 1.0), (5, 0, 2.0), (None, 0, 3.0)],
+        "id long, g long, v double",
+    )
+    with pytest.raises(
+        ValueError, match=r"duplicate merge keys, e\.g\. \{'id': 5\}"
+    ):
+        V.merge_table(spark, table, src, keys=["id"])
+    assert V.current_version(table) == 1
+
+
+def test_two_null_key_rows_count_as_duplicate(spark, table):
+    """Two NULL-key source rows group together, so they are a
+    duplicate key (raised before the NULL-key check)."""
+    src = spark.createDataFrame(
+        [(None, 0, 1.0), (None, 1, 2.0)], "id long, g long, v double"
+    )
+    with pytest.raises(
+        ValueError, match=r"duplicate merge keys, e\.g\. \{'id': None\}"
+    ):
+        V.merge_table(spark, table, src, keys=["id"])
+    src1 = src.limit(1)
+    with pytest.raises(ValueError, match="NULL in merge key"):
+        V.merge_table(spark, table, src1, keys=["id"])
+    assert V.current_version(table) == 1
+
+
+def test_empty_source_merges_with_zero_counts(spark, table):
+    src = spark.createDataFrame([], "id long, g long, v double")
+    res = V.merge_table(spark, table, src, keys=["id"])
+    assert (res["updated"], res["deleted"], res["inserted"]) == (0, 0, 0)
+    assert res["files_touched"] == 0
+    assert _rows(spark, table) == {i: (i % 3, float(i)) for i in range(300)}
+
+
+def test_probe_plan_reports_null_keys_from_the_profile(
+    spark, table, monkeypatch
+):
+    """EXPLAIN MERGE's ``source_null_keys`` comes from the same one
+    source aggregate that finds the envelope and the row count."""
+    calls = []
+    profile = V._source_profile
+    monkeypatch.setattr(
+        V, "_source_profile",
+        lambda *a: calls.append(a) or profile(*a),
+    )
+    for rows, has_null in (
+        ([(None, 0, 1.0), (4, 0, 2.0)], True),
+        ([(4, 0, 2.0)], False),
+    ):
+        src = spark.createDataFrame(rows, "id long, g long, v double")
+        plan = V.merge_probe_plan(spark, table, src, ["id"])
+        assert plan["source_null_keys"] is has_null
+        assert plan["files_matched"] == 1
+    assert len(calls) == 2
+
+
+class _Probed(Exception):
+    pass
+
+
+def test_profile_is_the_only_source_action_before_the_probe(
+    spark, table, monkeypatch, count_jobs
+):
+    """Up to the probe scan, a merge into an unindexed table runs
+    exactly the jobs of its source profile and nothing else."""
+    src = spark.createDataFrame(
+        [(1, 1, -1.0), (4, 1, -4.0), (1000, 1, 5.0)],
+        "id long, g long, v double",
+    )
+    _, profile_jobs = count_jobs(lambda: V._source_profile(src, ["id"]))
+
+    def probe(*a, **k):
+        raise _Probed
+
+    monkeypatch.setattr(V, "_scan", probe)
+
+    def merge():
+        with pytest.raises(_Probed):
+            V.merge_table(spark, table, src, keys=["id"])
+
+    assert count_jobs(merge)[1] == profile_jobs
+
+
+def test_merge_job_count_pinned(spark, table, count_jobs):
+    """A small merge runs 9 Spark jobs (14 before the source profile
+    replaced the separate duplicate, NULL-key, envelope and
+    broadcast-size actions)."""
+    src = spark.createDataFrame(
+        [(1, 1, -1.0), (4, 1, -4.0), (1000, 1, 5.0)],
+        "id long, g long, v double",
+    )
+    res, jobs = count_jobs(
+        lambda: V.merge_table(spark, table, src, keys=["id"])
+    )
+    assert (res["updated"], res["inserted"]) == (2, 1)
+    assert jobs == 9
