@@ -2891,9 +2891,11 @@ def delete_from(
       instead of rescanning/rewriting files. Sidecars are written from
       EXECUTOR tasks (one per touched file); the driver handles only
       O(touched files) records, so a broad predicate in dv mode costs
-      cluster time, never driver memory. Readers apply DVs inside the
-      scan tasks (each task loads its own file's sidecar — no join, no
-      driver materialization); the next compaction (or a cow
+      cluster time, never driver memory. Readers load the positions
+      on the driver and drop them with a broadcast anti-join while
+      the snapshot's DVs hold at most ``_DV_ANTI_JOIN_CAP`` positions
+      in total; past that cap each scan task loads its own file's
+      sidecar instead (:func:`_scan`). The next compaction (or a cow
       delete/update of the same files) physically purges them.
     - ``mode="auto"``: per-file decision, the way Delta chooses —
       a file gets a DV only while its CUMULATIVE deleted fraction
@@ -3331,6 +3333,35 @@ def clone_table(
     return ver
 
 
+def _read_cursor(path: str, cursor_path: str) -> int:
+    """The last version a change-feed consumer of ``path`` committed to
+    its JSON cursor (0 when there is no cursor yet). A cursor whose
+    manifest ``vacuum`` pruned has fallen behind retention: it raises,
+    and the operator resyncs by deleting the cursor (full-snapshot
+    restart)."""
+    try:
+        with open(cursor_path) as fh:
+            last = int(json.load(fh)["version"])
+    except FileNotFoundError:
+        return 0
+    if last > 0 and not os.path.exists(
+        os.path.join(_manifest_dir(path), f"v{last}.json")
+    ):
+        raise ValueError(
+            f"cursor at v{last} of {path} predates retention (vacuumed); "
+            f"delete {cursor_path} to resync from a full snapshot"
+        )
+    return last
+
+
+def _write_cursor(cursor_path: str, version: int) -> None:
+    """Commit a consumer's cursor atomically (tmp + ``os.replace``)."""
+    tmp = cursor_path + f".tmp_{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        json.dump({"version": version}, fh)
+    os.replace(tmp, cursor_path)
+
+
 def consume_changes(
     spark: SparkSession,
     path: str,
@@ -3362,21 +3393,10 @@ def consume_changes(
     Returns {"from": v, "to": v', "delivered": bool, "committed": bool}.
     """
     current = current_version(path)
-    try:
-        with open(cursor_path) as fh:
-            last = int(json.load(fh)["version"])
-    except FileNotFoundError:
-        last = 0
+    last = _read_cursor(path, cursor_path)
     if current == last:
         return {"from": last, "to": current, "delivered": False,
                 "committed": False}
-    if last > 0 and not os.path.exists(
-        os.path.join(_manifest_dir(path), f"v{last}.json")
-    ):
-        raise ValueError(
-            f"cursor at v{last} of {path} predates retention (vacuumed); "
-            f"delete {cursor_path} to resync from a full snapshot"
-        )
     if last == 0:
         batch = read_table(spark, path, version=current)
     else:
@@ -3384,10 +3404,7 @@ def consume_changes(
             F.col("_change_type") == "insert"
         ).drop("_change_type")
     sink(batch)
-    tmp = cursor_path + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": current}, fh)
-    os.replace(tmp, cursor_path)
+    _write_cursor(cursor_path, current)
     return {"from": last, "to": current, "delivered": True, "committed": True}
 
 
@@ -3474,21 +3491,9 @@ def replicate_table(
     "deleted"}.
     """
     current = current_version(src_path)
-    try:
-        with open(cursor_path) as fh:
-            last = int(json.load(fh)["version"])
-    except FileNotFoundError:
-        last = 0
+    last = _read_cursor(src_path, cursor_path)
     if current == last:
         return {"from": last, "to": current, "upserted": 0, "deleted": 0}
-    if last > 0 and not os.path.exists(
-        os.path.join(_manifest_dir(src_path), f"v{last}.json")
-    ):
-        raise ValueError(
-            f"cursor at v{last} of {src_path} predates retention "
-            f"(vacuumed); delete {cursor_path} to resync the replica "
-            f"from a full snapshot"
-        )
     n_up = n_del = 0
     if last == 0:
         snap = read_table(spark, src_path, version=current)
@@ -3510,8 +3515,5 @@ def replicate_table(
         if changes.limit(1).collect():
             r = _merge_ops(spark, dst_path, changes, keys, "_change_type")
             n_up, n_del = r["updated"] + r["inserted"], r["deleted"]
-    tmp = cursor_path + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": current}, fh)
-    os.replace(tmp, cursor_path)
+    _write_cursor(cursor_path, current)
     return {"from": last, "to": current, "upserted": n_up, "deleted": n_del}

@@ -6,9 +6,30 @@ at-least-once, no replay protection. The Spark-first equivalent is a
 checkpointed file sink: the trigger interval plays the buffering-hint
 role, the checkpoint + write-ahead commit log make delivery exactly-once,
 and ``partitionBy`` gives the Hive layout the batch side already uses.
+
+The foreachBatch sinks that write a versioned table (io/versioned.py)
+share one exactly-once commit, :func:`_commit_once` — Delta's
+idempotent foreachBatch write (``txnAppId``/``txnVersion``) on this
+log. foreachBatch alone is at-least-once: a restart, or a lost
+checkpoint, delivers a batch id again. So each micro-batch commits as
+ONE version whose manifest records its ``batch_id``, and a batch whose
+id a retained manifest already lists is skipped: the table's own log is
+the marker store, and a commit (data files → manifest → atomic pointer
+flip) never half-applies. The first batch creates the table, later ones
+update it. A concurrent writer that commits first (``CommitConflict``)
+or creates the table first (``FileExistsError``) sends the batch round
+again against the new snapshot, up to five times. A sink with a
+quarantine diverts a batch the table's CHECK constraints reject to
+``<quarantine>/batch_<id>`` (parquet) instead of failing the query:
+bad deliveries never poison committed history, stay replayable after
+the upstream fix, and cannot poison-pill the checkpoint (a batch that
+raises replays and fails forever).
 """
 
 from __future__ import annotations
+
+import functools
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -74,6 +95,85 @@ def process_available_files(
     return writer.start()
 
 
+def _drain(df: DataFrame, apply, checkpoint: str, query_name: str):
+    """Start ``apply(batch_df, batch_id)`` over every micro-batch of
+    ``df`` available now, then stop — the foreachBatch twin of
+    :func:`process_available_files`."""
+    return (
+        df.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _quarantine(df: DataFrame, root: str, batch_id: int) -> None:
+    """Divert a micro-batch to ``root/batch_<id>`` as parquet."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(root, f"batch_{batch_id}")
+    )
+
+
+def _commit_once(
+    what: str, path: str, batch_id: int, create, update, quarantine=None
+) -> None:
+    """Commit one micro-batch to the versioned table at ``path``
+    exactly once (the protocol in the module docstring):
+    ``create(extra)`` while the table does not exist, else
+    ``update(extra)`` unless a retained manifest already records
+    ``batch_id``. ``extra`` carries the batch id into that commit, so
+    each callback must make exactly one commit (or none). A
+    ``ConstraintViolation`` calls ``quarantine()`` when given and
+    raises otherwise."""
+    from ..io import versioned as V
+
+    extra = {"batch_id": batch_id}
+    for _attempt in range(5):
+        try:
+            if not os.path.exists(V._pointer(path)):
+                create(extra)
+            elif batch_id not in V.committed_batch_ids(path):
+                update(extra)
+            return
+        except V.ConstraintViolation:
+            if quarantine is None:
+                raise
+            quarantine()
+            return
+        except (V.CommitConflict, FileExistsError):
+            continue  # another writer moved or created the table first
+    raise RuntimeError(
+        f"{what}: batch {batch_id} lost the commit race 5 times on "
+        f"{path} — writer storm, investigate"
+    )
+
+
+def _apply_ops(
+    what: str, changes: DataFrame, path: str, keys: list[str],
+    op_col: str, batch_id: int,
+) -> None:
+    """Commit a key-unique, op-tagged change set through
+    :func:`_commit_once`: ONE :func:`~..io.versioned._merge_ops` merge
+    (``op_col == "delete"`` deletes the key, any other value upserts),
+    or, while the table does not exist, a create from the non-delete
+    rows — a delete in the seed batch refers to a row that never
+    existed, so a delete-only seed batch commits nothing."""
+    from ..io import versioned as V
+
+    def _create(extra: dict) -> None:
+        ups = changes.filter(F.col(op_col) != "delete").drop(op_col)
+        if not ups.isEmpty():
+            V.create_table(ups, path, extra=extra)
+
+    _commit_once(
+        what, path, batch_id, _create,
+        lambda extra: V._merge_ops(
+            changes.sparkSession, path, changes, keys, op_col, extra=extra
+        ),
+    )
+
+
 def upsert_sink(
     df,
     target_path: str,
@@ -96,8 +196,6 @@ def upsert_sink(
     arbitrary-but-single — pass an event/sequence column whenever
     intra-batch corrections are possible. Dedup applies on the initial
     snapshot too."""
-    import os
-
     from ..io.update import merge_into
     from ..operators.dedup import keep_latest
 
@@ -113,13 +211,7 @@ def upsert_sink(
             return
         merge_into(spark, target_path, _dedup(batch_df), keys)
 
-    return (
-        df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(df, _merge, checkpoint, query_name)
 
 
 def cdc_apply_sink(
@@ -154,61 +246,22 @@ def cdc_apply_sink(
       never written; a row whose op is NULL is dropped)
       — broadcast-probed file-level CoW, so a delivery-sized batch
       touches only the files holding its keys;
-    - exactly-once: the batch's one commit records its ``batch_id`` in
-      the manifest; a replayed batch (foreachBatch is at-least-once)
-      is skipped when its id is committed;
-    - :class:`~..io.versioned.CommitConflict` from a concurrent writer
-      retries the whole batch against the new snapshot (nothing was
-      half-applied: the merge is one atomic commit).
-
-    First batch creates the table from its upserts (deletes in the
-    seed batch refer to rows that never existed — after keep-latest
-    they are no-ops by construction)."""
-    import os
-
-    from ..io import versioned as V
+    - the merge is the batch's one commit, made exactly once by
+      :func:`_commit_once`; the first batch creates the table from its
+      upserts (:func:`_apply_ops`)."""
     from ..operators.dedup import keep_latest
 
     def _apply(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         if order_col is not None:
             batch_df = keep_latest(batch_df, keys, order_col)
         batch_df = batch_df.filter(F.col(op_col).isNotNull())
-        if batch_df.isEmpty():
-            return
-        for _attempt in range(5):
-            try:
-                if not os.path.exists(V._pointer(table_path)):
-                    ups = batch_df.filter(
-                        F.col(op_col) != "delete"
-                    ).drop(op_col)
-                    if ups.isEmpty():
-                        return  # delete-only seed batch: nothing exists
-                    V.create_table(
-                        ups, table_path, extra={"batch_id": batch_id}
-                    )
-                    return
-                if batch_id in V.committed_batch_ids(table_path):
-                    return  # replayed batch: already committed
-                V._merge_ops(
-                    spark, table_path, batch_df, keys, op_col,
-                    extra={"batch_id": batch_id},
-                )
-                return
-            except V.CommitConflict:
-                continue
-        raise RuntimeError(
-            f"cdc_apply_sink: batch {batch_id} lost the commit race 5 "
-            f"times on {table_path} — writer storm, investigate"
-        )
+        if not batch_df.isEmpty():
+            _apply_ops(
+                "cdc_apply_sink", batch_df, table_path, keys, op_col,
+                batch_id,
+            )
 
-    return (
-        df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(df, _apply, checkpoint, query_name)
 
 
 def cdf_replica_sink(
@@ -226,51 +279,20 @@ def cdf_replica_sink(
     delete+insert in ONE batch, so a key on the insert side is an
     UPSERT with its final value and a key ONLY on the delete side is a
     true DELETE — applying ops blindly (``cdc_apply_sink``) would let
-    the delete leg kill the just-upserted key. Replay guard and
-    conflict retry as in :func:`cdc_apply_sink`; a replayed batch is
-    row-idempotent by the same argument as ``replicate_table``."""
-    import os
-
+    the delete leg kill the just-upserted key. The reconciled batch
+    commits as in :func:`cdc_apply_sink` (:func:`_apply_ops`); a
+    replayed batch is row-idempotent by the same argument as
+    ``replicate_table``."""
     from ..io import versioned as V
 
     def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        changes = V._reconcile_feed(batch_df, keys)
-        for _attempt in range(5):
-            try:
-                if not os.path.exists(V._pointer(table_path)):
-                    ups = changes.filter(
-                        F.col("_change_type") != "delete"
-                    ).drop("_change_type")
-                    if ups.isEmpty():
-                        return
-                    V.create_table(
-                        ups, table_path, extra={"batch_id": batch_id}
-                    )
-                    return
-                if batch_id in V.committed_batch_ids(table_path):
-                    return
-                V._merge_ops(
-                    spark, table_path, changes, keys, "_change_type",
-                    extra={"batch_id": batch_id},
-                )
-                return
-            except V.CommitConflict:
-                continue
-        raise RuntimeError(
-            f"cdf_replica_sink: batch {batch_id} lost the commit race "
-            f"5 times on {table_path} — writer storm, investigate"
-        )
+        if not batch_df.isEmpty():
+            _apply_ops(
+                "cdf_replica_sink", V._reconcile_feed(batch_df, keys),
+                table_path, keys, "_change_type", batch_id,
+            )
 
-    return (
-        df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(df, _apply, checkpoint, query_name)
 
 
 def matview_refresh_sink(
@@ -355,14 +377,16 @@ def rollup_sink(
     arrives, and only the partitions a batch touches are rewritten.
 
     Sums aren't idempotent, so a replayed batch (foreachBatch is
-    at-least-once on its own) must NOT re-fold: a per-batch-id commit
-    marker under the rollup dir skips batches already applied — the
-    standard batchId-dedup pattern that upgrades foreachBatch to
-    exactly-once. Markers are scoped to the checkpoint's batch-id
-    sequence; wipe both together.
+    at-least-once on its own) must NOT re-fold: a per-batch-id marker
+    under the rollup dir skips batches already folded. The marker is
+    NOT atomic with the fold — it is created after the fold has
+    rewritten the partitions, so a crash between the two re-folds the
+    batch on replay and double-counts its sums and counts. The sink is
+    exactly-once only outside that window: a plain-parquet rollup has
+    no commit that could carry the marker (unlike the manifest of
+    :func:`_commit_once`). Markers are scoped to the checkpoint's
+    batch-id sequence; wipe both together.
     """
-    import os
-
     from ..io.rollup import incremental_rollup, init_rollup
 
     marker_dir = os.path.join(rollup_path, "_committed_batches")
@@ -383,13 +407,7 @@ def rollup_sink(
         os.makedirs(marker_dir, exist_ok=True)
         open(marker, "w").close()
 
-    return (
-        df.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(df, _fold, checkpoint, query_name)
 
 
 def versioned_sink(
@@ -408,22 +426,16 @@ def versioned_sink(
     micro-batch becomes one manifest commit, so the lakehouse loop —
     time travel over ingested history, manifest-stats file skipping,
     copy-on-write corrections — applies to live data the moment it
-    lands.
-
-    Exactly-once: appends aren't idempotent, so each commit records its
-    ``batch_id`` in the manifest and a replayed batch (foreachBatch is
-    at-least-once on its own) is skipped when its id is already
-    committed — the same batchId-dedup pattern as :func:`rollup_sink`,
-    but the table's own log IS the marker store, and the commit (data
-    files → manifest → atomic pointer flip) can never half-apply.
-    Empty batches commit nothing.
+    lands. The commit is exactly-once through :func:`_commit_once`;
+    empty batches commit nothing.
 
     ``rules`` (name → aggregate expression, see
     :mod:`..operators.quality`) gates every batch in ONE extra
     aggregation pass: a batch with any violations is diverted to
     ``quarantine_path`` (parquet, batch-id subdir) instead of the
     table — bad deliveries never poison committed history, and the
-    quarantined bytes stay replayable after the rule/bug is fixed.
+    quarantined bytes stay replayable after the rule/bug is fixed. A
+    batch the table's own CHECK constraints reject goes there too.
 
     ``dedup_keys`` makes appends IDEMPOTENT BY CONTENT, not just by
     batch id: each batch drops rows whose key(s) already exist in the
@@ -455,11 +467,10 @@ def versioned_sink(
     restart resets it, costing tidiness only), not in table versions:
     compaction commits and concurrent writers advance the version, so
     a version-keyed cadence drifts from "every N appends"."""
-    import os
-
     from ..io import versioned as V
 
     appends = {"n": 0}  # this sink's successful appends (cadence clock)
+    qdir = quarantine_path or f"{table_path}_quarantine"
 
     def _append(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -479,80 +490,37 @@ def versioned_sink(
             from ..operators.quality import check_rules
 
             report = check_rules(batch_df, rules)
-            bad = {
-                r["rule"]: r["violations"]
-                for r in report.collect()
-                if r["violations"] > 0
-            }
-            if bad:
-                dst = os.path.join(
-                    quarantine_path or f"{table_path}_quarantine",
-                    f"batch_{batch_id}",
-                )
-                batch_df.write.mode("overwrite").parquet(dst)
+            if any(r["violations"] > 0 for r in report.collect()):
+                _quarantine(batch_df, qdir, batch_id)
                 return
-        for attempt in range(5):
-            if os.path.exists(V._pointer(table_path)):
-                if batch_id in V.committed_batch_ids(table_path):
-                    return  # replayed batch: already committed
+
+        def _create(extra: dict) -> None:
+            V.create_table(
+                batch_df, table_path, extra=extra, bloom_cols=bloom_cols
+            )
+            appends["n"] += 1
+
+        def _update(extra: dict) -> None:
+            V.append_table(
+                batch_df, table_path, extra=extra, bloom_cols=bloom_cols
+            )
+            appends["n"] += 1
+            if compact_every and appends["n"] % compact_every == 0:
                 try:
-                    V.append_table(
-                        batch_df, table_path, extra={"batch_id": batch_id},
+                    V.compact_table(
+                        batch_df.sparkSession, table_path,
+                        small_only_bytes=compact_small_bytes,
                         bloom_cols=bloom_cols,
                     )
-                    appends["n"] += 1
-                    if compact_every and appends["n"] % compact_every == 0:
-                        try:
-                            V.compact_table(
-                                batch_df.sparkSession, table_path,
-                                small_only_bytes=compact_small_bytes,
-                                bloom_cols=bloom_cols,
-                            )
-                        except V.CommitConflict:
-                            pass  # data landed; tidy up on a later batch
-                    return
-                except V.ConstraintViolation:
-                    # the table's own CHECK constraints reject the batch
-                    # — same quarantine contract as the `rules` gate:
-                    # bad deliveries never poison committed history and
-                    # stay replayable after the upstream bug is fixed
-                    dst = os.path.join(
-                        quarantine_path or f"{table_path}_quarantine",
-                        f"batch_{batch_id}",
-                    )
-                    batch_df.write.mode("overwrite").parquet(dst)
-                    return
                 except V.CommitConflict:
-                    # a concurrent UPDATE/OPTIMIZE moved the pointer
-                    # between our snapshot read and commit — re-read the
-                    # new current version and re-append (append is safe
-                    # to retry: nothing was committed)
-                    continue
-            else:
-                try:
-                    V.create_table(
-                        batch_df, table_path, extra={"batch_id": batch_id},
-                        bloom_cols=bloom_cols,
-                    )
-                    appends["n"] += 1
-                    return
-                except (V.CommitConflict, FileExistsError):
-                    # another stream/batch writer created the table
-                    # between our pointer check and the v1 commit —
-                    # loop again and take the append path
-                    continue
-        raise RuntimeError(
-            f"versioned_sink: batch {batch_id} lost the commit race 5 "
-            f"times on {table_path} — writer storm, investigate"
+                    pass  # data landed; tidy up on a later batch
+
+        _commit_once(
+            "versioned_sink", table_path, batch_id, _create, _update,
+            lambda: _quarantine(batch_df, qdir, batch_id),
         )
 
-    return (
-        df.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(df, _append, checkpoint, query_name)
 
 
 def apply_near_dup_batch(
@@ -576,11 +544,10 @@ def apply_near_dup_batch(
     "md5"`` selects the engine-portable signature variant (see
     operators/dedup.minhash_index_signatures) — the driver's DuckDB
     oracle recomputes that gate decision bit-for-bit."""
-    import os
-
     from ..io import versioned as V
     from ..operators.dedup import (
         append_to_minhash_index,
+        build_minhash_index,
         probe_minhash_index,
     )
 
@@ -634,76 +601,43 @@ def apply_near_dup_batch(
             dupes = batch_df.join(dup_ids, id_col, "left_semi")
             novel = batch_df.join(dup_ids, id_col, "left_anti")
             if not dupes.isEmpty():
-                dst = os.path.join(
+                _quarantine(
+                    dupes.join(
+                        hits.groupBy("batch_id").agg(
+                            F.max_by("index_id", "est_jaccard").alias(
+                                "dup_of"
+                            ),
+                            F.max("est_jaccard").alias("est_jaccard"),
+                        ).withColumnRenamed("batch_id", id_col),
+                        id_col,
+                    ),
                     quarantine_path or f"{table_path}_neardups",
-                    f"batch_{batch_id}",
+                    batch_id,
                 )
-                dupes.join(
-                    hits.groupBy("batch_id").agg(
-                        F.max_by("index_id", "est_jaccard").alias(
-                            "dup_of"
-                        ),
-                        F.max("est_jaccard").alias("est_jaccard"),
-                    ).withColumnRenamed("batch_id", id_col),
-                    id_col,
-                ).write.mode("overwrite").parquet(dst)
         else:
             novel = batch_df
         if novel.isEmpty():
             return  # all dupes: quarantined, nothing to commit
         novel = novel.localCheckpoint(eager=True)  # probe plan once
-        for attempt in range(5):
-            try:
-                if os.path.exists(V._pointer(table_path)):
-                    V.append_table(
-                        novel, table_path,
-                        extra={"batch_id": batch_id},
-                    )
-                else:
-                    V.create_table(
-                        novel, table_path,
-                        extra={"batch_id": batch_id},
-                    )
-                break
-            except (V.CommitConflict, FileExistsError):
-                if batch_id in V.committed_batch_ids(table_path):
-                    break  # another replay of us won the race
-                continue
-        else:
-            raise RuntimeError(
-                f"near_dup_gated_sink: batch {batch_id} lost the "
-                f"corpus commit race 5 times on {table_path}"
-            )
+        _commit_once(
+            "near_dup_gated_sink", table_path, batch_id,
+            lambda extra: V.create_table(novel, table_path, extra=extra),
+            lambda extra: V.append_table(novel, table_path, extra=extra),
+        )
     if not i_done and not novel.isEmpty():
-        if not os.path.exists(V._pointer(index_path)):
-            from ..operators.dedup import build_minhash_index
-
-            build_minhash_index(
-                novel, index_path, text_col=text_col, id_col=id_col,
-                shingle_n=shingle_n, num_hashes=num_hashes,
-                bands=bands, extra={"batch_id": batch_id},
-                token_hash=token_hash,
-            )
-        else:
-            for attempt in range(5):
-                try:
-                    append_to_minhash_index(
-                        novel, index_path, text_col=text_col,
-                        id_col=id_col, shingle_n=shingle_n,
-                        num_hashes=num_hashes, bands=bands,
-                        token_hash=token_hash,
-                        extra={"batch_id": batch_id},
-                    )
-                    break
-                except V.CommitConflict:
-                    if batch_id in V.committed_batch_ids(index_path):
-                        break
-                    continue
-            else:
-                raise RuntimeError(
-                    f"near_dup_gated_sink: batch {batch_id} lost "
-                    f"the index commit race 5 times on {index_path}"
-                )
+        sig = dict(
+            text_col=text_col, id_col=id_col, shingle_n=shingle_n,
+            num_hashes=num_hashes, bands=bands, token_hash=token_hash,
+        )
+        _commit_once(
+            "near_dup_gated_sink", index_path, batch_id,
+            lambda extra: build_minhash_index(
+                novel, index_path, extra=extra, **sig
+            ),
+            lambda extra: append_to_minhash_index(
+                novel, index_path, extra=extra, **sig
+            ),
+        )
 
 
 def near_dup_gated_sink(
@@ -730,40 +664,36 @@ def near_dup_gated_sink(
     novel remainder lands as ONE commit in the corpus table plus ONE
     commit of its signatures in the index.
 
-    Exactly-once across BOTH tables: the batch id is recorded in each
-    table's manifest. foreachBatch replays resolve per-half —
+    Exactly-once across BOTH tables: each half commits through
+    :func:`_commit_once`, so the batch id is recorded in each table's
+    manifest. foreachBatch replays resolve per-half —
 
     - both committed → no-op;
     - neither → probe and apply (re-probing is deterministic: the index
       cannot contain this batch's signatures yet);
     - crash BETWEEN the two commits → the corpus table already holds
-      exactly the batch's novel rows, so the replay derives the novel
-      set from the table itself (semi-join on ids) instead of
-      re-probing an index state that no longer matches, then completes
-      the index append. Probing is never run against an index that
-      already absorbed the batch, so a replay can never quarantine a
-      batch as a duplicate of itself.
+      exactly the batch's novel rows, so the replay takes the novel set
+      from the batch's own table commit (its change-feed insert leg)
+      instead of re-probing an index state that no longer matches,
+      then completes the index append. Probing is never run against an
+      index that already absorbed the batch, so a replay can never
+      quarantine a batch as a duplicate of itself.
 
     Scope: cross-corpus near-dups. Within one micro-batch only exact
     id/content duplicates collapse (first occurrence by id); two novel
     near-dup documents arriving in the SAME batch both land, and the
     next delivery of either is caught — the same cadence/accuracy
     trade every delivery-granular incremental dedup makes."""
-    def _apply(batch_df, batch_id: int) -> None:
-        apply_near_dup_batch(
-            batch_df, batch_id,
+    return _drain(
+        df,
+        functools.partial(
+            apply_near_dup_batch,
             table_path=table_path, index_path=index_path,
             text_col=text_col, id_col=id_col, threshold=threshold,
             quarantine_path=quarantine_path, shingle_n=shingle_n,
             num_hashes=num_hashes, bands=bands, token_hash=token_hash,
-        )
-
-    return (
-        df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint, query_name,
     )
 
 
@@ -783,71 +713,33 @@ def enriched_versioned_sink(
     resolves the manifest at plan time, so an SCD correction committed
     between batches is picked up by the next batch — the behavior a
     native stream-static join over a fixed file list cannot give), and
-    the enriched rows append to ``out_table_path`` through the same
-    exactly-once batch-id commit protocol as :func:`versioned_sink`.
+    the enriched rows append to ``out_table_path`` exactly once through
+    :func:`_commit_once`. A batch the OUT table's CHECK constraints
+    reject (e.g. a left join's NULL dim payload) goes to
+    ``quarantine_path``.
 
     Scale: the dimension read is manifest-resolved (column-pruned to
     the join keys + payload) and delivery-sized batches broadcast
     against it under AQE; the output commit is one manifest append.
     """
-    import os
-
     from ..io import versioned as V
+
+    qdir = quarantine_path or f"{out_table_path}_quarantine"
 
     def _enrich(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         dim = V.read_table(batch_df.sparkSession, dim_table_path)
         enriched = batch_df.join(dim, keys, how)
-
-        def _quarantine() -> None:
-            # the OUT table's CHECK constraints reject the enriched
-            # batch (e.g. a left join's NULL dim payload): divert, same
-            # replayable contract as versioned_sink — an uncaught raise
-            # here would poison-pill the checkpoint (the batch replays
-            # and fails forever)
-            dst = os.path.join(
-                quarantine_path or f"{out_table_path}_quarantine",
-                f"batch_{batch_id}",
-            )
-            enriched.write.mode("overwrite").parquet(dst)
-
-        for attempt in range(5):
-            if os.path.exists(V._pointer(out_table_path)):
-                if batch_id in V.committed_batch_ids(out_table_path):
-                    return
-                try:
-                    V.append_table(
-                        enriched, out_table_path,
-                        extra={"batch_id": batch_id},
-                    )
-                    return
-                except V.ConstraintViolation:
-                    _quarantine()
-                    return
-                except V.CommitConflict:
-                    continue
-            else:
-                try:
-                    V.create_table(
-                        enriched, out_table_path,
-                        extra={"batch_id": batch_id},
-                    )
-                    return
-                except V.ConstraintViolation:
-                    _quarantine()
-                    return
-                except (V.CommitConflict, FileExistsError):
-                    continue
-        raise RuntimeError(
-            f"enriched_versioned_sink: batch {batch_id} lost the commit "
-            f"race 5 times on {out_table_path}"
+        _commit_once(
+            "enriched_versioned_sink", out_table_path, batch_id,
+            lambda extra: V.create_table(
+                enriched, out_table_path, extra=extra
+            ),
+            lambda extra: V.append_table(
+                enriched, out_table_path, extra=extra
+            ),
+            lambda: _quarantine(enriched, qdir, batch_id),
         )
 
-    return (
-        df.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(df, _enrich, checkpoint, query_name)

@@ -186,3 +186,28 @@ def test_crash_recovery_ignores_ids_from_earlier_batches(spark, paths):
     assert (
         idx.filter(F.col("id") == 1).count() == idx_rows_for_1
     ), "recovery re-appended an earlier batch's signatures"
+
+
+def test_index_build_race_lands_on_racer_index(spark, paths, monkeypatch):
+    """Another writer builds the index between the batch's pointer
+    check and its own build, which then raises FileExistsError: the
+    batch appends its signatures on top of the racer's index, in one
+    more commit that carries its batch id."""
+    from aws_etl_project2_fiap_spark.operators import dedup
+
+    real_build = dedup.build_minhash_index
+
+    def racing_build(df, index_path, *a, **kw):
+        monkeypatch.setattr(dedup, "build_minhash_index", real_build)
+        real_build(_df(spark, [(50, DOC2)]), index_path)  # racer's v1
+        return real_build(df, index_path, *a, **kw)
+
+    monkeypatch.setattr(dedup, "build_minhash_index", racing_build)
+    _apply(spark, [(1, DOC), (3, DOC3)], 0, paths)
+    assert dedup.build_minhash_index is real_build  # the race fired
+    tbl = {r["doc_id"] for r in V.read_table(spark, paths["table"]).collect()}
+    assert tbl == {1, 3}
+    idx = V.read_table(spark, paths["index"])
+    assert {r["id"] for r in idx.collect()} == {1, 3, 50}
+    assert V.current_version(paths["index"]) == 2
+    assert V.version_of_batch(paths["index"], 0) == 2

@@ -633,27 +633,133 @@ def test_versioned_sink_commits_batches_with_time_travel(spark, tmp_path):
     assert len(V.committed_batch_ids(table)) == 2
 
 
-def test_versioned_sink_replay_guard_skips_committed_batch(spark, tmp_path):
-    """A re-delivered batch id must not double-append (manifest-recorded
-    batch ids are the guard, independent of the checkpoint)."""
+def _sink_rig(sink, spark, tmp_path):
+    """Land one delivery for ``sink``. Returns ``start(checkpoint)``
+    (one availableNow drain into ``tmp_path/table``), every table the
+    sink commits to (``table`` first) and the rows ``table`` holds
+    after the delivery, by id."""
     from aws_etl_project2_fiap_spark.io import versioned as V
-    from aws_etl_project2_fiap_spark.streaming.sinks import versioned_sink
+    from aws_etl_project2_fiap_spark.streaming import sinks as S
+    from aws_etl_project2_fiap_spark.streaming.table_source import (
+        VersionedTableDataSource,
+    )
 
     landing = str(tmp_path / "landing")
     table = str(tmp_path / "table")
+    if sink == "versioned_sink":
+        _write_ticks(spark, landing, TICKS[:4])
+        rows = {r[0]: r[1] for r in spark.read.parquet(landing).collect()}
 
-    _write_ticks(spark, landing, TICKS[:4])
-    versioned_sink(
-        file_source(spark, landing, TICK_SCHEMA), table, str(tmp_path / "c1")
-    ).awaitTermination()
-    assert V.read_table(spark, table).count() == 4
+        def start(ck):
+            return S.versioned_sink(
+                file_source(spark, landing, TICK_SCHEMA), table, ck
+            )
+        return start, [table], rows
+    if sink in ("cdc_apply_sink", "enriched_versioned_sink"):
+        _drop_cdc(spark, landing, [(1, 10.0, 1, "c"), (2, 20.0, 1, "c")])
+        rows = {1: 10.0, 2: 20.0}
+        dim = str(tmp_path / "dim")
+        if sink == "enriched_versioned_sink":
+            V.create_table(
+                spark.createDataFrame([(1, "gold")], "id long, tier string"),
+                dim,
+            )
+
+        def start(ck):
+            src = file_source(spark, landing, CDC_SCHEMA)
+            if sink == "cdc_apply_sink":
+                return S.cdc_apply_sink(
+                    src, table, ["id"], ck, order_col="seq"
+                )
+            return S.enriched_versioned_sink(src, dim, ["id"], table, ck)
+        return start, [table], rows
+    if sink == "cdf_replica_sink":
+        src = str(tmp_path / "src")
+        V.create_table(spark.range(5).selectExpr("id", "id * 1.0 AS v"), src)
+        spark.dataSource.register(VersionedTableDataSource)
+        rows = {i: float(i) for i in range(5)}
+
+        def start(ck):
+            feed = (
+                spark.readStream.format("versioned_table")
+                .option("path", src).option("feed", "cdc").load()
+            )
+            return S.cdf_replica_sink(feed, table, ["id"], ck)
+        return start, [table], rows
+    assert sink == "near_dup_gated_sink"
+    index = str(tmp_path / "index")
+    docs = {
+        1: "the quick brown fox jumps over the lazy dog near the river",
+        2: "completely different content about manifests and parquet",
+    }
+    spark.createDataFrame(
+        list(docs.items()), "doc_id long, text string"
+    ).write.parquet(landing)
+
+    def start(ck):
+        src = spark.readStream.schema("doc_id long, text string").parquet(
+            landing
+        )
+        return S.near_dup_gated_sink(src, table, index, ck)
+    return start, [table, index], docs
+
+
+def _rows(spark, table):
+    from aws_etl_project2_fiap_spark.io import versioned as V
+
+    return {r[0]: r[1] for r in V.read_table(spark, table).collect()}
+
+
+@pytest.mark.parametrize("sink", [
+    "versioned_sink", "cdc_apply_sink", "enriched_versioned_sink",
+    "cdf_replica_sink", "near_dup_gated_sink",
+])
+def test_sink_replay_guard_skips_committed_batch(spark, tmp_path, sink):
+    """A re-delivered batch id must not commit again: the batch ids the
+    manifest records are the guard, independent of the checkpoint (no
+    new version, no double append, no resurrection)."""
+    from aws_etl_project2_fiap_spark.io import versioned as V
+
+    start, tables, rows = _sink_rig(sink, spark, tmp_path)
+    start(str(tmp_path / "c1")).awaitTermination()
+    assert [V.current_version(t) for t in tables] == [1] * len(tables)
+    assert V.read_table(spark, tables[0]).count() == len(rows)
+    assert _rows(spark, tables[0]) == rows
 
     # simulate a checkpoint loss: same files replay as the same batch id
-    versioned_sink(
-        file_source(spark, landing, TICK_SCHEMA), table, str(tmp_path / "c2")
-    ).awaitTermination()
-    assert V.current_version(table) == 1  # skipped, not re-appended
-    assert V.read_table(spark, table).count() == 4
+    start(str(tmp_path / "c2")).awaitTermination()
+    assert [V.current_version(t) for t in tables] == [1] * len(tables)
+    assert V.read_table(spark, tables[0]).count() == len(rows)
+    assert _rows(spark, tables[0]) == rows
+
+
+@pytest.mark.parametrize("sink", ["cdc_apply_sink", "cdf_replica_sink"])
+def test_op_sink_lands_on_a_racing_create(spark, tmp_path, monkeypatch, sink):
+    """Another writer creates the table between the sink's pointer
+    check and its own create, which then raises FileExistsError: the
+    batch retries and merges on top of the racer's rows, in one more
+    commit that carries its batch id."""
+    from aws_etl_project2_fiap_spark.io import versioned as V
+
+    start, (table,), rows = _sink_rig(sink, spark, tmp_path)
+    racer = (
+        spark.createDataFrame([(99, 9.9, 0)], "id long, v double, seq long")
+        if sink == "cdc_apply_sink"
+        else spark.createDataFrame([(99, 9.9)], "id long, v double")
+    )
+    real_create = V.create_table
+
+    def racing_create(df, path, *a, **kw):
+        monkeypatch.setattr(V, "create_table", real_create)  # race once
+        real_create(racer, path)  # the other writer's v1 lands first
+        return real_create(df, path, *a, **kw)
+
+    monkeypatch.setattr(V, "create_table", racing_create)
+    start(str(tmp_path / "c1")).awaitTermination()
+    assert V.create_table is real_create  # the race really fired
+    assert _rows(spark, table) == {99: 9.9, **rows}
+    assert V.current_version(table) == 2
+    assert V.version_of_batch(table, 0) == 2
 
 
 def test_versioned_sink_quality_gate_quarantines_bad_batches(spark, tmp_path):
@@ -856,29 +962,6 @@ def test_cdc_apply_sink_upserts_and_deletes(spark, tmp_path):
     assert got == {1: 11.0, 3: 30.0, 4: 40.0}
     assert V.current_version(table) == before + 1  # one commit per batch
     assert len(V.committed_batch_ids(table)) == 2
-
-
-def test_cdc_apply_sink_replay_guard(spark, tmp_path):
-    """Checkpoint loss replays the same batch id: the manifest guard
-    skips it (no duplicate versions, no resurrection)."""
-    from aws_etl_project2_fiap_spark.io import versioned as V
-    from aws_etl_project2_fiap_spark.streaming.sinks import cdc_apply_sink
-
-    landing = str(tmp_path / "landing")
-    table = str(tmp_path / "table")
-
-    _drop_cdc(spark, landing, [(1, 10.0, 1, "c"), (2, 20.0, 1, "c")])
-    cdc_apply_sink(
-        file_source(spark, landing, CDC_SCHEMA), table, ["id"],
-        str(tmp_path / "c1"), order_col="seq",
-    ).awaitTermination()
-    v1 = V.current_version(table)
-    cdc_apply_sink(
-        file_source(spark, landing, CDC_SCHEMA), table, ["id"],
-        str(tmp_path / "c2"), order_col="seq",
-    ).awaitTermination()
-    assert V.current_version(table) == v1
-    assert V.read_table(spark, table).count() == 2
 
 
 def test_cdc_apply_sink_order_col_picks_winner(spark, tmp_path):
